@@ -19,10 +19,10 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // ... and the typed-kernel paths (Encoders, mapPartitions/
-    // groupByKey codegen, the blocked ANN kernels): the first ANN
-    // query otherwise pays ~2 s of one-time JIT that has nothing to do
-    // with the query being measured. 64 tiny synthetic vectors — the
-    // warm-up work itself is negligible.
+    // groupByKey codegen, the blocked ANN kernel with its float and
+    // SQ8 codecs): the first ANN query otherwise pays ~2 s of one-time
+    // JIT that has nothing to do with the query being measured. 64 tiny
+    // synthetic vectors — the warm-up work itself is negligible.
     locally {
       import spark.implicits._
       val tiny = (0L until 64L)

@@ -735,8 +735,8 @@ object Dedup {
     * must divide 64 — but 2 bands × 32 bits covers hamming ≤ 1), widen
     * the signature (SimHash128 doubles band width at the same bound) —
     * and, built in below, hot band values split into bounded
-    * block-pair tasks exactly as `Similarity.blockedTop1` does for LSH
-    * buckets: any (band, bits) bucket beyond `maxGroup` members becomes
+    * block-pair tasks exactly as `Similarity.blockedLocalBests` does for
+    * LSH buckets: any (band, bits) bucket beyond `maxGroup` members becomes
     * nb² tasks of ≤ 2·maxGroup signatures instead of one quadratic
     * straggler. The bucket census is JOINED back, never collected —
     * bucket count grows with the corpus, unlike the ANN group census. */
@@ -831,8 +831,8 @@ object Dedup {
             org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(id, 11),
             nb.toLong).toInt
           // Long task ids: nb² overflows Int once a single band bucket
-          // passes ~46k blocks (the same ceiling fixed in
-          // Similarity.blockedLocalBests)
+          // passes ~46k blocks (the same ceiling Similarity's blocked
+          // ANN kernel, blockedLocalBests, guards against)
           val left = (b until nb).iterator.map(j =>
             (band, bits, b.toLong * nb + j, 0.toByte, id, sig, isNew))
           val right = (0 until b).iterator.map(i =>

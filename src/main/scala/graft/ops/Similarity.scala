@@ -1,5 +1,8 @@
 package graft.ops
 
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
@@ -8,10 +11,21 @@ import graft.tools.Ckpt._
 
 /** Embedding similarity search (build brief): exact cosine in decimal
   * arithmetic (oracle-reproducible), brute-force top-k, near-duplicate
-  * pair mining with a cheap double-precision prefilter, and two ANN
-  * paths (multi-table random-hyperplane LSH, Lloyd-trained IVF) whose
-  * recall is measured against the exact brute-force baseline
-  * (`q_ann_recall`).
+  * pair mining with a cheap double-precision prefilter, and an ANN
+  * family whose recall is measured against the exact brute-force
+  * baseline (`q_ann_recall`).
+  *
+  * ANN shape: every ANN path is one point of a codec × partition
+  * matrix run by ONE blocked top-k kernel ([[blockedLocalBests]]),
+  * one shortlist cut ([[blockedShortlist]]) and one exact rescore
+  * ([[rescore]]). The CODEC ([[Codec]]) is the scan representation
+  * and its per-pair ranking score — float (double dot), SQ8 (int8
+  * dot), BQ (sign-bit dot) or PQ (m-byte codes, dot-table lookups).
+  * The PARTITION decides which rows meet in a group — flat (one group:
+  * the `*All` / `*Sampled` scans), LSH (multi-table random-hyperplane
+  * buckets) or IVF (Lloyd-trained lists, optionally persisted as an
+  * index). Partitioners only emit (group, role, id, vector) rows, so a
+  * new codec or partitioner touches neither the kernel nor the cut.
   *
   * Numeric policy: every cosine the engine OUTPUTS is computed from
   * exact DECIMAL sums (element-wise products at DECIMAL(12,9) summed at
@@ -494,7 +508,7 @@ object Similarity {
 
   /** Phase 2 shared by the near-dup variants: exact decimal rescore of
     * (id_a, id_b) candidate pairs. Join strategy left to AQE (see
-    * [[rescoreTop1]] — a forced broadcast caps the corpus size). */
+    * [[rescore]] — a forced broadcast caps the corpus size). */
   private def rescoreExact(
       candidates: DataFrame, vecs: DataFrame, threshold: Double): DataFrame = {
     val ea = vecs.select(col("vec_id").as("id_a"), col("embedding").as("ea"))
@@ -604,25 +618,96 @@ object Similarity {
   private[ops] def numBlocks(n: Long, cap: Int): Int =
     math.max(1L, (n + cap - 1) / cap).toInt
 
-  /** Shared bounded-task argmax kernel: rows are (group, role, id,
-    * unitVec) with role bit 0 = query, bit 1 = candidate. Every group is
-    * split into `numBlocks(size, maxGroup)` hash blocks and every
-    * (queryBlock × candidateBlock) pair becomes ONE task that holds at
-    * most two blocks in memory and scans them with primitive loops.
-    * Per-task local bests are then reduced with a per-query argmax
-    * aggregate (max dot, ties to the lowest candidate id) — the dot for
-    * a given (q, c) pair is bit-identical in every task (fixed
-    * element-wise order), so the result is independent of the block
-    * layout. This is what replaces the round-1 one-task-per-bucket
-    * quadratic scan: a hot group becomes nb² bounded tasks, not one
-    * straggler. */
-  /** Per-task local top-k bests feeding [[blockedTop1]]/[[blockedTopK]]:
-    * (qid, cid, dot) rows, at most k per query PER TASK. The same
-    * (qid, cid) pair may surface from several tasks — always with the
-    * bit-identical dot (fixed element order) — so downstream reducers
-    * dedup for free (argmax) or with a distinct (window rank). */
-  private def blockedLocalBests(
-      rows: Dataset[(Long, Byte, Long, Array[Double])],
+  // ---- the blocked top-k kernel, its codecs, cut and rescore ----
+
+  /** Scan representation of [[blockedLocalBests]]: how a unit vector is
+    * encoded for the candidate scan, and the ranking score of one
+    * (query, candidate) pair. A score must be fixed-order arithmetic,
+    * so a pair scores bit-identically in every task — the kernel's
+    * independence from the block layout rests on it. Scores only pick
+    * the shortlist; every output cosine comes from [[rescore]]. */
+  private abstract class Codec[V] extends Serializable {
+    def encode(unit: Array[Double]): V
+    def score(q: V, c: V): Double
+    /** Shortlist rule for a depth k: `true` keeps rank ≤ k plus every
+      * candidate within [[tieMargin]] of the k-th score; `false` keeps
+      * exactly rank ≤ k. */
+    def nearTies: Boolean = true
+  }
+
+  /** Float: the double dot of the unit vectors. */
+  private object FloatCodec extends Codec[Array[Double]] {
+    def encode(unit: Array[Double]): Array[Double] = unit
+    def score(q: Array[Double], c: Array[Double]): Double = {
+      var dot = 0.0; var d = 0
+      while (d < q.length) { dot += q(d) * c(d); d += 1 }
+      dot
+    }
+  }
+
+  /** SQ8 / BQ: the integer dot of byte vectors (≤ 127²·d fits an Int at
+    * any practical dimensionality), returned as an exactly
+    * representable Double — so [[tieMargin]] on these scores is exactly
+    * an integer-tie rule. Pure integer arithmetic: deterministic on any
+    * executor, any SIMD width, any reduction order. */
+  private abstract class IntDotCodec extends Codec[Array[Byte]] {
+    final def score(q: Array[Byte], c: Array[Byte]): Double = {
+      var dot = 0; var d = 0
+      while (d < q.length) { dot += q(d) * c(d); d += 1 }
+      dot.toDouble
+    }
+  }
+
+  /** SQ8 (int8 scalar quantization): q(i) = round(127·v(i)) ∈
+    * [-127, 127]. The scale is a constant (1/127) because the inputs
+    * are unit-normalized. At 100 TB this is the representation the
+    * scan reads: 4× fewer bytes per vector than float32 (16× vs the
+    * double-unit form), which is the difference between an IO-bound
+    * and a compute-bound all-pairs pass. */
+  private object Sq8Codec extends IntDotCodec {
+    def encode(unit: Array[Double]): Array[Byte] = {
+      val q = new Array[Byte](unit.length)
+      var i = 0
+      while (i < unit.length) { q(i) = math.round(unit(i) * 127.0).toByte; i += 1 }
+      q
+    }
+  }
+
+  /** BQ (binary quantization): a unit vector collapses to its sign
+    * pattern, stored as ±1 bytes — sign·sign dot = d − 2·hamming, so
+    * ranking by the integer dot IS ranking by hamming distance over the
+    * bit signatures. At 100 TB the scan representation packs to d/8
+    * bytes per vector (32× smaller than float32 — for d = 64, ONE
+    * machine word, xor+popcount per candidate); the ±1 byte form here
+    * shares the SQ8 score, the ranking identical. */
+  private object BqCodec extends IntDotCodec {
+    def encode(unit: Array[Double]): Array[Byte] = {
+      val q = new Array[Byte](unit.length)
+      var i = 0
+      while (i < unit.length) { q(i) = if (unit(i) >= 0) 1 else -1; i += 1 }
+      q
+    }
+  }
+
+  /** The blocked top-k kernel every ANN path runs. Rows are (group,
+    * role, id, encoded vector) with role bit 0 = query, bit 1 =
+    * candidate. Every group is split into `numBlocks(size, maxGroup)`
+    * hash blocks and every (queryBlock × candidateBlock) pair becomes
+    * ONE task that holds at most two blocks in memory and scores them
+    * with `codec` — a hot group becomes nb² bounded tasks instead of
+    * one quadratic straggler.
+    *
+    * Each task applies the codec's shortlist rule ([[Codec.nearTies]])
+    * at depth k to its own candidates and returns the survivors as
+    * (qid, cid, dot) rows. A task's k-th score never exceeds the global
+    * one, so every member of the GLOBAL shortlist at any depth ≤ k
+    * survives in each task that sees it — whatever the block layout,
+    * the rows hold the whole global shortlist, which
+    * [[blockedShortlist]] then cuts. The same (qid, cid) pair may
+    * surface from several tasks, always with the bit-identical score
+    * (see [[Codec]]), so the cut dedups with a distinct. */
+  private def blockedLocalBests[V: TypeTag](
+      rows: Dataset[(Long, Byte, Long, V)], codec: Codec[V],
       k: Int, maxGroup: Int): DataFrame = {
     val spark = rows.sparkSession
     import spark.implicits._
@@ -632,6 +717,8 @@ object Similarity {
     val nbMap = cached.groupByKey(_._1).count().collect()
       .map { case (g, n) => g -> numBlocks(n, maxGroup) }.toMap
     val bcNb = spark.sparkContext.broadcast(nbMap)
+    val nearTies = codec.nearTies
+    val margin = tieMargin
 
     val tasked = cached.flatMap { case (g, role, id, v) =>
       val nb = bcNb.value(g)
@@ -640,7 +727,7 @@ object Similarity {
         val b = Math.floorMod(XXH64.hashLong(id, 11), nb.toLong).toInt
         val isQ = (role & 1) != 0
         val isC = (role & 2) != 0
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Byte, Long, Array[Double])]
+        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Byte, Long, V)]
         var j = 0
         while (j < nb) {
           // Long ids: nb² exceeds Int past ~23.7M rows per group at
@@ -661,22 +748,26 @@ object Similarity {
 
     val bests = tasked
       .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (_: (Long, Long), it: Iterator[(Long, Long, Byte, Long, Array[Double])]) =>
-        val qs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
-        val cs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Double])]
+      .flatMapGroups { (_: (Long, Long), it: Iterator[(Long, Long, Byte, Long, V)]) =>
+        val qs = scala.collection.mutable.ArrayBuffer.empty[(Long, V)]
+        val cs = scala.collection.mutable.ArrayBuffer.empty[(Long, V)]
         it.foreach { case (_, _, role, id, v) =>
           if ((role & 1) != 0) qs += ((id, v))
           if ((role & 2) != 0) cs += ((id, v))
         }
+        val scores = new Array[Double](cs.length)
+        val bDot = new Array[Double](k)
+        val bCid = new Array[Long](k)
         qs.iterator.flatMap { case (qid, qv) =>
-          // k-best insertion lists, ordered by (dot desc, cid asc)
-          val bDot = new Array[Double](k)
-          val bCid = new Array[Long](k)
+          // k-best insertion list, ordered by (score desc, cid asc)
           var n = 0
-          cs.foreach { case (cid, cv) =>
-            if (cid != qid) {
-              var dot = 0.0; var d = 0
-              while (d < qv.length) { dot += qv(d) * cv(d); d += 1 }
+          var j = 0
+          while (j < cs.length) {
+            val (cid, cv) = cs(j)
+            if (cid == qid) scores(j) = Double.NegativeInfinity
+            else {
+              val dot = codec.score(qv, cv)
+              scores(j) = dot
               if (n < k || dot > bDot(n - 1) ||
                   (dot == bDot(n - 1) && cid < bCid(n - 1))) {
                 var i = math.min(n, k - 1)
@@ -688,8 +779,23 @@ object Similarity {
                 if (n < k) n += 1
               }
             }
+            j += 1
           }
-          (0 until n).iterator.map(i => (qid, bCid(i), bDot(i)))
+          val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+          if (nearTies && n == k) {
+            // the list's members plus every candidate it dropped on the
+            // cid order within the margin of its k-th score
+            val floor = bDot(k - 1) - margin
+            j = 0
+            while (j < cs.length) {
+              if (scores(j) >= floor) out += ((qid, cs(j)._1, scores(j)))
+              j += 1
+            }
+          } else {
+            var i = 0
+            while (i < n) { out += ((qid, bCid(i), bDot(i))); i += 1 }
+          }
+          out.iterator
         }
       }
       .toDF("qid", "cid", "dot")
@@ -713,259 +819,62 @@ object Similarity {
     * `nprobe = k ⇒ exhaustively exact` IVF invariant would not hold);
     * a blanket k+8 window instead would multiply the expensive exact
     * rescores 9× for nothing — near-ties are what actually needs
-    * rescoring, and 1e-9 is five orders looser than the error bound. */
+    * rescoring, and 1e-9 is five orders looser than the error bound.
+    * Integer-valued scores (SQ8 / BQ) differ by ≥ 1, so on them the
+    * margin keeps exactly the exact ties of the k-th score. */
   private val tieMargin = 1e-9
 
-  /** Extra per-task candidates kept in the local-bests lists (cheap —
-    * insertion-list slots, no exact evals) so cross-task near-ties at
-    * the k-th position survive into the global shortlist. */
+  /** Extra per-task candidates kept beyond k by [[Codec.nearTies]]
+    * codecs (cheap — insertion-list slots, no exact evals). The global
+    * shortlist would survive without them — every task also keeps the
+    * near-ties of its last slot — but the local bests would shrink
+    * enough for AQE to re-plan the shortlist and rescore stages:
+    * measured at sf0.1 on 4 cores, `q_ann_lsh_topk` then ran one more
+    * job and ~1 s slower. */
   private val rankWindow = 8
 
-  /** Per-query shortlist for top-1: the best-by-double candidate plus
-    * its near-ties; [[rescoreTop1]]'s exact rank picks the winner. */
-  private def blockedTop1(
-      rows: Dataset[(Long, Byte, Long, Array[Double])],
-      maxGroup: Int): DataFrame =
-    blockedTopK(rows, 1, maxGroup)
-
-  /** Global shortlist across tasks: distinct the (deterministically
-    * duplicated) local bests, rank per query by the double dot, keep
-    * rank ≤ k plus anything within [[tieMargin]] of the k-th dot.
-    * Returns (qid, cid); the exact-rescore stage re-ranks and cuts
-    * to k. */
-  private def blockedTopK(
-      rows: Dataset[(Long, Byte, Long, Array[Double])],
+  /** The global shortlist cut across tasks: distinct the
+    * (deterministically duplicated) local bests, rank per query by
+    * score, keep rank ≤ k — plus, for [[Codec.nearTies]] codecs,
+    * anything within [[tieMargin]] of the k-th score. Returns
+    * (qid, cid); [[rescore]] re-ranks exactly and makes the final cut.
+    * For PQ, k is a RECALL knob rather than the output depth (PQ
+    * scores are coarse — the exact rescore needs a window of
+    * candidates, not just near-ties), and the cut is deterministic
+    * because the approximate scores are: k ≥ corpus sends every
+    * candidate to the exact rescore, which then equals brute force
+    * (the SimilaritySpec invariant). */
+  private def blockedShortlist[V: TypeTag](
+      rows: Dataset[(Long, Byte, Long, V)], codec: Codec[V],
       k: Int, maxGroup: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid"))
-    val wq = Window.partitionBy(col("qid"))
-    blockedLocalBests(rows, k + rankWindow, maxGroup)
+    val ranked = blockedLocalBests(rows, codec,
+        if (codec.nearTies) k + rankWindow else k, maxGroup)
       .dropDuplicates("qid", "cid")
       .withColumn("rf", row_number().over(w))
-      // kth is null when a query has fewer than k candidates — then
-      // rf <= k already keeps every row
-      .withColumn("kth", max(when(col("rf") === k, col("dot"))).over(wq))
-      .filter(col("rf") <= k || col("dot") >= col("kth") - lit(tieMargin))
-      .select(col("qid"), col("cid"))
+    val kept =
+      if (codec.nearTies)
+        ranked
+          // kth is null when a query has fewer than k candidates — then
+          // rf <= k already keeps every row
+          .withColumn("kth",
+            max(when(col("rf") === k, col("dot"))).over(Window.partitionBy(col("qid"))))
+          .filter(col("rf") <= k || col("dot") >= col("kth") - lit(tieMargin))
+      else ranked.filter(col("rf") <= k)
+    kept.select(col("qid"), col("cid"))
   }
-
-  // ---- int8 scalar quantization (SQ8) ----
-
-  /** Quantize a UNIT vector to int8: q(i) = round(127·v(i)) ∈
-    * [-127, 127]. The scale is a constant (1/127) because the inputs
-    * are unit-normalized, so quantized dot products are pure INTEGER
-    * arithmetic — deterministic on any executor, any SIMD width, any
-    * reduction order. At 100 TB this is the representation the scan
-    * reads: 4× fewer bytes per vector than float32 (16× vs the
-    * double-unit form), which is the difference between an IO-bound
-    * and a compute-bound all-pairs pass. */
-  private def quantizeUnit(v: Array[Double]): Array[Byte] = {
-    val q = new Array[Byte](v.length)
-    var i = 0
-    while (i < v.length) { q(i) = math.round(v(i) * 127.0).toByte; i += 1 }
-    q
-  }
-
-  /** SQ8 top-1 for every vector: the blocked all-pairs scan of
-    * [[bruteForceTop1All]], but each task ranks candidates by the
-    * int8×int8 integer dot over the quantized vectors and only the
-    * per-query shortlist is rescored in exact decimal over the
-    * original floats. Shortlist misses (a true neighbor quantized out
-    * of the top `1 + rankWindow`) are the only recall loss — measured
-    * end-to-end by the `int8` row of `q_ann_recall`. */
-  def int8AnnTop1All(vecs: DataFrame, maxGroup: Int = 512): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val rows = vecs.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, arr) => (0L, 3.toByte, id, quantizeUnit(unitD(arr))) }
-    rescoreTop1(blockedTopKInt8(rows, 1, maxGroup), vecs)
-  }
-
-  /** [[int8AnnTop1All]] for a deterministic SAMPLE of query vectors
-    * against the full candidate corpus — same contract as
-    * [[bruteForceTop1Sampled]] (pure-function sampling, full-corpus
-    * candidates), int8 scan cost sample·corpus/cap² instead of
-    * corpus²/cap². Sampled queries' rows are identical to the full
-    * variant's (a query's top-1 never depends on other queries). */
-  def int8AnnTop1Sampled(
-      vecs: DataFrame, isQuery: Column, maxGroup: Int = 512): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val rows = vecs
-      .select(col("vec_id"), col("embedding"), isQuery.cast("boolean").as("isq"))
-      .as[(Long, Array[Float], Boolean)]
-      .map { case (id, arr, q) =>
-        (0L, (if (q) 3 else 2).toByte, id, quantizeUnit(unitD(arr)))
-      }
-    rescoreTop1(blockedTopKInt8(rows, 1, maxGroup), vecs)
-  }
-
-  /** BINARY quantization (sign-bit) — the 1-bit-per-dimension BQ
-    * representation: a unit vector collapses to its sign pattern.
-    * Stored as ±1 bytes so the int8 kernel's integer dot ranks
-    * candidates — sign·sign dot = d − 2·hamming, so ranking by the
-    * sign dot IS ranking by hamming distance over the bit signatures,
-    * while reusing [[blockedTopKInt8]]'s bounded task structure and
-    * shortlist rescore unchanged. At 100 TB the scan representation
-    * packs to d/8 bytes per vector (32× smaller than float32 — for
-    * d = 64, ONE machine word, xor+popcount per candidate); the ±1
-    * byte form here keeps the kernel shared, the ranking identical. */
-  private def signUnit(v: Array[Double]): Array[Byte] = {
-    val q = new Array[Byte](v.length)
-    var i = 0
-    while (i < v.length) { q(i) = if (v(i) >= 0) 1 else -1; i += 1 }
-    q
-  }
-
-  /** BQ top-1 for every vector: hamming-ranked shortlist over the sign
-    * signatures, exact-decimal rescore of the survivors. One bit per dimension is a
-    * coarse rank (near-orthogonal random corpora are its worst case),
-    * so BQ runs with a DEEP shortlist — rank by hamming, rescore the
-    * top `shortlist + rankWindow` exactly; recall loss = true
-    * neighbors whose sign pattern ranks outside it — measured
-    * end-to-end by the `bin` row of `q_ann_recall`. */
-  def binAnnTop1All(vecs: DataFrame, maxGroup: Int = 512,
-      shortlist: Int = 32): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val rows = vecs.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, arr) => (0L, 3.toByte, id, signUnit(unitD(arr))) }
-    rescoreTop1(blockedTopKInt8(rows, shortlist, maxGroup), vecs)
-  }
-
-  /** [[binAnnTop1All]] for a deterministic query sample against the
-    * full candidate corpus — the [[int8AnnTop1Sampled]] contract. */
-  def binAnnTop1Sampled(
-      vecs: DataFrame, isQuery: Column, maxGroup: Int = 512,
-      shortlist: Int = 32): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val rows = vecs
-      .select(col("vec_id"), col("embedding"), isQuery.cast("boolean").as("isq"))
-      .as[(Long, Array[Float], Boolean)]
-      .map { case (id, arr, q) =>
-        (0L, (if (q) 3 else 2).toByte, id, signUnit(unitD(arr)))
-      }
-    rescoreTop1(blockedTopKInt8(rows, shortlist, maxGroup), vecs)
-  }
-
-  /** [[blockedLocalBests]] over int8-quantized vectors: identical task
-    * structure (hash blocks, ≤ 2 blocks in memory, nb² tasks per hot
-    * group), integer dot accumulation (≤ 127²·d fits an Int at any
-    * practical dimensionality). Kept as a sibling rather than a shared
-    * generic kernel so both hot loops stay primitive and boxing-free. */
-  private def blockedLocalBestsInt8(
-      rows: Dataset[(Long, Byte, Long, Array[Byte])],
-      k: Int, maxGroup: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val cached = rows.cache()
-    val nbMap = cached.groupByKey(_._1).count().collect()
-      .map { case (g, n) => g -> numBlocks(n, maxGroup) }.toMap
-    val bcNb = spark.sparkContext.broadcast(nbMap)
-
-    val tasked = cached.flatMap { case (g, role, id, v) =>
-      val nb = bcNb.value(g)
-      if (nb == 1) Iterator.single((g, 0L, role, id, v))
-      else {
-        val b = Math.floorMod(XXH64.hashLong(id, 11), nb.toLong).toInt
-        val isQ = (role & 1) != 0
-        val isC = (role & 2) != 0
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Byte, Long, Array[Byte])]
-        var j = 0
-        while (j < nb) {
-          // Long ids — see blockedLocalBests: Int task ids collide past
-          // ~23.7M single-group rows at cap=512
-          val qTask = b.toLong * nb + j
-          val cTask = j.toLong * nb + b
-          if (qTask == cTask) out += ((g, qTask, role, id, v))
-          else {
-            if (isQ) out += ((g, qTask, 1.toByte, id, v))
-            if (isC) out += ((g, cTask, 2.toByte, id, v))
-          }
-          j += 1
-        }
-        out.iterator
-      }
-    }
-
-    val bests = tasked
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (_: (Long, Long), it: Iterator[(Long, Long, Byte, Long, Array[Byte])]) =>
-        val qs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
-        val cs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
-        it.foreach { case (_, _, role, id, v) =>
-          if ((role & 1) != 0) qs += ((id, v))
-          if ((role & 2) != 0) cs += ((id, v))
-        }
-        qs.iterator.flatMap { case (qid, qv) =>
-          val bDot = new Array[Int](k)
-          val bCid = new Array[Long](k)
-          var n = 0
-          cs.foreach { case (cid, cv) =>
-            if (cid != qid) {
-              var dot = 0; var d = 0
-              while (d < qv.length) { dot += qv(d) * cv(d); d += 1 }
-              if (n < k || dot > bDot(n - 1) ||
-                  (dot == bDot(n - 1) && cid < bCid(n - 1))) {
-                var i = math.min(n, k - 1)
-                while (i > 0 && (bDot(i - 1) < dot ||
-                    (bDot(i - 1) == dot && bCid(i - 1) > cid))) {
-                  bDot(i) = bDot(i - 1); bCid(i) = bCid(i - 1); i -= 1
-                }
-                bDot(i) = dot; bCid(i) = cid
-                if (n < k) n += 1
-              }
-            }
-          }
-          (0 until n).iterator.map(i => (qid, bCid(i), bDot(i)))
-        }
-      }
-      .toDF("qid", "cid", "dot")
-      .checkpointLinted()
-    cached.unpersist()
-    bests
-  }
-
-  /** Shortlist by integer dot rank. Integer ties are EXACT (no float
-    * margin needed): keep rank ≤ k plus every exact tie with the k-th
-    * dot; the exact-decimal rescore makes the final cut. */
-  private def blockedTopKInt8(
-      rows: Dataset[(Long, Byte, Long, Array[Byte])],
-      k: Int, maxGroup: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid"))
-    val wq = Window.partitionBy(col("qid"))
-    blockedLocalBestsInt8(rows, k + rankWindow, maxGroup)
-      .dropDuplicates("qid", "cid")
-      .withColumn("rf", row_number().over(w))
-      .withColumn("kth", max(when(col("rf") === k, col("dot"))).over(wq))
-      .filter(col("rf") <= k || col("dot") >= col("kth"))
-      .select(col("qid"), col("cid"))
-  }
-
-  /** Exact-decimal rescore of each query's shortlist, keeping the
-    * exact-rank winner → (qid, cid, cos). Join strategy left to AQE
-    * (see [[rescoreTopK]]). */
-  private def rescoreTop1(shortlist: DataFrame, vecs: DataFrame): DataFrame =
-    rescoreTopK(shortlist, vecs, 1)
-      .select(col("qid"), col("cid"), col("cos"))
 
   /** Exact-decimal rescore + re-rank of a per-query shortlist →
-    * (qid, rnk, cos, cid). Ranks come from the EXACT cosine (ties →
-    * lowest cid), like [[bruteForceTopK]]'s output contract. No
+    * (qid, rnk, cid, cos). Ranks come from the EXACT cosine (ties →
+    * lowest cid), like [[bruteForceTopK]]'s output contract. Query and
+    * candidate embeddings may come from different frames (e.g. a fresh
+    * query batch vs the stored vectors of a persisted index). No
     * broadcast hint: at harness scale AQE broadcasts the sub-MB
     * embedding side on its own; at 100 TB neither side fits a
     * broadcast and the correct plan is a shuffle join on the ids —
     * forcing broadcast here would re-introduce a driver-memory ceiling
-    * the blocked kernels exist to avoid. */
-  private def rescoreTopK(shortlist: DataFrame, vecs: DataFrame, k: Int): DataFrame =
-    rescoreTopK2(shortlist, vecs, vecs, k)
-
-  /** Two-frame rescore: query embeddings and candidate embeddings may
-    * come from different sources (e.g. a fresh query batch vs the
-    * stored vectors of a persisted index). */
-  private def rescoreTopK2(
+    * the blocked kernel exists to avoid. */
+  private def rescore(
       shortlist: DataFrame, qVecs: DataFrame, cVecs: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
     shortlist
@@ -978,19 +887,34 @@ object Similarity {
       .select(col("qid"), col("rnk"), col("cid"), col("cos"))
   }
 
-  /** Exact top-1 neighbor for EVERY vector (all-pairs, blocked): the
-    * ground truth the ANN paths' recall is measured against
-    * (`q_ann_recall`). One logical group covering the whole corpus,
-    * split by [[blockedTop1]] into bounded block-pair tasks — n²/cap²
-    * tasks of ≤ 2·cap vectors each, never a driver collect. */
-  def bruteForceTop1All(vecs: DataFrame, maxGroup: Int = 512): DataFrame = {
+  /** Top-1 per query of `rows`: the k-deep shortlist, exact-decimal
+    * rescored → (qid, cid, cos). */
+  private def top1[V: TypeTag](
+      vecs: DataFrame, rows: Dataset[(Long, Byte, Long, V)], codec: Codec[V],
+      k: Int, maxGroup: Int): DataFrame =
+    rescore(blockedShortlist(rows, codec, k, maxGroup), vecs, vecs, 1).drop("rnk")
+
+  /** Flat-partition rows, shared by every `*All` / `*Sampled` twin: one
+    * group over the whole corpus in which every vector is a candidate
+    * and a query where `isQuery` holds (`lit(true)` for the `*All`
+    * variants). */
+  private def flatRows[V: TypeTag](
+      vecs: DataFrame, isQuery: Column, codec: Codec[V]): Dataset[(Long, Byte, Long, V)] = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val rows = vecs.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, arr) => (0L, 3.toByte, id, unitD(arr)) }
-    rescoreTop1(blockedTop1(rows, maxGroup), vecs)
+    vecs
+      .select(col("vec_id"), col("embedding"), isQuery.cast("boolean").as("isq"))
+      .as[(Long, Array[Float], Boolean)]
+      .map { case (id, arr, q) => (0L, (if (q) 3 else 2).toByte, id, codec.encode(unitD(arr))) }
   }
+
+  /** Exact top-1 neighbor for EVERY vector (all-pairs, blocked): the
+    * ground truth the ANN paths' recall is measured against
+    * (`q_ann_recall`). One flat group covering the whole corpus, split
+    * by the kernel into bounded block-pair tasks — n²/cap² tasks of
+    * ≤ 2·cap vectors each, never a driver collect. */
+  def bruteForceTop1All(vecs: DataFrame, maxGroup: Int = 512): DataFrame =
+    top1(vecs, flatRows(vecs, lit(true), FloatCodec), FloatCodec, 1, maxGroup)
 
   /** Exact top-1 for a deterministic SAMPLE of query vectors against
     * the FULL candidate corpus — the scalable form of
@@ -1004,15 +928,46 @@ object Similarity {
     * candidates, so each sampled query's neighbor is its true corpus
     * top-1, not a sample-restricted one. */
   def bruteForceTop1Sampled(
-      vecs: DataFrame, isQuery: Column, maxGroup: Int = 512): DataFrame = {
-    val spark = vecs.sparkSession
-    import spark.implicits._
-    val rows = vecs
-      .select(col("vec_id"), col("embedding"), isQuery.cast("boolean").as("isq"))
-      .as[(Long, Array[Float], Boolean)]
-      .map { case (id, arr, q) => (0L, (if (q) 3 else 2).toByte, id, unitD(arr)) }
-    rescoreTop1(blockedTop1(rows, maxGroup), vecs)
-  }
+      vecs: DataFrame, isQuery: Column, maxGroup: Int = 512): DataFrame =
+    top1(vecs, flatRows(vecs, isQuery, FloatCodec), FloatCodec, 1, maxGroup)
+
+  /** SQ8 top-1 for every vector: the blocked all-pairs scan of
+    * [[bruteForceTop1All]], but each task ranks candidates by the
+    * int8×int8 integer dot over the quantized vectors and only the
+    * per-query shortlist is rescored in exact decimal over the
+    * original floats. Shortlist misses (a true neighbor quantized below
+    * the top integer dot and its exact ties) are the only recall loss —
+    * measured end-to-end by the `int8` row of `q_ann_recall`. */
+  def int8AnnTop1All(vecs: DataFrame, maxGroup: Int = 512): DataFrame =
+    top1(vecs, flatRows(vecs, lit(true), Sq8Codec), Sq8Codec, 1, maxGroup)
+
+  /** [[int8AnnTop1All]] for a deterministic SAMPLE of query vectors
+    * against the full candidate corpus — same contract as
+    * [[bruteForceTop1Sampled]] (pure-function sampling, full-corpus
+    * candidates), int8 scan cost sample·corpus/cap² instead of
+    * corpus²/cap². Sampled queries' rows are identical to the full
+    * variant's (a query's top-1 never depends on other queries). */
+  def int8AnnTop1Sampled(
+      vecs: DataFrame, isQuery: Column, maxGroup: Int = 512): DataFrame =
+    top1(vecs, flatRows(vecs, isQuery, Sq8Codec), Sq8Codec, 1, maxGroup)
+
+  /** BQ top-1 for every vector: hamming-ranked shortlist over the sign
+    * signatures, exact-decimal rescore of the survivors. One bit per
+    * dimension is a coarse rank (near-orthogonal random corpora are its
+    * worst case), so BQ runs with a DEEP shortlist — rank by hamming,
+    * rescore the top `shortlist` and their exact hamming ties exactly;
+    * recall loss = true neighbors whose sign pattern ranks outside it —
+    * measured end-to-end by the `bin` row of `q_ann_recall`. */
+  def binAnnTop1All(vecs: DataFrame, maxGroup: Int = 512,
+      shortlist: Int = 32): DataFrame =
+    top1(vecs, flatRows(vecs, lit(true), BqCodec), BqCodec, shortlist, maxGroup)
+
+  /** [[binAnnTop1All]] for a deterministic query sample against the
+    * full candidate corpus — the [[int8AnnTop1Sampled]] contract. */
+  def binAnnTop1Sampled(
+      vecs: DataFrame, isQuery: Column, maxGroup: Int = 512,
+      shortlist: Int = 32): DataFrame =
+    top1(vecs, flatRows(vecs, isQuery, BqCodec), BqCodec, shortlist, maxGroup)
 
   /** Deterministic pseudo-random hyperplane component in [-0.5, 0.5):
     * derived from XXH64 of (table, plane, dim) — identical on every
@@ -1023,23 +978,6 @@ object Similarity {
     Math.floorMod(h, 1000000L).toDouble / 1000000.0 - 0.5
   }
 
-  /** Multi-table random-hyperplane LSH ANN: top-1 neighbor per vector.
-    *
-    * Recall comes from OR-amplification: `tables` independent hash
-    * tables of `planes` sign bits each; a query's candidate set is the
-    * union of its buckets across tables, so a true neighbor at angle θ
-    * is found with probability 1 − (1 − p^planes)^tables,
-    * p = 1 − θ/π. Defaults (4 planes × 8 tables) are tuned for this
-    * corpus's near-orthogonal top-1s (cos ≈ 0.37 → ~0.74 recall,
-    * measured by `q_ann_recall` / SimilaritySpec); clustered production
-    * corpora support more planes per table for the same recall at a
-    * fraction of the candidates.
-    *
-    * Scale: bucket membership shuffles (table, code, id, unitvec) rows;
-    * in-bucket scans go through [[blockedTop1]], so a hot bucket is
-    * split into bounded block-pair tasks instead of one quadratic
-    * straggler (round-1 defect). The final per-query argmax across
-    * tables deduplicates candidates found by several tables for free. */
   /** (table, code)-grouped rows for the LSH variants. The hyperplane
     * matrix is a pure function of (table, plane, dim), so each
     * partition rebuilds it from its first row's dimensionality (2k
@@ -1079,10 +1017,27 @@ object Similarity {
     }
   }
 
+  /** Multi-table random-hyperplane LSH ANN: top-1 neighbor per vector.
+    *
+    * Recall comes from OR-amplification: `tables` independent hash
+    * tables of `planes` sign bits each; a query's candidate set is the
+    * union of its buckets across tables, so a true neighbor at angle θ
+    * is found with probability 1 − (1 − p^planes)^tables,
+    * p = 1 − θ/π. Defaults (4 planes × 8 tables) are tuned for this
+    * corpus's near-orthogonal top-1s (cos ≈ 0.37 → ~0.74 recall,
+    * measured by `q_ann_recall` / SimilaritySpec); clustered production
+    * corpora support more planes per table for the same recall at a
+    * fraction of the candidates.
+    *
+    * Scale: bucket membership shuffles (table, code, id, unitvec) rows;
+    * in-bucket scans go through the blocked kernel, so a hot bucket is
+    * split into bounded block-pair tasks instead of one quadratic
+    * straggler. The global shortlist cut across tables deduplicates
+    * candidates found by several tables for free. */
   def lshAnnTop1(
       vecs: DataFrame, planes: Int = 4, tables: Int = 8,
       maxGroup: Int = 256): DataFrame =
-    rescoreTop1(blockedTop1(lshCodedRows(vecs, planes, tables), maxGroup), vecs)
+    top1(vecs, lshCodedRows(vecs, planes, tables), FloatCodec, 1, maxGroup)
 
   /** Top-k LSH ANN: same candidate structure as [[lshAnnTop1]], k best
     * same-bucket neighbors per query across all tables, exact-decimal
@@ -1090,7 +1045,8 @@ object Similarity {
   def lshAnnTopK(
       vecs: DataFrame, k: Int, planes: Int = 4, tables: Int = 8,
       maxGroup: Int = 256): DataFrame =
-    rescoreTopK(blockedTopK(lshCodedRows(vecs, planes, tables), k, maxGroup), vecs, k)
+    rescore(blockedShortlist(lshCodedRows(vecs, planes, tables), FloatCodec, k, maxGroup),
+      vecs, vecs, k)
 
   /** Index of the max-dot centroid (ties → lowest index). */
   private def nearestCentroid(v: Array[Double], cents: Array[Array[Double]]): Int = {
@@ -1106,6 +1062,21 @@ object Similarity {
       j += 1
     }
     bi
+  }
+
+  /** The `n` max-dot centroids of `v`, best first (ties → lowest
+    * index): the lists an IVF query probes. */
+  private def probeLists(v: Array[Double], cents: Array[Array[Double]], n: Int): Seq[Int] = {
+    val dots = new Array[Double](cents.length)
+    var j = 0
+    while (j < cents.length) {
+      var dot = 0.0
+      var d = 0
+      while (d < v.length) { dot += v(d) * cents(j)(d); d += 1 }
+      dots(j) = dot
+      j += 1
+    }
+    (0 until cents.length).sortBy(i => (-dots(i), i)).take(n)
   }
 
   /** Deterministic md5 TRAINING sample for the Lloyd loops — the
@@ -1223,15 +1194,6 @@ object Similarity {
     cents
   }
 
-  /** IVF ANN: coarse quantization into k Lloyd-trained lists, probing
-    * the `nprobe` nearest lists per query. Each vector is a MEMBER
-    * (searchable candidate) of its top-1 list and a PROBE (query) of
-    * its `nprobe` nearest lists; the per-list probe-vs-member scan runs
-    * through [[blockedTop1]] with bounded tasks, then a global argmax
-    * picks each query's best across its probed lists. Centroids are
-    * trained with [[trainCentroids]] (`lloydIters` = 0 reproduces the
-    * round-1 lowest-id seeding, kept for the recall A/B in
-    * SimilaritySpec). */
   /** List-assigned rows for the IVF variants: each vector is a member
     * (candidate) of its top-1 list and a probe (query) of its `nprobe`
     * nearest lists. */
@@ -1252,17 +1214,7 @@ object Similarity {
       val cs = bc.value
       it.flatMap { case (id, arr) =>
         val v = unitD(arr)
-        val dots = new Array[Double](cs.length)
-        var j = 0
-        while (j < cs.length) {
-          var dot = 0.0
-          var d = 0
-          while (d < v.length) { dot += v(d) * cs(j)(d); d += 1 }
-          dots(j) = dot
-          j += 1
-        }
-        val order = (0 until cs.length).sortBy(i => (-dots(i), i))
-        order.take(nprobe).zipWithIndex.iterator.map { case (list, rank) =>
+        probeLists(v, cs, nprobe).zipWithIndex.iterator.map { case (list, rank) =>
           // member of the top-1 list (candidate); probe everywhere it searches
           (list.toLong, (if (rank == 0) 3 else 1).toByte, id, v)
         }
@@ -1295,12 +1247,21 @@ object Similarity {
     planes
   }
 
+  /** IVF ANN: coarse quantization into k Lloyd-trained lists, probing
+    * the `nprobe` nearest lists per query. Each vector is a MEMBER
+    * (searchable candidate) of its top-1 list and a PROBE (query) of
+    * its `nprobe` nearest lists; the per-list probe-vs-member scan runs
+    * through the blocked kernel with bounded tasks, and the global
+    * shortlist cut picks each query's best across its probed lists.
+    * Centroids are trained with [[trainCentroids]] (`lloydIters` = 0
+    * reproduces the lowest-id seeding, kept for the recall A/B in
+    * SimilaritySpec). */
   def ivfAnnTop1(
       vecs: DataFrame, k: Int = 16, nprobe: Int = 4, lloydIters: Int = 3,
       maxGroup: Int = 256,
       preTrained: Option[Array[Array[Double]]] = None): DataFrame =
-    rescoreTop1(blockedTop1(
-      ivfAssignedRows(vecs, k, nprobe, lloydIters, preTrained), maxGroup), vecs)
+    top1(vecs, ivfAssignedRows(vecs, k, nprobe, lloydIters, preTrained),
+      FloatCodec, 1, maxGroup)
 
   /** Top-`topK` IVF ANN across the probed lists, exact-decimal
     * re-ranked → (qid, rnk, cid, cos). With nprobe = k every list is
@@ -1310,8 +1271,8 @@ object Similarity {
       vecs: DataFrame, topK: Int, k: Int = 16, nprobe: Int = 4,
       lloydIters: Int = 3, maxGroup: Int = 256,
       preTrained: Option[Array[Array[Double]]] = None): DataFrame =
-    rescoreTopK(blockedTopK(
-      ivfAssignedRows(vecs, k, nprobe, lloydIters, preTrained), topK, maxGroup), vecs, topK)
+    rescore(blockedShortlist(ivfAssignedRows(vecs, k, nprobe, lloydIters, preTrained),
+      FloatCodec, topK, maxGroup), vecs, vecs, topK)
 
   /** IVF with SQ8 in-list scans — the composition a billion-vector
     * deployment actually runs (FAISS calls the shape IVF-SQ8): Lloyd
@@ -1329,8 +1290,8 @@ object Similarity {
     val spark = vecs.sparkSession
     import spark.implicits._
     val rows = ivfAssignedRows(vecs, k, nprobe, lloydIters, preTrained)
-      .map { case (g, role, id, v) => (g, role, id, quantizeUnit(v)) }
-    rescoreTop1(blockedTopKInt8(rows, 1, maxGroup), vecs)
+      .map { case (g, role, id, v) => (g, role, id, Sq8Codec.encode(v)) }
+    top1(vecs, rows, Sq8Codec, 1, maxGroup)
   }
 
   // ---- product quantization (PQ) ----
@@ -1517,142 +1478,48 @@ object Similarity {
     t
   }
 
-  /** [[blockedLocalBests]] over PQ codes: identical task structure,
-    * but each (query, candidate) score is m dot-table lookups — the
-    * scan never touches a float vector. The per-pair score is a
-    * fixed-order sum of broadcast-table doubles, so it is bit-identical
-    * in every task and the shortlist is partitioning-independent. Kept
-    * as a sibling of the double/int8 kernels so the hot loop stays
-    * primitive (codes are byte arrays, scores double). */
-  private def blockedLocalBestsPq(
-      rows: Dataset[(Long, Byte, Long, Array[Byte])],
-      table: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      kk: Int, k: Int, maxGroup: Int): DataFrame = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val cached = rows.cache()
-    val nbMap = cached.groupByKey(_._1).count().collect()
-      .map { case (g, n) => g -> numBlocks(n, maxGroup) }.toMap
-    val bcNb = spark.sparkContext.broadcast(nbMap)
-
-    val tasked = cached.flatMap { case (g, role, id, v) =>
-      val nb = bcNb.value(g)
-      if (nb == 1) Iterator.single((g, 0L, role, id, v))
-      else {
-        val b = Math.floorMod(XXH64.hashLong(id, 11), nb.toLong).toInt
-        val isQ = (role & 1) != 0
-        val isC = (role & 2) != 0
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Byte, Long, Array[Byte])]
-        var j = 0
-        while (j < nb) {
-          // Long ids — see blockedLocalBests: Int task ids collide past
-          // ~23.7M single-group rows at cap=512
-          val qTask = b.toLong * nb + j
-          val cTask = j.toLong * nb + b
-          if (qTask == cTask) out += ((g, qTask, role, id, v))
-          else {
-            if (isQ) out += ((g, qTask, 1.toByte, id, v))
-            if (isC) out += ((g, cTask, 2.toByte, id, v))
-          }
-          j += 1
-        }
-        out.iterator
+  /** PQ: m dot-table lookups per pair over m-byte codes — the scan
+    * never touches a float vector. The per-pair score is a fixed-order
+    * sum of broadcast-table doubles, so it is bit-identical in every
+    * task. The broadcasts are resolved once per deserialized codec
+    * (once per task), never per pair. No near-tie window: the PQ
+    * shortlist depth is a recall knob (see [[blockedShortlist]]). */
+  private final class PqCodec(
+      bcCb: Broadcast[Array[Array[Array[Double]]]], bcTab: Broadcast[Array[Double]],
+      kk: Int, dsub: Int) extends Codec[Array[Byte]] {
+    @transient private lazy val cbs = bcCb.value
+    @transient private lazy val tab = bcTab.value
+    override def nearTies: Boolean = false
+    def encode(unit: Array[Double]): Array[Byte] = pqEncode(unit, cbs, dsub)
+    def score(q: Array[Byte], c: Array[Byte]): Double = {
+      val t = tab
+      var dot = 0.0
+      var s = 0
+      while (s < q.length) {
+        dot += t((s * kk + (q(s) & 0xff)) * kk + (c(s) & 0xff))
+        s += 1
       }
+      dot
     }
-
-    val bests = tasked
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (_: (Long, Long), it: Iterator[(Long, Long, Byte, Long, Array[Byte])]) =>
-        val tab = table.value
-        val qs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
-        val cs = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Byte])]
-        it.foreach { case (_, _, role, id, v) =>
-          if ((role & 1) != 0) qs += ((id, v))
-          if ((role & 2) != 0) cs += ((id, v))
-        }
-        qs.iterator.flatMap { case (qid, qv) =>
-          val bDot = new Array[Double](k)
-          val bCid = new Array[Long](k)
-          var n = 0
-          cs.foreach { case (cid, cv) =>
-            if (cid != qid) {
-              var dot = 0.0
-              var s = 0
-              while (s < qv.length) {
-                dot += tab((s * kk + (qv(s) & 0xff)) * kk + (cv(s) & 0xff))
-                s += 1
-              }
-              if (n < k || dot > bDot(n - 1) ||
-                  (dot == bDot(n - 1) && cid < bCid(n - 1))) {
-                var i = math.min(n, k - 1)
-                while (i > 0 && (bDot(i - 1) < dot ||
-                    (bDot(i - 1) == dot && bCid(i - 1) > cid))) {
-                  bDot(i) = bDot(i - 1); bCid(i) = bCid(i - 1); i -= 1
-                }
-                bDot(i) = dot; bCid(i) = cid
-                if (n < k) n += 1
-              }
-            }
-          }
-          (0 until n).iterator.map(i => (qid, bCid(i), bDot(i)))
-        }
-      }
-      .toDF("qid", "cid", "dot")
-      .checkpointLinted()
-    cached.unpersist()
-    bests
   }
 
-  /** Per-query PQ shortlist of `shortlist` candidates by approximate
-    * (table-lookup) dot. Unlike the int8/double cuts there is no
-    * tie-margin subtlety: `shortlist` is a RECALL knob (PQ scores are
-    * coarse — the exact rescore needs a window of candidates, not just
-    * near-ties), and the cut itself is deterministic because the
-    * approximate dots are. `shortlist` ≥ corpus ⇒ every candidate
-    * reaches the exact rescore ⇒ results equal brute force (the
-    * SimilaritySpec invariant). */
-  private def blockedShortlistPq(
-      rows: Dataset[(Long, Byte, Long, Array[Byte])],
-      table: org.apache.spark.broadcast.Broadcast[Array[Double]],
-      kk: Int, shortlist: Int, maxGroup: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid")).orderBy(col("dot").desc, col("cid"))
-    blockedLocalBestsPq(rows, table, kk, shortlist, maxGroup)
-      .dropDuplicates("qid", "cid")
-      .withColumn("rf", row_number().over(w))
-      .filter(col("rf") <= shortlist)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** PQ rows for the blocked kernel: every vector encoded to m bytes,
-    * query role per `isQuery` (candidates always). Returns the rows
-    * plus (kk, dot-table broadcast) — empty corpus → empty rows and a
-    * 0-entry table, flowing through to an empty result. */
-  private def pqCodedRows(
-      vecs: DataFrame, isQuery: Column, m: Int, ksub: Int, iters: Int,
-      preTrained: Option[Array[Array[Array[Double]]]] = None):
-      (Dataset[(Long, Byte, Long, Array[Byte])],
-        org.apache.spark.broadcast.Broadcast[Array[Double]], Int) = {
+  /** The PQ codec of `vecs`: codebooks trained by [[trainPqCodebooks]]
+    * (or pre-trained), broadcast with their dot table. Empty corpus →
+    * empty codebooks and a 0-entry table, flowing through to an empty
+    * result. */
+  private def pqCodec(
+      vecs: DataFrame, m: Int, ksub: Int, iters: Int,
+      preTrained: Option[Array[Array[Array[Double]]]]): PqCodec = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val typed = vecs.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val cbs = preTrained.getOrElse(trainPqCodebooks(typed, m, ksub, iters))
+    val cbs = preTrained.getOrElse(trainPqCodebooks(
+      vecs.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])], m, ksub, iters))
     preTrained.foreach(c => require(c.isEmpty || c.length == m,
       s"preTrained codebooks: ${c.length} subspaces, expected m=$m"))
     val kk = if (cbs.isEmpty) 0 else cbs(0).length
     val dsub = if (kk == 0) 0 else cbs(0)(0).length
-    val bcCb = spark.sparkContext.broadcast(cbs)
-    val bcTab = spark.sparkContext.broadcast(pqDotTable(cbs))
-    val rows = vecs
-      .select(col("vec_id"), col("embedding"), isQuery.cast("boolean").as("isq"))
-      .as[(Long, Array[Float], Boolean)]
-      .mapPartitions { it =>
-        val cb = bcCb.value
-        it.map { case (id, arr, q) =>
-          (0L, (if (q) 3 else 2).toByte, id, pqEncode(unitD(arr), cb, dsub))
-        }
-      }
-    (rows, bcTab, kk)
+    new PqCodec(spark.sparkContext.broadcast(cbs),
+      spark.sparkContext.broadcast(pqDotTable(cbs)), kk, dsub)
   }
 
   /** PQ top-1 for every vector: blocked all-pairs scan over m-byte
@@ -1665,9 +1532,8 @@ object Similarity {
       vecs: DataFrame, m: Int = 16, ksub: Int = 256, iters: Int = 3,
       shortlist: Int = 64, maxGroup: Int = 512,
       preTrainedCodebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val (rows, tab, kk) =
-      pqCodedRows(vecs, lit(true), m, ksub, iters, preTrainedCodebooks)
-    rescoreTop1(blockedShortlistPq(rows, tab, kk, shortlist, maxGroup), vecs)
+    val codec = pqCodec(vecs, m, ksub, iters, preTrainedCodebooks)
+    top1(vecs, flatRows(vecs, lit(true), codec), codec, shortlist, maxGroup)
   }
 
   /** [[pqAnnTop1All]] for a deterministic query sample against the full
@@ -1676,9 +1542,8 @@ object Similarity {
       vecs: DataFrame, isQuery: Column, m: Int = 16, ksub: Int = 256,
       iters: Int = 3, shortlist: Int = 64, maxGroup: Int = 512,
       preTrainedCodebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val (rows, tab, kk) =
-      pqCodedRows(vecs, isQuery, m, ksub, iters, preTrainedCodebooks)
-    rescoreTop1(blockedShortlistPq(rows, tab, kk, shortlist, maxGroup), vecs)
+    val codec = pqCodec(vecs, m, ksub, iters, preTrainedCodebooks)
+    top1(vecs, flatRows(vecs, isQuery, codec), codec, shortlist, maxGroup)
   }
 
   /** Top-k PQ ANN, exact-decimal re-ranked → (qid, rnk, cid, cos). */
@@ -1686,8 +1551,9 @@ object Similarity {
       vecs: DataFrame, topK: Int, m: Int = 16, ksub: Int = 256,
       iters: Int = 3, shortlist: Int = 64, maxGroup: Int = 512): DataFrame = {
     require(shortlist >= topK, s"shortlist=$shortlist < topK=$topK")
-    val (rows, tab, kk) = pqCodedRows(vecs, lit(true), m, ksub, iters)
-    rescoreTopK(blockedShortlistPq(rows, tab, kk, shortlist, maxGroup), vecs, topK)
+    val codec = pqCodec(vecs, m, ksub, iters, None)
+    rescore(blockedShortlist(flatRows(vecs, lit(true), codec), codec, shortlist, maxGroup),
+      vecs, vecs, topK)
   }
 
   /** IVF-PQ: Lloyd list pruning + PQ-code in-list scans — the FAISS
@@ -1707,19 +1573,10 @@ object Similarity {
       preTrainedCodebooks: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
     val spark = vecs.sparkSession
     import spark.implicits._
-    val typed = vecs.select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-    val cbs = preTrainedCodebooks.getOrElse(trainPqCodebooks(typed, m, ksub, pqIters))
-    val kk = if (cbs.isEmpty) 0 else cbs(0).length
-    val dsub = if (kk == 0) 0 else cbs(0)(0).length
-    val bcCb = spark.sparkContext.broadcast(cbs)
-    val bcTab = spark.sparkContext.broadcast(pqDotTable(cbs))
+    val codec = pqCodec(vecs, m, ksub, pqIters, preTrainedCodebooks)
     val rows = ivfAssignedRows(vecs, k, nprobe, lloydIters, preTrained)
-      .mapPartitions { it =>
-        val cb = bcCb.value
-        it.map { case (g, role, id, v) => (g, role, id, pqEncode(v, cb, dsub)) }
-      }
-    rescoreTop1(blockedShortlistPq(rows, bcTab, kk, shortlist, maxGroup), vecs)
+      .map { case (g, role, id, v) => (g, role, id, codec.encode(v)) }
+    top1(vecs, rows, codec, shortlist, maxGroup)
   }
 
   // ---- persisted IVF-SQ8 index (build once per corpus epoch,
@@ -1790,7 +1647,7 @@ object Similarity {
         require(arr.length == dims,
           s"embedding dim ${arr.length} != index dim $dims (vec_id=$id)")
         val v = unitD(arr)
-        (id, nearestCentroid(v, bc.value), quantizeUnit(v), arr)
+        (id, nearestCentroid(v, bc.value), Sq8Codec.encode(v), arr)
       }
       .toDF("vec_id", "list", "q", "embedding")
       .repartition(col("list"))
@@ -1849,8 +1706,8 @@ object Similarity {
   /** Top-`topK` neighbors for a NEW query batch against a persisted
     * index ([[writeAnnIndex]]): centroids are read and broadcast
     * (metadata-sized), each query routes to its `nprobe` nearest
-    * lists, candidates stream through the bounded int8 block-pair
-    * kernel, and only the shortlist is exact-decimal rescored against
+    * lists, candidates stream through the blocked kernel with the SQ8
+    * codec, and only the shortlist is exact-decimal rescored against
     * the stored float embeddings. Per-batch cost ∝ batch·corpus/k·
     * nprobe/cap² tasks — the corpus is never rescanned in full
     * precision. Query and corpus `vec_id`s must be disjoint (the
@@ -1870,17 +1727,8 @@ object Similarity {
         val cs = bc.value
         it.flatMap { case (id, arr) =>
           val v = unitD(arr)
-          val dots = new Array[Double](cs.length)
-          var j = 0
-          while (j < cs.length) {
-            var dot = 0.0; var d = 0
-            while (d < v.length) { dot += v(d) * cs(j)(d); d += 1 }
-            dots(j) = dot
-            j += 1
-          }
-          val qv = quantizeUnit(v)
-          (0 until cs.length).sortBy(i => (-dots(i), i)).take(nprobe)
-            .iterator.map(list => (list.toLong, 1.toByte, id, qv))
+          val qv = Sq8Codec.encode(v)
+          probeLists(v, cs, nprobe).iterator.map(list => (list.toLong, 1.toByte, id, qv))
         }
       }
       // the probed-list set feeds a partition-pruning filter below and
@@ -1894,11 +1742,11 @@ object Similarity {
     val cRows = annIndexCandidateFrame(spark, indexPath, probed)
       .as[(Long, Long, Array[Byte])]
       .map { case (l, id, q) => (l, 2.toByte, id, q) }
-    val shortlist = blockedTopKInt8(qRows.union(cRows), topK, maxGroup)
+    val shortlist = blockedShortlist(qRows.union(cRows), Sq8Codec, topK, maxGroup)
     // every shortlist candidate comes from a probed list, so the
     // SECOND (float32, heavier) read of the index prunes identically —
     // the corpus' unprobed float bytes are never touched either
-    rescoreTopK2(shortlist, queries,
+    rescore(shortlist, queries,
       spark.read.parquet(s"$indexPath/lists")
         .filter(col("list").isin(probed.toSeq: _*))
         .select(col("vec_id"), col("embedding")), topK)

@@ -209,7 +209,7 @@ object SimilarityQueries {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val root = s"target/stage-$name-$slug"
     graft.io.StageMemo.cachedDir(s, root,
-      graft.io.StageMemo.fingerprint(Seq(s"$dir/embeddings.parquet"), s"truth-$name-v1")) {
+      graft.io.StageMemo.fingerprint(Seq(s"$dir/embeddings.parquet"), s"truth-$name-v2")) {
       build.write.parquet(s"$root/truth")
     }
     s.read.parquet(s"$root/truth")

@@ -147,17 +147,40 @@ class SimilaritySpec extends SparkSpec {
     first shouldBe top1
   }
 
-  // Round-1 verdict item 3: a hot bucket must split into bounded
-  // block-pair tasks, with output invariant to the block layout.
+  // A hot group must split into bounded block-pair tasks with output
+  // invariant to the block layout — on every codec × partition path.
   "blocked group splitting" should "leave ANN output unchanged when buckets are force-split" in {
-    val oneTask = Similarity.lshAnnTop1(realVecs, planes = 4, tables = 4,
-      maxGroup = Int.MaxValue).collect().map(_.toSeq).toSet
-    // 500 vectors / 16 buckets ≈ 31 per bucket; cap 8 forces every
-    // bucket into ≥ 4 blocks → ≥ 16 tasks per bucket
-    val manyTasks = Similarity.lshAnnTop1(realVecs, planes = 4, tables = 4,
-      maxGroup = 8).collect().map(_.toSeq).toSet
-    Similarity.numBlocks(31, 8) should be > 1
-    manyTasks shouldBe oneTask
+    import spark.implicits._
+    val typed = realVecs.select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
+    // trained once, so both runs of a path scan the same lists and codes
+    val cents = Some(Similarity.trainCentroids(typed, k = 8, iters = 1))
+    val cbs = Some(Similarity.trainPqCodebooks(typed, m = 16, ksub = 256, iters = 1))
+    val paths: Seq[(String, Int => DataFrame)] = Seq(
+      "lshAnnTop1" -> (g =>
+        Similarity.lshAnnTop1(realVecs, planes = 4, tables = 4, maxGroup = g)),
+      "lshAnnTopK" -> (g =>
+        Similarity.lshAnnTopK(realVecs, k = 3, planes = 4, tables = 4, maxGroup = g)),
+      "ivfAnnTop1" -> (g => Similarity.ivfAnnTop1(realVecs, k = 8, nprobe = 2,
+        maxGroup = g, preTrained = cents)),
+      "ivfSq8AnnTop1" -> (g => Similarity.ivfSq8AnnTop1(realVecs, k = 8, nprobe = 2,
+        maxGroup = g, preTrained = cents)),
+      "ivfPqAnnTop1" -> (g => Similarity.ivfPqAnnTop1(realVecs, k = 8, nprobe = 2,
+        maxGroup = g, preTrained = cents, preTrainedCodebooks = cbs)),
+      "int8AnnTop1All" -> (g => Similarity.int8AnnTop1All(realVecs, maxGroup = g)),
+      "binAnnTop1All" -> (g => Similarity.binAnnTop1All(realVecs, maxGroup = g)),
+      "pqAnnTop1All" -> (g =>
+        Similarity.pqAnnTop1All(realVecs, maxGroup = g, preTrainedCodebooks = cbs)))
+    // 500 vectors: 500 rows in the flat group, ≈ 62 members plus their
+    // probes per IVF list, ≈ 31 per LSH bucket (16 buckets) — cap 8
+    // splits any group of ≥ 25 rows into ≥ 4 blocks → ≥ 16 tasks
+    Similarity.numBlocks(31, 8) should be >= 4
+    paths.foreach { case (name, run) =>
+      withClue(s"$name: ") {
+        val oneTask = run(Int.MaxValue).collect().map(_.toSeq).toSet
+        oneTask should not be empty
+        run(8).collect().map(_.toSeq).toSet shouldBe oneTask
+      }
+    }
   }
 
   it should "leave IVF output unchanged when lists are force-split" in {
@@ -277,6 +300,28 @@ class SimilaritySpec extends SparkSpec {
     val sq8 = Similarity.int8AnnTop1All(vecs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     sq8 shouldBe exact
+  }
+
+  it should "carry exact int8 ties at rank k to the exact rescore" in {
+    import spark.implicits._
+    // a and b quantize to the same int8 dot with q (127·102 each) while
+    // their exact cosines differ (0.800 vs 0.805): the shortlist must
+    // keep the whole tie so the exact rescore can pick b, the HIGHER cid
+    val q = Array(1f, 0f, 0f, 0f)
+    val a = Array(0.8f, 0.6f, 0f, 0f)
+    val b = Array(0.805f, 0f, 0.5933f, 0f)
+    def sq8(v: Array[Float]): Array[Long] = {
+      val n = math.sqrt(v.map(x => x.toDouble * x).sum)
+      v.map(x => math.round(x / n * 127.0))
+    }
+    def dot(x: Array[Long], y: Array[Long]): Long = x.zip(y).map { case (i, j) => i * j }.sum
+    dot(sq8(q), sq8(a)) shouldBe dot(sq8(q), sq8(b))
+    val vecs = Seq(1L -> q, 2L -> a, 3L -> b).toDF("vec_id", "embedding")
+    def top1Of1(df: DataFrame): Seq[(Long, Double)] =
+      df.filter(col("qid") === 1L).collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
+    val exact = top1Of1(Similarity.bruteForceTop1All(vecs))
+    exact.map(_._1) shouldBe Seq(3L)
+    top1Of1(Similarity.int8AnnTop1All(vecs)) shouldBe exact
   }
 
   "int8AnnTop1Sampled" should "equal the full int8 result restricted to the sample" in {

@@ -28,7 +28,7 @@ class CollectCoverageSpec extends SparkSpec {
   private val allowlist: Map[String, (Int, String)] = Map(
     "graft/ops/Sampling.scala" -> (4,
       "per-stratum/group count aggregates — group-cardinality-sized"),
-    "graft/ops/Similarity.scala" -> (9,
+    "graft/ops/Similarity.scala" -> (7,
       "k-sized centroids/seeds, partition-count partials, query-set ids; " +
         "the payload collect is size-guarded (maxBroadcastVectors throws)"),
     "graft/ops/QualityModel.scala" -> (1,
