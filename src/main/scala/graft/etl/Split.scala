@@ -15,49 +15,38 @@ import org.apache.spark.sql.functions._
   * (`get_individual_dfs_in_dict`, :193-199).
   *
   * Engine shape: the config is *metadata* — it is collected to the driver
-  * once (it is tiny by construction: one row per column of the wide
-  * table), and used to synthesize plain `select` projections. The wide
-  * frame itself is never collected; each split is a narrow projection of
-  * the same (cached) scan, so at 100 TB this is N column-pruned reads of
-  * one dataset with zero shuffles.
+  * once, in one job (it is tiny by construction: one row per column of
+  * the wide table), and used to synthesize plain `select` projections.
+  * The wide frame itself is never collected; each split is a narrow
+  * projection of the same (cached) scan, so at 100 TB this is N
+  * column-pruned reads of one dataset with zero shuffles.
   */
 object Split {
-
-  /** Distinct normalized (lower/trim) target tables, sorted for
-    * determinism (the reference iterates a Python set — order
-    * nondeterministic; SURVEY.md §2 #11). Driver-side metadata collect. */
-  def targets(config: DataFrame, targetCol: String = "target_table"): Seq[String] =
-    config.select(lower(trim(col(targetCol))).as("t"))
-      .distinct().collect().map(_.getString(0)).toSeq.sorted
-
-  /** Column list routed to `target` by the config, in config order
-    * (mirrors the pandas filter at :165/:173/:181/:187). */
-  def columnsFor(
-      config: DataFrame,
-      target: String,
-      columnCol: String = "column_name",
-      targetCol: String = "target_table"): Seq[String] =
-    config
-      .filter(lower(trim(col(targetCol))) === target)
-      .select(col(columnCol))
-      .collect().map(_.getString(0)).toSeq
 
   /** Per-target column lists with key columns prepended (mirrors
     * `get_dict_of_columns(include_keys=True)`): the main table gets
     * `mainKeys`, each dimension in `dimKeys` gets its own key, every
-    * other target gets `factKey`. */
+    * other target gets `factKey`. Targets are the distinct normalized
+    * (lower/trim) `target_table` values, sorted for determinism (the
+    * reference iterates a Python set — order nondeterministic; SURVEY.md
+    * §2 #11); each target's columns keep config row order (mirrors the
+    * pandas filter at :165/:173/:181/:187). One driver-side metadata
+    * collect of the whole routing table. */
   def columnLists(
       config: DataFrame,
       mainTable: String,
       mainKeys: Seq[String],
       dimKeys: Map[String, Seq[String]],
       factKey: Seq[String]): Map[String, Seq[String]] =
-    targets(config).map { t =>
-      val keys =
-        if (t == mainTable) mainKeys
-        else dimKeys.getOrElse(t, factKey)
-      t -> (keys ++ columnsFor(config, t))
-    }.toMap
+    config.select(lower(trim(col("target_table"))), col("column_name"))
+      .collect().toSeq
+      .groupBy(_.getString(0)).toSeq.sortBy(_._1)
+      .map { case (t, rows) =>
+        val keys =
+          if (t == mainTable) mainKeys
+          else dimKeys.getOrElse(t, factKey)
+        t -> (keys ++ rows.map(_.getString(1)))
+      }.toMap
 
   /** Vertical partition: one narrow projection per target. The caller
     * should `.cache()` (or rely on parquet re-scan + column pruning for)

@@ -2,8 +2,10 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.etl._
 import graft.io.{Sinks, Sources}
+import graft.tools.Par
 
 /** The full medallion pipeline (SURVEY.md §3): bronze (format
   * unification) → silver (standardize/clean) → gold (config-driven
@@ -78,13 +80,15 @@ object Medallion {
       surrogateIdCol: String = "id",
       mainIdStrategy: IdStrategy = IdStrategy.Auto())
 
-  /** bronze: any supported format → CSV objects (SURVEY.md §3.2). */
-  def bronze(spark: SparkSession, rawPaths: Seq[String], bronzeDir: String): Seq[String] =
-    rawPaths.map { p =>
-      val df = Sources.read(spark, p)
-      val name = p.substring(p.lastIndexOf('/') + 1).takeWhile(_ != '.')
-      Sinks.csvSingleFile(df, bronzeDir, name)
-    }
+  /** bronze: any supported format → one CSV object (SURVEY.md §3.2).
+    * Returns the object's path with the schema of the raw frame it was
+    * written from, so silver can read it back without inferring again. */
+  def bronze(spark: SparkSession, rawPath: String,
+             bronzeDir: String): (String, StructType) = {
+    val df = Sources.read(spark, rawPath)
+    val name = rawPath.substring(rawPath.lastIndexOf('/') + 1).takeWhile(_ != '.')
+    Sinks.csvSingleFile(df, bronzeDir, name) -> df.schema
+  }
 
   /** silver: standardize headers, trim/lower strings, typed null fill
     * (SURVEY.md §3.3). One collapsed projection. */
@@ -110,7 +114,24 @@ object Medallion {
     * table's surrogate-id window is the one global sort — swap
     * [[Dims.withDistributedId]] in when the main table is
     * fact-sized. */
-  def gold(wide0: DataFrame, config: DataFrame, spec: GoldSpec): Map[String, DataFrame] = {
+  def gold(wide0: DataFrame, config: DataFrame, spec: GoldSpec): Map[String, DataFrame] =
+    gold(wide0, routing(config, spec), spec)
+
+  /** The gold column routing: the config's per-target column lists with
+    * the spec's key columns injected (reference :393-401). One
+    * driver-side collect of the config ([[Split.columnLists]]). */
+  private def routing(config: DataFrame, spec: GoldSpec): Map[String, Seq[String]] = {
+    val mainKey = s"${spec.mainTable}_key"
+    Split.columnLists(
+      config,
+      mainTable = spec.mainTable,
+      mainKeys = Seq("natural_key", mainKey) ++ spec.dimKeyCols.keys.toSeq.sorted.map(d => s"${d}_key"),
+      dimKeys = spec.dimKeyCols.keys.map(d => d -> Seq(s"${d}_key")).toMap,
+      factKey = Seq(mainKey))
+  }
+
+  private def gold(wide0: DataFrame, lists: Map[String, Seq[String]],
+                   spec: GoldSpec): Map[String, DataFrame] = {
     // 1. key synthesis on the wide frame (reference :386-391)
     val dimKeyed = spec.dimKeyCols.foldLeft(wide0) { case (df, (dim, cols)) =>
       df.withColumn(s"${dim}_key", Keys.hashKey(cols.map(col)))
@@ -120,14 +141,8 @@ object Medallion {
       .withColumn(s"${spec.mainTable}_key", Keys.hashKey(spec.mainHashKeyCols.map(col)))
       .cache()
 
-    // 2. config-driven column routing with keys injected (:393-401)
+    // 2. vertical split along the config-driven routing
     val mainKey = s"${spec.mainTable}_key"
-    val lists = Split.columnLists(
-      config,
-      mainTable = spec.mainTable,
-      mainKeys = Seq("natural_key", mainKey) ++ spec.dimKeyCols.keys.toSeq.sorted.map(d => s"${d}_key"),
-      dimKeys = spec.dimKeyCols.keys.map(d => d -> Seq(s"${d}_key")).toMap,
-      factKey = Seq(mainKey))
     val frames = Split.split(wide, lists)
 
     // 3. dims: dedup + deterministic surrogate ids (:410-411, :481-485)
@@ -208,15 +223,25 @@ object Medallion {
       "taxes" -> Seq("taxes")))
 
   /** End-to-end: raw files → bronze CSVs → silver frames → gold star
-    * schema, all in one lazy program. */
+    * schema. Silver reads each bronze CSV with the schema bronze already
+    * has for it (the raw frame's), not with a second header scan and
+    * inference scan: the CSV is that frame's own text, and inference
+    * over it yields the same schema (pinned on the fixture by
+    * MedallionSpec). The data leg (raw → bronze → silver) and the config
+    * leg (workbook → bronze → silver → column routing) share nothing
+    * until gold, so they run concurrently ([[graft.tools.Par]]); the
+    * gold frames themselves stay lazy. */
   def run(
       spark: SparkSession,
       dataPath: String, configPath: String,
       bronzeDir: String, spec: GoldSpec): Map[String, DataFrame] = {
-    val Seq(bronzeData, bronzeConfig) =
-      bronze(spark, Seq(dataPath, configPath), bronzeDir)
-    val silverData = silver(Sources.read(spark, bronzeData))
-    val silverCfg = silverConfig(Sources.read(spark, bronzeConfig))
-    gold(silverData, silverCfg, spec)
+    def bronzeRead(rawPath: String): DataFrame = {
+      val (path, schema) = bronze(spark, rawPath, bronzeDir)
+      Sources.read(spark, path, Some(schema))
+    }
+    val Seq(Left(silverData), Right(lists)) = Par.run(2)(Seq(
+      () => Left(silver(bronzeRead(dataPath))),
+      () => Right(routing(silverConfig(bronzeRead(configPath)), spec))))
+    gold(silverData, lists, spec)
   }
 }

@@ -5,6 +5,7 @@ import java.time.LocalDate
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import graft.io.Fs
+import graft.tools.Par
 
 /** Airflow-operational-semantics mapping (SURVEY.md §2 #19 operational
   * half; VERDICT r10 "missing" item 2).
@@ -142,8 +143,11 @@ object Orchestrator {
   /** One logical-date run of the medallion pipeline: bronze → silver →
     * gold parquet under `run_date=<date>/gold/<table>/`, committed
     * atomically (scratch dir + rename swap) with a success marker.
-    * Already-complete dates return immediately with skipped=true;
-    * failures retry per `policy`. */
+    * The gold tables are written concurrently ([[graft.tools.Par]], one
+    * leg per table): they are independent projections of one cached
+    * frame. The marker and the swap still follow only once every write
+    * has succeeded. Already-complete dates return immediately with
+    * skipped=true; failures retry per `policy`. */
   def runFor(
       spark: SparkSession,
       dataPath: String,
@@ -164,11 +168,13 @@ object Orchestrator {
         Fs.deleteRecursive(spark, scratch) // partial tree from a failed attempt
         val gold = Medallion.run(
           spark, dataPath, configPath, s"$scratch/bronze", spec)
-        gold.foreach { case (table, df) =>
+        // Par returns only after every write has ended and rethrows the
+        // first failure, so no marker follows a failed or running write
+        Par.run(gold.size)(gold.toSeq.map { case (table, df) => () =>
           df.write.mode("overwrite").parquet(s"$scratch/gold/$table")
-        }
-        // marker INSIDE the scratch tree, written last: the rename below
-        // publishes data + marker in one metadata operation
+        })
+        // marker INSIDE the scratch tree, written after every table: the
+        // rename below publishes data + marker in one metadata operation
         fs(spark, workDir).create(new Path(scratch, Marker), true).close()
         Fs.replaceDir(spark, scratch, dest)
         ledger += ((attempt, "success", null, (System.nanoTime() - t0) / 1000000L))

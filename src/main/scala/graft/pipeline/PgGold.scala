@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.io.Sinks
 import graft.io.pg.{PgLiteClient, PgWire}
+import graft.tools.Par
 
 /** The gold star schema written through the LIVE wire-v3 endpoint
   * (VERDICT r15 task 4): the reference's actual Postgres protocol —
@@ -303,15 +304,30 @@ object PgGold {
     * facts (input-sized: DISTRIBUTED exactly-once COPY with count
     * verification). Returns the wire read-back per table — full
     * driver frames for dims, the DISTRIBUTED lazy scan frame for
-    * main, the sampled ordered head for facts. */
+    * main, the sampled ordered head for facts.
+    *
+    * The FK edges are the only ordering: the dims publish concurrently,
+    * then main, then the facts concurrently ([[graft.tools.Par]]). Each
+    * concurrent leg talks over its own [[PgLiteClient]] on `host:port`
+    * (a wire session is one conversation); main uses `c`. Every table
+    * keeps its own statements, RETURNING probes, exactly-once COPY,
+    * setval and full read-back check, and each fact's staging tables
+    * are named after that fact, so concurrent publishes never sweep
+    * each other's stages. */
   def writeGold(c: PgLiteClient, gold: Map[String, DataFrame],
                 spec: Medallion.GoldSpec, host: String, port: Int,
                 schemaName: String = "gold",
                 factSampleK: Int = 100): Map[String, DataFrame] = {
     c.query(Sinks.createSchemaDdl(schemaName))
     val id = spec.surrogateIdCol
-    val dims = spec.dimKeyCols.keys.toSeq.sorted.map { d =>
-      d -> writeTable(c, gold(d).orderBy(col(id)), schemaName, d, id,
+    def concurrently(tables: Seq[String])(
+        write: (PgLiteClient, String) => DataFrame): Seq[(String, DataFrame)] =
+      tables.zip(Par.run(tables.size)(tables.map { t => () =>
+        val own = new PgLiteClient(host, port)
+        try { own.connect(); write(own, t) } finally own.close()
+      }))
+    val dims = concurrently(spec.dimKeyCols.keys.toSeq.sorted) { (dc, d) =>
+      writeTable(dc, gold(d).orderBy(col(id)), schemaName, d, id,
         unique = Seq(s"${d}_key"))
     }
     val mainFks = spec.dimKeyCols.keys.map(d =>
@@ -319,8 +335,8 @@ object PgGold {
     val main = writeMainDistributed(c, gold(spec.mainTable), host, port,
       schemaName, spec.mainTable, id, unique = Nil, fks = mainFks)
     val factNames = gold.keySet -- spec.dimKeyCols.keySet - spec.mainTable
-    val facts = factNames.toSeq.sorted.map { f =>
-      f -> writeFactDistributed(c, gold(f), host, port, schemaName, f,
+    val facts = concurrently(factNames.toSeq.sorted) { (fc, f) =>
+      writeFactDistributed(fc, gold(f), host, port, schemaName, f,
         fks = Map(s"${spec.mainTable}_id" ->
           s"$schemaName.${spec.mainTable}($id)"),
         orderCol = s"${spec.mainTable}_id", sampleK = factSampleK).head

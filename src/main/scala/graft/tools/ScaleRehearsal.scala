@@ -529,7 +529,7 @@ object ScaleRehearsal {
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
+      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.cleaner.periodicGC.interval", "15s")
       .config("spark.ui.enabled", "false")

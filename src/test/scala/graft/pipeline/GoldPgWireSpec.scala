@@ -22,12 +22,12 @@ class GoldPgWireSpec extends SparkSpec {
   private def writeFixture(dir: String): (String, String) = {
     val csv = s"$dir/fake_data.csv"
     val pw = new PrintWriter(new FileOutputStream(csv))
-    pw.println("Property_Title,Zip,Reviewed_Status,Source,Previous_Rent,HOA,HOA_Flag,Taxes")
-    pw.println("  Casa Azul ,11111,Reviewed, web ,1200,300,yes,50")
-    pw.println("Casa Azul,11111,Pending,mail,1300,300,yes,50")
-    pw.println("Villa Rosa,22222,,phone,,400,no,75")
-    pw.println("LOFT 9,33333,Reviewed,web,900,300,yes,60")
-    pw.println("Loft 9,33333,Pending,,800,500,,50")
+    pw.println("Property_Title,Zip,Reviewed_Status,Source,Previous_Rent,HOA,HOA_Flag,Taxes,Paint")
+    pw.println("  Casa Azul ,11111,Reviewed, web ,1200,300,yes,50,yes")
+    pw.println("Casa Azul,11111,Pending,mail,1300,300,yes,50,no")
+    pw.println("Villa Rosa,22222,,phone,,400,no,75,")
+    pw.println("LOFT 9,33333,Reviewed,web,900,300,yes,60,yes")
+    pw.println("Loft 9,33333,Pending,,800,500,,50,no")
     pw.close()
 
     val xlsx = s"$dir/field_config.xlsx"
@@ -40,7 +40,8 @@ class GoldPgWireSpec extends SparkSpec {
       "Property_Title", "property", "Zip", "property",
       "Reviewed_Status", "Leads", "Source", "leads",
       "Previous_Rent", "Valuation",
-      "HOA", "HOA", "HOA_Flag", "HOA", "Taxes", "Taxes")
+      "HOA", "HOA", "HOA_Flag", "HOA", "Taxes", "Taxes",
+      "Paint", "Rehab")
     entry("xl/sharedStrings.xml",
       "<sst>" + strings.map(s => s"<si><t>$s</t></si>").mkString + "</sst>")
     val rows = (0 until strings.length / 2).map { r =>
@@ -75,6 +76,14 @@ class GoldPgWireSpec extends SparkSpec {
       // table, so value equality still holds for every table; the
       // count verification ran live inside writeFactDistributed.
       back.keySet shouldBe gold.keySet
+
+      // the catalog holds exactly the six star tables: the concurrent
+      // dim and fact publishes left no `__stage_` tables behind
+      gold.keySet shouldBe
+        Set("property", "leads", "valuation", "rehab", "hoa", "taxes")
+      c.query("SELECT table_name FROM information_schema.tables " +
+        "WHERE table_schema = 'gold'").rows.map(_.head.get).sorted shouldBe
+        gold.keySet.toSeq.sorted
       gold.keys.foreach { t =>
         withClue(s"table $t:") { asStrings(back(t)) shouldBe asStrings(gold(t)) }
       }

@@ -4,6 +4,7 @@ import java.io.{FileOutputStream, PrintWriter}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 import graft.SparkSpec
 import graft.etl.Dims
+import graft.io.Sources
 import org.apache.spark.sql.functions._
 
 /** Golden end-to-end test (SURVEY.md §5 strategy 2): a fixture
@@ -95,6 +96,22 @@ class MedallionSpec extends SparkSpec {
     val casa = property.filter(col("natural_key") === "casa azul|11111")
     casa.count() shouldBe 2
     casa.select("property_key").distinct().count() shouldBe 1
+  }
+
+  "Medallion.bronze" should "write CSVs whose inferred schema is the raw frame's" in {
+    // Medallion.run reads each bronze CSV back with the raw frame's
+    // schema instead of inferring it again; that is only the same read
+    // if inference over the bronze CSV gives the raw frame's schema
+    val dir = freshDir("medallion-bronze-schema")
+    val (csv, xlsx) = writeFixture(dir)
+    Seq(csv, xlsx).foreach { raw =>
+      val (path, schema) = Medallion.bronze(spark, raw, s"$dir/bronze")
+      withClue(s"$raw -> $path:") {
+        val rawSchema = Sources.read(spark, raw).schema
+        schema shouldBe rawSchema
+        Sources.read(spark, path).schema shouldBe rawSchema
+      }
+    }
   }
 
   "gold dims" should "resolve facts through distributed ids too" in {

@@ -113,6 +113,32 @@ class OrchestratorSpec extends SparkSpec {
     spark.read.parquet(s"${r3.outDir}/gold/property").count() shouldBe 3
   }
 
+  it should "commit the same gold rows as writing the run's tables one by one" in {
+    val dir = freshDir("orchestrator_concurrent")
+    val (csv, xlsx) = writeFixture(dir)
+    val d = LocalDate.parse("2025-09-29")
+    val r = Orchestrator.runFor(spark, csv, xlsx, s"$dir/work",
+      Medallion.referenceSpec, d, Orchestrator.RetryPolicy(retries = 0, delayMs = 0),
+      sleep = _ => ())
+    // the same Medallion.run frames, written sequentially
+    val gold = Medallion.run(spark, csv, xlsx, s"$dir/seq/bronze", Medallion.referenceSpec)
+    gold.foreach { case (t, df) => df.write.parquet(s"$dir/seq/gold/$t") }
+
+    val committed = new java.io.File(s"${r.outDir}/gold").listFiles()
+      .filter(_.isDirectory).map(_.getName).toSet
+    committed shouldBe gold.keySet
+    committed.foreach { t =>
+      val par = spark.read.parquet(s"${r.outDir}/gold/$t")
+      val seq = spark.read.parquet(s"$dir/seq/gold/$t")
+      withClue(s"gold table $t:") {
+        par.schema shouldBe seq.schema
+        par.count() should be > 0L
+        par.exceptAll(seq).count() shouldBe 0L
+        seq.exceptAll(par).count() shouldBe 0L
+      }
+    }
+  }
+
   it should "record every attempt in the task-instance ledger" in {
     val dir = freshDir("orchestrator_ledger")
     val (csv, xlsx) = writeFixture(dir)

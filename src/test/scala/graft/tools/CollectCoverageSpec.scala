@@ -57,8 +57,8 @@ class CollectCoverageSpec extends SparkSpec {
       "protocol-fidelity leg: dims + k-row RETURNING probes only " +
         "(dimension-/k-sized); main AND facts route through " +
         "copyDistributedExactlyOnce with distributed read-back (r17)"),
-    "graft/etl/Split.scala" -> (2,
-      "field-config targets — config-table-sized"),
+    "graft/etl/Split.scala" -> (1,
+      "the field-config routing table, collected once — config-table-sized"),
     "graft/tools/ScaleRehearsal.scala" -> (3,
       "diagnostic tool: bounded rehearsal probe sets, never in gates " +
         "(r18 adds the equi-depth row's partition-count-sized sizes)"),
