@@ -2,20 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // release GC'd checkpoint/broadcast blocks promptly between
-      // queries instead of at the 30-min default
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm up codegen/IO paths so the first measured query isn't
-    // charged for session initialization
+  /** Warm up codegen/IO paths so the first measured query isn't charged
+    * for session initialization; ends with the same cache-drop + GC
+    * nudge that isolates the measured queries. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // ... and the typed-kernel paths (Encoders, mapPartitions/
@@ -75,12 +65,14 @@ object Bench {
       spark.catalog.clearCache()
       System.gc()
     }
-    // local-iteration filter, same contract as graft.Verify's — the
-    // driver never sets it, so driver benches always run the full set
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Session.local()
+    warmUp(spark, sfDir)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Session.selected(name) }
       .map { case (name, fn) =>
       val builds0 = graft.io.StageMemo.buildCount.get()
       val t0 = System.nanoTime()

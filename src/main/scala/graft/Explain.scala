@@ -5,7 +5,11 @@ import org.apache.spark.sql.SparkSession
 /** Physical-plan inspection for the plan-shape assertions the engine is
   * designed around (run: `sbt "runMain graft.Explain [sfDir] [query…]"`).
   * Prints `explain("formatted")` so PushedFilters / ReadSchema /
-  * broadcast choices / WholeStageCodegen spans are visible. */
+  * broadcast choices / WholeStageCodegen spans are visible; a per-query
+  * evidence file (plans/<round>/) is this output for that one query,
+  * redirected. Harness queries with multiple internal actions print the
+  * plan of the RETURNED frame (the oracle surface); their internal job
+  * structure is measured by [[graft.tools.Profile]] instead. */
 object Explain {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.functions.col
@@ -43,13 +47,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val which = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     (SparkEntry.queries ++ innerPlans)
       .filter { case (name, _) => which.isEmpty || which.contains(name) }
       .toSeq.sortBy(_._1)
@@ -57,6 +55,7 @@ object Explain {
         println(s"\n========== $name ==========")
         try fn(spark, sfDir).explain("formatted")
         catch { case e: Throwable => println(s"failed: ${e.getMessage}") }
+        spark.catalog.clearCache()
       }
     spark.stop()
   }

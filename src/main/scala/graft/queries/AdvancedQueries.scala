@@ -535,11 +535,7 @@ object AdvancedQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-scd-stream-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
-    rmrf(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"),
       col("o_orderkey"), col("o_orderpriority"))
     val cut = lit("1998-01-01").cast("timestamp")
@@ -617,11 +613,7 @@ object AdvancedQueries {
   def matviewIncremental(s: SparkSession, dir: String): DataFrame = {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-matview-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
-    rmrf(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val o = t(s, dir, "orders")
     (0 until 3).foreach { i =>
       graft.ops.MatView.writePartial(

@@ -96,11 +96,7 @@ object EventQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-stream-parity-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
-    rmrf(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
     // the file-stream source lists a DIRECTORY; stage the single-file

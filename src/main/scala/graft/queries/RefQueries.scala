@@ -749,16 +749,12 @@ object RefQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-pg-sink-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
     // the CHECKPOINT must be fresh per run (a reused one replays as
     // all-committed and the sink would no-op) — but the parquet
     // fan-out input is a pure function of the source table, so it is
     // disk-memoized like the other stream-parity fixtures (VERDICT
     // r16 task 6: the gate measures the SINK, not fixture rebuilds)
-    rmrf(new java.io.File(s"$base/ckpt"))
+    graft.io.Fs.deleteRecursive(s, s"$base/ckpt")
     val cleaned = graft.etl.Clean.clean(t(s, dir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
     // 8 input files × maxFilesPerTrigger=3 → three real micro-batches
@@ -819,11 +815,7 @@ object RefQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-pg-src-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
-    rmrf(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val (server, _) = graft.io.pg.PgLiteServer.start()
     try {
       val cleaned = graft.etl.Clean.clean(t(s, dir, "customer"))
@@ -880,11 +872,7 @@ object RefQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-pg-srcf-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
-    rmrf(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val (server, _) = graft.io.pg.PgLiteServer.start()
     try {
       val cleaned = graft.etl.Clean.clean(t(s, dir, "customer"))

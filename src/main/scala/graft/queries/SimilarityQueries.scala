@@ -277,7 +277,8 @@ object SimilarityQueries {
     * n_queries = the deterministic sample size) or a deterministic
     * boolean invariant computed full-corpus in Spark —
     * `recall_ok` (sampled recall ≥ a floor sitting under the
-    * engine-measured value at every SF — `graft.tools.RecallProbe`),
+    * engine-measured value at every SF — held by the `q_ann_recall`
+    * rows at all three SFs and by SimilaritySpec's "ANN recall" cases),
     * `covered_all` (every corpus vector got a top-1 — measured exact at
     * sf0.001/0.01/0.1), and `cos_valid` (no self-matches, every cosine
     * in [-1, 1]). A regression in the banding/probing/rescoring kernels
@@ -334,8 +335,8 @@ object SimilarityQueries {
     * with every list probed (nprobe = k, so pruning is exercised as a
     * no-op and quality isolates the int8-shortlist + rescore path),
     * and the gate asserts: the exact top-1 (memoized sampled truth)
-    * appears in the top-3 at ≥ 0.85 (measured 1.000 at every SF by
-    * `graft.tools.RecallProbe` — int8 quantization never pushes the
+    * appears in the top-3 at ≥ 0.85 (measured 1.000 at every SF, and
+    * held by this gate's row at all three — int8 quantization never pushes the
     * true top-1 out of a 4-deep shortlist on this corpus),
     * every query returns 3 distinct non-self candidates, and cosines
     * are valid. Query ids are shifted by 10⁹ (index search requires
@@ -637,7 +638,8 @@ object SimilarityQueries {
   /** One gate row per ANN method against the given exact ground truth
     * (which may cover all vectors or a deterministic query sample).
     * Floors sit under the engine-measured recall at every SF
-    * (`graft.tools.RecallProbe`): LSH 0.679–0.762, IVF 0.570–0.671,
+    * (the rows below run at all three SFs; SimilaritySpec's "ANN
+    * recall" cases hold them at sf0.01): LSH 0.679–0.762, IVF 0.570–0.671,
     * int8/SQ8 0.933–0.950, PQ 0.996–1.000, IVF-SQ8 0.554–0.650,
     * IVF-PQ 0.570–0.671 (the composed variants track plain IVF's
     * list-pruning recall — quantization costs a point or two). */
@@ -697,7 +699,8 @@ object SimilarityQueries {
     * and partitionings — recall on the sample is therefore
     * deterministic, and the floors sit below the measured sampled
     * recall at every SF (LSH 0.679–0.762, IVF 0.570–0.671 across
-    * sf0.001/0.01/0.1 — `graft.tools.RecallProbe`). */
+    * sf0.001/0.01/0.1 — this gate's rows at all three SFs, and
+    * SimilaritySpec's "ANN recall" cases at sf0.01). */
   def annRecallSampled(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     // the int8 scan samples its queries too — the whole gate stays at

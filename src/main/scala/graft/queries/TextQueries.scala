@@ -396,11 +396,6 @@ object TextQueries {
         col("lang") === "en", k = 64)
       .orderBy(col("w_sum").desc, col("doc_id"))
 
-  private def rmrfLocal(p: java.io.File): Unit = {
-    if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrfLocal) }
-    p.delete(); ()
-  }
-
   /** PERSISTED-MODEL LM gate ([[graft.ops.LangModel.writeLmModel]]):
     * the model is trained and written as a parquet index, then the
     * corpus scores against the INDEX (broadcast joins, no retraining)
@@ -479,7 +474,7 @@ object TextQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-lm-stream-$slug"
-    rmrfLocal(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val d = docs(s, dir)
     // model build and stream-input staging are independent (disjoint
     // dirs, the stream starts only after both) — overlap (guide §2.6)
@@ -504,7 +499,7 @@ object TextQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-qm-stream-$slug"
-    rmrfLocal(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val d = docs(s, dir)
     graft.tools.Par.run(2)(Seq( // independent: model dir vs stream input
       () => graft.ops.QualityModel.writeModel(s, d, s"$base/model"),
@@ -527,7 +522,7 @@ object TextQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-bpe-stream-$slug"
-    rmrfLocal(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val d = docs(s, dir)
     graft.tools.Par.run(2)(Seq( // independent: model dir vs stream input
       () => graft.ops.Bpe.writeBpeModel(s, d, s"$base/model"),
@@ -552,7 +547,7 @@ object TextQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-search-stream-$slug"
-    rmrfLocal(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val d = docs(s, dir)
     d.coalesce(2).write.parquet(s"$base/in") // 2 files → 2 micro-batches
     val stream = s.readStream.schema(d.schema)
@@ -969,11 +964,7 @@ object TextQueries {
       Tables.withGateShuffle(s) {
     val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val base = s"target/tmp-dedup-stream-$slug"
-    def rmrf(p: java.io.File): Unit = {
-      if (p.isDirectory) { val fs = p.listFiles(); if (fs != null) fs.foreach(rmrf) }
-      p.delete(); ()
-    }
-    rmrf(new java.io.File(base))
+    graft.io.Fs.deleteRecursive(s, base)
     val d = docs(s, dir)
     val isCorpus = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
     val corpus = d.filter(isCorpus)
@@ -1350,7 +1341,7 @@ object TextQueries {
     "q_corpus_overlap_persisted" -> ((s, dir) => {
       val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val base = s"target/tmp-sketch-$slug"
-      rmrfLocal(new java.io.File(base))
+      graft.io.Fs.deleteRecursive(s, base)
       val cs = graft.ops.CorpusStats
       val d = docs(s, dir)
       val h2 = substring(md5(col("doc_id").cast("string")), 2, 1)
@@ -1372,7 +1363,7 @@ object TextQueries {
     "q_corpus_drift_incremental" -> ((s, dir) => {
       val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val base = s"target/tmp-drift-$slug"
-      rmrfLocal(new java.io.File(base))
+      graft.io.Fs.deleteRecursive(s, base)
       val cs = graft.ops.CorpusStats
       val d = docs(s, dir)
       val env = d.agg(min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx")).head()
@@ -1489,7 +1480,7 @@ object TextQueries {
     "q_text_quality_persisted" -> ((s, dir) => {
       val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val base = s"target/tmp-qm-model-$slug"
-      rmrfLocal(new java.io.File(base))
+      graft.io.Fs.deleteRecursive(s, base)
       val d = docs(s, dir)
       graft.ops.QualityModel.writeModel(s, d, base)
       graft.ops.QualityModel.scoredFrameIndexed(d, base)
@@ -1497,7 +1488,7 @@ object TextQueries {
     "q_text_bpe_persisted" -> ((s, dir) => {
       val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val base = s"target/tmp-bpe-model-$slug"
-      rmrfLocal(new java.io.File(base))
+      graft.io.Fs.deleteRecursive(s, base)
       val d = docs(s, dir)
       graft.ops.Bpe.writeBpeModel(s, d, base)
       graft.ops.Bpe.tokenFrequenciesIndexed(d, base)
@@ -1509,8 +1500,8 @@ object TextQueries {
     "q_text_quality_incremental" -> ((s, dir) => {
       val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val base = s"target/tmp-qm-incr-$slug"
-      rmrfLocal(new java.io.File(base))
-      rmrfLocal(new java.io.File(base + ".staging"))
+      graft.io.Fs.deleteRecursive(s, base)
+      graft.io.Fs.deleteRecursive(s, base + ".staging")
       val d = docs(s, dir)
       graft.ops.QualityModel.writeModel(s, d.filter(col("doc_id") % 2 === 0), base)
       graft.ops.QualityModel.appendModel(d.filter(col("doc_id") % 2 =!= 0), base)
@@ -1519,8 +1510,8 @@ object TextQueries {
     "q_text_bpe_incremental" -> ((s, dir) => {
       val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
       val base = s"target/tmp-bpe-incr-$slug"
-      rmrfLocal(new java.io.File(base))
-      rmrfLocal(new java.io.File(base + ".staging"))
+      graft.io.Fs.deleteRecursive(s, base)
+      graft.io.Fs.deleteRecursive(s, base + ".staging")
       val d = docs(s, dir)
       graft.ops.Bpe.writeBpeModel(s, d.filter(col("doc_id") % 2 === 0), base)
       graft.ops.Bpe.appendBpeModel(d.filter(col("doc_id") % 2 =!= 0), base)

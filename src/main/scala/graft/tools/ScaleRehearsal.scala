@@ -528,13 +528,11 @@ object ScaleRehearsal {
       }))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.cleaner.periodicGC.interval", "15s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
+    // 32 shuffle partitions whatever the core count: docs/SCALE.md's
+    // sf0.1-vs-sf1 table was measured at local[32], and its ratios only
+    // reproduce at that partitioning
+    spark.conf.set("spark.sql.shuffle.partitions", "32")
 
     val sf1Dir = "target/sf1"
     if (!new java.io.File(s"$sf1Dir/embeddings.parquet").exists() ||
@@ -556,10 +554,7 @@ object ScaleRehearsal {
     // blocks from earlier paths surface as 3-5× spikes in later ones
     // (measured: identical ivfAnnTop1 calls swung 6.4 → 29.7 s)
     def isolate(): Unit = { spark.catalog.clearCache(); System.gc() }
-    // local-iteration filter, same contract as graft.Verify's
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    measured.filter { case (name, _) => only.forall(_.contains(name)) }
+    measured.filter { case (name, _) => graft.Session.selected(name) }
       .foreach { case (name, run) =>
       // warm each path once at the small scale so JIT/codegen noise
       // doesn't land in the sf0.1 numbers

@@ -19,12 +19,9 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
     // spark-submit deployment path). Inside a suite that already holds
     // a context, the builder-side withExtensions hook is the correct
     // equivalent.
-    val s = SparkSession.builder()
-      .master("local[2]")
+    val s = Session.builder(cpus = 2)
       .appName("graft-ext-test")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       s.sql("SELECT poly_hash64('abc') AS h").collect()(0).getLong(0) shouldBe

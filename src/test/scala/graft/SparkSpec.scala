@@ -32,16 +32,9 @@ trait SparkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    Session.start(Session.builder(cpus = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Paths.get("target", "test-tmp", "warehouse").toAbsolutePath.toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+        java.nio.file.Paths.get("target", "test-tmp", "warehouse").toAbsolutePath.toString))
   }
 }

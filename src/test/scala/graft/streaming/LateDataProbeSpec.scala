@@ -9,10 +9,7 @@ import org.apache.spark.sql.streaming.OutputMode
 class LateDataProbeSpec extends SparkSpec {
 
   "append-mode tumbling agg" should "drop rows for windows the watermark finalized" in {
-    val base = graft.io.Fs.deleteRecursive(spark,
-      java.nio.file.Paths.get("target", "test-tmp", "late-probe").toString) match {
-      case _ => java.nio.file.Paths.get("target", "test-tmp", "late-probe").toString
-    }
+    val base = freshDir("late-probe")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
     val schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"
@@ -60,8 +57,7 @@ class LateDataProbeSpec extends SparkSpec {
     * upgrade flips this assertion, the gate can switch back to
     * AvailableNow. */
   it should "NOT drop late rows under AvailableNow with files staged up front (pinned quirk)" in {
-    val base = java.nio.file.Paths.get("target", "test-tmp", "late-probe-an").toString
-    graft.io.Fs.deleteRecursive(spark, base)
+    val base = freshDir("late-probe-an")
     val inDir = s"$base/in"; val outDir = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(inDir).mkdirs()
     val schema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE"

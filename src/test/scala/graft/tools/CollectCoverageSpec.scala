@@ -49,10 +49,6 @@ class CollectCoverageSpec extends SparkSpec {
       "distinct bucket ids — ≤ `buckets` rows by construction"),
     "graft/Bench.scala" -> (1,
       "1-row JVM warm-up aggregate"),
-    "graft/tools/Profile.scala" -> (1,
-      "1-row JVM warm-up aggregate (diagnostic tool, never in gates)"),
-    "graft/tools/ProfileJobs.scala" -> (1,
-      "1-row JVM warm-up aggregate (diagnostic tool, never in gates)"),
     "graft/pipeline/PgGold.scala" -> (1,
       "protocol-fidelity leg: dims + k-row RETURNING probes only " +
         "(dimension-/k-sized); main AND facts route through " +

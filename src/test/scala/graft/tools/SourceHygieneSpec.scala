@@ -41,4 +41,22 @@ class SourceHygieneSpec extends AnyFlatSpec with Matchers {
     withClue("files grep would silently skip as binary:\n" +
       offenders.mkString("\n") + "\n") { offenders shouldBe empty }
   }
+
+  /** Hand-written session builders drift apart (one pinned UTC, one set
+    * the cleaner GC, two hard-coded their core count); every main starts
+    * Spark through `graft.Session` instead. */
+  it should "build SparkSessions in src/main only inside graft/Session.scala" in {
+    val root = Paths.get("src/main/scala")
+    val sites = for {
+      p <- walk(root.toString, ".scala")
+      if root.relativize(p).toString != "graft/Session.scala"
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      t = line.trim
+      // Scaladoc usage examples are documentation, not call sites
+      if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+      if t.contains("SparkSession.builder()")
+    } yield s"$p:${i + 1}: $t"
+    withClue("SparkSession.builder() outside graft/Session.scala:\n" +
+      sites.mkString("\n") + "\n") { sites shouldBe empty }
+  }
 }
