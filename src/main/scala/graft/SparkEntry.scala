@@ -2,13 +2,12 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's entry points — see SURVEY.md §7.
   *
-  * `queries` maps one named entry per implemented operator (SURVEY.md §2
-  * inventory + §7.5 extensions) to a `(session, sfDir) => DataFrame`;
-  * `oracleSql` carries the DuckDB-runnable ANSI equivalent for every
-  * SQL-expressible entry. Queries are assembled from the per-domain
-  * modules under `graft.queries`.
+  * `registry` holds one [[Query]] record per implemented operator
+  * (SURVEY.md §2 inventory + §7.5 extensions), assembled from the
+  * per-domain modules under `graft.queries`; `queries` and `oracleSql`
+  * are its name-keyed views.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -17,16 +16,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     RefQueries.medallion(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** Every query record, in module order. */
+  lazy val registry: Seq[Query] = registryOf(
     RefQueries.queries ++ RelationalQueries.queries ++ EventQueries.queries ++
       TextQueries.queries ++ SimilarityQueries.queries ++
-      AdvancedQueries.queries ++ CurationQueries.queries
+      AdvancedQueries.queries ++ CurationQueries.queries)
+
+  /** `qs` unchanged, or an error naming every name it holds twice. */
+  private[graft] def registryOf(qs: Seq[Query]): Seq[Query] = {
+    val dups = qs.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
+
+  /** One entry per implemented operator from SURVEY.md §2. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    RefQueries.oracleSql ++ RelationalQueries.oracleSql ++ EventQueries.oracleSql ++
-      TextQueries.oracleSql ++ SimilarityQueries.oracleSql ++
-      AdvancedQueries.oracleSql ++ CurationQueries.oracleSql
+    registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.NativeColumn
 
 /** All `numHashes` MinHash values of a shingle-hash set in ONE compiled
   * pass — `sig[i] = min over shingles h of xxhash64(i, h)`.
@@ -90,7 +90,7 @@ object MinHashSigs {
       "built-in")
   }
 
-  /** Column entry point (requires [[register]] on the session). */
+  /** Column entry point. */
   def minhashSigs(shinglesCol: String, k: Int): Column =
-    expr(s"minhash_sigs($shinglesCol, $k)")
+    NativeColumn(shinglesCol)(MinHashSigs(_, k))
 }

@@ -5,8 +5,8 @@ import java.text.Normalizer
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode text normalization as native Catalyst expressions — the
@@ -79,10 +79,10 @@ object Normalize {
       (e: Seq[Expression]) => StripAccents(e.head), "built-in")
   }
 
-  /** Column entry points (require [[register]] on the session). */
-  def nfcNormalize(colName: String): Column = expr(s"nfc_normalize($colName)")
-  def nfdNormalize(colName: String): Column = expr(s"nfd_normalize($colName)")
-  def stripAccentsCol(colName: String): Column = expr(s"strip_accents($colName)")
+  /** Column entry points. */
+  def nfcNormalize(colName: String): Column = NativeColumn(colName)(NfcNormalize(_))
+  def nfdNormalize(colName: String): Column = NativeColumn(colName)(NfdNormalize(_))
+  def stripAccentsCol(colName: String): Column = NativeColumn(colName)(StripAccents(_))
 }
 
 case class NfcNormalize(child: Expression) extends UnaryExpression {

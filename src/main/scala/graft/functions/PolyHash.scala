@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit polynomial rolling hash of a string — the document
@@ -67,8 +67,8 @@ object PolyHash64 {
       "poly_hash64", (exprs: Seq[Expression]) => PolyHash64(exprs.head), "built-in")
   }
 
-  /** Column-API entry point (requires [[register]] on the session). */
-  def polyHash64(colName: String): Column = expr(s"poly_hash64($colName)")
+  /** Column-API entry point. */
+  def polyHash64(colName: String): Column = NativeColumn(colName)(PolyHash64(_))
 
   /** Reference implementation for tests. */
   def hash(s: String): Long = {

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.unsafe.types.UTF8String
 
 /** 64-bit SimHash of a document as a native Catalyst expression: one
@@ -81,6 +81,6 @@ object SimHash64 {
       (exprs: Seq[Expression]) => SimHash64(exprs.head), "built-in")
   }
 
-  /** Column entry point (requires [[register]] on the session). */
-  def simhash64(colName: String): Column = expr(s"simhash64($colName)")
+  /** Column entry point. */
+  def simhash64(colName: String): Column = NativeColumn(colName)(SimHash64(_))
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -114,7 +114,7 @@ object WordShingleHashes {
       }, "built-in")
   }
 
-  /** Column entry point (requires [[register]] on the session). */
+  /** Column entry point. */
   def wordShingleHashes(colName: String, n: Int): Column =
-    expr(s"word_shingle_hashes($colName, $n)")
+    NativeColumn(colName)(WordShingleHashes(_, n))
 }

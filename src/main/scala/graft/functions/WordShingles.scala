@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.sql.graft.NativeColumn
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Distinct n-word shingles of lower(trim(text)) as a native Catalyst
@@ -102,7 +102,7 @@ object WordShingles {
       }, "built-in")
   }
 
-  /** Column entry point (requires [[register]] on the session). */
+  /** Column entry point. */
   def wordShingles(colName: String, n: Int): Column =
-    expr(s"word_shingles($colName, $n)")
+    NativeColumn(colName)(WordShingles(_, n))
 }

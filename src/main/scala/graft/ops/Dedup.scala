@@ -41,7 +41,6 @@ object Dedup {
     * expression scaladoc). The string form ([[graft.functions
     * .WordShingles]], SQL `word_shingles`) remains for display/audit. */
   def docShingles(docs: DataFrame, textCol: String, idCol: String, n: Int = 3): DataFrame = {
-    graft.functions.WordShingleHashes.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
       graft.functions.WordShingleHashes.wordShingleHashes(textCol, n).as("shingles"))
   }
@@ -157,7 +156,6 @@ object Dedup {
     * the scan; the first exchange of the minhash pipeline is the band
     * join. */
   def minhashSignatures(shingled: DataFrame, numHashes: Int = 64): DataFrame = {
-    graft.functions.MinHashSigs.register(shingled.sparkSession)
     shingled.filter(size(col("shingles")) > 0)
       .select(col("doc_id"),
         graft.functions.MinHashSigs.minhashSigs("shingles", numHashes).as("sig"))
@@ -689,7 +687,6 @@ object Dedup {
     * conditional-sum plan was the bench's slowest query; its semantics
     * live on as [[simhashAgg]], asserted equal in DedupSpec). */
   def simhash(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    graft.functions.SimHash64.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
       graft.functions.SimHash64.simhash64(textCol).as("simhash"))
   }

@@ -1018,53 +1018,6 @@ object AdvancedQueries {
     graft.ops.Graph.degreeProfileFrom(
       graft.ops.Graph.symmetricFromDirected(directedEdges(s, dir)))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_graph_pagerank" -> (graphPagerank _),
-    "q_graph_pagerank_mass" -> (graphPagerankMass _),
-    "q_graph_hits" -> (graphHits _),
-    "q_graph_degrees" -> (graphDegrees _),
-    "q_string_funcs" -> (stringFuncs _),
-    "q_math_funcs" -> (mathFuncs _),
-    "q_array_funcs" -> (arrayFuncs _),
-    "q_distributed_id" -> (distributedId _),
-    "q_set_ops_all" -> (setOpsAll _),
-    "q_dq_profile" -> (dqProfile _),
-    "q_dq_expectations" -> (dqExpectations _),
-    "q_udaf_variance" -> (udafVariance _),
-    "q_subquery_scalar" -> (subqueryScalar _),
-    "q_subquery_correlated" -> (subqueryCorrelated _),
-    "q_join_salted" -> (joinSalted _),
-    "q_join_salted_adaptive" -> (joinSaltedAdaptive _),
-    "q_percentiles" -> (percentiles _),
-    "q_percentiles_approx" -> (percentilesApprox _),
-    "q_agg_variance" -> (variance _),
-    "q_dq_outliers" -> (outliers _),
-    "q_window_range" -> (windowRange _),
-    "q_pivot" -> (pivot _),
-    "q_unpivot" -> (unpivotQ _),
-    "q_approx_distinct" -> (approxDistinct _),
-    "q_hll_exact" -> (hllExact _),
-    "q_quantile_histogram" -> (quantileHistogram _),
-    "q_quantile_exact" -> (quantileExact _),
-    "q_scd2_history" -> (scd2History _),
-    "q_scd2_apply" -> (scd2ApplyQ _),
-    "q_scd2_asof" -> (scd2AsOf _),
-    "q_zonemap_scan" -> (zonemapScan _),
-    "q_zonemap_incremental" -> (zonemapIncremental _),
-    "q_pii_luhn" -> (piiLuhn _),
-    "q_zonemap_count" -> (zonemapCount _),
-    "q_zorder_scan" -> (zorderScan _),
-    "q_scd2_stream_parity" -> (scd2StreamParity _),
-    "q_matview_incremental" -> (matviewIncremental _),
-    "q_entity_pairs" -> (entityPairs _),
-    "q_entity_resolution" -> (entityResolution _),
-    "q_timeseries_gapfill" -> (timeseriesGapfill _),
-    "q_dim_upsert" -> (dimUpsert _),
-    "q_snapshot_diff" -> (snapshotDiffQ _),
-    "q_scd2_upsert_bucketed" -> (scd2UpsertBucketed _),
-    "q_snapshot_diff_bucketed" -> (snapshotDiffBucketed _)
-  )
-
   /** The from-scratch SCD2 rebuild through a final `h` CTE — shared by
     * the full-history oracles and the as-of snapshot filter. */
   private val scd2Cte: String =
@@ -1123,14 +1076,14 @@ object AdvancedQueries {
          AND (effective_to IS NULL OR effective_to > TIMESTAMP '$ts')
        ORDER BY o_custkey, version"""
 
-  val oracleSql: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // generated unrolled-round oracles (graft.ops.Graph): every
     // PageRank iteration re-derived independently, exact integer
-    "q_graph_pagerank" -> graft.ops.Graph.pageRankTopOracleSql(6, 20),
-    "q_graph_hits" -> graft.ops.Graph.hitsTopOracleSql(4, 10),
-    "q_graph_pagerank_mass" -> graft.ops.Graph.pageRankMassOracleSql(6),
-    "q_graph_degrees" -> graft.ops.Graph.degreeProfileOracleSql,
-    "q_string_funcs" ->
+    Query("q_graph_pagerank", graphPagerank, graft.ops.Graph.pageRankTopOracleSql(6, 20)),
+    Query("q_graph_hits", graphHits, graft.ops.Graph.hitsTopOracleSql(4, 10)),
+    Query("q_graph_pagerank_mass", graphPagerankMass, graft.ops.Graph.pageRankMassOracleSql(6)),
+    Query("q_graph_degrees", graphDegrees, graft.ops.Graph.degreeProfileOracleSql),
+    Query("q_string_funcs", stringFuncs,
       """SELECT p_partkey,
            upper(p_name) AS up,
            substr(p_name, 1, 5) AS sub,
@@ -1139,26 +1092,26 @@ object AdvancedQueries {
            reverse(p_type) AS rev,
            CAST(levenshtein(p_brand, p_type) AS INT) AS lev,
            CAST(strpos(p_name, 'e') AS INT) AS pos
-         FROM part ORDER BY p_partkey""",
-    "q_math_funcs" ->
+         FROM part ORDER BY p_partkey"""),
+    Query("q_math_funcs", mathFuncs,
       """SELECT o_orderkey,
            CAST(abs(CAST(o_totalprice AS DECIMAL(12,2)) * -1) AS DOUBLE) AS abs_v,
            CAST(floor(o_totalprice) AS BIGINT) AS fl,
            CAST(ceil(o_totalprice) AS BIGINT) AS ce,
            sqrt(o_totalprice) AS sq,
            o_orderkey % 97 AS md
-         FROM orders ORDER BY o_orderkey""",
-    "q_array_funcs" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Query("q_array_funcs", arrayFuncs,
       """SELECT vec_id,
            CAST(len(embedding) AS INT) AS dims,
            CAST(list_max(embedding) AS DOUBLE) AS mx,
            CAST(list_min(embedding) AS DOUBLE) AS mn,
            CAST(embedding[1] AS DOUBLE) AS "first",
            CAST(embedding[-1] AS DOUBLE) AS "last"
-         FROM embeddings ORDER BY vec_id""",
-    "q_distributed_id" ->
-      """SELECT count(1) AS n_rows, count(1) AS n_distinct_ids FROM events""",
-    "q_set_ops_all" ->
+         FROM embeddings ORDER BY vec_id"""),
+    Query("q_distributed_id", distributedId,
+      """SELECT count(1) AS n_rows, count(1) AS n_distinct_ids FROM events"""),
+    Query("q_set_ops_all", setOpsAll,
       """WITH c AS (SELECT user_id FROM events WHERE event_type = 'click'),
             v AS (SELECT user_id FROM events WHERE event_type = 'view'),
             p AS (SELECT user_id FROM events WHERE event_type = 'purchase')
@@ -1169,10 +1122,10 @@ object AdvancedQueries {
          SELECT 'click_except_all_purchase' AS tag, user_id, count(1) AS n
          FROM (SELECT user_id FROM c EXCEPT ALL SELECT user_id FROM p)
          GROUP BY user_id
-         ORDER BY tag, user_id""",
+         ORDER BY tag, user_id"""),
     // every rule re-derived as an independent subquery; the booleans
     // are computed, not echoed — a drifted violation count flips pass
-    "q_dq_expectations" ->
+    Query("q_dq_expectations", dqExpectations,
       """WITH t AS (SELECT count(1) AS n FROM documents)
          SELECT expectation, "column", n_rows, n_violations,
            n_violations = 0 AS pass
@@ -1200,8 +1153,8 @@ object AdvancedQueries {
            UNION ALL
            SELECT 'unique(doc_id)', 'doc_id', n,
              (SELECT count(1) - count(DISTINCT doc_id) FROM documents) FROM t)
-         ORDER BY expectation""",
-    "q_dq_profile" ->
+         ORDER BY expectation"""),
+    Query("q_dq_profile", dqProfile,
       """WITH t AS (SELECT count(1) AS n_rows FROM customer)
          SELECT * FROM (
            SELECT 'c_custkey' AS "column",
@@ -1223,8 +1176,8 @@ object AdvancedQueries {
            SELECT 'c_mktsegment',
              (SELECT count(1) FROM customer WHERE c_mktsegment IS NULL),
              (SELECT count(DISTINCT c_mktsegment) FROM customer), n_rows FROM t)
-         ORDER BY "column"""",
-    "q_udaf_variance" ->
+         ORDER BY "column""""),
+    Query("q_udaf_variance", udafVariance,
       """WITH m AS (
            SELECT o_orderpriority, count(1) AS n,
              CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_x,
@@ -1232,38 +1185,38 @@ object AdvancedQueries {
            FROM orders GROUP BY o_orderpriority)
          SELECT o_orderpriority, n,
            (sum_x2 - sum_x * sum_x / n) / n AS var_pop
-         FROM m ORDER BY o_orderpriority""",
-    "q_subquery_scalar" ->
+         FROM m ORDER BY o_orderpriority"""),
+    Query("q_subquery_scalar", subqueryScalar,
       """SELECT o_orderkey, o_totalprice FROM orders
          WHERE o_totalprice > (
            SELECT CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE)
                   / count(1)
            FROM orders)
-         ORDER BY o_orderkey""",
-    "q_subquery_correlated" ->
+         ORDER BY o_orderkey"""),
+    Query("q_subquery_correlated", subqueryCorrelated,
       """SELECT o.o_orderkey, o.o_custkey, o.o_totalprice FROM orders o
          WHERE o.o_totalprice > (
            SELECT CAST(CAST(sum(CAST(i.o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE)
                   / count(1)
            FROM orders i WHERE i.o_custkey = o.o_custkey)
-         ORDER BY o.o_orderkey""",
-    "q_join_salted" ->
+         ORDER BY o.o_orderkey"""),
+    Query("q_join_salted", joinSalted,
       """SELECT p_brand, count(1) AS n,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
          FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q_join_salted_adaptive" ->
+         GROUP BY p_brand ORDER BY p_brand"""),
+    Query("q_join_salted_adaptive", joinSaltedAdaptive,
       """SELECT p_brand, count(1) AS n,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
          FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY p_brand ORDER BY p_brand""",
-    "q_percentiles" ->
+         GROUP BY p_brand ORDER BY p_brand"""),
+    Query("q_percentiles", percentiles,
       """SELECT l_returnflag,
            quantile_cont(l_quantity, 0.5) AS p50_qty,
            quantile_cont(l_quantity, 0.9) AS p90_qty,
            quantile_cont(l_extendedprice, 0.5) AS p50_price
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_dq_outliers" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Query("q_dq_outliers", outliers,
       """WITH m AS (
            SELECT o_orderpriority, count(1) AS n,
              CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_x,
@@ -1278,8 +1231,8 @@ object AdvancedQueries {
            (CAST(o_totalprice AS DOUBLE) - mean) / std AS z
          FROM orders JOIN st USING (o_orderpriority)
          WHERE abs((CAST(o_totalprice AS DOUBLE) - mean) / std) >= 1.6
-         ORDER BY o_orderkey""",
-    "q_agg_variance" ->
+         ORDER BY o_orderkey"""),
+    Query("q_agg_variance", variance,
       """WITH m AS (
            SELECT o_orderpriority, count(1) AS n,
              CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS VARCHAR) AS DOUBLE) AS sum_x,
@@ -1287,26 +1240,26 @@ object AdvancedQueries {
            FROM orders GROUP BY o_orderpriority)
          SELECT o_orderpriority, n, sum_x / n AS mean,
            (sum_x2 - sum_x * sum_x / n) / n AS var_pop
-         FROM m ORDER BY o_orderpriority""",
-    "q_window_range" ->
+         FROM m ORDER BY o_orderpriority"""),
+    Query("q_window_range", windowRange,
       """SELECT o_orderkey, o_custkey,
            CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) OVER (
              PARTITION BY o_custkey ORDER BY o_orderdate
              RANGE BETWEEN INTERVAL 30 DAYS PRECEDING AND CURRENT ROW) AS DOUBLE)
              AS trailing_30d
-         FROM orders ORDER BY o_orderkey""",
-    "q_approx_distinct" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Query("q_approx_distinct", approxDistinct,
       """SELECT event_type, count(DISTINCT user_id) AS exact_users,
            count(1) AS n, true AS approx_ok
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_hll_exact" -> hllExactOracle,
-    "q_percentiles_approx" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Query("q_hll_exact", hllExact, hllExactOracle),
+    Query("q_percentiles_approx", percentilesApprox,
       """SELECT l_returnflag, count(1) AS n, true AS approx_ok
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
     // full integer replay of the refinement: envelope + rank target,
     // two bucket rounds with rebased bounds/targets, final per-value
     // cumulative pick — the exact median, no sort in either engine
-    "q_quantile_exact" ->
+    Query("q_quantile_exact", quantileExact,
       """WITH vals AS (
            SELECT l_returnflag AS g,
              CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v
@@ -1366,12 +1319,12 @@ object AdvancedQueries {
                  PARTITION BY g ORDER BY v) AS rn
                FROM fc WHERE cum >= target)
          WHERE rn = 1
-         ORDER BY l_returnflag""",
+         ORDER BY l_returnflag"""),
     // full integer replay of ops.Quantiles.histogramQuantiles: same
     // envelope, same floor-division bucketing ( // ≡ Spark's div on
     // non-negative BIGINT), same ceil-rank targets, same clamped
     // upper-edge estimates — every output column value-matched
-    "q_quantile_histogram" ->
+    Query("q_quantile_histogram", quantileHistogram,
       """WITH vals AS (
            SELECT l_returnflag AS g,
              CAST(CAST(l_extendedprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS v
@@ -1403,24 +1356,24 @@ object AdvancedQueries {
            least(vmax, vmin + ((p90_bucket + 1) * rng + 255) // 256 - 1) AS p90_est,
            least(vmax, vmin + ((p99_bucket + 1) * rng + 255) // 256 - 1) AS p99_est,
            rng // 256 + 1 AS err_bound
-         FROM p ORDER BY l_returnflag""",
+         FROM p ORDER BY l_returnflag"""),
     // gaps-and-islands replay: same null-safe change test, same
     // running-sum version ids, same per-island min / lead windows.
     // q_scd2_apply shares the SAME oracle text: the incremental fold
     // must equal the from-scratch rebuild row-for-row.
-    "q_scd2_history" -> scd2HistorySql,
-    "q_scd2_apply" -> scd2HistorySql,
-    "q_scd2_asof" -> scd2AsofSql("1997-06-01"),
+    Query("q_scd2_history", scd2History, scd2HistorySql),
+    Query("q_scd2_apply", scd2ApplyQ, scd2HistorySql),
+    Query("q_scd2_asof", scd2AsOf, scd2AsofSql("1997-06-01")),
     // zone-map routing must be value-invisible vs the plain filter —
     // one-shot AND across the incremental batch seam
-    "q_zonemap_scan" -> zonemapSql,
-    "q_zonemap_incremental" -> zonemapSql,
-    "q_zonemap_count" ->
+    Query("q_zonemap_scan", zonemapScan, zonemapSql),
+    Query("q_zonemap_incremental", zonemapIncremental, zonemapSql),
+    Query("q_zonemap_count", zonemapCount,
       """SELECT count(1) AS cnt FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1996-04-01'
-           AND l_shipdate <= TIMESTAMP '1996-09-30'""",
+           AND l_shipdate <= TIMESTAMP '1996-09-30'"""),
     // the Luhn fold re-derived digit-by-digit in SQL
-    "q_pii_luhn" ->
+    Query("q_pii_luhn", piiLuhn,
       """WITH c AS (
            SELECT o_orderkey,
              lpad(CAST(o_orderkey * 7919 % 1000000000000000 AS VARCHAR),
@@ -1437,29 +1390,30 @@ object AdvancedQueries {
                        FOR i IN range(1, len(rd) + 1)]) AS total
            FROM r)
          SELECT o_orderkey, digits, total % 10 = 0 AS luhn_ok
-         FROM t ORDER BY o_orderkey""",
-    "q_zorder_scan" ->
+         FROM t ORDER BY o_orderkey"""),
+    Query("q_zorder_scan", zorderScan,
       """SELECT l_returnflag, count(1) AS cnt,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
            min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
          FROM lineitem
          WHERE l_partkey >= 1
            AND l_partkey <= (SELECT max(l_partkey) // 10 FROM lineitem)
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q_scd2_stream_parity" -> scd2HistorySql,
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Query("q_scd2_stream_parity", scd2StreamParity, scd2HistorySql, gate = true),
     // the epoch-folded algebraic state must equal the one-shot
     // aggregate: exact decimal sums make the fold order-free
-    "q_matview_incremental" ->
+    // gate: partial writes + compaction / bucketed table builds dominate
+    Query("q_matview_incremental", matviewIncremental,
       """SELECT o_orderpriority AS k, count(1) AS n,
            CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS total,
            CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) / count(1) AS mean,
            CAST(CAST(min(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS mn,
            CAST(CAST(max(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR) AS DOUBLE) AS mx
-         FROM orders GROUP BY 1 ORDER BY k""",
+         FROM orders GROUP BY 1 ORDER BY k""", gate = true),
     // gap-free spine replay: same monthly partial agg, same envelope,
     // same generate_series grid, zero-fills, and exact-decimal moving
     // sum — values identical down to the row-count window frame
-    "q_timeseries_gapfill" ->
+    Query("q_timeseries_gapfill", timeseriesGapfill,
       """WITH monthly AS (
            SELECT o_orderpriority AS k,
              date_trunc('month', o_orderdate) AS month,
@@ -1485,10 +1439,10 @@ object AdvancedQueries {
                PARTITION BY k ORDER BY month
                ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
              AS DECIMAL(20,2)) AS VARCHAR) AS DOUBLE) AS trailing_3m
-         FROM filled ORDER BY priority, month""",
+         FROM filled ORDER BY priority, month"""),
     // both engines implement classic Levenshtein; the blocking, the
     // pair set, and every distance value-match
-    "q_entity_pairs" ->
+    Query("q_entity_pairs", entityPairs,
       """WITH cat AS (
            SELECT p_name AS name, CAST(min(p_partkey) AS BIGINT) AS entity_id
            FROM part GROUP BY 1),
@@ -1503,8 +1457,8 @@ object AdvancedQueries {
          FROM blocked a JOIN blocked b
            ON a.block = b.block AND a.entity_id < b.entity_id
          WHERE levenshtein(a.name, b.name) <= 3
-         ORDER BY id_a, id_b""",
-    "q_entity_resolution" ->
+         ORDER BY id_a, id_b"""),
+    Query("q_entity_resolution", entityResolution,
       """WITH RECURSIVE cat AS (
            SELECT p_name AS name, CAST(min(p_partkey) AS BIGINT) AS entity_id,
              count(1) AS members
@@ -1532,8 +1486,8 @@ object AdvancedQueries {
            coalesce(m.canonical, c.entity_id) = c.entity_id AS is_canonical,
            c.members
          FROM cat c LEFT JOIN comp m ON m.id = c.entity_id
-         ORDER BY c.entity_id""",
-    "q_dim_upsert" ->
+         ORDER BY c.entity_id"""),
+    Query("q_dim_upsert", dimUpsert,
       """WITH c AS (
            SELECT c_custkey, c_name, c_mktsegment FROM customer),
          u AS (
@@ -1548,10 +1502,11 @@ object AdvancedQueries {
            WHERE NOT EXISTS (
              SELECT 1 FROM u WHERE u.c_custkey = e.c_custkey)
            UNION ALL SELECT c_custkey, c_name, c_mktsegment FROM u)
-         ORDER BY c_custkey""",
+         ORDER BY c_custkey"""),
     // the bucketed twin adds the plan census to the hash: the values
     // must equal the plain merge AND the exchange count must be zero
-    "q_scd2_upsert_bucketed" ->
+    // gate: partial writes + compaction / bucketed table builds dominate
+    Query("q_scd2_upsert_bucketed", scd2UpsertBucketed,
       """WITH c AS (
            SELECT c_custkey, c_name, c_mktsegment FROM customer),
          u AS (
@@ -1566,8 +1521,8 @@ object AdvancedQueries {
            WHERE NOT EXISTS (
              SELECT 1 FROM u WHERE u.c_custkey = e.c_custkey)
            UNION ALL SELECT c_custkey, c_name, c_mktsegment FROM u)
-         ORDER BY c_custkey""",
-    "q_snapshot_diff" ->
+         ORDER BY c_custkey""", gate = true),
+    Query("q_snapshot_diff", snapshotDiffQ,
       """WITH c AS (
            SELECT c_custkey, c_name, c_mktsegment FROM customer),
          a AS (
@@ -1591,8 +1546,9 @@ object AdvancedQueries {
                 WHEN b.c_name IS DISTINCT FROM a.c_name
                   OR b.c_mktsegment IS DISTINCT FROM a.c_mktsegment
                   THEN 'update' END IS NOT NULL
-         ORDER BY c_custkey""",
-    "q_snapshot_diff_bucketed" ->
+         ORDER BY c_custkey"""),
+    // gate: partial writes + compaction / bucketed table builds dominate
+    Query("q_snapshot_diff_bucketed", snapshotDiffBucketed,
       """WITH c AS (
            SELECT c_custkey, c_name, c_mktsegment FROM customer),
          a AS (
@@ -1617,23 +1573,23 @@ object AdvancedQueries {
                 WHEN b.c_name IS DISTINCT FROM a.c_name
                   OR b.c_mktsegment IS DISTINCT FROM a.c_mktsegment
                   THEN 'update' END IS NOT NULL
-         ORDER BY c_custkey""",
-    "q_pivot" ->
+         ORDER BY c_custkey""", gate = true),
+    Query("q_pivot", pivot,
       """SELECT CAST(user_id % 10 AS INT) AS bucket,
            count(1) FILTER (WHERE event_type = 'click') AS click,
            count(1) FILTER (WHERE event_type = 'error') AS error,
            count(1) FILTER (WHERE event_type = 'purchase') AS purchase,
            count(1) FILTER (WHERE event_type = 'signup') AS signup,
            count(1) FILTER (WHERE event_type = 'view') AS view
-         FROM events GROUP BY 1 ORDER BY 1""",
+         FROM events GROUP BY 1 ORDER BY 1"""),
     // exact UNION ALL replay of the melt: values are unmodified doubles
-    "q_unpivot" ->
+    Query("q_unpivot", unpivotQ,
       """SELECT c_custkey, metric, value FROM (
            SELECT c_custkey, 'acctbal' AS metric,
              CAST(c_acctbal AS DOUBLE) AS value FROM customer
            UNION ALL
            SELECT c_custkey, 'nationkey',
              CAST(c_nationkey AS DOUBLE) FROM customer)
-         ORDER BY c_custkey, metric"""
+         ORDER BY c_custkey, metric""")
   )
 }

@@ -493,25 +493,6 @@ object CurationQueries {
       .orderBy(col("lang"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mix_repeats" -> (repeatsQ _),
-    "q_mix_temperature" -> (temperatureQ _),
-    "q_select_budget" -> (selectBudgetQ _),
-    "q_epoch_evolution" -> (epochEvolutionQ _),
-    "q_source_cap" -> (sourceCapQ _),
-    "q_pack_sequences" -> (packQ _),
-    "q_pack_bpe" -> (packBpeQ _),
-    "q_pack_shards" -> (packShardsQ _),
-    "q_bloom_membership" -> (bloomQ _),
-    "q_bloom_exact" -> (bloomExactQ _),
-    "q_bloom_persisted" -> (bloomPersistedQ _),
-    "q_sample_reservoir" -> (reservoirQ _),
-    "q_shard_manifest" -> (shardManifestQ _),
-    "q_shard_stream" -> (shardStreamQ _),
-    "q_epoch_prep" -> (epochPrepQ _),
-    "q_data_card" -> (dataCardQ _)
-  )
-
   /** The DATA CARD every published corpus ships (Datasheets for
     * Datasets, Gebru et al. 2021): one profile row per (lang, source)
     * slice — document count, character/token volume, length envelope,
@@ -532,9 +513,9 @@ object CurationQueries {
         col("n_docs").cast("double"))
     .orderBy(col("lang"), col("source"))
 
-  val oracleSql: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // plain integer replay; the only double is one IEEE division
-    "q_data_card" ->
+    Query("q_data_card", dataCardQ,
       """SELECT lang, source, count(1) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
            CAST(sum(len(regexp_split_to_array(lower(trim(text)), '\s+')))
@@ -543,8 +524,8 @@ object CurationQueries {
            count(DISTINCT md5(text)) AS n_unique,
            CAST(count(1) - count(DISTINCT md5(text)) AS DOUBLE) /
              CAST(count(1) AS DOUBLE) AS dup_rate
-         FROM documents GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_mix_repeats" ->
+         FROM documents GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Query("q_mix_repeats", repeatsQ,
       """WITH w(lang, num, den) AS (
            VALUES ('de', 2, 5), ('en', 1, 10), ('zh', 3, 5)),
          c AS (SELECT lang, count(1) AS cnt FROM documents GROUP BY 1),
@@ -575,8 +556,8 @@ object CurationQueries {
              AS n_zero
          FROM per_doc
          GROUP BY 1
-         ORDER BY lang""",
-    "q_epoch_evolution" ->
+         ORDER BY lang"""),
+    Query("q_epoch_evolution", epochEvolutionQ,
       """WITH e0 AS (
            SELECT 0 AS epoch, lang, CAST(NULL AS BIGINT) AS tok
            FROM documents WHERE doc_id % 2 = 0),
@@ -588,8 +569,8 @@ object CurationQueries {
          u AS (SELECT * FROM e0 UNION ALL SELECT * FROM e1)
          SELECT epoch, lang, count(1) AS n,
            CAST(sum(coalesce(tok, -1)) AS BIGINT) AS tok_sum
-         FROM u GROUP BY 1, 2 ORDER BY epoch, lang""",
-    "q_mix_temperature" ->
+         FROM u GROUP BY 1, 2 ORDER BY epoch, lang""", gate = true),
+    Query("q_mix_temperature", temperatureQ,
       """WITH c AS (SELECT lang, count(1) AS cnt FROM documents GROUP BY 1),
          w AS (SELECT lang, cnt, CAST(floor(sqrt(cnt)) AS BIGINT) AS wt
                FROM c),
@@ -621,8 +602,8 @@ object CurationQueries {
              AS n_zero
          FROM per_doc
          GROUP BY 1
-         ORDER BY lang""",
-    "q_select_budget" ->
+         ORDER BY lang"""),
+    Query("q_select_budget", selectBudgetQ,
       """WITH m AS (
            SELECT doc_id,
              CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
@@ -640,16 +621,16 @@ object CurationQueries {
            FROM sc)
          SELECT doc_id, score, tok, cum_tokens FROM o, b
          WHERE cum_tokens <= budget
-         ORDER BY score DESC, doc_id""",
-    "q_source_cap" ->
+         ORDER BY score DESC, doc_id"""),
+    Query("q_source_cap", sourceCapQ,
       """SELECT source, doc_id, n_chars FROM (
            SELECT source, doc_id, n_chars,
              row_number() OVER (PARTITION BY source
                                 ORDER BY n_chars DESC, doc_id) AS rn
            FROM documents)
          WHERE rn <= 10
-         ORDER BY source, n_chars DESC, doc_id""",
-    "q_pack_sequences" ->
+         ORDER BY source, n_chars DESC, doc_id"""),
+    Query("q_pack_sequences", packQ,
       """WITH toks AS (
            SELECT CAST(doc_id % 32 AS INT) AS bucket, doc_id,
              CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
@@ -699,11 +680,11 @@ object CurationQueries {
            overfull AS overfull_bins,
            oversized_iso AS oversized_isolated,
            (bins_used <= 2 * ((t_in + 255) // 256) + 64) AS bins_bounded
-         FROM inp, asg, pb""",
+         FROM inp, asg, pb"""),
     // full-stack composition oracle: BPE merges re-derived (K
     // unrolled rounds from graft.ops.Bpe), per-doc token counts
     // recomputed, next-fit recurrence replayed recursively
-    "q_pack_bpe" ->
+    Query("q_pack_bpe", packBpeQ,
       (graft.ops.Bpe.docLensOraclePrefix("documents") +
         s""",
          ptoks AS (
@@ -731,8 +712,8 @@ object CurationQueries {
            min(doc_id) AS min_id, max(doc_id) AS max_id
          FROM psx
          GROUP BY 1, 2
-         ORDER BY bucket, bin"""),
-    "q_pack_shards" ->
+         ORDER BY bucket, bin""")),
+    Query("q_pack_shards", packShardsQ,
       """WITH toks AS (
            SELECT CAST(doc_id % 32 AS INT) AS bucket, doc_id,
              CAST(len(regexp_split_to_array(lower(trim(text)), '\s+'))
@@ -761,20 +742,20 @@ object CurationQueries {
            min(doc_id) AS min_id, max(doc_id) AS max_id
          FROM s
          GROUP BY 1, 2
-         ORDER BY bucket, bin""",
+         ORDER BY bucket, bin"""),
     // q_bloom_membership / q_bloom_persisted keep invariant-gate
     // oracles (documented no, round-10): their xxhash64 positions are
     // not reproducible in DuckDB — XXH64 needs wrapping 64-bit
     // multiplies, and DuckDB integer arithmetic errors on overflow —
     // so the compensating exact-value check is q_bloom_exact below,
     // which replays the identical kernels under an md5 draw.
-    "q_bloom_membership" ->
+    Query("q_bloom_membership", bloomQ,
       """WITH n AS (SELECT count(1) AS c FROM documents)
          SELECT 'absent_bc' AS side, c AS n_probes, true AS ok FROM n
          UNION ALL SELECT 'present_bc', c, true FROM n
          UNION ALL SELECT 'present_join', c, true FROM n
-         ORDER BY side""",
-    "q_bloom_exact" ->
+         ORDER BY side"""),
+    Query("q_bloom_exact", bloomExactQ,
       """WITH nn AS (SELECT count(1) AS c FROM documents),
          mrec AS (
            WITH RECURSIVE mm(m) AS (
@@ -824,16 +805,16 @@ object CurationQueries {
          UNION ALL SELECT 'absent', 'join', n_probes, n_hits FROM aagg
          UNION ALL SELECT 'present', 'bc', n_probes, n_hits FROM pagg
          UNION ALL SELECT 'present', 'join', n_probes, n_hits FROM pagg
-         ORDER BY side, kernel""",
-    "q_bloom_persisted" ->
+         ORDER BY side, kernel"""),
+    Query("q_bloom_persisted", bloomPersistedQ,
       """WITH n AS (SELECT count(1) AS c FROM documents)
          SELECT 'absent_bc' AS side, c AS n_probes, true AS ok FROM n
          UNION ALL SELECT 'absent_join', c, true FROM n
          UNION ALL SELECT 'merge_eq_joint', c, true FROM n
          UNION ALL SELECT 'present_bc', c, true FROM n
          UNION ALL SELECT 'present_join', c, true FROM n
-         ORDER BY side""",
-    "q_sample_reservoir" ->
+         ORDER BY side""", gate = true),
+    Query("q_sample_reservoir", reservoirQ,
       """SELECT source, doc_id FROM (
            SELECT source, doc_id,
              row_number() OVER (PARTITION BY source
@@ -841,16 +822,16 @@ object CurationQueries {
                         doc_id) AS rn
            FROM documents)
          WHERE rn <= 16
-         ORDER BY source, doc_id""",
-    "q_shard_manifest" ->
+         ORDER BY source, doc_id"""),
+    Query("q_shard_manifest", shardManifestQ,
       """SELECT substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS shard,
            count(1) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS size_sum,
            min(doc_id) AS min_id, max(doc_id) AS max_id
          FROM documents
          GROUP BY 1
-         ORDER BY shard""",
-    "q_shard_stream" ->
+         ORDER BY shard"""),
+    Query("q_shard_stream", shardStreamQ,
       """SELECT substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS shard,
            count(1) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS size_sum,
@@ -858,8 +839,8 @@ object CurationQueries {
            true AS stream_match
          FROM documents
          GROUP BY 1
-         ORDER BY shard""",
-    "q_epoch_prep" ->
+         ORDER BY shard""", gate = true),
+    Query("q_epoch_prep", epochPrepQ,
       """WITH t AS (
            SELECT source, doc_id,
              len(regexp_split_to_array(lower(trim(text)), '\s+')) AS n_words
@@ -878,6 +859,6 @@ object CurationQueries {
            min(doc_id) AS min_id, max(doc_id) AS max_id
          FROM c
          GROUP BY 1
-         ORDER BY shard"""
+         ORDER BY shard""", gate = true)
   )
 }

@@ -402,28 +402,17 @@ object EventQueries {
       .orderBy(col("ws"), col("event_type"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_events_tumbling" -> (tumbling _),
-    "q_events_sliding" -> (sliding _),
-    "q_events_sessionize" -> (sessionize _),
-    "q_events_funnel" -> (funnelQ _),
-    "q_events_retention" -> (retentionQ _),
-    "q_events_stream_parity" -> (streamParity _),
-    "q_events_stream_join" -> (streamJoinParity _),
-    "q_events_late_data" -> (lateDataParity _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_events_tumbling" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_events_tumbling", tumbling,
       """SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS ws, event_type,
            count(1) AS n, CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_events_stream_parity" ->
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Query("q_events_stream_parity", streamParity,
       """SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS ws, event_type,
            count(1) AS n, CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value,
            true AS stream_match
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_events_retention" ->
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2""", gate = true),
+    Query("q_events_retention", retentionQ,
       """WITH d AS (
            SELECT user_id,
              epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000 AS day
@@ -435,8 +424,8 @@ object EventQueries {
              CAST((d.day - f.first_day) // 7 AS INT) AS week_offset
            FROM d JOIN f USING (user_id))
          SELECT cohort_week, week_offset, count(1) AS n_users
-         FROM a GROUP BY 1, 2 ORDER BY cohort_week, week_offset""",
-    "q_events_funnel" ->
+         FROM a GROUP BY 1, 2 ORDER BY cohort_week, week_offset"""),
+    Query("q_events_funnel", funnelQ,
       """WITH t1 AS (
            SELECT user_id, min(CAST(ts AS TIMESTAMP)) AS ts FROM events
            WHERE event_type = 'signup' GROUP BY 1),
@@ -471,8 +460,8 @@ object EventQueries {
            LEFT JOIN t3 ON t3.user_id = u.user_id
            LEFT JOIN t4 ON t4.user_id = u.user_id)
          SELECT stage, count(1) AS n_users FROM stages
-         GROUP BY 1 ORDER BY stage""",
-    "q_events_stream_join" ->
+         GROUP BY 1 ORDER BY stage"""),
+    Query("q_events_stream_join", streamJoinParity,
       """SELECT a.user_id, a.event_id AS click_id, b.event_id AS view_id,
            CAST(a.ts AS TIMESTAMP) AS click_ts,
            CAST(b.ts AS TIMESTAMP) AS view_ts,
@@ -482,8 +471,8 @@ object EventQueries {
              BETWEEN CAST(a.ts AS TIMESTAMP) - INTERVAL 30 MINUTE
                  AND CAST(a.ts AS TIMESTAMP) + INTERVAL 30 MINUTE
            AND a.event_type = 'click' AND b.event_type = 'view'
-         ORDER BY click_id, view_id""",
-    "q_events_late_data" ->
+         ORDER BY click_id, view_id""", gate = true),
+    Query("q_events_late_data", lateDataParity,
       """SELECT ws, event_type, n, sum_value, true AS stream_match FROM (
            SELECT time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)) AS ws, event_type,
              count(1) AS n, CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
@@ -492,16 +481,16 @@ object EventQueries {
            GROUP BY 1, 2) t
          WHERE ws + INTERVAL 1 HOUR <=
            (SELECT max(CAST(ts AS TIMESTAMP)) - INTERVAL 2 HOUR FROM events)
-         ORDER BY 1, 2""",
-    "q_events_sliding" ->
+         ORDER BY 1, 2""", gate = true),
+    Query("q_events_sliding", sliding,
       """WITH expanded AS (
            SELECT time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP)) AS ws, event_type, value FROM events
            UNION ALL
            SELECT time_bucket(INTERVAL 30 MINUTE, CAST(ts AS TIMESTAMP)) - INTERVAL 30 MINUTE AS ws, event_type, value FROM events)
          SELECT ws, event_type, count(1) AS n,
            CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS sum_value
-         FROM expanded GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q_events_sessionize" ->
+         FROM expanded GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Query("q_events_sessionize", sessionize,
       """WITH o AS (
            SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, value,
              lag(CAST(ts AS TIMESTAMP)) OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP)) AS prev
@@ -518,6 +507,6 @@ object EventQueries {
          SELECT user_id, CAST(session_id AS INT) AS session_id, count(1) AS n_events,
            min(ts) AS session_start, max(ts) AS session_end,
            CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS session_value
-         FROM sess GROUP BY 1, 2 ORDER BY 1, 2"""
+         FROM sess GROUP BY 1, 2 ORDER BY 1, 2""")
   )
 }

@@ -1052,97 +1052,61 @@ object RefQueries {
     res
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_io_orc_roundtrip" -> (ioOrcRoundtrip _),
-    "q_io_jsonl_quarantine" -> (ioJsonlQuarantine _),
-    "q_io_jsonl_roundtrip" -> (ioJsonlRoundtrip _),
-    "ref_io_object_store" -> (ioObjectStore _),
-    "ref_pg_runtime" -> (pgRuntime _),
-    "ref_pg_copy" -> (pgCopy _),
-    "ref_pg_copy_distributed" -> (pgCopyDistributed _),
-    "ref_pg_copy_exactly_once" -> (pgCopyExactlyOnce _),
-    "ref_pg_copy_binary" -> (pgCopyBinary _),
-    "ref_pg_copy_out" -> (pgCopyOut _),
-    "ref_pg_copy_csv" -> (pgCopyCsv _),
-    "ref_pg_scan_distributed" -> (pgScanDistributed _),
-    "ref_pg_dsv2_scan" -> (pgDsv2Scan _),
-    "ref_pg_dsv2_write" -> (pgDsv2Write _),
-    "ref_pg_dsv2_topn" -> (pgDsv2TopN _),
-    "ref_pg_dsv2_agg" -> (pgDsv2Agg _),
-    "ref_pg_dsv2_filter" -> (pgDsv2Filter _),
-    "ref_pg_dsv2_like" -> (pgDsv2Like _),
-    "ref_pg_stream_sink" -> (pgStreamSink _),
-    "ref_pg_stream_source" -> (pgStreamSource _),
-    "ref_pg_stream_source_filtered" -> (pgStreamSourceFiltered _),
-    "ref_pg_cbo_broadcast" -> (pgCboBroadcast _),
-    "ref_io_csv_roundtrip" -> (ioCsvRoundtrip _),
-    "ref_io_xlsx_scan" -> (ioXlsxScan _),
-    "ref_gold_star" -> (goldStar _),
-    "ref_clean_trim_fill" -> (cleanTrimFill _),
-    "ref_standardize_values" -> (standardizeValues _),
-    "ref_natural_key" -> (naturalKeyQ _),
-    "ref_hash_key" -> (hashKeyQ _),
-    "ref_config_split" -> (configSplit _),
-    "ref_dim_dedup" -> (dimDedup _),
-    "ref_surrogate_id" -> (surrogateId _),
-    "ref_fk_resolve" -> (fkResolve _),
-    "ref_medallion" -> (medallion _)
-  )
-
-  /** DuckDB equivalents. Note DuckDB regexes are RE2 (`\1` backrefs, 'g'
-    * flag); Spark's are Java (`$1`, global by default) — formulations
-    * differ syntactically, semantics verified identical. */
-  val oracleSql: Map[String, String] = Map(
+  /** Each query with its DuckDB equivalent. Note DuckDB regexes are RE2
+    * (`\1` backrefs, 'g' flag); Spark's are Java (`$1`, global by
+    * default) — formulations differ syntactically, semantics verified
+    * identical. */
+  val queries: Seq[Query] = Seq(
     // the store loop must be value-invisible: silver object ≡ the
     // clean rules applied directly to the parquet source
-    "ref_io_object_store" ->
+    Query("ref_io_object_store", ioObjectStore,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-    "ref_io_csv_roundtrip" ->
-      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
+         FROM customer ORDER BY c_custkey"""),
+    Query("ref_io_csv_roundtrip", ioCsvRoundtrip,
+      "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey"),
     // the wire COPY round trip must be value-invisible: read-back ≡
     // the clean rules applied directly to the parquet source
-    "ref_pg_copy" ->
+    Query("ref_pg_copy", pgCopy,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the 8-connection concurrent COPY must land on the identical
     // read-back — same oracle as the single-socket twin
-    "ref_pg_copy_distributed" ->
+    Query("ref_pg_copy_distributed", pgCopyDistributed,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the staged, transactionally-published COPY must land on the
     // identical read-back — same oracle as its two siblings
-    "ref_pg_copy_exactly_once" ->
+    Query("ref_pg_copy_exactly_once", pgCopyExactlyOnce,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the STREAMING source: the table polled out by key high-water
     // mark in rate-limited micro-batches — same clean-rules oracle
-    "ref_pg_stream_source" ->
+    Query("ref_pg_stream_source", pgStreamSource,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey""", gate = true),
     // the FILTERED streaming source: the pushed IN-list rides every
     // trigger's key ranges server-side — clean rules + filter oracle
-    "ref_pg_stream_source_filtered" ->
+    Query("ref_pg_stream_source_filtered", pgStreamSourceFiltered,
       """SELECT c_custkey,
            coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
            coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
          FROM customer
          WHERE coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown')
                IN ('building', 'machinery')
-         ORDER BY c_custkey""",
+         ORDER BY c_custkey""", gate = true),
     // the CBO-statistics harvest: the join itself must be exact —
     // count + key checksum per segment over the filtered join
-    "ref_pg_cbo_broadcast" ->
+    Query("ref_pg_cbo_broadcast", pgCboBroadcast,
       """SELECT seg AS c_mktsegment, count(1) AS n_orders,
            CAST(sum(o_custkey) AS BIGINT) AS sum_cust
          FROM orders
@@ -1151,122 +1115,122 @@ object RefQueries {
                FROM customer) c
            ON o_custkey = c_custkey
          WHERE seg IN ('building', 'machinery')
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
     // the STREAMING sink: micro-batched epochs, each published
     // atomically with its epoch marker — same clean-rules oracle
-    "ref_pg_stream_sink" ->
+    Query("ref_pg_stream_sink", pgStreamSink,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey""", gate = true),
     // the DSv2 sink: append through Spark's V2 commit protocol (staged
     // exactly-once) + DSv2 scan back — same clean-rules oracle
-    "ref_pg_dsv2_write" ->
+    Query("ref_pg_dsv2_write", pgDsv2Write,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the DSv2 TOP-N pushdown: per-range ORDER BY … DESC LIMIT k on
     // the wire, merged by Spark — the oracle re-derives the global
     // top-100 keys from the parquet source under the same clean rules
-    "ref_pg_dsv2_topn" ->
+    Query("ref_pg_dsv2_topn", pgDsv2TopN,
       """SELECT * FROM (
            SELECT c_custkey,
              coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
              coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
            FROM customer ORDER BY c_custkey DESC LIMIT 100
-         ) ORDER BY c_custkey""",
+         ) ORDER BY c_custkey"""),
     // the DSv2 AGGREGATE pushdown: per-range GROUP BY partials on the
     // wire, final-merged by Spark — the oracle re-derives the group
     // aggregates from the parquet source under the same clean rules
-    "ref_pg_dsv2_agg" ->
+    Query("ref_pg_dsv2_agg", pgDsv2Agg,
       """SELECT coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment,
            count(*) AS n_rows,
            CAST(sum(c_custkey) AS BIGINT) AS sum_key,
            min(c_custkey) AS min_key,
            max(c_custkey) AS max_key
-         FROM customer GROUP BY 1 ORDER BY 1""",
+         FROM customer GROUP BY 1 ORDER BY 1"""),
     // the LIKE-filtered partitioned read: the pushed prefix pattern
     // evaluates server-side inside every key range
-    "ref_pg_dsv2_like" ->
+    Query("ref_pg_dsv2_like", pgDsv2Like,
       """SELECT c_custkey,
            coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
            coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
          FROM customer
          WHERE coalesce(nullif(lower(trim(c_name)), ''), 'unknown')
                LIKE 'customer#0000001%'
-         ORDER BY c_custkey""",
+         ORDER BY c_custkey"""),
     // the FILTERED partitioned read: the pushed comparison evaluates
     // server-side inside every key range — the oracle replays clean
     // rules + the filter on the parquet source
-    "ref_pg_dsv2_filter" ->
+    Query("ref_pg_dsv2_filter", pgDsv2Filter,
       """SELECT c_custkey,
            coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
            coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
          FROM customer
          WHERE coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown')
                IN ('building', 'machinery')
-         ORDER BY c_custkey""",
+         ORDER BY c_custkey"""),
     // the DSv2 face of the distributed scan: server-inferred schema +
     // range-partitioned read — same clean-rules oracle as its sibling
-    "ref_pg_dsv2_scan" ->
+    Query("ref_pg_dsv2_scan", pgDsv2Scan,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the distributed SCAN: 8 per-partition key-range reads must
     // reassemble the table with no seam (row lost or doubled at a
     // range boundary) — same clean-rules oracle as the write gates
-    "ref_pg_scan_distributed" ->
+    Query("ref_pg_scan_distributed", pgScanDistributed,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the CSV format: quoted-empty-vs-NULL + quote-aware framing
     // (CSV ≡ text export required in the query) — same oracle
-    "ref_pg_copy_csv" ->
+    Query("ref_pg_copy_csv", pgCopyCsv,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the EXPORT side: COPY TO STDOUT (text ≡ binary required in the
     // query) must be value-invisible — same clean-rules oracle as the
     // COPY FROM STDIN family it mirrors
-    "ref_pg_copy_out" ->
+    Query("ref_pg_copy_out", pgCopyOut,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
+         FROM customer ORDER BY c_custkey"""),
     // the BINARY-format COPY round trip must be value-invisible: every
     // typed field codec (int8/float8/µs-timestamp/UTF-8) inverted
     // exactly, so the read-back ≡ the parquet slice it started from
-    "ref_pg_copy_binary" ->
+    Query("ref_pg_copy_binary", pgCopyBinary,
       """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
-         FROM orders WHERE o_orderkey % 10 = 7 ORDER BY o_orderkey""",
+         FROM orders WHERE o_orderkey % 10 = 7 ORDER BY o_orderkey"""),
     // DB-side SERIAL ids were assigned in sorted-segment insert order →
     // row_number over the sorted distinct segment list replays them
-    "ref_pg_runtime" ->
+    Query("ref_pg_runtime", pgRuntime,
       """SELECT CAST(row_number() OVER (ORDER BY seg) AS INT) AS id, seg,
            n_customers
          FROM (SELECT lower(trim(c_mktsegment)) AS seg,
                  count(1) AS n_customers
                FROM customer GROUP BY 1)
-         ORDER BY id""",
-    "q_io_jsonl_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id",
-    "q_io_orc_roundtrip" ->
-      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id",
+         ORDER BY id"""),
+    Query("q_io_jsonl_roundtrip", ioJsonlRoundtrip,
+      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"),
+    Query("q_io_orc_roundtrip", ioOrcRoundtrip,
+      "SELECT doc_id, text, lang, source, n_chars FROM documents ORDER BY doc_id"),
     // the quarantine routing must be value-invisible to the clean side
     // (full count + checksums) and catch exactly the 7 injected lines
-    "q_io_jsonl_quarantine" ->
+    Query("q_io_jsonl_quarantine", ioJsonlQuarantine,
       """SELECT count(1) AS n_clean,
            CAST(sum(doc_id) AS BIGINT) AS sum_ids,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
            CAST(7 AS BIGINT) AS n_quarantined
-         FROM documents""",
-    "ref_io_xlsx_scan" ->
-      "SELECT n_name, n_regionkey FROM nation ORDER BY n_name",
-    "ref_gold_star" ->
+         FROM documents"""),
+    Query("ref_io_xlsx_scan", ioXlsxScan,
+      "SELECT n_name, n_regionkey FROM nation ORDER BY n_name"),
+    Query("ref_gold_star", goldStar,
       """WITH k AS (
            SELECT c_name, c_nationkey,
              substr(sha256(coalesce(CAST(c_name AS VARCHAR), 'nan')), 1, 16) AS profile_key
@@ -1274,48 +1238,48 @@ object RefQueries {
          main AS (
            SELECT *, CAST(row_number() OVER (ORDER BY profile_key, c_name) AS INT) AS id
            FROM k)
-         SELECT id AS profile_id, c_nationkey FROM main ORDER BY profile_id""",
-    "ref_clean_trim_fill" ->
+         SELECT id AS profile_id, c_nationkey FROM main ORDER BY profile_id"""),
+    Query("ref_clean_trim_fill", cleanTrimFill,
       """SELECT c_custkey,
          coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
          coalesce(nullif(lower(trim(c_mktsegment)), ''), 'unknown') AS c_mktsegment
-         FROM customer ORDER BY c_custkey""",
-    "ref_standardize_values" ->
+         FROM customer ORDER BY c_custkey"""),
+    Query("ref_standardize_values", standardizeValues,
       """SELECT p_partkey,
          replace(lower(regexp_replace(trim(p_name), '([^A-Z_])([A-Z])', '\1_\2', 'g')), ' ', '') AS name_std,
          replace(lower(regexp_replace(trim(p_type), '([^A-Z_])([A-Z])', '\1_\2', 'g')), ' ', '') AS type_std
-         FROM part ORDER BY p_partkey""",
-    "ref_natural_key" ->
+         FROM part ORDER BY p_partkey"""),
+    Query("ref_natural_key", naturalKeyQ,
       """SELECT c_custkey,
          concat_ws('|', CAST(c_name AS VARCHAR), CAST(c_custkey AS VARCHAR)) AS natural_key
-         FROM customer ORDER BY c_custkey""",
-    "ref_hash_key" ->
+         FROM customer ORDER BY c_custkey"""),
+    Query("ref_hash_key", hashKeyQ,
       """SELECT c_custkey,
          substr(sha256(concat(coalesce(CAST(c_name AS VARCHAR), 'nan'),
                               coalesce(CAST(c_nationkey AS VARCHAR), 'nan'))), 1, 16) AS c_key
-         FROM customer ORDER BY c_custkey""",
-    "ref_config_split" ->
+         FROM customer ORDER BY c_custkey"""),
+    Query("ref_config_split", configSplit,
       """SELECT substr(sha256(coalesce(CAST(c_custkey AS VARCHAR), 'nan')), 1, 16) AS c_key,
          c_mktsegment, c_nationkey
-         FROM customer ORDER BY c_key""",
-    "ref_dim_dedup" ->
+         FROM customer ORDER BY c_key"""),
+    Query("ref_dim_dedup", dimDedup,
       """SELECT DISTINCT c_mktsegment, c_nationkey FROM customer
-         ORDER BY c_mktsegment, c_nationkey""",
-    "ref_surrogate_id" ->
+         ORDER BY c_mktsegment, c_nationkey"""),
+    Query("ref_surrogate_id", surrogateId,
       """SELECT CAST(row_number() OVER (ORDER BY c_mktsegment) AS INT) AS id, c_mktsegment
          FROM (SELECT DISTINCT c_mktsegment FROM customer)
-         ORDER BY id""",
-    "ref_fk_resolve" ->
+         ORDER BY id"""),
+    Query("ref_fk_resolve", fkResolve,
       """WITH dim AS (
            SELECT c_custkey, CAST(row_number() OVER (ORDER BY c_custkey) AS INT) AS customer_id
            FROM customer)
          SELECT d.customer_id, o.o_orderkey, o.o_orderstatus
          FROM orders o LEFT JOIN dim d ON o.o_custkey = d.c_custkey
-         ORDER BY o.o_orderkey""",
+         ORDER BY o.o_orderkey"""),
     // the flagship hashes BOTH wire legs: the dim chain replayed to its
     // surrogate ids, joined to orders (the fact read-back), cut to the
     // sampled ordered head exactly like the wire SELECT … LIMIT 100
-    "ref_medallion" ->
+    Query("ref_medallion", medallion,
       """WITH cleaned AS (
            SELECT c_custkey,
                   coalesce(nullif(lower(trim(c_name)), ''), 'unknown') AS c_name,
@@ -1337,6 +1301,6 @@ object RefQueries {
            FROM orders o JOIN main m ON o.o_custkey = m.c_custkey
            ORDER BY o.o_orderkey LIMIT 100)
          SELECT o_orderkey, customer_id, o_orderstatus, c_name, c_key
-         FROM head ORDER BY o_orderkey"""
+         FROM head ORDER BY o_orderkey""")
   )
 }

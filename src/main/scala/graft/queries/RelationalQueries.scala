@@ -404,55 +404,26 @@ object RelationalQueries {
         7, "tile", Seq(col("o_totalprice").desc, col("o_orderkey").asc))
       .orderBy(col("o_orderkey"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_rank_global" -> (rankGlobal _),
-    "q_rank_global_ntile" -> (rankGlobalNtile _),
-    "q_agg_pricing" -> (aggPricing _),
-    "q_star_revenue" -> (starRevenue _),
-    "q_star_returns" -> (starReturns _),
-    "q_filter_pushdown" -> (filterPushdown _),
-    "q_agg_distinct" -> (aggDistinct _),
-    "q_agg_rollup" -> (aggRollup _),
-    "q_agg_cube" -> (aggCube _),
-    "q_agg_grouping_sets" -> (aggGroupingSets _),
-    "q_join_hash" -> (joinHash _),
-    "q_join_broadcast" -> (joinBroadcast _),
-    "q_join_bucketed" -> (joinBucketed _),
-    "q_join_semi" -> (joinSemi _),
-    "q_join_anti" -> (joinAnti _),
-    "q_join_range" -> (joinRange _),
-    "q_join_asof" -> (joinAsOf _),
-    "q_join_asof_forward" -> (joinAsOfForward _),
-    "q_join_asof_nearest" -> (joinAsOfNearest _),
-    "q_window_funcs" -> (windowFuncs _),
-    "q_window_ranks" -> (windowRanks _),
-    "q_topk_per_group" -> (topkPerGroup _),
-    "q_sort_limit" -> (sortLimit _),
-    "q_set_ops" -> (setOps _),
-    "q_json_extract" -> (jsonExtract _),
-    "q_date_funcs" -> (dateFuncs _)
-  )
-
-  val oracleSql: Map[String, String] = Map(
-    "q_rank_global" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_rank_global", rankGlobal,
       """SELECT o_orderkey, o_totalprice,
            CAST(row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey ASC)
              AS BIGINT) AS rnk
-         FROM orders ORDER BY rnk""",
-    "q_rank_global_ntile" ->
+         FROM orders ORDER BY rnk"""),
+    Query("q_rank_global_ntile", rankGlobalNtile,
       """SELECT o_orderkey, o_totalprice,
            CAST(ntile(7) OVER (ORDER BY o_totalprice DESC, o_orderkey ASC)
              AS INT) AS tile
-         FROM orders ORDER BY o_orderkey""",
-    "q_window_ranks" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Query("q_window_ranks", windowRanks,
       """SELECT o_orderkey, o_orderpriority,
            CAST(ntile(4) OVER w AS INT) AS quartile,
            percent_rank() OVER w AS pr,
            cume_dist() OVER w AS cd
          FROM orders
          WINDOW w AS (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey)
-         ORDER BY o_orderkey""",
-    "q_star_revenue" ->
+         ORDER BY o_orderkey"""),
+    Query("q_star_revenue", starRevenue,
       """SELECT n_name,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
            count(1) AS n_items
@@ -466,8 +437,8 @@ object RelationalQueries {
            AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
          GROUP BY n_name
-         ORDER BY revenue DESC, n_name""",
-    "q_star_returns" ->
+         ORDER BY revenue DESC, n_name"""),
+    Query("q_star_returns", starReturns,
       """SELECT c_custkey, c_name, n_name,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(4,2)))) AS DOUBLE) AS revenue,
            count(1) AS n_items
@@ -480,8 +451,8 @@ object RelationalQueries {
            AND o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
          GROUP BY c_custkey, c_name, n_name
          ORDER BY revenue DESC, c_custkey
-         LIMIT 20""",
-    "q_agg_pricing" ->
+         LIMIT 20"""),
+    Query("q_agg_pricing", aggPricing,
       """SELECT l_returnflag, l_linestatus,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
            CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base,
@@ -492,80 +463,81 @@ object RelationalQueries {
          FROM lineitem
          WHERE l_shipdate <= TIMESTAMP '1999-12-01 00:00:00'
          GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q_filter_pushdown" ->
+         ORDER BY l_returnflag, l_linestatus"""),
+    Query("q_filter_pushdown", filterPushdown,
       """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
          WHERE l_returnflag = 'R' AND l_quantity >= 45
-         ORDER BY l_orderkey, l_linenumber""",
-    "q_agg_distinct" ->
+         ORDER BY l_orderkey, l_linenumber"""),
+    Query("q_agg_distinct", aggDistinct,
       """SELECT o_orderpriority, count(DISTINCT o_custkey) AS n_cust, count(1) AS n_orders
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_agg_rollup" ->
+         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    Query("q_agg_rollup", aggRollup,
       """SELECT l_returnflag, l_linestatus, count(1) AS n,
            CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
          FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""",
-    "q_agg_cube" ->
+         ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST"""),
+    Query("q_agg_cube", aggCube,
       """SELECT o_orderstatus, o_orderpriority, count(1) AS n
          FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""",
-    "q_agg_grouping_sets" ->
+         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""),
+    Query("q_agg_grouping_sets", aggGroupingSets,
       """SELECT o_orderstatus, o_orderpriority, count(1) AS n
          FROM orders
          GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""",
-    "q_join_hash" ->
+         ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST"""),
+    Query("q_join_hash", joinHash,
       """SELECT n_name, CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
            count(1) AS n_orders
          FROM orders JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
-         GROUP BY n_name ORDER BY n_name""",
-    "q_join_broadcast" ->
+         GROUP BY n_name ORDER BY n_name"""),
+    Query("q_join_broadcast", joinBroadcast,
       """SELECT n_nationkey, n_name, r_name
          FROM nation JOIN region ON n_regionkey = r_regionkey
-         ORDER BY n_nationkey""",
+         ORDER BY n_nationkey"""),
     // result = the plain join (bucketing must not change semantics);
     // the 0 literal is the plan assertion — any Exchange below the
     // bucketed join flips the column and breaks the hash
-    "q_join_bucketed" ->
+    // gate: partial writes + compaction / bucketed table builds dominate
+    Query("q_join_bucketed", joinBucketed,
       """SELECT c_mktsegment, count(1) AS n_orders,
            CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total,
            CAST(0 AS BIGINT) AS bucket_join_exchanges
          FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q_join_semi" ->
+         GROUP BY c_mktsegment ORDER BY c_mktsegment""", gate = true),
+    Query("q_join_semi", joinSemi,
       """SELECT c_custkey, c_name FROM customer
          WHERE EXISTS (SELECT 1 FROM orders
                        WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-         ORDER BY c_custkey""",
-    "q_join_anti" ->
+         ORDER BY c_custkey"""),
+    Query("q_join_anti", joinAnti,
       """SELECT o_orderkey, o_totalprice FROM orders
          WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-         ORDER BY o_orderkey""",
-    "q_join_range" ->
+         ORDER BY o_orderkey"""),
+    Query("q_join_range", joinRange,
       """WITH bands(band, lo, hi) AS (
            VALUES ('low', 0.0, 100000.0), ('mid', 100000.0, 300000.0),
                   ('high', 300000.0, 600000.0))
          SELECT band, count(1) AS n,
            CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total
          FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi
-         GROUP BY band ORDER BY band""",
-    "q_join_asof" ->
+         GROUP BY band ORDER BY band"""),
+    Query("q_join_asof", joinAsOf,
       """SELECT e.event_id, e.user_id, e.ts, p.ts AS purchase_ts, p.value AS purchase_value
          FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') e
          ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
            ON e.user_id = p.user_id AND e.ts >= p.ts
-         ORDER BY e.event_id""",
+         ORDER BY e.event_id"""),
     // forward = DuckDB ASOF with the inequality flipped
-    "q_join_asof_forward" ->
+    Query("q_join_asof_forward", joinAsOfForward,
       """SELECT e.event_id, e.user_id, e.ts, p.ts AS purchase_ts, p.value AS purchase_value
          FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click') e
          ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
            ON e.user_id = p.user_id AND e.ts <= p.ts
-         ORDER BY e.event_id""",
+         ORDER BY e.event_id"""),
     // nearest has no native ASOF form: per click, the minimum |Δ|
     // within 24 h, ties to the backward side (rt <= lt)
-    "q_join_asof_nearest" ->
+    Query("q_join_asof_nearest", joinAsOfNearest,
       """WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
          r AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
          cand AS (
@@ -581,41 +553,41 @@ object RelationalQueries {
          SELECT l.event_id, l.user_id, l.ts,
            p.rts AS purchase_ts, p.value AS purchase_value
          FROM l LEFT JOIN (SELECT * FROM pick WHERE rn = 1) p USING (event_id)
-         ORDER BY l.event_id""",
-    "q_window_funcs" ->
+         ORDER BY l.event_id"""),
+    Query("q_window_funcs", windowFuncs,
       """SELECT o_orderkey, o_custkey,
            CAST(rank() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS INT) AS rnk,
            lag(o_orderkey, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev_key,
            CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) OVER (
              PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running
-         FROM orders ORDER BY o_orderkey""",
-    "q_topk_per_group" ->
+         FROM orders ORDER BY o_orderkey"""),
+    Query("q_topk_per_group", topkPerGroup,
       """SELECT o_orderpriority, CAST(rn AS INT) AS rn, o_orderkey, o_totalprice FROM (
            SELECT o_orderpriority, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_orderpriority
                                 ORDER BY o_totalprice DESC, o_orderkey) AS rn
            FROM orders)
-         WHERE rn <= 3 ORDER BY o_orderpriority, rn""",
-    "q_sort_limit" ->
+         WHERE rn <= 3 ORDER BY o_orderpriority, rn"""),
+    Query("q_sort_limit", sortLimit,
       """SELECT o_orderkey, o_totalprice FROM orders
-         ORDER BY o_totalprice DESC, o_orderkey LIMIT 50""",
-    "q_set_ops" ->
+         ORDER BY o_totalprice DESC, o_orderkey LIMIT 50"""),
+    Query("q_set_ops", setOps,
       """WITH c AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'),
             b AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'),
             sg AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'signup')
          SELECT 'click_and_buy' AS tag, user_id FROM (SELECT user_id FROM c INTERSECT SELECT user_id FROM b)
          UNION ALL
          SELECT 'click_no_signup' AS tag, user_id FROM (SELECT user_id FROM c EXCEPT SELECT user_id FROM sg)
-         ORDER BY tag, user_id""",
-    "q_json_extract" ->
+         ORDER BY tag, user_id"""),
+    Query("q_json_extract", jsonExtract,
       """SELECT event_type,
            CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
            count(1) AS n
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "q_date_funcs" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Query("q_date_funcs", dateFuncs,
       """SELECT CAST(year(o_orderdate) AS INT) AS yr, CAST(month(o_orderdate) AS INT) AS mo,
            count(1) AS n, min(o_orderdate) AS first_ts, max(o_orderdate) AS last_ts
-         FROM orders GROUP BY 1, 2 ORDER BY 1, 2"""
+         FROM orders GROUP BY 1, 2 ORDER BY 1, 2""")
   )
 }

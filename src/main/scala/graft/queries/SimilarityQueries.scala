@@ -722,42 +722,6 @@ object SimilarityQueries {
     Similarity.cosineNearDupPairsBlocked(emb(s, dir), threshold = 0.4)
       .orderBy(col("id_a"), col("id_b"))
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_embed_neardup_blocked" -> (cosineNearDupsBlocked _),
-    "q_ann_ivf" -> (ivfAnn _),
-    "q_ann_lsh_topk" -> (lshAnnK _),
-    "q_ann_topk" -> (annTopK _),
-    "q_embed_hard_negatives" -> (hardNegatives _),
-    "q_ann_recall" -> (annRecall _),
-    "q_ann_recall_sampled" -> (annRecallSampled _),
-    "q_embed_neardup" -> (cosineNearDups _),
-    "q_embed_dedup" -> (embedDedup _),
-    "q_semdedup" -> (semDedupQ _),
-    "q_semdedup_incremental" -> (semDedupIncrementalQ _),
-    "q_embed_stats" -> (embedStats _),
-    "q_embed_dimstats" -> (embedDimStats _),
-    "q_embed_fisher" -> (embedFisher _),
-    "q_embed_knn" -> (embedKnn _),
-    "q_embed_kcenter" -> ((s, dir) =>
-      graft.ops.Coreset.kCenterFrom(s, kcenters(s, dir))),
-    "q_embed_kcenter_assign" -> ((s, dir) =>
-      graft.ops.Coreset.kCenterAssignFrom(emb(s, dir), "vec_id", "embedding",
-        kcenters(s, dir))),
-    // MMR diversified selection: probe = min-id vector, λ = 1/2
-    "q_embed_mmr" -> ((s, dir) =>
-      graft.ops.Coreset.mmrSelect(emb(s, dir), "vec_id", "embedding", 6)),
-    "q_embed_pca" -> (embedPca _),
-    "q_embed_randproj" -> ((s, dir) =>
-      graft.ops.RandomProjection.project(emb(s, dir), "embedding", "vec_id")
-        .orderBy(col("vec_id"))),
-    "q_embed_pca_project" -> (embedPcaProject _),
-    "q_embed_pca_topr" -> (embedPcaTopR _),
-    "q_embed_pca_topr_project" -> (embedPcaTopRProject _),
-    "q_embed_normalize" -> (embedNormalize _),
-    "q_ann_lsh" -> (lshAnn _),
-    "q_ann_index" -> (annIndexGate _)
-  )
-
   /** Shared oracle scaffolding: exact decimal dot/norm, values
     * IDENTICAL to the original unnest-join form (verified row-for-row)
     * but ~5× faster — per-pair list_sum folds (DuckDB keeps
@@ -796,50 +760,52 @@ object SimilarityQueries {
   private val sampledEmb =
     "embeddings WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) < '4'"
 
-  val oracleSql: Map[String, String] = Map(
-    "q_ann_recall" ->
-      methodArms(Seq("bin", "int8", "ivf", "ivf_pq", "ivf_sq8", "lsh", "pq"), "embeddings"),
-    "q_ann_recall_sampled" ->
-      methodArms(Seq("bin", "int8", "ivf", "ivf_pq", "ivf_sq8", "lsh", "pq"), sampledEmb),
-    "q_ann_ivf" ->
+  val queries: Seq[Query] = Seq(
+    Query("q_ann_recall", annRecall,
+      methodArms(Seq("bin", "int8", "ivf", "ivf_pq", "ivf_sq8", "lsh", "pq"),
+        "embeddings"), gate = true),
+    Query("q_ann_recall_sampled", annRecallSampled,
+      methodArms(Seq("bin", "int8", "ivf", "ivf_pq", "ivf_sq8", "lsh", "pq"),
+        sampledEmb), gate = true),
+    Query("q_ann_ivf", ivfAnn,
       methodArms(Seq("ivf"), sampledEmb,
-        Seq("true AS covered_all", "true AS cos_valid")),
-    "q_ann_lsh" ->
+        Seq("true AS covered_all", "true AS cos_valid"))),
+    Query("q_ann_lsh", lshAnn,
       methodArms(Seq("lsh"), sampledEmb,
-        Seq("true AS covered_all", "true AS cos_valid")),
-    "q_ann_lsh_topk" ->
+        Seq("true AS covered_all", "true AS cos_valid"))),
+    Query("q_ann_lsh_topk", lshAnnK,
       methodArms(Seq("lsh_topk"), sampledEmb,
-        Seq("true AS k_ok", "true AS cos_valid")),
-    "q_ann_index" ->
+        Seq("true AS k_ok", "true AS cos_valid"))),
+    Query("q_ann_index", annIndexGate,
       methodArms(Seq("ivf_index"), sampledEmb,
-        Seq("true AS k_ok", "true AS cos_valid")),
-    "q_ann_topk" ->
+        Seq("true AS k_ok", "true AS cos_valid")), gate = true),
+    Query("q_ann_topk", annTopK,
       (cosSql("WHERE vec_id < 10", "WHERE vec_id >= 10") +
         """, ranked AS (
             SELECT qid, cid, cos,
               row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
             FROM scored)
           SELECT qid, CAST(rn AS INT) AS rnk, cid, cos FROM ranked
-          WHERE rn <= 3 ORDER BY qid, rnk"""),
+          WHERE rn <= 3 ORDER BY qid, rnk""")),
     // hard negatives: the q_ann_topk replay with the exact-cosine
     // dup gate applied BEFORE ranking — cos < 0.5 strictly
-    "q_embed_hard_negatives" ->
+    Query("q_embed_hard_negatives", hardNegatives,
       (cosSql("WHERE vec_id < 10", "WHERE vec_id >= 10") +
         """, ranked AS (
             SELECT qid, cid, cos,
               row_number() OVER (PARTITION BY qid ORDER BY cos DESC, cid) AS rn
             FROM scored WHERE cos < 0.5)
           SELECT qid, CAST(rn AS INT) AS rnk, cid, cos FROM ranked
-          WHERE rn <= 3 ORDER BY qid, rnk"""),
-    "q_embed_neardup" ->
+          WHERE rn <= 3 ORDER BY qid, rnk""")),
+    Query("q_embed_neardup", cosineNearDups,
       (cosSql("", "", "WHERE qid < cid") + """
           SELECT qid AS id_a, cid AS id_b, cos FROM scored
-          WHERE qid < cid AND cos >= 0.4 ORDER BY id_a, id_b"""),
-    "q_embed_neardup_blocked" ->
+          WHERE qid < cid AND cos >= 0.4 ORDER BY id_a, id_b""")),
+    Query("q_embed_neardup_blocked", cosineNearDupsBlocked,
       (cosSql("", "", "WHERE qid < cid") + """
           SELECT qid AS id_a, cid AS id_b, cos FROM scored
-          WHERE qid < cid AND cos >= 0.4 ORDER BY id_a, id_b"""),
-    "q_embed_dedup" ->
+          WHERE qid < cid AND cos >= 0.4 ORDER BY id_a, id_b""")),
+    Query("q_embed_dedup", embedDedup,
       (cosSql("", "", "WHERE qid < cid")
         .replaceFirst("WITH ", "WITH RECURSIVE ") + """,
           pairs AS MATERIALIZED (
@@ -858,9 +824,8 @@ object SimilarityQueries {
             coalesce(c2.cluster_id, v.vec_id) AS cluster_id,
             coalesce(c2.cluster_id, v.vec_id) = v.vec_id AS keep
           FROM embeddings v LEFT JOIN comp c2 ON c2.id = v.vec_id
-          ORDER BY v.vec_id"""),
-
-    "q_semdedup" ->
+          ORDER BY v.vec_id""")),
+    Query("q_semdedup", semDedupQ,
       """WITH RECURSIVE
          idx AS (SELECT unnest(range(1, 65)) AS i),
          sd AS (SELECT vec_id AS sid, embedding AS se FROM embeddings
@@ -917,9 +882,8 @@ object SimilarityQueries {
          FROM embeddings v
          JOIN assign a ON a.vec_id = v.vec_id
          LEFT JOIN comp c ON c.id = v.vec_id
-         ORDER BY v.vec_id""",
-
-    "q_semdedup_incremental" ->
+         ORDER BY v.vec_id"""),
+    Query("q_semdedup_incremental", semDedupIncrementalQ,
       """WITH
          corpusv AS (SELECT vec_id, embedding FROM embeddings
                      WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) >= '2'),
@@ -987,9 +951,8 @@ object SimilarityQueries {
          FROM bpv b
          LEFT JOIN wbatch w ON w.bid = b.vec_id
          LEFT JOIN scorpus s ON s.bid = b.vec_id
-         ORDER BY b.vec_id""",
-
-    "q_embed_normalize" ->
+         ORDER BY b.vec_id""", gate = true),
+    Query("q_embed_normalize", embedNormalize,
       """WITH idx AS (SELECT unnest(range(1, 65)) AS i),
          vals AS (
            SELECT vec_id, i AS dim,
@@ -1008,27 +971,34 @@ object SimilarityQueries {
            (CAST(CAST(v.xd AS VARCHAR) AS DOUBLE) - st.mean) / st.std AS z
          FROM vals v JOIN st USING (dim)
          WHERE v.vec_id < 100
-         ORDER BY v.vec_id, v.dim""",
-    "q_embed_pca" -> graft.ops.Pca.oracleSql("embeddings", "embedding"),
+         ORDER BY v.vec_id, v.dim"""),
+    Query("q_embed_pca", embedPca, graft.ops.Pca.oracleSql("embeddings", "embedding")),
     // pure-hash ±1 JL projection: the oracle re-derives the sign
     // matrix from the same md5 draw and replays every exact sum
-    "q_embed_randproj" ->
-      graft.ops.RandomProjection.oracleSql("embeddings", "embedding", "vec_id"),
-    "q_embed_pca_project" ->
-      graft.ops.Pca.projectOracleSql("embeddings", "embedding", "vec_id"),
-    "q_embed_pca_topr" ->
-      graft.ops.Pca.oracleSqlTopR("embeddings", "embedding", 3),
-    "q_embed_pca_topr_project" ->
-      graft.ops.Pca.projectOracleSqlTopR("embeddings", "embedding", "vec_id", 3),
+    Query("q_embed_randproj", (s, dir) =>
+      graft.ops.RandomProjection.project(emb(s, dir), "embedding", "vec_id")
+        .orderBy(col("vec_id")),
+      graft.ops.RandomProjection.oracleSql("embeddings", "embedding", "vec_id")),
+    Query("q_embed_pca_project", embedPcaProject,
+      graft.ops.Pca.projectOracleSql("embeddings", "embedding", "vec_id")),
+    Query("q_embed_pca_topr", embedPcaTopR,
+      graft.ops.Pca.oracleSqlTopR("embeddings", "embedding", 3)),
+    Query("q_embed_pca_topr_project", embedPcaTopRProject,
+      graft.ops.Pca.projectOracleSqlTopR("embeddings", "embedding", "vec_id", 3)),
     // generated unrolled-round oracle (graft.ops.Coreset): every
     // greedy center re-derived independently, exact decimal
-    "q_embed_kcenter" ->
-      graft.ops.Coreset.kCenterOracleSql("embeddings", 8, 64),
-    "q_embed_kcenter_assign" ->
-      graft.ops.Coreset.kCenterAssignOracleSql("embeddings", 8, 64),
-    "q_embed_mmr" ->
-      graft.ops.Coreset.mmrOracleSql("embeddings", 6, 64),
-    "q_embed_dimstats" ->
+    Query("q_embed_kcenter", (s, dir) =>
+      graft.ops.Coreset.kCenterFrom(s, kcenters(s, dir)),
+      graft.ops.Coreset.kCenterOracleSql("embeddings", 8, 64)),
+    Query("q_embed_kcenter_assign", (s, dir) =>
+      graft.ops.Coreset.kCenterAssignFrom(emb(s, dir), "vec_id", "embedding",
+        kcenters(s, dir)),
+      graft.ops.Coreset.kCenterAssignOracleSql("embeddings", 8, 64)),
+    // MMR diversified selection: probe = min-id vector, λ = 1/2
+    Query("q_embed_mmr", (s, dir) =>
+      graft.ops.Coreset.mmrSelect(emb(s, dir), "vec_id", "embedding", 6),
+      graft.ops.Coreset.mmrOracleSql("embeddings", 6, 64)),
+    Query("q_embed_dimstats", embedDimStats,
       """WITH idx AS (SELECT unnest(range(1, 65)) AS i),
          vals AS (
            SELECT i AS dim,
@@ -1041,11 +1011,11 @@ object SimilarityQueries {
            FROM vals GROUP BY dim)
          SELECT CAST(dim AS INT) AS dim, n, sum_x / n AS mean,
            (sum_x2 - sum_x * sum_x / n) / n AS var_pop
-         FROM m ORDER BY dim""",
+         FROM m ORDER BY dim"""),
     // kNN replay: exact cosines for every sampled query against the
     // full corpus (non-self), argmax with the (cos desc, cid) tie, the
     // neighbor's label scored against the query's
-    "q_embed_knn" ->
+    Query("q_embed_knn", embedKnn,
       (cosSql("WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) < '4'", "",
         "WHERE qid <> cid") + """,
          top AS (
@@ -1061,11 +1031,11 @@ object SimilarityQueries {
          FROM top
          JOIN embeddings tq ON tq.vec_id = top.qid
          JOIN embeddings tc ON tc.vec_id = top.cid
-         GROUP BY 1 ORDER BY 1"""),
+         GROUP BY 1 ORDER BY 1""")),
     // Fisher replay: exact (label, dim) decimal moments, the same
     // fixed-order double expressions, hopped DECIMAL(18,9) class terms
     // summed exactly — identical bit path to the engine
-    "q_embed_fisher" ->
+    Query("q_embed_fisher", embedFisher,
       """WITH idx AS (SELECT unnest(range(1, 65)) AS i),
          vals AS (
            SELECT label, i AS dim,
@@ -1099,8 +1069,8 @@ object SimilarityQueries {
            FROM terms GROUP BY dim)
          SELECT CAST(dim AS INT) AS dim, within, between,
            between / within AS fisher
-         FROM agg ORDER BY dim""",
-    "q_embed_stats" ->
+         FROM agg ORDER BY dim"""),
+    Query("q_embed_stats", embedStats,
       """WITH n AS (
            SELECT label, vec_id,
              sum(CAST(CAST(CAST(e AS DOUBLE) AS VARCHAR) AS DECIMAL(12,9)) * CAST(CAST(CAST(e AS DOUBLE) AS VARCHAR) AS DECIMAL(12,9))) AS n2
@@ -1110,6 +1080,6 @@ object SimilarityQueries {
            CAST(CAST(sum(n2) AS VARCHAR) AS DOUBLE) AS energy,
            min(sqrt(CAST(CAST(n2 AS VARCHAR) AS DOUBLE))) AS min_norm,
            max(sqrt(CAST(CAST(n2 AS VARCHAR) AS DOUBLE))) AS max_norm
-         FROM n GROUP BY label ORDER BY label"""
+         FROM n GROUP BY label ORDER BY label""")
   )
 }

@@ -165,7 +165,6 @@ object TextQueries {
   /** Document fingerprint via the custom codegen'd PolyHash64
     * expression; oracled in DuckDB with a list_reduce over bytes. */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
-    PolyHash64.register(s)
     docs(s, dir).select(
         col("doc_id"),
         PolyHash64.polyHash64("text").as("fp"))
@@ -736,7 +735,6 @@ object TextQueries {
     * strip with DuckDB's `strip_accents` — two INDEPENDENT Unicode
     * implementations must land on identical bytes. */
   def normalizeQ(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Normalize.register(s)
     import s.implicits._
     normalizeWords.zipWithIndex.map { case (w, i) => (i.toLong, w) }
       .toDF("id", "word")
@@ -1329,269 +1327,6 @@ object TextQueries {
     bySplit.crossJoin(crossing).orderBy(col("split"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_corpus_overlap" -> (corpusOverlap _),
-    // the persisted-artifact twin: epoch A's sketch built
-    // ASSOCIATIVELY from two independently persisted md5 halves
-    // (merge(sketch(A1), sketch(A2)) = sketch(A) exactly), epoch B's
-    // read back from parquet; the estimate is served from 2k sketch
-    // rows with NO corpus access — and must land on the from-scratch
-    // oracle replay, so both the round-trip and the split are
-    // value-invisible
-    "q_corpus_overlap_persisted" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-sketch-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      val cs = graft.ops.CorpusStats
-      val d = docs(s, dir)
-      val h2 = substring(md5(col("doc_id").cast("string")), 2, 1)
-      val a = d.filter(inEpochA)
-      cs.writeSketch(a.filter(h2 < "8"), "text", 256, s"$base/a1")
-      cs.writeSketch(a.filter(h2 >= "8"), "text", 256, s"$base/a2")
-      cs.writeSketch(d.filter(!inEpochA), "text", 256, s"$base/b")
-      cs.overlapFromSketches(
-        cs.mergeSketches(cs.readSketch(s, s"$base/a1"),
-          cs.readSketch(s, s"$base/a2"), 256),
-        cs.readSketch(s, s"$base/b"), 256)
-    }),
-    "q_corpus_drift" -> (corpusDrift _),
-    // incremental drift: the envelope pins at epoch start, three
-    // md5-seamed ingest batches census independently (additive
-    // partials, batch-id-keyed overwrite ⇒ replay-idempotent — batch 1
-    // is deliberately written twice), and the fold must land on the
-    // ONE-SHOT q_corpus_drift oracle — the batching is value-invisible
-    "q_corpus_drift_incremental" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-drift-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      val cs = graft.ops.CorpusStats
-      val d = docs(s, dir)
-      val env = d.agg(min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx")).head()
-      cs.writeDriftMeta(s, base, env.getLong(0), env.getLong(1), 10)
-      val h2 = substring(md5(col("doc_id").cast("string")), 2, 1)
-      val seams = Seq(h2 < "6", h2 >= "6" && h2 < "b", h2 >= "b")
-      seams.zipWithIndex.foreach { case (pred, i) =>
-        cs.writeDriftPartial(
-          cs.psiCensusPinned(d.filter(pred), col("n_chars"), inEpochA,
-            10, env.getLong(0), env.getLong(1)), base, i.toLong)
-      }
-      // at-least-once replay of batch 1: the overwrite absorbs it
-      cs.writeDriftPartial(
-        cs.psiCensusPinned(d.filter(seams(1)), col("n_chars"), inEpochA,
-          10, env.getLong(0), env.getLong(1)), base, 1L)
-      cs.driftFromPartials(s, base)
-    }),
-    "q_split_leakage" -> (leakageSplit _),
-    // per-doc n-gram novelty of epoch B against epoch A — the
-    // freshness curve an ingest tracks per dump
-    "q_text_novelty" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Dedup.noveltyScores(d.filter(!inEpochA), d.filter(inEpochA),
-          "text", "doc_id", n = 4)
-        .orderBy(col("doc_id"))
-    }),
-    "q_curation_pipeline" -> (curationPipeline _),
-    "q_curation_trained" -> (curationTrained _),
-    "q_text_pii" -> (piiQ _),
-    "q_text_decontam" -> (decontamQ _),
-    "q_text_decontam_incremental" -> (decontamIncrementalQ _),
-    "q_mix_sample" -> (mixtureQ _),
-    "q_sample_stratified" -> (stratifiedSplit _),
-    "q_sample_hash" -> (hashSample _),
-    "q_text_heavy_hitters" -> (heavyHitters _),
-    "q_text_countmin" -> (countMinQ _),
-    "q_dedup_stream_parity" -> (dedupStreamParity _),
-    "q_text_tfidf" -> (tfidfTop _),
-    "q_text_lm_score" -> (lmScoreQ _),
-    "q_text_lm_score_topk" -> (lmScoreTopKQ _),
-    "q_text_curriculum" -> (curriculumQ _),
-    // NPMI collocation board over the bigram census
-    "q_text_collocations" -> ((s, dir) =>
-      graft.ops.LangModel.collocations(docs(s, dir), col("text"),
-        col("doc_id"), minCount = 5, k = 30)),
-    "q_text_normalize" -> (normalizeQ _),
-    // PRF semantic re-rank: BM25 depth-20 candidates re-scored by
-    // exact-decimal cosine to the rank-1 hit's embedding, RRF-fused
-    "q_text_search_semantic" -> ((s, dir) =>
-      graft.ops.Retrieval.searchPrfRerank(docs(s, dir),
-        Tables.t(s, dir, "embeddings"), "text", "doc_id",
-        "vec_id", "embedding", q = 3, k = 5)),
-    "q_text_exact_dedup" -> (exactDedup _),
-    "q_text_bm25" -> (bm25Top _),
-    // conjunctive BM25 retrieval (graft.ops.Retrieval): head-term
-    // standing queries, in-memory / persisted-index / incremental-
-    // append paths — all three must land on the one from-scratch
-    // oracle derivation
-    "q_text_search" -> ((s, dir) =>
-      graft.ops.Retrieval.search(docs(s, dir), "text", "doc_id", q = 3, k = 5)),
-    // disjunctive (OR) semantics — same candidate plan, no match gate
-    "q_text_search_or" -> ((s, dir) =>
-      graft.ops.Retrieval.searchOr(docs(s, dir), "text", "doc_id", q = 3, k = 5)),
-    // phrase semantics over the bigram shingle index — a phrase query
-    // serves as a single-term postings lookup
-    "q_text_search_phrase" -> ((s, dir) =>
-      graft.ops.Retrieval.searchPhrase(docs(s, dir), "text", "doc_id",
-        q = 3, k = 5)),
-    // reciprocal-rank fusion of BM25 with the stopword-density prior
-    "q_text_search_hybrid" -> ((s, dir) =>
-      graft.ops.Retrieval.searchHybridRrf(docs(s, dir), "text", "doc_id",
-        q = 3, k = 5)),
-    // persisted-index builds are pure functions of the documents table:
-    // disk-memoized across processes (StageMemo, r14 / VERDICT r13
-    // task 5 — the epoch contract the artifact itself documents); the
-    // serve path still runs per invocation and the oracle hash gates it
-    "q_text_search_persisted" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-search-index-$slug"
-      graft.io.StageMemo.cachedDir(s, base,
-        graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "search-index-v1")) {
-        graft.ops.Retrieval.writeSearchIndex(docs(s, dir), "text", "doc_id", base)
-      }
-      graft.ops.Retrieval.searchIndexed(s, base, q = 3, k = 5)
-    }),
-    "q_text_search_stream_parity" -> (searchStreamParity _),
-    "q_text_search_incremental" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-search-incr-$slug"
-      graft.io.StageMemo.cachedDir(s, base,
-        graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "search-incr-v1")) {
-        val d = docs(s, dir)
-        val isFirst = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
-        graft.ops.Retrieval.writeSearchIndex(d.filter(isFirst), "text", "doc_id", base, batch = 0)
-        graft.ops.Retrieval.appendSearchIndex(d.filter(!isFirst), "text", "doc_id", base, batch = 1)
-      }
-      graft.ops.Retrieval.searchIndexed(s, base, q = 3, k = 5)
-    }),
-    "q_text_chunks" -> (chunksQ _),
-    "q_text_tokens" -> (tokenStats _),
-    "q_text_vocab" -> (vocabQ _),
-    "q_text_quality" -> (quality _),
-    "q_text_quality_model" ->
-      ((s, dir) => graft.ops.QualityModel.modelFrame(s, docs(s, dir))),
-    "q_text_quality_trained" ->
-      ((s, dir) => graft.ops.QualityModel.scoredFrame(docs(s, dir))),
-    "q_text_bpe_merges" ->
-      ((s, dir) => graft.ops.Bpe.mergesFrame(s, docs(s, dir))),
-    "q_text_bpe_tokens" ->
-      ((s, dir) => graft.ops.Bpe.tokenFrequencies(docs(s, dir))),
-    // persisted-artifact twins: train -> parquet model -> score/encode
-    // from the artifact alone; must land on the SAME oracle rows as
-    // the in-memory paths (the epoch posture, like q_text_lm_persisted)
-    "q_text_quality_persisted" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-qm-model-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      val d = docs(s, dir)
-      graft.ops.QualityModel.writeModel(s, d, base)
-      graft.ops.QualityModel.scoredFrameIndexed(d, base)
-    }),
-    "q_text_bpe_persisted" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-bpe-model-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      val d = docs(s, dir)
-      graft.ops.Bpe.writeBpeModel(s, d, base)
-      graft.ops.Bpe.tokenFrequenciesIndexed(d, base)
-    }),
-    // incremental retrain gates: build on half the corpus, fold the
-    // other half into the persisted census (decimal sums / word
-    // counts are associative), score/encode the FULL corpus from the
-    // artifact — must equal the one-shot oracle rows verbatim
-    "q_text_quality_incremental" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-qm-incr-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      graft.io.Fs.deleteRecursive(s, base + ".staging")
-      val d = docs(s, dir)
-      graft.ops.QualityModel.writeModel(s, d.filter(col("doc_id") % 2 === 0), base)
-      graft.ops.QualityModel.appendModel(d.filter(col("doc_id") % 2 =!= 0), base)
-      graft.ops.QualityModel.scoredFrameIndexed(d, base)
-    }),
-    "q_text_bpe_incremental" -> ((s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-bpe-incr-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      graft.io.Fs.deleteRecursive(s, base + ".staging")
-      val d = docs(s, dir)
-      graft.ops.Bpe.writeBpeModel(s, d.filter(col("doc_id") % 2 === 0), base)
-      graft.ops.Bpe.appendBpeModel(d.filter(col("doc_id") % 2 =!= 0), base)
-      graft.ops.Bpe.tokenFrequenciesIndexed(d, base)
-    }),
-    // tokenizer fertility by language — the diagnostic every
-    // multilingual tokenizer build reports (BPE tokens per word, per
-    // lang); per-doc lengths via the same distinct-word length join
-    // as q_pack_bpe, then one partial-agg by lang
-    "q_text_bpe_fertility" -> ((s, dir) => {
-      import org.apache.spark.sql.functions.{sum => fsum}
-      val d = docs(s, dir)
-      val merges = graft.ops.Bpe.train(d)
-      val bc = s.sparkContext.broadcast(merges)
-      import s.implicits._
-      val wl = graft.ops.Bpe.wordCensus(d).as[(String, Long)]
-        .map { case (w, _) =>
-          (w, graft.ops.Bpe.applyMerges(w, bc.value).length.toLong) }
-        .toDF("word", "n_tok")
-      d.select(col("doc_id"), col("lang"),
-          explode(graft.ops.Text.tokens(col("text"))).as("word"))
-        .where(col("word") =!= "")
-        .join(wl, "word")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_words"),
-          fsum("n_tok").as("n_tokens"),
-          countDistinct(col("doc_id")).as("n_docs"))
-        .select(col("lang"), col("n_words"), col("n_tokens"), col("n_docs"),
-          // integer floor division — exact in both engines
-          expr("(n_tokens * 1000000) div n_words").as("fertility_ppm"))
-        .orderBy(col("lang"))
-    }),
-    "q_text_repetition" -> (repetition _),
-    "q_text_langid" -> (langIdQ _),
-    "q_text_langid_confusion" -> (langIdConfusionQ _),
-    "q_dedup_cluster_sizes" -> (dedupClusterSizesQ _),
-    "q_text_fingerprint" -> (fingerprint _),
-    "q_dedup_minhash" -> (minhashDedup _),
-    "q_dedup_spans" -> (dedupSpans _),
-    "q_dedup_excise" -> (dedupExcise _),
-    "q_dedup_clusters" -> (dedupClusters _),
-    "q_dedup_clusters_stars" -> (dedupClustersStars _),
-    "q_dedup_compaction" -> (dedupCompaction _),
-    "q_corpus_prep" -> (corpusPrep _),
-    "q_dedup_incremental" -> (dedupIncremental _),
-    "q_dedup_exact_incremental" -> (dedupExactIncremental _),
-    "q_dedup_ngram_jaccard" -> (ngramJaccard _),
-    "q_dedup_simhash" -> (simhashQ _),
-    "q_dedup_simhash_pairs" -> (simhashPairs _),
-    "q_dsir_weights" -> (dsirWeights _),
-    "q_dsir_weights_topk" -> (dsirWeightsTopK _),
-    "q_dsir_resample" -> (dsirResample _),
-    "q_dsir_persisted" -> (dsirPersisted _),
-    "q_text_lm_persisted" -> (lmPersisted _),
-    "q_text_lm_stream_parity" -> (lmStreamParity _),
-    "q_text_quality_stream_parity" -> (qualityStreamParity _),
-    "q_text_bpe_stream_parity" -> (bpeStreamParity _),
-    // calibration histogram: score-decile buckets vs weak labels —
-    // the model-eval table a filtering pipeline reports. floor(x*10)
-    // on the IEEE double is identical in both engines.
-    "q_text_quality_calibration" -> ((s, dir) =>
-      graft.ops.QualityModel.scoredFrame(docs(s, dir))
-        .groupBy(floor(col("score") * 10).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("label")).cast("long").as("n_pos"),
-          sum(col("keep").cast("long")).as("n_keep"))
-        .orderBy(col("bucket"))),
-    "q_text_lm_incremental" -> (lmIncremental _),
-    "q_text_span_corrupt" -> (spanCorruptQ _),
-    "q_multimodal_meta" -> (multimodalMeta _),
-    "q_multimodal_decode" -> (multimodalDecode _),
-    "q_multimodal_audio" -> (multimodalAudio _),
-    "q_multimodal_resize" -> (multimodalResize _),
-    "q_multimodal_audio_frames" -> (multimodalAudioFrames _),
-    "q_multimodal_frames" -> (multimodalFrames _),
-    "q_multimodal_phash" -> (multimodalPhash _),
-    "q_multimodal_phash_pairs" -> (multimodalPhashPairs _),
-    "q_multimodal_dedup" -> (multimodalDedup _)
-  )
-
   private val shingleCte =
     """WITH sp AS (
          SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w FROM documents),
@@ -1879,25 +1614,87 @@ object TextQueries {
   /** SQL twin of [[inEpochA]]. */
   private val epochASql = "substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8'"
 
-  val oracleSql: Map[String, String] = Map(
+  val queries: Seq[Query] = Seq(
     // bottom-k sketch + exact-audit replay, same md5 draw both engines
-    "q_corpus_overlap" -> graft.ops.CorpusStats.overlapOracleSql(
-      "documents", "text", 256, epochASql, s"NOT ($epochASql)"),
+    Query("q_corpus_overlap", corpusOverlap,
+      graft.ops.CorpusStats.overlapOracleSql(
+      "documents", "text", 256, epochASql, s"NOT ($epochASql)")),
     // PSI replay: same integer bucketing, smoothed shares, hopped lns
-    "q_corpus_drift" -> graft.ops.CorpusStats.psiOracleSql(
-      "documents", "n_chars", epochASql),
+    Query("q_corpus_drift", corpusDrift,
+      graft.ops.CorpusStats.psiOracleSql(
+      "documents", "n_chars", epochASql)),
+    // incremental drift: the envelope pins at epoch start, three
+    // md5-seamed ingest batches census independently (additive
+    // partials, batch-id-keyed overwrite ⇒ replay-idempotent — batch 1
+    // is deliberately written twice), and the fold must land on the
+    // ONE-SHOT q_corpus_drift oracle — the batching is value-invisible
     // the fold of pinned-envelope batch partials must equal the
     // one-shot PSI — same oracle verbatim
-    "q_corpus_drift_incremental" -> graft.ops.CorpusStats.psiOracleSql(
-      "documents", "n_chars", epochASql),
+    // gate: sketch / census-partial writes dominate; the serve plans
+    // bench as q_corpus_overlap / q_corpus_drift
+    Query("q_corpus_drift_incremental", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-drift-$slug"
+      graft.io.Fs.deleteRecursive(s, base)
+      val cs = graft.ops.CorpusStats
+      val d = docs(s, dir)
+      val env = d.agg(min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx")).head()
+      cs.writeDriftMeta(s, base, env.getLong(0), env.getLong(1), 10)
+      val h2 = substring(md5(col("doc_id").cast("string")), 2, 1)
+      val seams = Seq(h2 < "6", h2 >= "6" && h2 < "b", h2 >= "b")
+      seams.zipWithIndex.foreach { case (pred, i) =>
+        cs.writeDriftPartial(
+          cs.psiCensusPinned(d.filter(pred), col("n_chars"), inEpochA,
+            10, env.getLong(0), env.getLong(1)), base, i.toLong)
+      }
+      // at-least-once replay of batch 1: the overwrite absorbs it
+      cs.writeDriftPartial(
+        cs.psiCensusPinned(d.filter(seams(1)), col("n_chars"), inEpochA,
+          10, env.getLong(0), env.getLong(1)), base, 1L)
+      cs.driftFromPartials(s, base)
+    },
+      graft.ops.CorpusStats.psiOracleSql(
+      "documents", "n_chars", epochASql), gate = true),
+    // the persisted-artifact twin: epoch A's sketch built
+    // ASSOCIATIVELY from two independently persisted md5 halves
+    // (merge(sketch(A1), sketch(A2)) = sketch(A) exactly), epoch B's
+    // read back from parquet; the estimate is served from 2k sketch
+    // rows with NO corpus access — and must land on the from-scratch
+    // oracle replay, so both the round-trip and the split are
+    // value-invisible
     // sketch-only replay: the persisted/merged build must reproduce
     // the from-scratch bottom-k row
-    "q_corpus_overlap_persisted" -> graft.ops.CorpusStats.overlapSketchOracleSql(
-      "documents", "text", 256, epochASql, s"NOT ($epochASql)"),
+    // gate: sketch / census-partial writes dominate; the serve plans
+    // bench as q_corpus_overlap / q_corpus_drift
+    Query("q_corpus_overlap_persisted", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-sketch-$slug"
+      graft.io.Fs.deleteRecursive(s, base)
+      val cs = graft.ops.CorpusStats
+      val d = docs(s, dir)
+      val h2 = substring(md5(col("doc_id").cast("string")), 2, 1)
+      val a = d.filter(inEpochA)
+      cs.writeSketch(a.filter(h2 < "8"), "text", 256, s"$base/a1")
+      cs.writeSketch(a.filter(h2 >= "8"), "text", 256, s"$base/a2")
+      cs.writeSketch(d.filter(!inEpochA), "text", 256, s"$base/b")
+      cs.overlapFromSketches(
+        cs.mergeSketches(cs.readSketch(s, s"$base/a1"),
+          cs.readSketch(s, s"$base/a2"), 256),
+        cs.readSketch(s, s"$base/b"), 256)
+    },
+      graft.ops.CorpusStats.overlapSketchOracleSql(
+      "documents", "text", 256, epochASql, s"NOT ($epochASql)"), gate = true),
+    // per-doc n-gram novelty of epoch B against epoch A — the
+    // freshness curve an ingest tracks per dump
     // novelty replay: the decontam string-shingle machinery, counting
     // the reference-absent side per candidate (engine hashes vs oracle
     // strings — the documented ~1.5e-8/pair collision contract)
-    "q_text_novelty" ->
+    Query("q_text_novelty", (s, dir) => {
+      val d = docs(s, dir)
+      Dedup.noveltyScores(d.filter(!inEpochA), d.filter(inEpochA),
+          "text", "doc_id", n = 4)
+        .orderBy(col("doc_id"))
+    },
       s"""WITH tok AS (
            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS w
            FROM documents),
@@ -1919,10 +1716,10 @@ object TextQueries {
            END AS novelty
          FROM documents d LEFT JOIN ov USING (doc_id)
          WHERE NOT ($epochASql)
-         ORDER BY d.doc_id""",
+         ORDER BY d.doc_id"""),
     // leakage-safe split: the q_dedup_clusters recursive-CTE component
     // walk, splits assigned from md5(cluster_id), crossing-pair audit
-    "q_split_leakage" ->
+    Query("q_split_leakage", leakageSplit,
       (shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
          pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM jacs WHERE jaccard >= 0.8),
          edges AS MATERIALIZED (
@@ -1954,19 +1751,19 @@ object TextQueries {
            JOIN labeled a ON a.doc_id = p.doc_a
            JOIN labeled b ON b.doc_id = p.doc_b)
          SELECT split, n_docs, n_clusters, crossing_pairs
-         FROM bysplit CROSS JOIN crossing ORDER BY split"""),
+         FROM bysplit CROSS JOIN crossing ORDER BY split""")),
     // invariant gates: every boolean is a deterministic full-corpus
     // check computed in Spark (see the query scaladocs); the oracle
     // pins the universe of doc_ids and demands every check hold
-    "q_dedup_simhash" ->
-      "SELECT doc_id, true AS sig_ok FROM documents ORDER BY doc_id",
-    "q_dedup_simhash_pairs" ->
-      "SELECT doc_id, true AS pairs_ok FROM documents ORDER BY doc_id",
-    "q_dedup_stream_parity" ->
+    Query("q_dedup_simhash", simhashQ,
+      "SELECT doc_id, true AS sig_ok FROM documents ORDER BY doc_id"),
+    Query("q_dedup_simhash_pairs", simhashPairs,
+      "SELECT doc_id, true AS pairs_ok FROM documents ORDER BY doc_id"),
+    Query("q_dedup_stream_parity", dedupStreamParity,
       """SELECT doc_id, true AS stream_match FROM documents
          WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) >= '8'
-         ORDER BY doc_id""",
-    "q_text_heavy_hitters" ->
+         ORDER BY doc_id""", gate = true),
+    Query("q_text_heavy_hitters", heavyHitters,
       """WITH toks AS (
            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
            FROM documents),
@@ -1975,8 +1772,8 @@ object TextQueries {
          SELECT term, cnt, true AS in_sketch, true AS est_ok
          FROM tc CROSS JOIN n
          WHERE CAST(cnt AS DOUBLE) > CAST(n AS DOUBLE) / 40
-         ORDER BY cnt DESC, term""",
-    "q_text_countmin" ->
+         ORDER BY cnt DESC, term"""),
+    Query("q_text_countmin", countMinQ,
       """WITH toks AS (
            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
            FROM documents),
@@ -1985,8 +1782,8 @@ object TextQueries {
          SELECT term, cnt, true AS cm_ok
          FROM tc CROSS JOIN n
          WHERE CAST(cnt AS DOUBLE) > CAST(n AS DOUBLE) / 40
-         ORDER BY cnt DESC, term""",
-    "q_sample_stratified" ->
+         ORDER BY cnt DESC, term"""),
+    Query("q_sample_stratified", stratifiedSplit,
       """WITH s AS (
            SELECT lang, n_chars,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cd' THEN 'train'
@@ -1995,12 +1792,12 @@ object TextQueries {
            FROM documents)
          SELECT lang, split, count(1) AS n_docs,
            CAST(sum(n_chars) AS BIGINT) AS n_chars
-         FROM s GROUP BY lang, split ORDER BY lang, split""",
-    "q_sample_hash" ->
+         FROM s GROUP BY lang, split ORDER BY lang, split"""),
+    Query("q_sample_hash", hashSample,
       """SELECT doc_id, lang, n_chars FROM documents
          WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < '1a'
-         ORDER BY doc_id""",
-    "q_text_pii" ->
+         ORDER BY doc_id"""),
+    Query("q_text_pii", piiQ,
       """WITH dec AS (
            SELECT doc_id, text ||
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8'
@@ -2042,12 +1839,12 @@ object TextQueries {
            + len(regexp_extract_all(redacted, '\b\d{3}[-.]\d{3}[-.]\d{4}\b'))
            + len(regexp_extract_all(redacted,
              '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) = 0 AS pii_clean
-         FROM red ORDER BY doc_id""",
-    "q_text_decontam" -> decontamSql,
+         FROM red ORDER BY doc_id"""),
+    Query("q_text_decontam", decontamQ, decontamSql),
     // the incremental gate is DEFINED as bit-equal to the one-shot
     // decontamination (two indexed halves, unioned) — same oracle
-    "q_text_decontam_incremental" -> decontamSql,
-    "q_curation_pipeline" ->
+    Query("q_text_decontam_incremental", decontamIncrementalQ, decontamSql, gate = true),
+    Query("q_curation_pipeline", curationPipeline,
       """WITH dec AS (
            SELECT doc_id, lang, text ||
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < '8'
@@ -2121,8 +1918,8 @@ object TextQueries {
            CAST(sum(n_words) AS BIGINT) AS n_tokens,
            count(1) FILTER (regexp_matches(text, '<(EMAIL|SSN|PHONE|IPV4)>'))
              AS n_redacted
-         FROM kept GROUP BY lang ORDER BY lang""",
-    "q_mix_sample" ->
+         FROM kept GROUP BY lang ORDER BY lang"""),
+    Query("q_mix_sample", mixtureQ,
       """WITH c AS (SELECT lang, count(1) AS cnt FROM documents GROUP BY 1),
          tot AS (SELECT count(1) AS n FROM documents),
          th AS (
@@ -2145,8 +1942,8 @@ object TextQueries {
            SELECT lang, count(1) AS n_kept,
              CAST(sum(n_chars) AS BIGINT) AS chars_kept
            FROM kept GROUP BY 1) a USING (lang)
-         ORDER BY k.lang""",
-    "q_text_tfidf" ->
+         ORDER BY k.lang"""),
+    Query("q_text_tfidf", tfidfTop,
       """WITH toks AS (
            SELECT doc_id, unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
            FROM documents),
@@ -2164,12 +1961,12 @@ object TextQueries {
            FROM scored)
          SELECT doc_id, CAST(rnk AS INT) AS rnk, term, tf,
            CAST(CAST(score_d AS VARCHAR) AS DOUBLE) AS score
-         FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""",
-    "q_text_exact_dedup" ->
+         FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk"""),
+    Query("q_text_exact_dedup", exactDedup,
       """SELECT sha256(lower(trim(text))) AS text_hash, min(doc_id) AS keep_id,
            count(1) AS n_copies
-         FROM documents GROUP BY 1 ORDER BY 1""",
-    "q_text_bm25" ->
+         FROM documents GROUP BY 1 ORDER BY 1"""),
+    Query("q_text_bm25", bm25Top,
       """WITH toks AS (
            SELECT doc_id,
              unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS term
@@ -2199,16 +1996,19 @@ object TextQueries {
            FROM scored)
          SELECT doc_id, CAST(rnk AS INT) AS rnk, term, tf,
            CAST(CAST(score_d AS VARCHAR) AS DOUBLE) AS score
-         FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk""",
+         FROM ranked WHERE rnk <= 3 ORDER BY doc_id, rnk"""),
     // full bigram-LM replay: same census, same context totals, same
     // add-1/2 smoothing, rule-5b VARCHAR-hopped DECIMAL(18,9) costs,
     // exact decimal sums; only the final mean returns to double
-    "q_text_lm_score" -> lmScoreSql,
-    "q_text_curriculum" -> curriculumSql,
-    "q_text_normalize" -> normalizeSql,
+    Query("q_text_lm_score", lmScoreQ, lmScoreSql),
+    Query("q_text_curriculum", curriculumQ, curriculumSql),
+    Query("q_text_normalize", normalizeQ, normalizeSql),
+    // NPMI collocation board over the bigram census
     // NPMI replay: same census, same marginals, both lns VARCHAR-
     // hopped to DECIMAL(18,9), ratio of the hopped doubles
-    "q_text_collocations" ->
+    Query("q_text_collocations", (s, dir) =>
+      graft.ops.LangModel.collocations(docs(s, dir), col("text"),
+        col("doc_id"), minCount = 5, k = 30),
       """WITH toks AS (
            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
            FROM documents),
@@ -2238,35 +2038,99 @@ object TextQueries {
          SELECT bigram, c12,
            CAST(CAST(pmi_d AS VARCHAR) AS DOUBLE) /
              CAST(CAST(den_d AS VARCHAR) AS DOUBLE) AS npmi
-         FROM sc ORDER BY npmi DESC, bigram ASC LIMIT 30""",
+         FROM sc ORDER BY npmi DESC, bigram ASC LIMIT 30"""),
+    // conjunctive BM25 retrieval (graft.ops.Retrieval): head-term
+    // standing queries, in-memory / persisted-index / incremental-
+    // append paths — all three must land on the one from-scratch
+    // oracle derivation
     // one from-scratch BM25-retrieval replay for all three engine
     // paths: in-memory, artifact round-trip, half+append — the
     // persisted index must be value-invisible
-    "q_text_search" -> graft.ops.Retrieval.searchOracleSql("documents", 3, 5),
-    "q_text_search_or" -> graft.ops.Retrieval.searchOrOracleSql("documents", 3, 5),
-    "q_text_search_phrase" -> graft.ops.Retrieval.phraseOracleSql("documents", 3, 5),
-    "q_text_search_hybrid" -> graft.ops.Retrieval.hybridOracleSql("documents", 3, 5),
-    "q_text_search_semantic" ->
-      graft.ops.Retrieval.prfOracleSql("documents", "embeddings", 3, 5),
-    "q_text_search_persisted" -> graft.ops.Retrieval.searchOracleSql("documents", 3, 5),
-    "q_text_search_incremental" -> graft.ops.Retrieval.searchOracleSql("documents", 3, 5),
-    "q_text_search_stream_parity" -> graft.ops.Retrieval.searchOracleSql("documents", 3, 5),
+    Query("q_text_search", (s, dir) =>
+      graft.ops.Retrieval.search(docs(s, dir), "text", "doc_id", q = 3, k = 5),
+      graft.ops.Retrieval.searchOracleSql("documents", 3, 5)),
+    // disjunctive (OR) semantics — same candidate plan, no match gate
+    Query("q_text_search_or", (s, dir) =>
+      graft.ops.Retrieval.searchOr(docs(s, dir), "text", "doc_id", q = 3, k = 5),
+      graft.ops.Retrieval.searchOrOracleSql("documents", 3, 5)),
+    // phrase semantics over the bigram shingle index — a phrase query
+    // serves as a single-term postings lookup
+    Query("q_text_search_phrase", (s, dir) =>
+      graft.ops.Retrieval.searchPhrase(docs(s, dir), "text", "doc_id",
+        q = 3, k = 5),
+      graft.ops.Retrieval.phraseOracleSql("documents", 3, 5)),
+    // reciprocal-rank fusion of BM25 with the stopword-density prior
+    Query("q_text_search_hybrid", (s, dir) =>
+      graft.ops.Retrieval.searchHybridRrf(docs(s, dir), "text", "doc_id",
+        q = 3, k = 5),
+      graft.ops.Retrieval.hybridOracleSql("documents", 3, 5)),
+    // PRF semantic re-rank: BM25 depth-20 candidates re-scored by
+    // exact-decimal cosine to the rank-1 hit's embedding, RRF-fused
+    Query("q_text_search_semantic", (s, dir) =>
+      graft.ops.Retrieval.searchPrfRerank(docs(s, dir),
+        Tables.t(s, dir, "embeddings"), "text", "doc_id",
+        "vec_id", "embedding", q = 3, k = 5),
+      graft.ops.Retrieval.prfOracleSql("documents", "embeddings", 3, 5)),
+    // persisted-index builds are pure functions of the documents table:
+    // disk-memoized across processes (StageMemo, r14 / VERDICT r13
+    // task 5 — the epoch contract the artifact itself documents); the
+    // serve path still runs per invocation and the oracle hash gates it
+    // gate: inverted-index builds dominate; the serve path benches as
+    // q_text_search
+    Query("q_text_search_persisted", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-search-index-$slug"
+      graft.io.StageMemo.cachedDir(s, base,
+        graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "search-index-v1")) {
+        graft.ops.Retrieval.writeSearchIndex(docs(s, dir), "text", "doc_id", base)
+      }
+      graft.ops.Retrieval.searchIndexed(s, base, q = 3, k = 5)
+    },
+      graft.ops.Retrieval.searchOracleSql("documents", 3, 5), gate = true),
+    // gate: inverted-index builds dominate; the serve path benches as
+    // q_text_search
+    Query("q_text_search_incremental", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-search-incr-$slug"
+      graft.io.StageMemo.cachedDir(s, base,
+        graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "search-incr-v1")) {
+        val d = docs(s, dir)
+        val isFirst = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
+        graft.ops.Retrieval.writeSearchIndex(d.filter(isFirst), "text", "doc_id", base, batch = 0)
+        graft.ops.Retrieval.appendSearchIndex(d.filter(!isFirst), "text", "doc_id", base, batch = 1)
+      }
+      graft.ops.Retrieval.searchIndexed(s, base, q = 3, k = 5)
+    },
+      graft.ops.Retrieval.searchOracleSql("documents", 3, 5), gate = true),
+    Query("q_text_search_stream_parity", searchStreamParity,
+      graft.ops.Retrieval.searchOracleSql("documents", 3, 5), gate = true),
     // the persisted-index and streamed paths must land on the SAME
     // rows: the model round-trips through parquet and the stream's
     // batching leaves no trace
-    "q_text_lm_persisted" -> lmScoreSql,
-    "q_text_lm_stream_parity" -> lmScoreSql,
-    "q_text_quality_stream_parity" ->
-      graft.ops.QualityModel.scoredOracleSql("documents"),
-    "q_text_quality_calibration" ->
+    // gate: epoch model builds + staged index-tree writes dominate; the
+    // scoring kernel benches as q_text_lm_score / q_dsir_weights
+    Query("q_text_lm_persisted", lmPersisted, lmScoreSql, gate = true),
+    Query("q_text_lm_stream_parity", lmStreamParity, lmScoreSql, gate = true),
+    Query("q_text_quality_stream_parity", qualityStreamParity,
+      graft.ops.QualityModel.scoredOracleSql("documents"), gate = true),
+    // calibration histogram: score-decile buckets vs weak labels —
+    // the model-eval table a filtering pipeline reports. floor(x*10)
+    // on the IEEE double is identical in both engines.
+    Query("q_text_quality_calibration", (s, dir) =>
+      graft.ops.QualityModel.scoredFrame(docs(s, dir))
+        .groupBy(floor(col("score") * 10).cast("long").as("bucket"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("label")).cast("long").as("n_pos"),
+          sum(col("keep").cast("long")).as("n_keep"))
+        .orderBy(col("bucket")),
       (s"""SELECT CAST(floor(score * 10) AS BIGINT) AS bucket,
              CAST(count(1) AS BIGINT) AS n,
              CAST(sum(label) AS BIGINT) AS n_pos,
              CAST(sum(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
            FROM (${graft.ops.QualityModel.scoredOracleSql("documents")})
-           GROUP BY 1 ORDER BY 1"""),
+           GROUP BY 1 ORDER BY 1""")),
     // trained keep set composed with the md5 mixture replay
-    "q_curation_trained" ->
+    Query("q_curation_trained", curationTrained,
       (graft.ops.QualityModel.keepOraclePrefix("documents") + """,
          base AS MATERIALIZED (
            SELECT d.doc_id, d.lang, d.n_chars
@@ -2293,9 +2157,11 @@ object TextQueries {
          SELECT lang, count(1) AS n_kept,
            CAST(sum(n_chars) AS BIGINT) AS chars_kept
          FROM keptd GROUP BY 1) a USING (lang)
-       ORDER BY k.lang"""),
-    "q_text_lm_incremental" -> lmScoreSql,
-    "q_text_span_corrupt" ->
+       ORDER BY k.lang""")),
+    // gate: epoch model builds + staged index-tree writes dominate; the
+    // scoring kernel benches as q_text_lm_score / q_dsir_weights
+    Query("q_text_lm_incremental", lmIncremental, lmScoreSql, gate = true),
+    Query("q_text_span_corrupt", spanCorruptQ,
       """WITH sp AS (
            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w
            FROM documents),
@@ -2334,16 +2200,18 @@ object TextQueries {
                     THEN '<extra_id_' || k || '> ' || tok ELSE tok END,
                ' ' ORDER BY p)
              FILTER (WHERE masked), '') AS target
-         FROM sent GROUP BY doc_id ORDER BY doc_id""",
-    "q_dsir_persisted" ->
+         FROM sent GROUP BY doc_id ORDER BY doc_id"""),
+    // gate: epoch model builds + staged index-tree writes dominate; the
+    // scoring kernel benches as q_text_lm_score / q_dsir_weights
+    Query("q_dsir_persisted", dsirPersisted,
       (dsirCte(topKCase = false) + """
          SELECT doc_id, is_target, n_bigrams, w_sum, w_avg
-         FROM wsums ORDER BY doc_id"""),
+         FROM wsums ORDER BY doc_id"""), gate = true),
     // top-K-pruned LM replay: same census, but only the top-256
     // bigrams (count desc, bigram asc — the engine's deterministic
     // cut) keep their count; the rest score as UNK (c12 treated as 0)
     // against EXACT context totals — bit-identical to lmScoresTopK
-    "q_text_lm_score_topk" ->
+    Query("q_text_lm_score_topk", lmScoreTopKQ,
       """WITH toks AS (
            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
            FROM documents),
@@ -2372,8 +2240,8 @@ object TextQueries {
            CAST(CAST(sum(cost_d) AS VARCHAR) AS DOUBLE) AS sum_cost,
            CAST(CAST(sum(cost_d) AS VARCHAR) AS DOUBLE) / count(1) AS avg_cost
          FROM pairs JOIN model USING (bigram)
-         GROUP BY doc_id ORDER BY doc_id""",
-    "q_text_chunks" ->
+         GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_text_chunks", chunksQ,
       """WITH words AS (
            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w
            FROM documents),
@@ -2387,15 +2255,15 @@ object TextQueries {
          SELECT doc_id, CAST(chunk_idx AS INT) AS chunk_idx,
            array_to_string(w[chunk_idx*48 + 1 : LEAST(chunk_idx*48 + 64, n)], ' ') AS chunk_text,
            CAST(LEAST(n - chunk_idx*48, 64) AS INT) AS n_tokens
-         FROM chunked ORDER BY doc_id, chunk_idx""",
-    "q_text_tokens" ->
+         FROM chunked ORDER BY doc_id, chunk_idx"""),
+    Query("q_text_tokens", tokenStats,
       """SELECT doc_id,
            CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT) AS n_ws,
            CAST(len(regexp_extract_all(text, '[A-Za-z]+')) AS INT) AS n_alpha,
            CAST(len(regexp_extract_all(text, '[0-9]+')) AS INT) AS n_digit,
            CAST(len(regexp_extract_all(text, '[.,;:!?]')) AS INT) AS n_punct
-         FROM documents ORDER BY doc_id""",
-    "q_text_vocab" ->
+         FROM documents ORDER BY doc_id"""),
+    Query("q_text_vocab", vocabQ,
       """WITH t AS (
            SELECT unnest(regexp_split_to_array(lower(trim(text)), '\s+')) AS tok
            FROM documents),
@@ -2406,33 +2274,98 @@ object TextQueries {
                AS token_id
            FROM c)
          SELECT tok, cnt, token_id FROM r
-         WHERE token_id < 256 ORDER BY token_id""",
+         WHERE token_id < 256 ORDER BY token_id"""),
     // generated unrolled-GD oracles (graft.ops.QualityModel) — the
     // same constants/loop emit SQL and run the driver iteration
-    "q_text_quality_model" ->
-      graft.ops.QualityModel.modelOracleSql("documents"),
-    "q_text_quality_trained" ->
-      graft.ops.QualityModel.scoredOracleSql("documents"),
+    Query("q_text_quality_model", (s, dir) => graft.ops.QualityModel.modelFrame(s, docs(s, dir)),
+      graft.ops.QualityModel.modelOracleSql("documents")),
+    Query("q_text_quality_trained", (s, dir) => graft.ops.QualityModel.scoredFrame(docs(s, dir)),
+      graft.ops.QualityModel.scoredOracleSql("documents")),
     // generated unrolled-merge oracles (graft.ops.Bpe) — the same
     // constants emit K CTE rounds that re-derive the merges
-    "q_text_bpe_merges" ->
-      graft.ops.Bpe.mergesOracleSql("documents"),
-    "q_text_bpe_tokens" ->
-      graft.ops.Bpe.tokensOracleSql("documents"),
+    Query("q_text_bpe_merges", (s, dir) => graft.ops.Bpe.mergesFrame(s, docs(s, dir)),
+      graft.ops.Bpe.mergesOracleSql("documents")),
+    Query("q_text_bpe_tokens", (s, dir) => graft.ops.Bpe.tokenFrequencies(docs(s, dir)),
+      graft.ops.Bpe.tokensOracleSql("documents")),
+    // persisted-artifact twins: train -> parquet model -> score/encode
+    // from the artifact alone; must land on the SAME oracle rows as
+    // the in-memory paths (the epoch posture, like q_text_lm_persisted)
     // the persisted twins reuse the in-memory oracles VERBATIM — the
     // artifact round-trip must be value-invisible
-    "q_text_quality_persisted" ->
-      graft.ops.QualityModel.scoredOracleSql("documents"),
-    "q_text_bpe_persisted" ->
-      graft.ops.Bpe.tokensOracleSql("documents"),
+    Query("q_text_quality_persisted", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-qm-model-$slug"
+      graft.io.Fs.deleteRecursive(s, base)
+      val d = docs(s, dir)
+      graft.ops.QualityModel.writeModel(s, d, base)
+      graft.ops.QualityModel.scoredFrameIndexed(d, base)
+    },
+      graft.ops.QualityModel.scoredOracleSql("documents")),
+    Query("q_text_bpe_persisted", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-bpe-model-$slug"
+      graft.io.Fs.deleteRecursive(s, base)
+      val d = docs(s, dir)
+      graft.ops.Bpe.writeBpeModel(s, d, base)
+      graft.ops.Bpe.tokenFrequenciesIndexed(d, base)
+    },
+      graft.ops.Bpe.tokensOracleSql("documents")),
+    // incremental retrain gates: build on half the corpus, fold the
+    // other half into the persisted census (decimal sums / word
+    // counts are associative), score/encode the FULL corpus from the
+    // artifact — must equal the one-shot oracle rows verbatim
     // the incremental twins must land on the one-shot oracles exactly
-    "q_text_quality_incremental" ->
-      graft.ops.QualityModel.scoredOracleSql("documents"),
-    "q_text_bpe_incremental" ->
-      graft.ops.Bpe.tokensOracleSql("documents"),
-    "q_text_bpe_stream_parity" ->
-      graft.ops.Bpe.tokensOracleSql("documents"),
-    "q_text_bpe_fertility" ->
+    Query("q_text_quality_incremental", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-qm-incr-$slug"
+      graft.io.Fs.deleteRecursive(s, base)
+      graft.io.Fs.deleteRecursive(s, base + ".staging")
+      val d = docs(s, dir)
+      graft.ops.QualityModel.writeModel(s, d.filter(col("doc_id") % 2 === 0), base)
+      graft.ops.QualityModel.appendModel(d.filter(col("doc_id") % 2 =!= 0), base)
+      graft.ops.QualityModel.scoredFrameIndexed(d, base)
+    },
+      graft.ops.QualityModel.scoredOracleSql("documents")),
+    Query("q_text_bpe_incremental", (s, dir) => {
+      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
+      val base = s"target/tmp-bpe-incr-$slug"
+      graft.io.Fs.deleteRecursive(s, base)
+      graft.io.Fs.deleteRecursive(s, base + ".staging")
+      val d = docs(s, dir)
+      graft.ops.Bpe.writeBpeModel(s, d.filter(col("doc_id") % 2 === 0), base)
+      graft.ops.Bpe.appendBpeModel(d.filter(col("doc_id") % 2 =!= 0), base)
+      graft.ops.Bpe.tokenFrequenciesIndexed(d, base)
+    },
+      graft.ops.Bpe.tokensOracleSql("documents")),
+    Query("q_text_bpe_stream_parity", bpeStreamParity,
+      graft.ops.Bpe.tokensOracleSql("documents"), gate = true),
+    // tokenizer fertility by language — the diagnostic every
+    // multilingual tokenizer build reports (BPE tokens per word, per
+    // lang); per-doc lengths via the same distinct-word length join
+    // as q_pack_bpe, then one partial-agg by lang
+    Query("q_text_bpe_fertility", (s, dir) => {
+      import org.apache.spark.sql.functions.{sum => fsum}
+      val d = docs(s, dir)
+      val merges = graft.ops.Bpe.train(d)
+      val bc = s.sparkContext.broadcast(merges)
+      import s.implicits._
+      val wl = graft.ops.Bpe.wordCensus(d).as[(String, Long)]
+        .map { case (w, _) =>
+          (w, graft.ops.Bpe.applyMerges(w, bc.value).length.toLong) }
+        .toDF("word", "n_tok")
+      d.select(col("doc_id"), col("lang"),
+          explode(graft.ops.Text.tokens(col("text"))).as("word"))
+        .where(col("word") =!= "")
+        .join(wl, "word")
+        .groupBy("lang")
+        .agg(count(lit(1)).as("n_words"),
+          fsum("n_tok").as("n_tokens"),
+          countDistinct(col("doc_id")).as("n_docs"))
+        .select(col("lang"), col("n_words"), col("n_tokens"), col("n_docs"),
+          // integer floor division — exact in both engines
+          expr("(n_tokens * 1000000) div n_words").as("fertility_ppm"))
+        .orderBy(col("lang"))
+    },
       (graft.ops.Bpe.docLensOraclePrefix("documents") +
         s""",
          fw AS (
@@ -2447,8 +2380,8 @@ object TextQueries {
            CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
            CAST(sum(n_tok) AS BIGINT) * 1000000 // CAST(count(1) AS BIGINT)
              AS fertility_ppm
-         FROM fw GROUP BY lang ORDER BY lang"""),
-    "q_text_quality" ->
+         FROM fw GROUP BY lang ORDER BY lang""")),
+    Query("q_text_quality", quality,
       """WITH m AS (
            SELECT doc_id,
              CAST(length(text) AS INT) AS n_chars,
@@ -2464,8 +2397,8 @@ object TextQueries {
            CASE WHEN n_words >= 5 AND n_words <= 10000
                      AND CAST(n_stop AS DOUBLE) / CAST(n_words AS DOUBLE) >= 0.01
                 THEN 'ok' ELSE 'low' END AS quality
-         FROM m ORDER BY doc_id""",
-    "q_text_langid" ->
+         FROM m ORDER BY doc_id"""),
+    Query("q_text_langid", langIdQ,
       """WITH s AS (
            SELECT doc_id, lang,
              CAST(len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|von|daten|tabelle)\b')) AS INT) AS s_de,
@@ -2478,9 +2411,9 @@ object TextQueries {
                 WHEN s_en = greatest(s_de, s_en, s_es, s_fr) THEN 'en'
                 WHEN s_es = greatest(s_de, s_en, s_es, s_fr) THEN 'es'
                 ELSE 'fr' END AS lang_guess
-         FROM s ORDER BY doc_id""",
+         FROM s ORDER BY doc_id"""),
     // the same marker-score replay, folded to (true, predicted) cells
-    "q_text_langid_confusion" ->
+    Query("q_text_langid_confusion", langIdConfusionQ,
       """WITH s AS (
            SELECT lang,
              CAST(len(regexp_extract_all(lower(text), '\b(der|die|das|und|ist|von|daten|tabelle)\b')) AS INT) AS s_de,
@@ -2496,9 +2429,9 @@ object TextQueries {
                   ELSE 'fr' END AS pred_lang
            FROM s)
          SELECT true_lang, pred_lang, count(1) AS n
-         FROM p GROUP BY 1, 2 ORDER BY 1, 2""",
+         FROM p GROUP BY 1, 2 ORDER BY 1, 2"""),
     // the q_dedup_clusters component walk folded to a size histogram
-    "q_dedup_cluster_sizes" ->
+    Query("q_dedup_cluster_sizes", dedupClusterSizesQ,
       (shingleCte.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
          pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM jacs WHERE jaccard >= 0.8),
          edges AS MATERIALIZED (
@@ -2516,8 +2449,8 @@ object TextQueries {
          csz AS (
            SELECT cluster_id, count(1) AS sz FROM assigned GROUP BY 1)
          SELECT sz, count(1) AS n_clusters FROM csz
-         GROUP BY 1 ORDER BY 1"""),
-    "q_text_fingerprint" ->
+         GROUP BY 1 ORDER BY 1""")),
+    Query("q_text_fingerprint", fingerprint,
       """SELECT doc_id,
            CAST(CASE WHEN h >= 9223372036854775808 THEN h - 18446744073709551616 ELSE h END AS BIGINT) AS fp
          FROM (
@@ -2527,17 +2460,17 @@ object TextQueries {
                             [CAST(ascii(c) AS HUGEINT) for c in regexp_extract_all(text, '.')]),
                (acc, x) -> (acc * 31 + x) % CAST(18446744073709551616 AS HUGEINT)) AS h
            FROM documents)
-         ORDER BY doc_id""",
-    "q_dedup_minhash" ->
+         ORDER BY doc_id"""),
+    Query("q_dedup_minhash", minhashDedup,
       (shingleCte + """
          SELECT doc_a, doc_b, jaccard FROM jacs
-         WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b"""),
-    "q_dedup_spans" ->
+         WHERE jaccard >= 0.8 ORDER BY doc_a, doc_b""")),
+    Query("q_dedup_spans", dedupSpans,
       (spanCte + """
          SELECT doc_a, doc_b, span_tokens, start_a,
            CAST(start_b AS BIGINT) AS start_b
-         FROM best WHERE rn = 1 ORDER BY doc_a, doc_b"""),
-    "q_dedup_excise" ->
+         FROM best WHERE rn = 1 ORDER BY doc_a, doc_b""")),
+    Query("q_dedup_excise", dedupExcise,
       (spanCte + """,
          cuts AS (
            SELECT doc_b AS doc_id, span_tokens, start_b, doc_a,
@@ -2550,8 +2483,8 @@ object TextQueries {
              coalesce(w[CAST(c.start_b + c.span_tokens + 1 AS INT):len(w)],
                [])), ' '), '') AS excised_text
          FROM cuts c JOIN sp ON sp.doc_id = c.doc_id
-         WHERE c.crn = 1 ORDER BY c.doc_id"""),
-    "q_corpus_prep" ->
+         WHERE c.crn = 1 ORDER BY c.doc_id""")),
+    Query("q_corpus_prep", corpusPrep,
       """WITH RECURSIVE m AS (
            SELECT doc_id, lang, text,
              CAST(len(regexp_split_to_array(lower(trim(text)), '\s+')) AS INT) AS n_words,
@@ -2594,10 +2527,10 @@ object TextQueries {
          SELECT lang, count(1) AS n_docs,
            CAST(sum(n_words) AS BIGINT) AS n_tokens,
            CAST(sum(length(text)) AS BIGINT) AS n_chars
-         FROM kept GROUP BY lang ORDER BY lang""",
-    "q_dedup_clusters" -> clustersSql,
-    "q_dedup_clusters_stars" -> clustersSql,
-    "q_dedup_compaction" ->
+         FROM kept GROUP BY lang ORDER BY lang"""),
+    Query("q_dedup_clusters", dedupClusters, clustersSql),
+    Query("q_dedup_clusters_stars", dedupClustersStars, clustersSql),
+    Query("q_dedup_compaction", dedupCompaction,
       """WITH probe AS (
            SELECT doc_id + 10000 AS doc_id, lower(trim(text)) AS t
            FROM documents WHERE doc_id < 50),
@@ -2613,17 +2546,17 @@ object TextQueries {
          FROM probe p
          JOIN firsts f ON f.t = p.t
          LEFT JOIN corpus c ON c.t = p.t
-         ORDER BY p.doc_id""",
-    "q_dedup_ngram_jaccard" ->
+         ORDER BY p.doc_id""", gate = true),
+    Query("q_dedup_ngram_jaccard", ngramJaccard,
       (shingleCte + """
          SELECT doc_a, doc_b, jaccard FROM jacs
-         WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b"""),
-    "q_dedup_incremental" ->
+         WHERE jaccard >= 0.5 ORDER BY doc_a, doc_b""")),
+    Query("q_dedup_incremental", dedupIncremental,
       (shingleCte + """
          SELECT doc_a, doc_b, jaccard FROM jacs
          WHERE jaccard >= 0.8 AND (doc_a >= 400 OR doc_b >= 400)
-         ORDER BY doc_a, doc_b"""),
-    "q_dedup_exact_incremental" ->
+         ORDER BY doc_a, doc_b"""), gate = true),
+    Query("q_dedup_exact_incremental", dedupExactIncremental,
       """WITH corpus AS (
            SELECT DISTINCT sha256(lower(trim(text))) AS h
            FROM documents WHERE doc_id < 400),
@@ -2639,11 +2572,11 @@ object TextQueries {
                 ELSE 'new' END AS status
          FROM b LEFT JOIN corpus c ON c.h = b.text_hash
          JOIN f USING (text_hash)
-         ORDER BY doc_id""",
+         ORDER BY doc_id""", gate = true),
     // full frame-boundary + per-frame-pixel replay: frame f of doc =
     // source slice [48f, min(48(f+1), n)) encoded as an 8×ceil(l/24)
     // raster of the slice's bytes cycled; every 2nd frame decoded
-    "q_multimodal_frames" ->
+    Query("q_multimodal_frames", multimodalFrames,
       """WITH src AS (
            SELECT doc_id, text, length(text) AS n,
                   greatest(1, CAST(ceil(length(text) / 48.0) AS BIGINT)) AS nf
@@ -2672,8 +2605,8 @@ object TextQueries {
                 count(1) AS n_pixels,
                 CAST(sum(gray) AS BIGINT) AS sum_gray,
                 min(gray) AS min_gray, max(gray) AS max_gray
-         FROM px GROUP BY doc_id, f ORDER BY doc_id, frame_idx""",
-    "q_multimodal_phash" ->
+         FROM px GROUP BY doc_id, f ORDER BY doc_id, frame_idx"""),
+    Query("q_multimodal_phash", multimodalPhash,
       (grayPxCte + """,
          v AS (SELECT doc_id, m, (j * 64) // m AS cell, gray AS p FROM px),
          sums AS (
@@ -2694,17 +2627,17 @@ object TextQueries {
          ph AS (
            SELECT doc_id, string_agg(bit, '' ORDER BY cell DESC) AS phash_bits
            FROM pbits GROUP BY doc_id)
-         SELECT doc_id, phash_bits FROM ph ORDER BY doc_id"""),
-    "q_multimodal_decode" ->
+         SELECT doc_id, phash_bits FROM ph ORDER BY doc_id""")),
+    Query("q_multimodal_decode", multimodalDecode,
       (grayPxCte + """
          SELECT doc_id, count(1) AS n_pixels,
            CAST(sum(gray) AS BIGINT) AS sum_gray,
            min(gray) AS min_gray, max(gray) AS max_gray
-         FROM px GROUP BY doc_id ORDER BY doc_id"""),
+         FROM px GROUP BY doc_id ORDER BY doc_id""")),
     // nearest-neighbor resize replay: output pixel (r, c) = source
     // pixel (r·h div 4, c·8 div 4); luma via the decode formula at the
     // sampled pixel index — the whole decode→resize→decode chain
-    "q_multimodal_resize" ->
+    Query("q_multimodal_resize", multimodalResize,
       """WITH src AS (
            SELECT doc_id, text, length(text) AS n,
              greatest(1, CAST(ceil(length(text) / 24.0) AS BIGINT)) AS h
@@ -2725,10 +2658,10 @@ object TextQueries {
          SELECT doc_id, count(1) AS n_pixels,
            CAST(sum(gray) AS BIGINT) AS sum_gray,
            min(gray) AS min_gray, max(gray) AS max_gray
-         FROM px GROUP BY doc_id ORDER BY doc_id""",
+         FROM px GROUP BY doc_id ORDER BY doc_id"""),
     // frame replay: the sample CTE windowed at 128/64, per-frame
     // exact integer energy — the last frame short, every start emits
-    "q_multimodal_audio_frames" ->
+    Query("q_multimodal_audio_frames", multimodalAudioFrames,
       """WITH src AS (
            SELECT doc_id, text, length(text) AS n,
              greatest(1, (length(text) + 1) // 2) AS ns
@@ -2754,12 +2687,12 @@ object TextQueries {
              AND sv.j >= fr.f * 64 AND sv.j < fr.f * 64 + 128
            GROUP BY fr.doc_id, fr.f)
          SELECT doc_id, CAST(f AS INT) AS frame_idx, n_in_frame, energy
-         FROM cells ORDER BY doc_id, frame_idx""",
+         FROM cells ORDER BY doc_id, frame_idx"""),
     // the WAV replay: PCM data bytes are the text bytes cycled over
     // 2·max(1, ceil(n/2)) positions (the engine's fill rule), samples
     // the signed 16-bit LE pairs — ASCII corpus, so ascii(substr) IS
     // the payload byte and the sign branch can't fire (hi byte ≤ 127)
-    "q_multimodal_audio" ->
+    Query("q_multimodal_audio", multimodalAudio,
       """WITH src AS (
            SELECT doc_id, text, length(text) AS n,
              greatest(1, (length(text) + 1) // 2) AS ns
@@ -2781,16 +2714,16 @@ object TextQueries {
            CAST(sum(v) AS BIGINT) AS sum_amp,
            CAST(sum(v * v) AS BIGINT) AS sum_sq,
            CAST(min(v) AS INT) AS min_amp, CAST(max(v) AS INT) AS max_amp
-         FROM sv GROUP BY doc_id ORDER BY doc_id""",
-    "q_multimodal_phash_pairs" ->
+         FROM sv GROUP BY doc_id ORDER BY doc_id"""),
+    Query("q_multimodal_phash_pairs", multimodalPhashPairs,
       (phashCte + """,
          pairs AS (
            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              hamming(a.phash_bits, b.phash_bits) AS h
            FROM ph a JOIN ph b ON a.doc_id < b.doc_id)
          SELECT id_a, id_b, CAST(h AS INT) AS hamming FROM pairs
-         WHERE h <= 15 ORDER BY id_a, id_b"""),
-    "q_text_repetition" ->
+         WHERE h <= 15 ORDER BY id_a, id_b""")),
+    Query("q_text_repetition", repetition,
       """WITH sp AS (
            SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS w
            FROM documents),
@@ -2821,8 +2754,8 @@ object TextQueries {
            tw.top_word_frac,
            (f.dup_2gram_frac > 0.05 OR tw.top_word_frac > 0.15) AS repetitive
          FROM fr f JOIN tw USING (doc_id)
-         ORDER BY f.doc_id""",
-    "q_multimodal_dedup" ->
+         ORDER BY f.doc_id"""),
+    Query("q_multimodal_dedup", multimodalDedup,
       (phashCte.replaceFirst("WITH ", "WITH RECURSIVE ") + """,
          pairs AS MATERIALIZED (
            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2841,21 +2774,21 @@ object TextQueries {
            coalesce(c.cluster_id, d.doc_id) AS cluster_id,
            coalesce(c.cluster_id, d.doc_id) = d.doc_id AS keep
          FROM documents d LEFT JOIN comp c ON c.id = d.doc_id
-         ORDER BY d.doc_id"""),
-    "q_dsir_weights" ->
+         ORDER BY d.doc_id""")),
+    Query("q_dsir_weights", dsirWeights,
       (dsirCte(topKCase = false) + """
          SELECT doc_id, is_target, n_bigrams, w_sum, w_avg
-         FROM wsums ORDER BY doc_id"""),
-    "q_dsir_weights_topk" ->
+         FROM wsums ORDER BY doc_id""")),
+    Query("q_dsir_weights_topk", dsirWeightsTopK,
       (dsirCte(topKCase = true) + """
          SELECT doc_id, is_target, n_bigrams, w_sum, w_avg
-         FROM wsums ORDER BY doc_id"""),
-    "q_dsir_resample" ->
+         FROM wsums ORDER BY doc_id""")),
+    Query("q_dsir_resample", dsirResample,
       (dsirCte(topKCase = false) + """
          SELECT doc_id, is_target, n_bigrams, w_sum, w_avg
          FROM wsums WHERE NOT is_target
-         ORDER BY w_sum DESC, doc_id LIMIT 64"""),
-    "q_multimodal_meta" ->
+         ORDER BY w_sum DESC, doc_id LIMIT 64""")),
+    Query("q_multimodal_meta", multimodalMeta,
       // the P6 container replayed: header "P6\n8 <h>\n255\n" is
       // 10 + digits(h) bytes, the raster 8·h·3 = 24·h
       """WITH g AS (
@@ -2867,6 +2800,6 @@ object TextQueries {
            CAST(8 AS INT) AS width,
            CAST(h AS INT) AS height,
            'ppm' AS format
-         FROM g ORDER BY doc_id"""
+         FROM g ORDER BY doc_id""")
   )
 }

@@ -39,17 +39,6 @@ class OracleTypeCanarySpec extends AnyFlatSpec with Matchers {
   private val tables = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  // identical JSON-string escaping contract as graft.Verify
-  private def jq(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private val pyProbe = """
 import json, sys
 try:
@@ -82,8 +71,8 @@ for name in sorted(oracles):
     else {
       val dir = java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get("target", "test-tmp", "oracle-canary"))
-      val oraclesJson = SparkEntry.oracleSql
-        .map { case (k, v) => s"${jq(k)}: ${jq(v)}" }.mkString("{", ",", "}")
+      // the exact bytes graft.Verify writes as oracle_sql.json
+      val oraclesJson = graft.Verify.oracleJson(SparkEntry.oracleSql)
       val jsonPath = dir.resolve("oracles.json")
       val pyPath = dir.resolve("probe.py")
       java.nio.file.Files.writeString(jsonPath, oraclesJson)

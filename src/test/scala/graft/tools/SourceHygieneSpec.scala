@@ -59,4 +59,20 @@ class SourceHygieneSpec extends AnyFlatSpec with Matchers {
     withClue("SparkSession.builder() outside graft/Session.scala:\n" +
       sites.mkString("\n") + "\n") { sites shouldBe empty }
   }
+
+  /** Each query is one `graft.queries.Query` record; a name-keyed map of
+    * runners or oracle SQL beside it would be a second index to keep in
+    * step by hand. */
+  it should "declare no queries/oracleSql maps under graft/queries" in {
+    val decl = """\b(val|def)\s+(queries|oracleSql)\b.*(:\s*Map\[|=\s*Map\()""".r
+    val sites = for {
+      p <- walk("src/main/scala/graft/queries", ".scala")
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+      if decl.findFirstIn(t).isDefined
+    } yield s"$p:${i + 1}: $t"
+    withClue("parallel name maps under graft/queries:\n" +
+      sites.mkString("\n") + "\n") { sites shouldBe empty }
+  }
 }
