@@ -46,8 +46,11 @@ object Zones {
     * INT64 min-max; never truncated like binary/string stats, never
     * undefined like INT96) and every non-empty chunk carries them.
     * Per-file min/max over non-null values and row counts are then
-    * bit-identical to what the re-scan aggregation produced. */
-  private def footerStats(
+    * bit-identical to what the re-scan aggregation produced. A file
+    * whose footer cannot be read (I/O error, truncated or corrupt
+    * footer) degrades the same way: None, so the manifest comes from
+    * the re-scan instead of the write aborting. */
+  private[io] def footerStats(
       spark: SparkSession, dataDir: String, zCols: Seq[String])
       : Option[Seq[(String, Long, Seq[(Option[Long], Option[Long])])]] = {
     val conf = spark.sessionState.newHadoopConf()
@@ -63,9 +66,11 @@ object Zones {
     // cost for a driver wall floor that grows with the file count).
     // Par preserves input order, so manifest row order is stable.
     val perFile = graft.tools.Par.run(8)(parts.toSeq.map { st => () =>
-      fileFooterStat(conf, st.getPath, zCols)
+      try fileFooterStat(conf, st.getPath, zCols)
+      catch { case scala.util.control.NonFatal(_) => None }
     })
-    // one unsupported layout anywhere → the whole manifest falls back
+    // one unsupported layout or unreadable footer anywhere → the whole
+    // manifest falls back
     if (perFile.contains(None)) return None
     Some(perFile.flatMap(_.get))
   }

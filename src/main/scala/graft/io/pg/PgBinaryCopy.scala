@@ -64,9 +64,12 @@ object PgBinaryCopy {
       ((v >> 40) & 0xff).toByte, ((v >> 32) & 0xff).toByte,
       ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
       ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-  private def rd16(b: Array[Byte], off: Int): Int =
-    (((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)).toShort.toInt
-  private def rd32(b: Array[Byte], off: Int): Int =
+  /** Big-endian int16 (unsigned; `.toShort` gives the signed view) and
+    * int32 readers — the wire's network byte order, shared by both
+    * protocol ends. */
+  private[pg] def int16(b: Array[Byte], off: Int): Int =
+    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
+  private[pg] def int32(b: Array[Byte], off: Int): Int =
     ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
       ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
   private def rd64(b: Array[Byte], off: Int): Long =
@@ -112,7 +115,7 @@ object PgBinaryCopy {
   def decodeField(pgType: String, b: Array[Byte]): String = norm(pgType) match {
     case "TEXT" | "VARCHAR" | "CHAR" => new String(b, UTF_8)
     case "INTEGER" | "INT" | "SERIAL" =>
-      expect(b, 4, "int4"); rd32(b, 0).toString
+      expect(b, 4, "int4"); int32(b, 0).toString
     case "BIGINT" => expect(b, 8, "int8"); rd64(b, 0).toString
     case "DOUBLE PRECISION" =>
       expect(b, 8, "float8")
@@ -121,7 +124,7 @@ object PgBinaryCopy {
       expect(b, 1, "bool"); if (b(0) != 0) "true" else "false"
     case "DATE" =>
       expect(b, 4, "date")
-      PgEpochDate.plusDays(rd32(b, 0).toLong).toString
+      PgEpochDate.plusDays(int32(b, 0).toLong).toString
     case "TIMESTAMP" =>
       expect(b, 8, "timestamp")
       java.sql.Timestamp.valueOf(
@@ -182,10 +185,10 @@ object PgBinaryCopy {
     * `dscale` fraction digits (the display scale PG carries). */
   private[pg] def decodeNumeric(b: Array[Byte]): String = {
     if (b.length < 8) throw PgError("22P03", s"bad numeric length ${b.length}")
-    val ndigits = rd16(b, 0)
-    val weight = rd16(b, 2)
-    val sign = rd16(b, 4) & 0xffff
-    val dscale = rd16(b, 6)
+    val ndigits = int16(b, 0).toShort
+    val weight = int16(b, 2).toShort
+    val sign = int16(b, 4)
+    val dscale = int16(b, 6).toShort
     if (sign == SignNaN) return "NaN"
     if (sign != SignPos && sign != SignNeg)
       throw PgError("22P03", f"bad numeric sign 0x$sign%04x")
@@ -193,7 +196,7 @@ object PgBinaryCopy {
       throw PgError("22P03", s"numeric length ${b.length} != ${8 + 2 * ndigits}")
     var acc = JBigDecimal.ZERO
     (0 until ndigits).foreach { i =>
-      val d = rd16(b, 8 + 2 * i)
+      val d = int16(b, 8 + 2 * i).toShort
       if (d < 0 || d > 9999) throw PgError("22P03", s"bad numeric digit $d")
       // digit * 10000^(weight-i) == digit scaled by -4*(weight-i)
       acc = acc.add(JBigDecimal.valueOf(d.toLong, -4 * (weight - i)))
@@ -243,7 +246,7 @@ object PgBinaryCopy {
       throw PgError("22P04", "COPY binary signature not recognized")
     var off = Signature.length
     off += 4 // flags: no critical bits defined beyond OIDs flag; ignore
-    val extLen = rd32(bytes, off); off += 4
+    val extLen = int32(bytes, off); off += 4
     // Long arithmetic: a hostile length near Int.MaxValue overflows
     // `off + extLen` negative and would slip past an Int comparison
     if (extLen < 0 || off.toLong + extLen > bytes.length)
@@ -254,7 +257,7 @@ object PgBinaryCopy {
     while (!done) {
       if (off + 2 > bytes.length)
         throw PgError("22P04", "unexpected end of COPY binary data (no trailer)")
-      val nf = rd16(bytes, off); off += 2
+      val nf = int16(bytes, off).toShort; off += 2
       if (nf == -1) done = true
       else {
         if (nf != types.length)
@@ -264,7 +267,7 @@ object PgBinaryCopy {
         (0 until nf).foreach { i =>
           if (off + 4 > bytes.length)
             throw PgError("22P04", "truncated field header")
-          val len = rd32(bytes, off); off += 4
+          val len = int32(bytes, off); off += 4
           if (len == -1) row(i) = null
           else {
             if (len < 0 || off.toLong + len > bytes.length)

@@ -6,18 +6,25 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.collection.mutable
 
-/** Minimal PostgreSQL frontend (wire v3, simple-query subset) — the
-  * client half of the [[PgLiteServer]] pair. A REAL `org.postgresql`
+import PgBinaryCopy.{int16, int32}
+import PgLiteEngine.CopyFormat
+
+/** PostgreSQL frontend (wire v3) — the client half of the
+  * [[PgLiteServer]] pair. A REAL `org.postgresql`
   * driver would be the stronger witness, but the offline image ships
   * no PostgreSQL JDBC jar and `build.sbt` may not grow dependencies —
   * so the protocol is exercised from both ends against the PUBLISHED
   * message layouts instead (PgLiteSpec additionally pins golden
   * handshake bytes so the pair can't drift into a private dialect).
   *
-  * Speaks: optional SSLRequest (expects 'N'), StartupMessage, 'Q'
-  * simple query, the extended pipeline P/B/D/E/S with text parameters
-  * ([[execParams]]), COPY d/c/f, 'X' terminate. Reads:
-  * R/S/K/Z/T/D/C/E/I/N/G plus the extended completes 1/2/3/n/t.
+  * Speaks: optional SSLRequest (expects 'N'), StartupMessage, the
+  * simple query 'Q' (buffered [[query]] or streaming [[queryStream]]),
+  * the extended protocol P/B/D/E/S with text or binary parameters and
+  * result columns ([[execParams]] and its variants), the fetch cursor
+  * Execute(n)/Flush ([[execFetch]]), COPY FROM STDIN and TO STDOUT in
+  * the text, CSV and binary formats ([[copyIn]], [[copyOut]]) with
+  * d/c/f, CancelRequest, and 'X' terminate. Reads:
+  * R/S/K/Z/T/D/C/E/I/N/G/H/d/c plus the extended 1/2/3/n/t/s.
   */
 final class PgLiteClient(host: String, port: Int,
                          user: String = "graft", database: String = "graft") {
@@ -75,12 +82,12 @@ final class PgLiteClient(host: String, port: Int,
       val (tpe, payload) = readMessage()
       tpe match {
         case 'R' =>
-          require(payload.length == 4 && readInt(payload, 0) == 0,
+          require(payload.length == 4 && int32(payload, 0) == 0,
             "expected AuthenticationOk")
           authOk = true
         case 'K' => // BackendKeyData: the session's live cancel key
-          backendPid = readInt(payload, 0)
-          backendSecret = readInt(payload, 4)
+          backendPid = int32(payload, 0)
+          backendSecret = int32(payload, 4)
         case 'S' | 'N' => ()
         case 'Z' => ready = true
         case 'E' => throw parseError(payload)
@@ -119,64 +126,8 @@ final class PgLiteClient(host: String, port: Int,
   /** Simple-query round trip. Multiple result sets merge their rows;
     * every CommandComplete tag is collected in order. */
   def query(sql: String): QueryResult = {
-    val b = sql.getBytes(UTF_8)
-    out.writeByte('Q'); out.writeInt(4 + b.length + 1)
-    out.write(b); out.writeByte(0); out.flush()
-    var cols = Seq.empty[String]
-    var oids = Seq.empty[Int]
-    var mods = Seq.empty[Int]
-    val rows = mutable.ArrayBuffer[Seq[Option[String]]]()
-    val tags = mutable.ArrayBuffer[String]()
-    var err: PgServerError = null
-    var ready = false
-    while (!ready) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case 'T' =>
-          val (cs, os, ms) = parseRowDescription(payload)
-          cols = cs; oids = os; mods = ms
-        case 'D' =>
-          rows += parseDataRow(payload)
-        case 'C' =>
-          tags += new String(payload, 0, payload.length - 1, UTF_8)
-        case 'E' => err = parseError(payload)
-        case 'I' | 'N' | 'S' => ()
-        case 'G' =>
-          // CopyInResponse through query(): abort the COPY cleanly
-          // (CopyFail) and resynchronize to ReadyForQuery, so the
-          // connection survives the caller's mistake.
-          val reason = "COPY FROM STDIN requires copyIn()".getBytes(UTF_8)
-          out.writeByte('f'); out.writeInt(4 + reason.length + 1)
-          out.write(reason); out.writeByte(0); out.flush()
-          drainToReady()
-          throw new IllegalStateException(
-            "query(): statement is COPY ... FROM STDIN — use copyIn()")
-        case 'H' =>
-          // CopyOutResponse through query(): the server streams the
-          // whole export then ReadyForQuery regardless — drain and
-          // throw, connection intact.
-          drainToReady()
-          throw new IllegalStateException(
-            "query(): statement is COPY ... TO STDOUT — use copyOut()")
-        case 'Z' => ready = true
-        case other => throw new IllegalStateException(s"query: unexpected '$other'")
-      }
-    }
-    if (err != null) throw err
-    QueryResult(cols, oids, rows.toSeq, tags.toSeq, mods)
-  }
-
-  /** One DataRow payload → cells (None = SQL NULL). */
-  private def parseDataRow(payload: Array[Byte]): Seq[Option[String]] = {
-    val n = readShort(payload, 0)
-    var off = 2
-    val r = mutable.ArrayBuffer[Option[String]]()
-    (0 until n).foreach { _ =>
-      val len = readInt(payload, off); off += 4
-      if (len < 0) r += None
-      else { r += Some(new String(payload, off, len, UTF_8)); off += len }
-    }
-    r.toSeq
+    sendCString('Q', sql)
+    collect(new RowStream("query()"))._1
   }
 
   /** STREAMING simple-query: DataRow frames are read off the socket
@@ -193,20 +144,37 @@ final class PgLiteClient(host: String, port: Int,
     * stand, exactly like a real cursor. Statement surface: row-set
     * statements only (COPY responses abort like [[query]]). */
   def queryStream(sql: String): RowStream = {
-    val b = sql.getBytes(UTF_8)
-    out.writeByte('Q'); out.writeInt(4 + b.length + 1)
-    out.write(b); out.writeByte(0); out.flush()
-    new RowStream()
+    sendCString('Q', sql)
+    new RowStream("queryStream()")
   }
 
-  /** Lazy row iterator over an in-flight simple-query response —
-    * see [[queryStream]]. `columns`/`typeOids` are populated once the
-    * RowDescription arrives (the constructor pumps until the first
-    * row, the terminal ReadyForQuery, or an error — so an up-front
-    * failure like 42P01 throws at [[queryStream]], not mid-scan). */
-  final class RowStream private[PgLiteClient] () extends Iterator[Seq[Option[String]]] {
+  /** Drain a response into a [[QueryResult]], with the number of
+    * Execute round trips it took. */
+  private def collect(s: RowStream): (QueryResult, Int) = {
+    val rows = s.toVector
+    (QueryResult(s.columns, s.typeOids, rows, s.tags.toSeq, s.typeMods), s.executes)
+  }
+
+  /** Lazy row iterator over one in-flight response, simple or
+    * extended — see [[queryStream]]. `columns`/`typeOids` are
+    * populated once the RowDescription arrives (the constructor pumps
+    * until the first row, the terminal ReadyForQuery, or an error — so
+    * an up-front failure like 42P01 throws at [[queryStream]], not
+    * mid-scan). Cells of a column `resultFormats` requests binary
+    * decode back to canonical text by the RowDescription oid. An
+    * extended fetch cursor passes `resume` (re-Execute on
+    * PortalSuspended) and `settle` (Sync once CommandComplete or an
+    * error ends the portal). */
+  final class RowStream private[PgLiteClient] (
+      api: String, resultFormats: Seq[Int] = Nil,
+      resume: () => Unit = () => (), settle: () => Unit = () => ())
+      extends Iterator[Seq[Option[String]]] {
     var columns: Seq[String] = Nil
     var typeOids: Seq[Int] = Nil
+    private[PgLiteClient] var typeMods: Seq[Int] = Nil
+    private[PgLiteClient] val tags = mutable.ArrayBuffer[String]()
+    private[PgLiteClient] var executes = 1
+    private var formats = IndexedSeq.empty[Int]
     private var nextRow: Seq[Option[String]] = null
     private var done = false
     private var err: PgServerError = null
@@ -219,31 +187,53 @@ final class PgLiteClient(host: String, port: Int,
         val (tpe, payload) = readMessage()
         tpe match {
           case 'T' =>
-            val (cs, os, _) = parseRowDescription(payload)
-            columns = cs; typeOids = os
+            val (cs, os, ms) = parseRowDescription(payload)
+            columns = cs; typeOids = os; typeMods = ms
+            formats = PgLiteEngine.formatCodes(resultFormats, cs.length, "result column")
           case 'D' => nextRow = parseDataRow(payload)
-          case 'C' | 'I' | 'N' | 'S' => ()
-          case 'E' => err = parseError(payload)
+          case 'C' => tags += cString(payload); settle()
+          case 'E' => err = parseError(payload); settle()
+          case 's' => executes += 1; resume() // PortalSuspended
+          case 'I' | 'N' | 'S' | '1' | '2' | '3' | 'n' | 't' => ()
           case 'Z' =>
             done = true
             if (err != null) throw err
           case 'G' =>
-            val reason = "COPY FROM STDIN requires copyIn()".getBytes(UTF_8)
-            out.writeByte('f'); out.writeInt(4 + reason.length + 1)
-            out.write(reason); out.writeByte(0); out.flush()
-            drainToReady()
+            // CopyInResponse: abort the COPY cleanly and resynchronize
+            // to ReadyForQuery, so the connection survives the mistake
             done = true
+            abortCopy("COPY FROM STDIN requires copyIn()")
             throw new IllegalStateException(
-              "queryStream(): statement is COPY ... FROM STDIN — use copyIn()")
+              s"$api: statement is COPY ... FROM STDIN — use copyIn()")
           case 'H' =>
-            drainToReady()
+            // CopyOutResponse: the server streams the whole export then
+            // ReadyForQuery regardless — drain and throw
             done = true
+            drainToReady()
             throw new IllegalStateException(
-              "queryStream(): statement is COPY ... TO STDOUT — use copyOut()")
+              s"$api: statement is COPY ... TO STDOUT — use copyOut()")
           case other =>
-            throw new IllegalStateException(s"queryStream: unexpected '$other'")
+            throw new IllegalStateException(s"$api: unexpected '$other'")
         }
       }
+    }
+
+    /** One DataRow payload → cells (None = SQL NULL). */
+    private def parseDataRow(payload: Array[Byte]): Seq[Option[String]] = {
+      val n = int16(payload, 0)
+      var off = 2
+      val r = mutable.ArrayBuffer[Option[String]]()
+      (0 until n).foreach { i =>
+        val len = int32(payload, off); off += 4
+        if (len < 0) r += None
+        else {
+          r += Some(
+            if (formats(i) == 0) new String(payload, off, len, UTF_8)
+            else decodeBinResult(typeOids(i), payload, off, len))
+          off += len
+        }
+      }
+      r.toSeq
     }
 
     override def hasNext: Boolean = { pump(); nextRow != null }
@@ -258,7 +248,7 @@ final class PgLiteClient(host: String, port: Int,
     * typlen int16, typmod int32, format int16. */
   private def parseRowDescription(
       payload: Array[Byte]): (Seq[String], Seq[Int], Seq[Int]) = {
-    val n = readShort(payload, 0)
+    val n = int16(payload, 0)
     var off = 2
     val cs = mutable.ArrayBuffer[String]()
     val os = mutable.ArrayBuffer[Int]()
@@ -266,8 +256,8 @@ final class PgLiteClient(host: String, port: Int,
     (0 until n).foreach { _ =>
       val end = payload.indexOf(0, off)
       cs += new String(payload, off, end - off, UTF_8)
-      os += readInt(payload, end + 1 + 4 + 2)
-      ms += readInt(payload, end + 1 + 4 + 2 + 4 + 2)
+      os += int32(payload, end + 1 + 4 + 2)
+      ms += int32(payload, end + 1 + 4 + 2 + 4 + 2)
       off = end + 1 + 4 + 2 + 4 + 2 + 4 + 2
     }
     (cs.toSeq, os.toSeq, ms.toSeq)
@@ -277,12 +267,18 @@ final class PgLiteClient(host: String, port: Int,
     * Sync) with TEXT-format parameters bound server-side into $1..$n —
     * the surface a real driver's server-side-prepared path exercises.
     * Uses the unnamed statement and portal; the row shape arrives from
-    * Describe (RowDescription or NoData), rows from Execute. */
-  def execParams(sql: String,
-                 params: Seq[Option[String]] = Nil): QueryResult =
+    * Describe (RowDescription or NoData), rows from Execute.
+    * `resultFormats` are explicit per-column result format codes (0
+    * text, 1 binary — zero codes = all text, one = uniform, else one
+    * per column, the published Bind rule): the mixed-format shape a
+    * real driver sends for a row of fixed-width AND varlena columns.
+    * Binary cells decode back to canonical text transparently. */
+  def execParams(sql: String, params: Seq[Option[String]] = Nil,
+                 resultFormats: Seq[Int] = Seq.empty): QueryResult =
     execExtended(sql, paramOids = Seq.fill(params.length)(0),
       payloads = params.map(_.map(_.getBytes(UTF_8))),
-      formats = Seq.empty) // zero format codes = all text, per the docs
+      formats = Seq.empty, // zero format codes = all text, per the docs
+      resultFormats = resultFormats)
 
   /** [[execParams]] with TYPED BINARY parameters — what a real driver
     * sends by default for prepared int8/float8/int4 values: Parse
@@ -307,17 +303,6 @@ final class PgLiteClient(host: String, port: Int,
       payloads = params.map { case (oid, v) => v.map(encodeBinParam(oid, _)) },
       formats = Seq.fill(params.length)(1), resultFormats = Seq(1))
 
-  /** [[execParams]] with EXPLICIT per-column result format codes
-    * (0 text, 1 binary — zero codes = all text, one = uniform, else
-    * one per column, the published Bind rule): the mixed-format shape
-    * a real driver sends for a row of fixed-width AND varlena columns.
-    * Binary cells decode back to canonical text transparently. */
-  def execParamsFormats(sql: String, params: Seq[Option[String]],
-                        resultFormats: Seq[Int]): QueryResult =
-    execExtended(sql, paramOids = Seq.fill(params.length)(0),
-      payloads = params.map(_.map(_.getBytes(UTF_8))),
-      formats = Seq.empty, resultFormats = resultFormats)
-
   /** CURSOR-style extended-protocol fetch loop (r19, VERDICT r18 task
     * 1) — the wire flow a JDBC driver's `setFetchSize(n)` runs: Parse/
     * Bind/Describe once, then `Execute(maxRows=n)` + Flush repeatedly,
@@ -335,94 +320,8 @@ final class PgLiteClient(host: String, port: Int,
                 fetchSize: Int = 0,
                 resultFormats: Seq[Int] = Seq.empty): (QueryResult, Int) = {
     require(fetchSize > 0, "execFetch requires a positive fetchSize")
-    def msg(tpe: Char, body: Array[Byte]): Unit = {
-      out.writeByte(tpe); out.writeInt(4 + body.length); out.write(body)
-    }
-    val bb = new java.io.ByteArrayOutputStream()
-    def i16(v: Int): Unit = { bb.write((v >> 8) & 0xff); bb.write(v & 0xff) }
-    def i32(v: Int): Unit = {
-      bb.write((v >> 24) & 0xff); bb.write((v >> 16) & 0xff)
-      bb.write((v >> 8) & 0xff); bb.write(v & 0xff)
-    }
-    // Parse: unnamed statement, untyped text parameters
-    bb.write(0); bb.write(sql.getBytes(UTF_8)); bb.write(0); i16(0)
-    msg('P', bb.toByteArray); bb.reset()
-    // Bind: unnamed portal, text params, the caller's result formats
-    bb.write(0); bb.write(0)
-    i16(0)
-    i16(params.length)
-    params.foreach {
-      case None => i32(-1)
-      case Some(v) =>
-        val b = v.getBytes(UTF_8); i32(b.length); bb.write(b, 0, b.length)
-    }
-    i16(resultFormats.length); resultFormats.foreach(i16)
-    msg('B', bb.toByteArray); bb.reset()
-    msg('D', Array[Byte]('P'.toByte, 0))
-    def execute(): Unit = {
-      bb.reset()
-      bb.write(0) // unnamed portal
-      i32(fetchSize)
-      msg('E', bb.toByteArray); bb.reset()
-      msg('H', Array.emptyByteArray) // Flush: responses without Sync
-      out.flush()
-    }
-    execute()
-    var executes = 1
-    var cols = Seq.empty[String]
-    var oids = Seq.empty[Int]
-    var mods = Seq.empty[Int]
-    val rows = mutable.ArrayBuffer[Seq[Option[String]]]()
-    val tags = mutable.ArrayBuffer[String]()
-    var err: PgServerError = null
-    var synced = false
-    def sync(): Unit = if (!synced) {
-      synced = true
-      msg('S', Array.emptyByteArray); out.flush()
-    }
-    var ready = false
-    while (!ready) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case '1' | '2' | '3' | 'n' | 't' | 'N' => ()
-        case 'T' =>
-          val (cs, os, ms) = parseRowDescription(payload)
-          cols = cs; oids = os; mods = ms
-        case 'D' =>
-          val n = readShort(payload, 0)
-          var off = 2
-          val r = mutable.ArrayBuffer[Option[String]]()
-          (0 until n).foreach { i =>
-            val len = readInt(payload, off); off += 4
-            if (len < 0) r += None
-            else {
-              val fmt =
-                if (resultFormats.isEmpty) 0
-                else if (resultFormats.length == 1) resultFormats.head
-                else resultFormats(i)
-              r += Some(
-                if (fmt == 0) new String(payload, off, len, UTF_8)
-                else decodeBinResult(oids(i), payload, off, len))
-              off += len
-            }
-          }
-          rows += r.toSeq
-        case 's' => // PortalSuspended: the fetchSize truncated — resume
-          execute()
-          executes += 1
-        case 'C' => // cursor drained
-          tags += new String(payload, 0, payload.length - 1, UTF_8)
-          sync()
-        case 'E' =>
-          err = parseError(payload)
-          sync() // server skips to Sync after an error
-        case 'Z' => ready = true
-        case other =>
-          throw new IllegalStateException(s"execFetch: unexpected '$other'")
-      }
-    }
-    if (err != null) throw err
-    (QueryResult(cols, oids, rows.toSeq, tags.toSeq, mods), executes)
+    extended(sql, Seq.fill(params.length)(0),
+      params.map(_.map(_.getBytes(UTF_8))), Seq.empty, resultFormats, fetchSize)
   }
 
   /** Binary RESULT cells back to canonical text, by the
@@ -432,19 +331,9 @@ final class PgLiteClient(host: String, port: Int,
     * layouts), so every wire type round-trips format-invisibly. */
   private def decodeBinResult(oid: Int, b: Array[Byte],
                               off: Int, len: Int): String = {
-    val pgType = oid match {
-      case 25 => "TEXT"
-      case 23 => "INTEGER"
-      case 20 => "BIGINT"
-      case 701 => "DOUBLE PRECISION"
-      case 16 => "BOOLEAN"
-      case 1114 => "TIMESTAMP"
-      case 1082 => "DATE"
-      case 1700 => "NUMERIC"
-      case 17 => "BYTEA"
-      case other => throw new IllegalStateException(
-        s"server sent a binary result for undecodable oid $other")
-    }
+    val pgType = PgLiteEngine.typeOfOid(oid).getOrElse(
+      throw new IllegalStateException(
+        s"server sent a binary result for undecodable oid $oid"))
     PgBinaryCopy.decodeField(pgType,
       java.util.Arrays.copyOfRange(b, off, off + len))
   }
@@ -452,19 +341,9 @@ final class PgLiteClient(host: String, port: Int,
   /** Published binary send formats, every wire type (r18) — the same
     * per-type codecs the COPY BINARY surface pins. */
   private def encodeBinParam(oid: Int, v: Any): Array[Byte] = {
-    val pgType = oid match {
-      case 25 => "TEXT"
-      case 23 => "INTEGER"
-      case 20 => "BIGINT"
-      case 701 => "DOUBLE PRECISION"
-      case 16 => "BOOLEAN"
-      case 1114 => "TIMESTAMP"
-      case 1082 => "DATE"
-      case 1700 => "NUMERIC"
-      case 17 => "BYTEA"
-      case other => throw new IllegalArgumentException(
-        s"no binary parameter encoding for oid $other")
-    }
+    val pgType = PgLiteEngine.typeOfOid(oid).getOrElse(
+      throw new IllegalArgumentException(
+        s"no binary parameter encoding for oid $oid"))
     PgBinaryCopy.encodeField(pgType, v.toString)
   }
 
@@ -478,112 +357,76 @@ final class PgLiteClient(host: String, port: Int,
   private[io] def execExtended(sql: String, paramOids: Seq[Int],
                                payloads: Seq[Option[Array[Byte]]],
                                formats: Seq[Int],
-                               resultFormats: Seq[Int] = Seq.empty): QueryResult = {
-    def msg(tpe: Char, body: Array[Byte]): Unit = {
-      out.writeByte(tpe); out.writeInt(4 + body.length); out.write(body)
-    }
+                               resultFormats: Seq[Int] = Seq.empty): QueryResult =
+    extended(sql, paramOids, payloads, formats, resultFormats, fetchSize = 0)._1
+
+  /** The one extended pipeline: Parse (unnamed statement, declared
+    * param type oids, 0 = untyped), Bind (unnamed portal), Describe,
+    * then Execute with a row limit of `fetchSize` (0 = all). An
+    * unlimited Execute is followed by Sync; a limited one by Flush,
+    * re-Executed on each PortalSuspended, with Sync withheld until
+    * CommandComplete or an error. */
+  private def extended(sql: String, paramOids: Seq[Int],
+                       payloads: Seq[Option[Array[Byte]]], formats: Seq[Int],
+                       resultFormats: Seq[Int], fetchSize: Int): (QueryResult, Int) = {
     val bb = new java.io.ByteArrayOutputStream()
-    def i16(v: Int): Unit = { bb.write((v >> 8) & 0xff); bb.write(v & 0xff) }
-    def i32(v: Int): Unit = {
-      bb.write((v >> 24) & 0xff); bb.write((v >> 16) & 0xff)
-      bb.write((v >> 8) & 0xff); bb.write(v & 0xff)
-    }
-    // Parse: unnamed statement, declared param type oids (0 = untyped)
-    bb.write(0); bb.write(sql.getBytes(UTF_8)); bb.write(0)
-    i16(paramOids.length); paramOids.foreach(i32)
-    msg('P', bb.toByteArray); bb.reset()
-    // Bind: unnamed portal ← unnamed statement
-    bb.write(0); bb.write(0)
-    i16(formats.length); formats.foreach(i16)
-    i16(payloads.length)
+    val body = new DataOutputStream(bb)
+    def msg(tpe: Char): Unit = { send(tpe, bb.toByteArray); bb.reset() }
+    body.write(0); body.write(sql.getBytes(UTF_8)); body.write(0)
+    body.writeShort(paramOids.length); paramOids.foreach(body.writeInt)
+    msg('P')
+    body.write(0); body.write(0)
+    body.writeShort(formats.length); formats.foreach(body.writeShort)
+    body.writeShort(payloads.length)
     payloads.foreach {
-      case None => i32(-1)
-      case Some(b) => i32(b.length); bb.write(b, 0, b.length)
+      case None => body.writeInt(-1)
+      case Some(b) => body.writeInt(b.length); body.write(b)
     }
-    i16(resultFormats.length); resultFormats.foreach(i16)
-    msg('B', bb.toByteArray); bb.reset()
-    msg('D', Array[Byte]('P'.toByte, 0))
-    // Execute: unnamed portal, no row limit
-    msg('E', Array[Byte](0, 0, 0, 0, 0))
-    msg('S', Array.emptyByteArray)
-    out.flush()
-    var cols = Seq.empty[String]
-    var oids = Seq.empty[Int]
-    var mods = Seq.empty[Int]
-    val rows = mutable.ArrayBuffer[Seq[Option[String]]]()
-    val tags = mutable.ArrayBuffer[String]()
-    var err: PgServerError = null
-    var ready = false
-    while (!ready) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case '1' | '2' | '3' | 'n' | 't' | 'N' | 'S' => () // completes/NoData
-        case 'T' =>
-          val (cs, os, ms) = parseRowDescription(payload)
-          cols = cs; oids = os; mods = ms
-        case 'D' =>
-          val n = readShort(payload, 0)
-          var off = 2
-          val r = mutable.ArrayBuffer[Option[String]]()
-          (0 until n).foreach { i =>
-            val len = readInt(payload, off); off += 4
-            if (len < 0) r += None
-            else {
-              // a column this Bind requested binary decodes by its
-              // RowDescription oid ('T' always precedes 'D'); text
-              // columns pass through as UTF-8
-              val fmt =
-                if (resultFormats.isEmpty) 0
-                else if (resultFormats.length == 1) resultFormats.head
-                else resultFormats(i)
-              r += Some(
-                if (fmt == 0) new String(payload, off, len, UTF_8)
-                else decodeBinResult(oids(i), payload, off, len))
-              off += len
-            }
-          }
-          rows += r.toSeq
-        case 'C' =>
-          tags += new String(payload, 0, payload.length - 1, UTF_8)
-        case 'E' => err = parseError(payload)
-        case 'Z' => ready = true
-        case other =>
-          throw new IllegalStateException(s"execParams: unexpected '$other'")
-      }
+    body.writeShort(resultFormats.length); resultFormats.foreach(body.writeShort)
+    msg('B')
+    send('D', Array[Byte]('P'.toByte, 0))
+    def execute(): Unit = {
+      body.write(0); body.writeInt(fetchSize)
+      msg('E')
+      send(if (fetchSize > 0) 'H' else 'S', Array.emptyByteArray)
+      out.flush()
     }
-    if (err != null) throw err
-    QueryResult(cols, oids, rows.toSeq, tags.toSeq, mods)
+    var synced = fetchSize == 0
+    def sync(): Unit = if (!synced) {
+      synced = true
+      send('S', Array.emptyByteArray); out.flush()
+    }
+    execute()
+    collect(new RowStream("extended query", resultFormats, () => execute(), () => sync()))
   }
 
-  /** COPY … FROM STDIN round trip: send the COPY statement, expect
-    * CopyInResponse, stream the rows as text-format CopyData (fields
-    * tab-delimited, `\N` null, backslash escapes), CopyDone, and
-    * return the CommandComplete tag ("COPY n"). The bulk-load path a
-    * production writer uses instead of row-at-a-time INSERTs. */
-  def copyIn(sql: String, rows: Seq[Seq[Option[String]]],
-             batchRows: Int = 1024): String =
-    copyIn(sql, rows.iterator, batchRows)
-
-  /** Streaming variant: rows are consumed and framed batch by batch,
-    * never buffered whole — the per-partition writer posture
-    * ([[PgWire.copyDistributed]]) streams arbitrarily large partitions
-    * through constant memory. */
-  def copyIn(sql: String, rows: Iterator[Seq[Option[String]]],
-             batchRows: Int): String = {
-    startCopy(sql, expectBinary = false)
+  /** COPY … FROM STDIN round trip in `format` ([[PgLiteEngine.CopyFormat]]):
+    * send the COPY statement, expect CopyInResponse with the format's
+    * wire byte, stream the rows as CopyData frames of `batchRows` rows
+    * (never buffered whole — the per-partition writer posture
+    * [[PgWire.copyDistributed]] streams arbitrarily large partitions
+    * through constant memory), CopyDone, and return the
+    * CommandComplete tag ("COPY n"). `types` gives the DDL type per
+    * copied column, which binary fields are encoded by. The statement
+    * carries the format clause; CSV and text share wire byte 0, so
+    * matching the clause is the CALLER's contract, as with a real
+    * PostgreSQL. Every format lands value-identical tables from the
+    * same canonical text rows (`ref_pg_copy_binary`,
+    * `ref_pg_copy_csv`). */
+  def copyIn(sql: String, rows: IterableOnce[Seq[Option[String]]],
+             format: CopyFormat = PgLiteEngine.FmtText,
+             types: Seq[String] = Nil, batchRows: Int = 1024): String = {
+    startCopy(sql, format)
     copyBody {
-      rows.grouped(batchRows).foreach { group =>
-        val data = group.map(PgTextCopy.encodeRow)
-          .mkString("", "\n", "\n").getBytes(UTF_8)
-        copyData(data)
-      }
+      format.frames(rows.iterator, types, batchRows)(send('d', _))
     }
   }
 
-  /** COPY … TO STDOUT round trip (text format): send the statement,
-    * expect CopyOutResponse, collect the CopyData frames until
-    * CopyDone, and decode the text rows — the bulk EXPORT twin of
-    * [[copyIn]]. Returns the rows (None = SQL NULL).
+  /** COPY … TO STDOUT round trip in `format`: send the statement,
+    * expect CopyOutResponse with the format's wire byte, collect the
+    * CopyData frames until CopyDone, and decode the rows — the bulk
+    * EXPORT twin of [[copyIn]] (`types` as there). Returns the rows
+    * (None = SQL NULL).
     *
     * Single-socket and CLIENT-BUFFERED (the whole export
     * materializes here) — the protocol-fidelity posture, for
@@ -591,26 +434,9 @@ final class PgLiteClient(host: String, port: Int,
     * read path is [[PgWire.readDistributed]] / the `pglite` DSv2
     * source: per-key-range connections over streaming row iterators
     * ([[queryStream]]), per-task memory one row. */
-  def copyOut(sql: String): Seq[Seq[Option[String]]] = {
-    val payload = copyOutRaw(sql, expectBinary = false)
-    PgTextCopy.splitLines(new String(payload, UTF_8))
-      .map(PgTextCopy.decodeRow(_).map(Option(_)))
-  }
-
-  /** COPY … TO STDOUT in BINARY format: `types` gives the DDL type per
-    * exported column, exactly as [[copyInBinary]]. */
-  def copyOutBinary(sql: String, types: Seq[String]): Seq[Seq[Option[String]]] = {
-    val payload = copyOutRaw(sql, expectBinary = true)
-    PgBinaryCopy.decodeStream(payload, types).map(_.map(Option(_)))
-  }
-
-  /** Shared COPY OUT flow: 'Q', demand CopyOutResponse with the
-    * matching format byte, concatenate CopyData until CopyDone,
-    * return the raw payload after CommandComplete + ReadyForQuery. */
-  private def copyOutRaw(sql: String, expectBinary: Boolean): Array[Byte] = {
-    val b = sql.getBytes(UTF_8)
-    out.writeByte('Q'); out.writeInt(4 + b.length + 1)
-    out.write(b); out.writeByte(0); out.flush()
+  def copyOut(sql: String, format: CopyFormat = PgLiteEngine.FmtText,
+              types: Seq[String] = Nil): Seq[Seq[Option[String]]] = {
+    sendCString('Q', sql)
     val buf = new java.io.ByteArrayOutputStream()
     var err: PgServerError = null
     var ready = false
@@ -620,12 +446,11 @@ final class PgLiteClient(host: String, port: Int,
       tpe match {
         case 'H' =>
           val fmt = payload(0).toInt
-          val want = if (expectBinary) 1 else 0
-          if (fmt != want) {
+          if (fmt != format.wireByte) {
             // server streams the export regardless; drain it, stay usable
             drainToReady()
             throw new IllegalStateException(
-              s"copyOut: COPY format mismatch (server $fmt, expected $want)")
+              s"copyOut: COPY format mismatch (server $fmt, expected ${format.wireByte})")
           }
           sawCopyOut = true
         case 'd' => buf.write(payload)
@@ -635,10 +460,7 @@ final class PgLiteClient(host: String, port: Int,
         case 'Z' => ready = true
         case 'S' | 'N' => ()
         case 'G' =>
-          val reason = "statement is COPY FROM STDIN".getBytes(UTF_8)
-          out.writeByte('f'); out.writeInt(4 + reason.length + 1)
-          out.write(reason); out.writeByte(0); out.flush()
-          drainToReady()
+          abortCopy("statement is COPY FROM STDIN")
           throw new IllegalStateException(
             "copyOut: statement is COPY ... FROM STDIN — use copyIn()")
         case other =>
@@ -651,64 +473,15 @@ final class PgLiteClient(host: String, port: Int,
     if (!sawCopyOut)
       throw new IllegalStateException(
         "copyOut: statement produced no CopyOutResponse")
-    buf.toByteArray
-  }
-
-  /** COPY … FROM STDIN in the published BINARY format ([[PgBinaryCopy]]):
-    * the statement must carry a binary format clause (`… FROM STDIN
-    * BINARY` / `WITH (FORMAT BINARY)`), `types` gives the DDL type per
-    * copied column (what each field's binary send format is keyed on),
-    * and rows arrive as the same canonical text [[copyIn]] ships — the
-    * two formats must land value-identical tables
-    * (`ref_pg_copy_binary`'s oracle). Streaming like [[copyIn]]:
-    * header + batched tuples + trailer, constant memory. */
-  def copyInBinary(sql: String, rows: Iterator[Seq[Option[String]]],
-                   types: Seq[String], batchRows: Int = 1024): String = {
-    startCopy(sql, expectBinary = true)
-    copyBody {
-      copyData(PgBinaryCopy.header())
-      val bb = new java.io.ByteArrayOutputStream()
-      rows.grouped(batchRows).foreach { group =>
-        bb.reset()
-        group.foreach(r => bb.write(PgBinaryCopy.encodeTuple(types, r)))
-        copyData(bb.toByteArray)
-      }
-      copyData(PgBinaryCopy.trailer())
-    }
-  }
-
-  /** COPY … FROM STDIN in CSV format ([[PgCsvCopy]]): `""` ships the
-    * empty string, an unquoted empty field is NULL, embedded
-    * delimiters/quotes/newlines ride inside quotes. The wire format
-    * byte is 0 like text (CSV is statement-level in the protocol), so
-    * framing discipline is the CALLER's contract, exactly as with a
-    * real PostgreSQL. */
-  def copyInCsv(sql: String, rows: Iterator[Seq[Option[String]]],
-                batchRows: Int = 1024): String = {
-    startCopy(sql, expectBinary = false)
-    copyBody {
-      rows.grouped(batchRows).foreach { group =>
-        val data = group.map(PgCsvCopy.encodeRow)
-          .mkString("", "\n", "\n").getBytes(UTF_8)
-        copyData(data)
-      }
-    }
-  }
-
-  /** COPY … TO STDOUT in CSV format — decode twin of [[copyInCsv]]. */
-  def copyOutCsv(sql: String): Seq[Seq[Option[String]]] = {
-    val payload = copyOutRaw(sql, expectBinary = false)
-    PgCsvCopy.decodeRows(new String(payload, UTF_8)).map(_.map(Option(_)))
+    format.decode(buf.toByteArray, types).map(_.map(Option(_)))
   }
 
   /** Send the COPY statement and wait for CopyInResponse, demanding
     * the server's overall-format byte match the caller's framing — a
     * text writer driving a binary COPY (or vice versa) aborts cleanly
     * with CopyFail instead of loading garbage. */
-  private def startCopy(sql: String, expectBinary: Boolean): Unit = {
-    val b = sql.getBytes(UTF_8)
-    out.writeByte('Q'); out.writeInt(4 + b.length + 1)
-    out.write(b); out.writeByte(0); out.flush()
+  private def startCopy(sql: String, format: CopyFormat): Unit = {
+    sendCString('Q', sql)
     // wait for CopyInResponse (or an up-front error e.g. 42P01)
     var started = false
     while (!started) {
@@ -716,15 +489,10 @@ final class PgLiteClient(host: String, port: Int,
       tpe match {
         case 'G' =>
           val fmt = payload(0).toInt
-          val want = if (expectBinary) 1 else 0
-          if (fmt != want) {
-            val reason = (s"client framing is ${if (expectBinary) "binary"
-              else "text"} but server format is $fmt").getBytes(UTF_8)
-            out.writeByte('f'); out.writeInt(4 + reason.length + 1)
-            out.write(reason); out.writeByte(0); out.flush()
-            drainToReady()
+          if (fmt != format.wireByte) {
+            abortCopy(s"client framing is $format but server format is $fmt")
             throw new IllegalStateException(
-              s"copyIn: COPY format mismatch (server $fmt, expected $want)")
+              s"copyIn: COPY format mismatch (server $fmt, expected ${format.wireByte})")
           }
           started = true
         case 'E' =>
@@ -745,10 +513,6 @@ final class PgLiteClient(host: String, port: Int,
     }
   }
 
-  private def copyData(data: Array[Byte]): Unit = {
-    out.writeByte('d'); out.writeInt(4 + data.length); out.write(data)
-  }
-
   /** Run the CopyData producer, then CopyDone and collect the tag.
     * A failing row PRODUCER (e.g. a deserialization error mid-
     * partition in PgWire.copyDistributed) must not leave the
@@ -760,22 +524,18 @@ final class PgLiteClient(host: String, port: Int,
     try produce
     catch {
       case scala.util.control.NonFatal(e) =>
-        try {
-          val reason = String.valueOf(e.getMessage).getBytes(UTF_8)
-          out.writeByte('f'); out.writeInt(4 + reason.length + 1)
-          out.write(reason); out.writeByte(0); out.flush()
-          drainToReady()
-        } catch { case _: Throwable => () }
+        try abortCopy(String.valueOf(e.getMessage))
+        catch { case _: Throwable => () }
         throw e
     }
-    out.writeByte('c'); out.writeInt(4); out.flush() // CopyDone
+    send('c', Array.emptyByteArray); out.flush() // CopyDone
     var tag = ""
     var err: PgServerError = null
     var ready = false
     while (!ready) {
       val (tpe, payload) = readMessage()
       tpe match {
-        case 'C' => tag = new String(payload, 0, payload.length - 1, UTF_8)
+        case 'C' => tag = cString(payload)
         case 'E' => err = parseError(payload)
         case 'Z' => ready = true
         case 'S' | 'N' => ()
@@ -786,6 +546,12 @@ final class PgLiteClient(host: String, port: Int,
     tag
   }
 
+  /** CopyFail with `reason`, then resynchronize to ReadyForQuery. */
+  private def abortCopy(reason: String): Unit = {
+    sendCString('f', reason)
+    drainToReady()
+  }
+
   private def drainToReady(): Unit = {
     var ready = false
     while (!ready) {
@@ -793,6 +559,23 @@ final class PgLiteClient(host: String, port: Int,
       if (tpe == 'Z') ready = true
     }
   }
+
+  /** One frontend message: type byte, int32 length, body. */
+  private def send(tpe: Char, body: Array[Byte]): Unit = {
+    out.writeByte(tpe); out.writeInt(4 + body.length); out.write(body)
+  }
+
+  /** A message whose body is one NUL-terminated string ('Q' query,
+    * 'f' CopyFail reason), flushed. */
+  private def sendCString(tpe: Char, s: String): Unit = {
+    val b = s.getBytes(UTF_8)
+    out.writeByte(tpe); out.writeInt(4 + b.length + 1)
+    out.write(b); out.writeByte(0); out.flush()
+  }
+
+  /** A payload that is one NUL-terminated string (CommandComplete). */
+  private def cString(payload: Array[Byte]): String =
+    new String(payload, 0, payload.length - 1, UTF_8)
 
   /** Idempotent: the streaming read path closes both on exhaustion
     * and from a task-completion listener, whichever fires first. */
@@ -832,10 +615,4 @@ final class PgLiteClient(host: String, port: Int,
     }
     PgServerError(code, msg)
   }
-
-  private def readInt(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
-  private def readShort(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
 }

@@ -1,5 +1,6 @@
 package graft.io.pg
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.ConcurrentHashMap
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -59,13 +60,120 @@ object PgLiteEngine {
   /** Result of one statement: optional row set + command tag. */
   final case class Result(columns: Seq[Col], rows: Seq[Array[String]], tag: String)
 
-  /** COPY statement format: text, PGCOPY binary, or CSV. On the wire
-    * only binary sets the CopyIn/CopyOutResponse format byte — CSV is
-    * a flavor of the text format in the protocol. */
-  sealed trait CopyFormat
-  case object FmtText extends CopyFormat
-  case object FmtBinary extends CopyFormat
-  case object FmtCsv extends CopyFormat
+  /** COPY statement format — text, PGCOPY binary, or CSV — with all
+    * either wire end needs of it: the CopyIn/CopyOutResponse format
+    * byte (only binary sets it; CSV is a flavor of the text format in
+    * the protocol), the statement clause that selects it, the CopyData
+    * frames for a row stream, and the decode of a complete payload
+    * (null = SQL NULL). `types` are the copied columns' DDL types;
+    * only binary reads them. */
+  sealed abstract class CopyFormat(val wireByte: Int, val clause: String) {
+    /** One CopyData payload for a batch of rows. */
+    protected def encodeBatch(rows: Seq[Seq[Option[String]]], types: Seq[String]): Array[Byte]
+    def decode(payload: Array[Byte], types: Seq[String]): Seq[Seq[String]]
+    /** Stream `rows` as CopyData payloads of `batchRows` rows each,
+      * never holding more than one batch. */
+    def frames(rows: Iterator[Seq[Option[String]]], types: Seq[String],
+               batchRows: Int)(emit: Array[Byte] => Unit): Unit =
+      rows.grouped(batchRows).foreach(b => emit(encodeBatch(b, types)))
+  }
+  /** Text and CSV frame a batch as newline-terminated lines: one
+    * encodeRow per row, one mkString and one getBytes per batch. */
+  private def lineBatch(rows: Seq[Seq[Option[String]]],
+                        encodeRow: Seq[Option[String]] => String): Array[Byte] =
+    rows.map(encodeRow).mkString("", "\n", "\n").getBytes(UTF_8)
+  case object FmtText extends CopyFormat(0, "") {
+    protected def encodeBatch(rows: Seq[Seq[Option[String]]], types: Seq[String]): Array[Byte] =
+      lineBatch(rows, PgTextCopy.encodeRow)
+    def decode(payload: Array[Byte], types: Seq[String]): Seq[Seq[String]] =
+      PgTextCopy.splitLines(new String(payload, UTF_8)).map(PgTextCopy.decodeRow)
+  }
+  case object FmtCsv extends CopyFormat(0, " WITH (FORMAT CSV)") {
+    protected def encodeBatch(rows: Seq[Seq[Option[String]]], types: Seq[String]): Array[Byte] =
+      lineBatch(rows, PgCsvCopy.encodeRow)
+    def decode(payload: Array[Byte], types: Seq[String]): Seq[Seq[String]] =
+      PgCsvCopy.decodeRows(new String(payload, UTF_8))
+  }
+  case object FmtBinary extends CopyFormat(1, " WITH (FORMAT BINARY)") {
+    protected def encodeBatch(rows: Seq[Seq[Option[String]]], types: Seq[String]): Array[Byte] = {
+      val bb = new java.io.ByteArrayOutputStream()
+      rows.foreach(r => bb.write(PgBinaryCopy.encodeTuple(types, r)))
+      bb.toByteArray
+    }
+    def decode(payload: Array[Byte], types: Seq[String]): Seq[Seq[String]] =
+      PgBinaryCopy.decodeStream(payload, types)
+    /** The stream opens with the PGCOPY header and closes with the -1
+      * trailer, each its own CopyData frame. */
+    override def frames(rows: Iterator[Seq[Option[String]]], types: Seq[String],
+                        batchRows: Int)(emit: Array[Byte] => Unit): Unit = {
+      emit(PgBinaryCopy.header())
+      super.frames(rows, types, batchRows)(emit)
+      emit(PgBinaryCopy.trailer())
+    }
+  }
+
+  /** The published COPY format suffixes — bare / explicit TEXT,
+    * `BINARY` (legacy syntax) / `WITH (FORMAT BINARY)`, and
+    * `CSV` / `WITH (FORMAT CSV)` — anything else is a 42601. */
+  private def copyFormat(opts: String): CopyFormat =
+    opts.trim.toUpperCase.replaceAll("\\s+", " ") match {
+      case "" | "WITH (FORMAT TEXT)" | "(FORMAT TEXT)" => FmtText
+      case "BINARY" | "WITH BINARY" | "WITH (FORMAT BINARY)" |
+           "(FORMAT BINARY)" => FmtBinary
+      case "CSV" | "WITH CSV" | "WITH (FORMAT CSV)" |
+           "(FORMAT CSV)" => FmtCsv
+      case other => throw PgError("42601", s"bad COPY options: $other")
+    }
+
+  /** One resolved `COPY t [(cols)] FROM STDIN | TO STDOUT [format]`:
+    * direction, table, copy list with its DDL types, and format. */
+  final case class CopyStmt(fromStdin: Boolean, table: String,
+                            cols: Seq[String], types: Seq[String],
+                            format: CopyFormat)
+
+  /** Postgres type OIDs for the wire row description. */
+  def oidOf(pgType: String): Int = {
+    val t = pgType.toUpperCase.takeWhile(c => c.isLetter || c == ' ').trim
+    t match {
+      case "TEXT" | "VARCHAR" | "CHAR" => 25
+      case "INTEGER" | "INT" | "SERIAL" => 23
+      case "BIGINT" => 20
+      case "NUMERIC" | "DECIMAL" => 1700
+      case "DOUBLE PRECISION" => 701
+      case "BOOLEAN" => 16
+      case "TIMESTAMP" => 1114
+      case "DATE" => 1082
+      case "BYTEA" => 17
+      case _ => 25
+    }
+  }
+
+  /** Inverse of [[oidOf]]: the DDL type whose published binary send
+    * format ([[PgBinaryCopy]]) a binary parameter or result cell of
+    * this oid carries; None for an oid with no binary codec. */
+  def typeOfOid(oid: Int): Option[String] = Option(oid match {
+    case 25 => "TEXT"
+    case 23 => "INTEGER"
+    case 20 => "BIGINT"
+    case 701 => "DOUBLE PRECISION"
+    case 16 => "BOOLEAN"
+    case 1114 => "TIMESTAMP"
+    case 1082 => "DATE"
+    case 1700 => "NUMERIC"
+    case 17 => "BYTEA"
+    case _ => null
+  })
+
+  /** The published Bind format-code rule, per column (or parameter):
+    * zero codes = all text, one code = uniform, otherwise exactly one
+    * per column — any other count is 08P01, as in real PostgreSQL.
+    * `what` names the columns in the error ("parameter"). */
+  def formatCodes(codes: Seq[Int], n: Int, what: String): IndexedSeq[Int] =
+    if (codes.isEmpty) IndexedSeq.fill(n)(0)
+    else if (codes.length == 1) IndexedSeq.fill(n)(codes.head)
+    else if (codes.length == n) codes.toIndexedSeq
+    else throw PgError("08P01",
+      s"bind message has ${codes.length} $what formats but $n ${what}s")
 
   /** One WHERE predicate of the engine grammar — a comparison
     * `col (>=|<=|<|>|=) literal`, `col IN (…)`, `col LIKE '…'`, or
@@ -118,6 +226,12 @@ object PgLiteEngine {
     }
     def inTransaction: Boolean = active
     def isAborted: Boolean = aborted
+    /** 25P02: inside a failed transaction every statement but
+      * COMMIT/ROLLBACK is refused until the transaction ends. */
+    private[pg] def requireLive(): Unit =
+      if (active && aborted)
+        throw PgError("25P02", "current transaction is aborted, " +
+          "commands ignored until end of transaction block")
   }
 }
 
@@ -126,23 +240,6 @@ final class PgLiteEngine {
 
   private val schemas = ConcurrentHashMap.newKeySet[String]()
   private val tables = new ConcurrentHashMap[String, Table]()
-
-  /** Postgres type OIDs for the text-format wire row description. */
-  def oidOf(pgType: String): Int = {
-    val t = pgType.toUpperCase.takeWhile(c => c.isLetter || c == ' ').trim
-    t match {
-      case "TEXT" | "VARCHAR" | "CHAR" => 25
-      case "INTEGER" | "INT" | "SERIAL" => 23
-      case "BIGINT" => 20
-      case "NUMERIC" | "DECIMAL" => 1700
-      case "DOUBLE PRECISION" => 701
-      case "BOOLEAN" => 16
-      case "TIMESTAMP" => 1114
-      case "DATE" => 1082
-      case "BYTEA" => 17
-      case _ => 25
-    }
-  }
 
   /** Postgres type modifier for the wire row description: NUMERIC(p,s)
     * carries `((p << 16) | s) + 4` (the documented VARHDRSZ-offset
@@ -174,19 +271,19 @@ final class PgLiteEngine {
     if (up == "BEGIN" || up == "START TRANSACTION") begin(tx)
     else if (up == "COMMIT" || up == "END") commit(tx)
     else if (up == "ROLLBACK" || up == "ABORT") rollback(tx)
-    else if (tx != null && tx.active && tx.aborted)
-      throw PgError("25P02", "current transaction is aborted, " +
-        "commands ignored until end of transaction block")
-    else if (up.startsWith("CREATE SCHEMA")) createSchema(sql, tx)
-    else if (up.startsWith("CREATE TABLE")) createTable(sql, tx)
-    else if (up.startsWith("INSERT INTO")) insert(sql, tx)
-    else if ("(?is)^SELECT\\s+SETVAL\\s*\\(".r.findFirstIn(sql).isDefined)
-      setval(sql, tx)
-    else if ("(?is)^SELECT\\s+PG_SLEEP\\s*\\(".r.findFirstIn(sql).isDefined)
-      pgSleep(sql, tx)
-    else if (up.startsWith("SELECT")) select(sql, tx)
-    else if (up.startsWith("DROP TABLE")) dropTable(sql, tx)
-    else throw PgError("42601", s"unsupported statement: ${sql.take(60)}")
+    else {
+      if (tx != null) tx.requireLive()
+      if (up.startsWith("CREATE SCHEMA")) createSchema(sql, tx)
+      else if (up.startsWith("CREATE TABLE")) createTable(sql, tx)
+      else if (up.startsWith("INSERT INTO")) insert(sql, tx)
+      else if ("(?is)^SELECT\\s+SETVAL\\s*\\(".r.findFirstIn(sql).isDefined)
+        setval(sql, tx)
+      else if ("(?is)^SELECT\\s+PG_SLEEP\\s*\\(".r.findFirstIn(sql).isDefined)
+        pgSleep(sql, tx)
+      else if (up.startsWith("SELECT")) select(sql, tx)
+      else if (up.startsWith("DROP TABLE")) dropTable(sql, tx)
+      else throw PgError("42601", s"unsupported statement: ${sql.take(60)}")
+    }
   }
 
   /** Cancellation point (r19, VERDICT r18 task 5): consume a pending
@@ -1096,68 +1193,33 @@ final class PgLiteEngine {
     }
   }
 
-  /** COPY target resolution: `COPY schema.table (cols) FROM STDIN`.
-    * Returns (table, column order). The bulk-load path — the engine's
-    * batched-write posture over the wire, versus the reference's
-    * row-at-a-time INSERT loop (§2 row 9). */
-  def copyTarget(sql: String): (String, Seq[String]) = copyTarget(sql, null)
+  private val CopyRe = ("(?is)COPY\\s+([\\w]+(?:\\.[\\w]+)?)\\s*" +
+    "(?:\\(([^)]*)\\))?\\s+(FROM\\s+STDIN|TO\\s+STDOUT)\\s*(.*)$").r
 
-  def copyTarget(sql: String, tx: PgTx): (String, Seq[String]) = {
-    val (name, cols, _) = copyTargetFormat(sql, tx)
-    (name, cols)
-  }
-
-  /** The published COPY format suffixes — bare / explicit TEXT,
-    * `BINARY` (legacy syntax) / `WITH (FORMAT BINARY)`, and
-    * `CSV` / `WITH (FORMAT CSV)` — anything else is a 42601. */
-  private def copyFormat(opts: String): CopyFormat =
-    opts.trim.toUpperCase.replaceAll("\\s+", " ") match {
-      case "" | "WITH (FORMAT TEXT)" | "(FORMAT TEXT)" => FmtText
-      case "BINARY" | "WITH BINARY" | "WITH (FORMAT BINARY)" |
-           "(FORMAT BINARY)" => FmtBinary
-      case "CSV" | "WITH CSV" | "WITH (FORMAT CSV)" |
-           "(FORMAT CSV)" => FmtCsv
-      case other => throw PgError("42601", s"bad COPY options: $other")
+  /** COPY resolution, either direction — the bulk-load path (the
+    * engine's batched-write posture over the wire, versus the
+    * reference's row-at-a-time INSERT loop, §2 row 9) and the bulk
+    * export. The default copy list follows the direction: FROM STDIN
+    * takes every non-serial column (serials are DB-assigned), TO
+    * STDOUT every column (PG's COPY TO default; serials are real data
+    * on the way out). */
+  def copyStatement(sql: String, tx: PgTx): CopyStmt = {
+    val m = CopyRe.findFirstMatchIn(sql)
+      .getOrElse(throw PgError("42601", s"bad COPY: ${sql.take(60)}"))
+    val fromStdin = m.group(3).toUpperCase.startsWith("FROM")
+    val fmt = copyFormat(m.group(4))
+    val name = m.group(1).toLowerCase
+    val t = lookup(name, tx)
+      .getOrElse(throw PgError("42P01", s"relation \"$name\" does not exist"))
+    val cols = Option(m.group(2))
+      .map(_.split(",").map(_.trim.toLowerCase).toSeq)
+      .getOrElse(t.cols.filterNot(c => fromStdin && c.serial).map(_.name))
+    val types = cols.map { cn =>
+      t.cols.find(_.name == cn)
+        .getOrElse(throw PgError("42703", s"column \"$cn\" does not exist"))
+        .pgType
     }
-
-  /** Format-aware COPY FROM STDIN resolution: (table, columns,
-    * format). Column default mirrors the write posture: every
-    * non-serial column (serials are DB-assigned). */
-  def copyTargetFormat(sql: String, tx: PgTx): (String, Seq[String], CopyFormat) = {
-    val m = ("(?is)COPY\\s+([\\w]+(?:\\.[\\w]+)?)\\s*" +
-      "(?:\\(([^)]*)\\))?\\s+FROM\\s+STDIN\\s*(.*)$").r.findFirstMatchIn(sql)
-      .getOrElse(throw PgError("42601", s"bad COPY: ${sql.take(60)}"))
-    val fmt = copyFormat(m.group(3))
-    val name = m.group(1).toLowerCase
-    val t = lookup(name, tx)
-      .getOrElse(throw PgError("42P01", s"relation \"$name\" does not exist"))
-    val cols = Option(m.group(2))
-      .map(_.split(",").map(_.trim.toLowerCase).toSeq)
-      .getOrElse(t.cols.filterNot(_.serial).map(_.name))
-    cols.foreach { cn =>
-      if (!t.cols.exists(_.name == cn))
-        throw PgError("42703", s"column \"$cn\" does not exist") }
-    (name, cols, fmt)
-  }
-
-  /** Format-aware COPY TO STDOUT resolution — the bulk EXPORT side.
-    * Column default is ALL columns (PG's COPY TO default; serials are
-    * real data on the way out). */
-  def copyOutFormat(sql: String, tx: PgTx): (String, Seq[String], CopyFormat) = {
-    val m = ("(?is)COPY\\s+([\\w]+(?:\\.[\\w]+)?)\\s*" +
-      "(?:\\(([^)]*)\\))?\\s+TO\\s+STDOUT\\s*(.*)$").r.findFirstMatchIn(sql)
-      .getOrElse(throw PgError("42601", s"bad COPY: ${sql.take(60)}"))
-    val fmt = copyFormat(m.group(3))
-    val name = m.group(1).toLowerCase
-    val t = lookup(name, tx)
-      .getOrElse(throw PgError("42P01", s"relation \"$name\" does not exist"))
-    val cols = Option(m.group(2))
-      .map(_.split(",").map(_.trim.toLowerCase).toSeq)
-      .getOrElse(t.cols.map(_.name))
-    cols.foreach { cn =>
-      if (!t.cols.exists(_.name == cn))
-        throw PgError("42703", s"column \"$cn\" does not exist") }
-    (name, cols, fmt)
+    CopyStmt(fromStdin, name, cols, types, fmt)
   }
 
   /** Export rows for COPY TO STDOUT: the copy list's projection in
@@ -1177,26 +1239,10 @@ final class PgLiteEngine {
     }
   }
 
-  /** DDL types of `cols` in declaration strings (`NUMERIC(12,2)`,
-    * `BIGINT`, …) — what the binary COPY decode keys its per-field
-    * codec on. */
-  def colTypes(table: String, cols: Seq[String], tx: PgTx): Seq[String] = {
-    val t = lookup(table, tx)
-      .getOrElse(throw PgError("42P01", s"relation \"$table\" does not exist"))
-    cols.map { cn =>
-      t.cols.find(_.name == cn)
-        .getOrElse(throw PgError("42703", s"column \"$cn\" does not exist"))
-        .pgType
-    }
-  }
-
-  /** Apply a COPY batch (text-format rows already decoded): same
+  /** Apply a COPY batch (rows already decoded by their format): same
     * SERIAL/UNIQUE/FK semantics as [[insert]], all-or-nothing — a
     * violated row aborts the whole batch with the table unchanged
     * (Postgres COPY is a single command). */
-  def copyRows(table: String, cols: Seq[String],
-               rows: Seq[Seq[String]]): Result = copyRows(table, cols, rows, null)
-
   def copyRows(table: String, cols: Seq[String],
                rows: Seq[Seq[String]], tx: PgTx): Result = {
     val t = resolve(table, tx, forWrite = true)

@@ -4,6 +4,8 @@ import java.io.{DataInputStream, DataOutputStream, EOFException, IOException}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import PgBinaryCopy.{int16, int32}
+
 /** In-JVM PostgreSQL WIRE-PROTOCOL (v3) endpoint — the Postgres twin
   * of [[graft.io.s3.S3LiteServer]] (round-14, VERDICT r13 stretch
   * task 7): the reference's silver/gold legs execute against a LIVE
@@ -24,7 +26,13 @@ import java.nio.charset.StandardCharsets.UTF_8
   *     type OIDs / DataRow('D') text format / CommandComplete('C'),
   *     errors as ErrorResponse('E') with Postgres SQLSTATE codes,
   *     always closed by ReadyForQuery;
-  *   - Terminate 'X'.
+  *   - the extended protocol: Parse/Bind/Describe/Execute/Close/Sync/
+  *     Flush with text or binary parameters and result columns, and
+  *     Execute row limits answered by PortalSuspended (fetch cursors);
+  *   - COPY FROM STDIN (CopyInResponse, CopyData/CopyDone/CopyFail)
+  *     and COPY TO STDOUT (CopyOutResponse, CopyData, CopyDone) in the
+  *     text, CSV and binary formats ([[PgLiteEngine.CopyFormat]]);
+  *   - CancelRequest on a fresh socket; Terminate 'X'.
   *
   * Statement semantics come from [[PgLiteEngine]] (SERIAL / UNIQUE /
   * FOREIGN KEY runtime behavior — the id_mapping pattern the reference
@@ -33,6 +41,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * client isn't just mirroring the server's bugs.
   */
 final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
+  import PgLiteServer.isCopyStdio
 
   def port: Int = server.getLocalPort
   def stop(): Unit = server.close()
@@ -104,28 +113,15 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     def extTry(f: => Unit): Unit =
       if (!extFailed) {
         try f
-        catch {
-          case e: PgLiteEngine.PgError =>
-            sendError(out, e.code, e.message)
-            if (tx.inTransaction) tx.aborted = true
-            extFailed = true
-          case e: Exception =>
-            sendError(out, "XX000",
-              Option(e.getMessage).getOrElse(e.getClass.getName))
-            if (tx.inTransaction) tx.aborted = true
-            extFailed = true
-        }
+        catch { case e: Exception => statementFailed(out, tx, e); extFailed = true }
       }
     try {
       if (!startup(in, out, tx, pid, secret)) return
       var open = true
       while (open) {
-        val tpe = in.read()
+        val (tpe, body) = readFrame(in)
         if (tpe < 0) open = false
         else {
-          val len = in.readInt()
-          val body = new Array[Byte](len - 4)
-          in.readFully(body)
           tpe.toChar match {
             case 'Q' =>
               val sql = new String(body, 0, body.length - 1, UTF_8) // strip \0
@@ -201,13 +197,21 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     val end = b.indexOf(0, off)
     (new String(b, off, end - off, UTF_8), end + 1)
   }
-  private def int16(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 8) | (b(off + 1) & 0xff)
-  private def int32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
+  /** A message with no body: the extended completes, NoData,
+    * PortalSuspended, EmptyQueryResponse, CopyDone. */
   private def complete(out: DataOutputStream, tpe: Char): Unit = {
     out.writeByte(tpe); out.writeInt(4)
+  }
+
+  /** One frontend message: (type byte, body), or (-1, null) at EOF. */
+  private def readFrame(in: DataInputStream): (Int, Array[Byte]) = {
+    val tpe = in.read()
+    if (tpe < 0) (tpe, null)
+    else {
+      val body = new Array[Byte](in.readInt() - 4)
+      in.readFully(body)
+      (tpe, body)
+    }
   }
 
   /** Parse: store the statement text and its DECLARED parameter type
@@ -231,20 +235,9 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     * refused loudly (0A000) rather than mis-decoded. */
   private def decodeBinParam(oid: Int, b: Array[Byte],
                              off: Int, len: Int): String = {
-    val pgType = oid match {
-      case 25 => "TEXT"
-      case 23 => "INTEGER"
-      case 20 => "BIGINT"
-      case 701 => "DOUBLE PRECISION"
-      case 16 => "BOOLEAN"
-      case 1114 => "TIMESTAMP"
-      case 1082 => "DATE"
-      case 1700 => "NUMERIC"
-      case 17 => "BYTEA"
-      case other =>
-        throw PgLiteEngine.PgError("0A000",
-          s"binary parameter format not supported for type oid $other")
-    }
+    val pgType = PgLiteEngine.typeOfOid(oid).getOrElse(
+      throw PgLiteEngine.PgError("0A000",
+        s"binary parameter format not supported for type oid $oid"))
     try PgBinaryCopy.decodeField(pgType,
       java.util.Arrays.copyOfRange(b, off, off + len))
     catch {
@@ -253,16 +246,6 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
           s"bad binary parameter for oid $oid: ${e.message}")
     }
   }
-
-  /** Per-column result format of a portal: zero codes = all text, one
-    * code = uniform, otherwise one per column (the same rule Bind's
-    * parameter formats follow, per the docs). */
-  private def resultFmt(resFmts: Seq[Int], i: Int, ncols: Int): Int =
-    if (resFmts.isEmpty) 0
-    else if (resFmts.length == 1) resFmts.head
-    else if (resFmts.length == ncols) resFmts(i)
-    else throw PgLiteEngine.PgError("08P01",
-      s"${resFmts.length} result format codes for $ncols result columns")
 
   /** Bind: substitute the parameters into $1..$n as SQL literals
     * (NULL for the -1-length parameter; binary-format params decode
@@ -286,20 +269,13 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
       f
     }
     val nParams = int16(body, off); off += 2
-    // per the docs: zero codes = all text, one code = uniform,
-    // otherwise one per parameter
-    def fmtOf(i: Int): Int =
-      if (fmts.isEmpty) 0
-      else if (fmts.length == 1) fmts.head
-      else if (i < fmts.length) fmts(i)
-      else throw PgLiteEngine.PgError("08P01",
-        s"${fmts.length} parameter format codes for $nParams parameters")
+    val paramFmts = PgLiteEngine.formatCodes(fmts, nParams, "parameter")
     val params = (0 until nParams).map { i =>
       val len = int32(body, off); off += 4
       if (len < 0) None
       else {
         val v =
-          if (fmtOf(i) == 0) new String(body, off, len, UTF_8)
+          if (paramFmts(i) == 0) new String(body, off, len, UTF_8)
           else decodeBinParam(
             if (i < oids.length) oids(i) else 0, body, off, len)
         off += len
@@ -375,7 +351,7 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
           // format per column (r18) — what a real server reports for
           // a binary-result portal
           writeRowDescription(out, cols,
-            cols.indices.map(i => resultFmt(p.resFmts, i, cols.length)))
+            PgLiteEngine.formatCodes(p.resFmts, cols.length, "result column"))
       case 'S' =>
         val oids = prepared.get(name).map(_._2).getOrElse(
           throw PgLiteEngine.PgError("26000",
@@ -405,18 +381,10 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     val maxRows = if (body.length >= off + 4) int32(body, off) else 0
     val p = portals.getOrElse(portal,
       throw PgLiteEngine.PgError("34000", s"portal \"$portal\" does not exist"))
-    if (tx.inTransaction && tx.isAborted)
-      throw PgLiteEngine.PgError("25P02", "current transaction is aborted, " +
-        "commands ignored until end of transaction block")
-    def commandComplete(tag: String): Unit = {
-      val t = tag.getBytes(UTF_8)
-      out.writeByte('C'); out.writeInt(4 + t.length + 1)
-      out.write(t); out.writeByte(0)
-    }
-    if (p.completed) { commandComplete(p.tag); return }
+    tx.requireLive()
+    if (p.completed) { commandComplete(out, p.tag); return }
     if (p.result == null) {
-      if ("(?is)^COPY\\b.*\\b(FROM\\s+STDIN|TO\\s+STDOUT)\\b".r
-            .findFirstIn(p.sql.trim).isDefined)
+      if (isCopyStdio(p.sql))
         throw PgLiteEngine.PgError("0A000",
           "COPY FROM STDIN / TO STDOUT are simple-protocol statements here")
       p.result = withExec(tx)(engine.execute(p.sql, tx))
@@ -434,8 +402,7 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
       // (int4/int8 big-endian, float8 IEEE bits, bool byte, date/
       // timestamp 2000-epoch day/micro counts, base-10000 numerics,
       // text = its UTF-8 bytes) — every wire type, like real PG
-      val fmts = r.columns.indices
-        .map(i => resultFmt(p.resFmts, i, r.columns.length))
+      val fmts = PgLiteEngine.formatCodes(p.resFmts, r.columns.length, "result column")
       slice.foreach { row =>
         val cells = row.indices.map { i =>
           if (row(i) == null) null
@@ -448,12 +415,12 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     }
     p.pos = end
     if (p.pos < r.rows.length) {
-      out.writeByte('s'); out.writeInt(4) // PortalSuspended
+      complete(out, 's') // PortalSuspended
     } else {
       p.completed = true
       p.tag = r.tag
       p.result = null // cursor drained: free the rows, keep the tag
-      commandComplete(p.tag)
+      commandComplete(out, p.tag)
     }
   }
 
@@ -561,40 +528,25 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
                        out: DataOutputStream, tx: PgLiteEngine.PgTx): Unit = {
     val stmts = splitStatements(sql)
     if (stmts.isEmpty) {
-      out.writeByte('I'); out.writeInt(4) // EmptyQueryResponse
+      complete(out, 'I') // EmptyQueryResponse
     } else {
       var failed = false
       stmts.foreach { st =>
         if (!failed) {
           try {
             val r = withExec(tx) {
-              if ("(?is)^COPY\\b.*\\bFROM\\s+STDIN\\b".r
-                    .findFirstIn(st.trim).isDefined)
-                runCopyIn(st, in, out, tx)
-              else if ("(?is)^COPY\\b.*\\bTO\\s+STDOUT\\b".r
-                    .findFirstIn(st.trim).isDefined)
-                runCopyOut(st, out, tx)
+              if (isCopyStdio(st)) runCopy(st, in, out, tx)
               else engine.execute(st, tx)
             }
             if (r.columns.nonEmpty) {
               writeRowDescription(out, r.columns)
               r.rows.foreach(writeDataRow(out, _))
             }
-            val tag = r.tag.getBytes(UTF_8)
-            out.writeByte('C'); out.writeInt(4 + tag.length + 1)
-            out.write(tag); out.writeByte(0)
+            commandComplete(out, r.tag)
           } catch {
-            case e: PgLiteEngine.PgError =>
-              sendError(out, e.code, e.message)
-              // an error inside an open transaction ABORTS it: later
-              // statements answer 25P02 until COMMIT/ROLLBACK (PG)
-              if (tx.inTransaction) tx.aborted = true
-              failed = true // remaining statements are skipped, like PG
             case e: Exception =>
-              sendError(out, "XX000",
-                Option(e.getMessage).getOrElse(e.getClass.getName))
-              if (tx.inTransaction) tx.aborted = true
-              failed = true
+              statementFailed(out, tx, e)
+              failed = true // remaining statements are skipped, like PG
           }
         }
       }
@@ -602,105 +554,63 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     readyForQuery(out, tx)
   }
 
-  /** COPY … FROM STDIN, text OR binary format: CopyInResponse (with
-    * the statement's format echoed per column), then CopyData frames
-    * until CopyDone/CopyFail — text decoded per the published text
-    * rules (tab-delimited fields, newline rows, `\N` null, backslash
-    * escapes), binary through [[PgBinaryCopy.decodeStream]] — and
-    * applied all-or-nothing through the engine. */
-  private def runCopyIn(st: String, in: DataInputStream,
-                        out: DataOutputStream,
-                        tx: PgLiteEngine.PgTx): PgLiteEngine.Result = {
-    if (tx.inTransaction && tx.isAborted)
-      throw PgLiteEngine.PgError("25P02", "current transaction is aborted, " +
-        "commands ignored until end of transaction block")
-    val (table, cols, format) = engine.copyTargetFormat(st, tx) // validates BEFORE 'G'
-    // only BINARY sets the wire format byte; CSV rides the text format
-    val fmt = if (format == PgLiteEngine.FmtBinary) 1 else 0
-    // CopyInResponse: 'G', int8 format, int16 ncols, int16[ncols] format
-    out.writeByte('G'); out.writeInt(4 + 1 + 2 + 2 * cols.length)
-    out.writeByte(fmt); out.writeShort(cols.length)
-    cols.foreach(_ => out.writeShort(fmt))
-    out.flush()
-    val buf = new java.io.ByteArrayOutputStream()
-    var done = false
-    var fail: Option[String] = None
-    while (!done) {
-      val tpe = in.read()
-      if (tpe < 0) throw new EOFException("connection closed mid-COPY")
-      val len = in.readInt()
-      val body = new Array[Byte](len - 4)
-      in.readFully(body)
-      tpe.toChar match {
-        case 'd' => buf.write(body)
-        case 'c' => done = true
-        case 'f' =>
-          fail = Some(new String(body, 0, math.max(0, body.length - 1), UTF_8))
-          done = true
-        case 'H' | 'S' => () // Flush/Sync tolerated
-        case other =>
-          throw PgLiteEngine.PgError("08P01", s"unexpected '$other' during COPY")
+  /** COPY … FROM STDIN / TO STDOUT in any [[PgLiteEngine.CopyFormat]],
+    * resolved (and validated) before the CopyIn/CopyOutResponse goes
+    * out. FROM STDIN reads CopyData frames until CopyDone/CopyFail and
+    * applies the decoded rows all-or-nothing through the engine. TO
+    * STDOUT streams the table's projection as CopyData frames, then
+    * CopyDone; per the published flow no frontend messages are read
+    * during COPY OUT. */
+  private def runCopy(st: String, in: DataInputStream,
+                      out: DataOutputStream,
+                      tx: PgLiteEngine.PgTx): PgLiteEngine.Result = {
+    tx.requireLive()
+    val c = engine.copyStatement(st, tx)
+    // CopyIn/CopyOutResponse: int8 format, int16 ncols, int16[ncols] format
+    def copyResponse(tpe: Char): Unit = {
+      val fmt = c.format.wireByte
+      out.writeByte(tpe); out.writeInt(4 + 1 + 2 + 2 * c.cols.length)
+      out.writeByte(fmt); out.writeShort(c.cols.length)
+      c.cols.foreach(_ => out.writeShort(fmt))
+    }
+    if (c.fromStdin) {
+      copyResponse('G')
+      out.flush()
+      val buf = new java.io.ByteArrayOutputStream()
+      var done = false
+      var fail: Option[String] = None
+      while (!done) {
+        val (tpe, body) = readFrame(in)
+        if (tpe < 0) throw new EOFException("connection closed mid-COPY")
+        tpe.toChar match {
+          case 'd' => buf.write(body)
+          case 'c' => done = true
+          case 'f' =>
+            fail = Some(new String(body, 0, math.max(0, body.length - 1), UTF_8))
+            done = true
+          case 'H' | 'S' => () // Flush/Sync tolerated
+          case other =>
+            throw PgLiteEngine.PgError("08P01", s"unexpected '$other' during COPY")
+        }
       }
+      fail.foreach(msg => throw PgLiteEngine.PgError("57014", s"COPY failed: $msg"))
+      engine.copyRows(c.table, c.cols, c.format.decode(buf.toByteArray, c.types), tx)
+    } else {
+      val rows = engine.copyOutRows(c.table, c.cols, tx)
+      copyResponse('H')
+      c.format.frames(rows.iterator.map(_.map(Option(_)).toSeq), c.types,
+        batchRows = 1024) { data =>
+        out.writeByte('d'); out.writeInt(4 + data.length); out.write(data)
+      }
+      complete(out, 'c') // CopyDone
+      PgLiteEngine.Result(Nil, Nil, s"COPY ${rows.length}")
     }
-    fail.foreach(msg => throw PgLiteEngine.PgError("57014", s"COPY failed: $msg"))
-    val rows = format match {
-      case PgLiteEngine.FmtBinary =>
-        PgBinaryCopy.decodeStream(buf.toByteArray,
-          engine.colTypes(table, cols, tx))
-      case PgLiteEngine.FmtCsv =>
-        PgCsvCopy.decodeRows(new String(buf.toByteArray, UTF_8))
-      case PgLiteEngine.FmtText =>
-        PgTextCopy.splitLines(new String(buf.toByteArray, UTF_8))
-          .map(PgTextCopy.decodeRow)
-    }
-    engine.copyRows(table, cols, rows, tx)
   }
 
-  /** COPY … TO STDOUT, text OR binary — the bulk EXPORT side:
-    * CopyOutResponse('H') with the statement's format, the table's
-    * projection streamed as CopyData frames (text rows through
-    * [[PgTextCopy]], binary through [[PgBinaryCopy]] header/tuples/
-    * trailer), CopyDone, then "COPY n". No frontend messages are read
-    * during COPY OUT per the published flow. */
-  private def runCopyOut(st: String, out: DataOutputStream,
-                         tx: PgLiteEngine.PgTx): PgLiteEngine.Result = {
-    if (tx.inTransaction && tx.isAborted)
-      throw PgLiteEngine.PgError("25P02", "current transaction is aborted, " +
-        "commands ignored until end of transaction block")
-    val (table, cols, format) = engine.copyOutFormat(st, tx)
-    val rows = engine.copyOutRows(table, cols, tx)
-    val fmt = if (format == PgLiteEngine.FmtBinary) 1 else 0
-    // CopyOutResponse: 'H', int8 format, int16 ncols, int16[ncols] format
-    out.writeByte('H'); out.writeInt(4 + 1 + 2 + 2 * cols.length)
-    out.writeByte(fmt); out.writeShort(cols.length)
-    cols.foreach(_ => out.writeShort(fmt))
-    def frame(data: Array[Byte]): Unit = {
-      out.writeByte('d'); out.writeInt(4 + data.length); out.write(data)
-    }
-    format match {
-      case PgLiteEngine.FmtBinary =>
-        val types = engine.colTypes(table, cols, tx)
-        frame(PgBinaryCopy.header())
-        rows.grouped(1024).foreach { group =>
-          val bb = new java.io.ByteArrayOutputStream()
-          group.foreach(r => bb.write(
-            PgBinaryCopy.encodeTuple(types, r.map(Option(_)).toSeq)))
-          frame(bb.toByteArray)
-        }
-        frame(PgBinaryCopy.trailer())
-      case PgLiteEngine.FmtCsv =>
-        rows.grouped(1024).foreach { group =>
-          frame(group.map(r => PgCsvCopy.encodeRow(r.map(Option(_)).toSeq))
-            .mkString("", "\n", "\n").getBytes(UTF_8))
-        }
-      case PgLiteEngine.FmtText =>
-        rows.grouped(1024).foreach { group =>
-          frame(group.map(r => PgTextCopy.encodeRow(r.map(Option(_)).toSeq))
-            .mkString("", "\n", "\n").getBytes(UTF_8))
-        }
-    }
-    out.writeByte('c'); out.writeInt(4) // CopyDone
-    PgLiteEngine.Result(Nil, Nil, s"COPY ${rows.length}")
+  private def commandComplete(out: DataOutputStream, tag: String): Unit = {
+    val t = tag.getBytes(UTF_8)
+    out.writeByte('C'); out.writeInt(4 + t.length + 1)
+    out.write(t); out.writeByte(0)
   }
 
   private def writeRowDescription(
@@ -714,7 +624,7 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
       out.write(n); out.writeByte(0)
       out.writeInt(0)                   // table oid (not tracked)
       out.writeShort(0)                 // attribute number
-      out.writeInt(engine.oidOf(c.pgType)) // type oid
+      out.writeInt(PgLiteEngine.oidOf(c.pgType)) // type oid
       out.writeShort(-1)                // typlen (varlena)
       out.writeInt(engine.typmodOf(c.pgType)) // typmod (NUMERIC p,s)
       // format: text, unless the portal resolved this column binary
@@ -739,6 +649,20 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
     }
   }
 
+  /** ErrorResponse for a failed statement — its SQLSTATE, XX000 for
+    * anything not a [[PgLiteEngine.PgError]] — and an error inside an
+    * open transaction ABORTS it: later statements answer 25P02 until
+    * COMMIT/ROLLBACK (PG). */
+  private def statementFailed(out: DataOutputStream, tx: PgLiteEngine.PgTx,
+                              e: Exception): Unit = {
+    e match {
+      case pe: PgLiteEngine.PgError => sendError(out, pe.code, pe.message)
+      case _ => sendError(out, "XX000",
+        Option(e.getMessage).getOrElse(e.getClass.getName))
+    }
+    if (tx.inTransaction) tx.aborted = true
+  }
+
   private def sendError(out: DataOutputStream, code: String, msg: String): Unit = {
     val fields = Seq('S' -> "ERROR", 'V' -> "ERROR", 'C' -> code, 'M' -> msg)
     val len = 4 + fields.map { case (_, v) => 1 + v.getBytes(UTF_8).length + 1 }.sum + 1
@@ -752,6 +676,13 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
 }
 
 object PgLiteServer {
+  private val CopyStdioRe = "(?is)^COPY\\b.*\\b(FROM\\s+STDIN|TO\\s+STDOUT)\\b".r
+
+  /** A COPY that streams over the connection (FROM STDIN / TO STDOUT):
+    * the simple-query path runs it, the extended path refuses it. */
+  private def isCopyStdio(sql: String): Boolean =
+    CopyStdioRe.findFirstIn(sql.trim).isDefined
+
   /** Start on an ephemeral loopback port with a fresh engine. */
   def start(): (PgLiteServer, PgLiteEngine) = {
     val engine = new PgLiteEngine

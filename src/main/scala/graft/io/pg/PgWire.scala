@@ -122,62 +122,44 @@ object PgWire {
     * which corpus-class callers hold anyway), by the adaptive target
     * of `rowsPerConnection` rows per connection above that floor.
     * Column order is the frame's; values ship as [[wireText]] — the
-    * exact serialization [[graft.pipeline.PgGold.fromWire]] inverts. */
+    * exact serialization [[graft.pipeline.PgGold.fromWire]] inverts —
+    * framed in `format`. For the published COPY BINARY format
+    * ([[PgBinaryCopy]]: int8/float8 bit patterns, microsecond
+    * timestamps, base-10000 numerics instead of text escaping — the
+    * faster serialization a production bulk loader prefers) the
+    * per-column DDL types derive from the frame's schema exactly as
+    * the stage-table DDL derives them ([[graft.io.Sinks.pgType]]);
+    * `ref_pg_copy_binary`'s oracle proves the formats land
+    * value-identical tables. */
   def copyDistributed(df: DataFrame, host: String, port: Int,
                       table: String, numPartitions: Int = 8,
                       rowsHint: Option[Long] = None,
-                      rowsPerConnection: Long = 100000L): Unit = {
-    val cols = df.columns.toSeq
-    val copySql = s"COPY $table (${cols.mkString(", ")}) FROM STDIN"
+                      rowsPerConnection: Long = 100000L,
+                      format: PgLiteEngine.CopyFormat = PgLiteEngine.FmtText): Unit = {
+    val copySql = s"COPY $table (${df.columns.mkString(", ")}) FROM STDIN${format.clause}"
+    val types = df.schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq
     val target = writeConnections(df.rdd.getNumPartitions, numPartitions,
       rowsHint, rowsPerConnection)
     reshapeForWrite(df, target).foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val c = new PgLiteClient(host, port)
         c.connect()
-        try {
-          val rows = it.map(r =>
-            cols.indices.map(i => Option(r.get(i)).map(wireText)))
-          c.copyIn(copySql, rows, batchRows = 1024)
-          ()
-        } finally c.close()
+        try copyPartition(c, copySql, it, format, types)
+        finally c.close()
+        ()
       }
     }
   }
 
-  /** [[copyDistributed]] in the published COPY BINARY format
-    * ([[PgBinaryCopy]]): per-field typed binary encodings (int8/float8
-    * bit patterns, microsecond timestamps, base-10000 numerics) instead
-    * of text escaping — the faster serialization a production bulk
-    * loader prefers, with the per-column DDL types derived from the
-    * frame's schema exactly as the stage-table DDL derives them
-    * ([[graft.io.Sinks.pgType]]). Same connection-per-partition,
-    * constant-memory, at-least-once-per-partition posture as the text
-    * variant; `ref_pg_copy_binary`'s oracle proves the two formats land
-    * value-identical tables. */
-  def copyDistributedBinary(df: DataFrame, host: String, port: Int,
-                            table: String, numPartitions: Int = 8,
-                            rowsHint: Option[Long] = None,
-                            rowsPerConnection: Long = 100000L): Unit = {
-    val cols = df.columns.toSeq
-    val types = df.schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq
-    val copySql =
-      s"COPY $table (${cols.mkString(", ")}) FROM STDIN WITH (FORMAT BINARY)"
-    val target = writeConnections(df.rdd.getNumPartitions, numPartitions,
-      rowsHint, rowsPerConnection)
-    reshapeForWrite(df, target).foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = new PgLiteClient(host, port)
-        c.connect()
-        try {
-          val rows = it.map(r =>
-            cols.indices.map(i => Option(r.get(i)).map(wireText)))
-          c.copyInBinary(copySql, rows, types, batchRows = 1024)
-          ()
-        } finally c.close()
-      }
-    }
-  }
+  /** One partition's COPY over `c`: each row's cells as [[wireText]]
+    * (None = NULL), streamed in `format`'s batches. Returns the
+    * server's tag ("COPY n"). */
+  private def copyPartition(c: PgLiteClient, copySql: String, it: Iterator[Row],
+                            format: PgLiteEngine.CopyFormat,
+                            types: Seq[String]): String =
+    c.copyIn(copySql,
+      it.map(r => types.indices.map(i => Option(r.get(i)).map(wireText))),
+      format, types)
 
   /** DISTRIBUTED wire READ — the mirror of [[copyDistributed]] on the
     * scan side (§2 #10's production posture: Spark's own JDBC source
@@ -684,9 +666,9 @@ object PgWire {
       case _ => throw new IllegalArgumentException(
         s"table must be schema-qualified: $table")
     }
-    val cols = df.columns.toSeq
-    val colList = cols.mkString(", ")
+    val colList = df.columns.mkString(", ")
     val schema = df.schema
+    val types = schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq
     val runId = newRunId()
     if (janitor) { // janitor: a previous run hard-killed mid-write may
       // have left stages no later attempt-numbered drop can ever match —
@@ -710,11 +692,8 @@ object PgWire {
         val n = try {
           c.query(s"DROP TABLE IF EXISTS $schemaName.$stage")
           c.query(graft.io.Sinks.createTableDdl(schema, schemaName, stage))
-          val rows = it.map(r =>
-            cols.indices.map(i => Option(r.get(i)).map(wireText)))
-          val tag = c.copyIn(s"COPY $schemaName.$stage ($colList) FROM STDIN",
-            rows, batchRows = 1024)
-          tag.stripPrefix("COPY ").trim.toLong
+          copyPartition(c, s"COPY $schemaName.$stage ($colList) FROM STDIN",
+            it, PgLiteEngine.FmtText, types).stripPrefix("COPY ").trim.toLong
         } finally c.close()
         Iterator.single((pid, stage, n))
       }.collect().sortBy(_._1) // partition-count-sized driver metadata

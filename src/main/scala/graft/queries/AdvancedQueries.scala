@@ -731,17 +731,19 @@ object AdvancedQueries {
     * planner regression re-introducing the shuffle flips the gate red,
     * not just slower. This is the nightly-merge lever at 100 TB: the
     * dimension pays its shuffle once at layout time, then every batch
-    * merge streams bucket-to-bucket. The merge hints pin the sort-merge
+    * merge streams bucket-to-bucket. The merge hint pins the sort-merge
     * choice on the RE-planned frame too (the harness executes this
     * DataFrame after the finally block restores the broadcast
-    * threshold — same trap as joinBucketed). */
+    * threshold — same trap as joinBucketed). It rides the snapshot
+    * side only: the update batch also feeds the union outside the
+    * anti-join, where Spark drops a hint as reaching no join. */
   def scd2UpsertBucketed(s: SparkSession, dir: String): DataFrame = {
     val (ct, ut, _) = scdBucketedTables(s, dir)
     val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       val merged = graft.etl.Scd.upsertByKey(
-        s.table(ct).hint("merge"), s.table(ut).hint("merge"),
+        s.table(ct).hint("merge"), s.table(ut),
         Seq("c_custkey"))
       merged.withColumn("scd_upsert_exchanges", lit(exchangeCensus(merged)))
         .orderBy(col("c_custkey"))

@@ -332,7 +332,7 @@ object RefQueries {
         // seg as text — the shape a real driver's prepared path
         // requests — so the binary RESULT codec sits under this
         // gate's oracle hash, not just its spec
-        c.execParamsFormats(
+        c.execParams(
             "SELECT id, seg FROM gold.segment ORDER BY id",
             Nil, resultFormats = Seq(1, 0))
           .rows.map(r => (r(0).get.toInt, r(1).get))
@@ -461,7 +461,7 @@ object RefQueries {
   }
 
   /** BINARY-format wire bulk-load gate (round-16,
-    * [[graft.io.pg.PgWire.copyDistributedBinary]] /
+    * [[graft.io.pg.PgWire.copyDistributed]] in binary /
     * [[graft.io.pg.PgBinaryCopy]]): the published `COPY … WITH (FORMAT
     * BINARY)` field layouts — big-endian int8, IEEE float8 bit
     * patterns, microsecond-epoch timestamps — shipped by 8 concurrent
@@ -485,9 +485,9 @@ object RefQueries {
       val back = try {
         c.query(graft.io.Sinks.createSchemaDdl("silver"))
         c.query(graft.io.Sinks.createTableDdl(schema, "silver", "orders_bin"))
-        graft.io.pg.PgWire.copyDistributedBinary(
+        graft.io.pg.PgWire.copyDistributed(
           orders, "127.0.0.1", server.port, "silver.orders_bin",
-          numPartitions = 8)
+          numPartitions = 8, format = graft.io.pg.PgLiteEngine.FmtBinary)
         c.query("SELECT o_orderkey, o_orderstatus, o_totalprice, " +
           "o_orderdate FROM silver.orders_bin")
       } finally c.close()
@@ -497,7 +497,7 @@ object RefQueries {
   }
 
   /** COPY TO STDOUT gate (round-16, [[graft.io.pg.PgLiteClient
-    * .copyOut]] / `PgLiteServer.runCopyOut`): the bulk EXPORT side of
+    * .copyOut]] / `PgLiteServer.runCopy`): the bulk EXPORT side of
     * the protocol — the cleaned customer frame lands over COPY FROM
     * STDIN, then reads back through `COPY … TO STDOUT` in BOTH wire
     * formats; the text and binary exports are REQUIRED cell-identical
@@ -525,8 +525,8 @@ object RefQueries {
           rows)
         val sel = "COPY silver.customer_out (c_custkey, c_name, c_mktsegment)"
         val text = c.copyOut(s"$sel TO STDOUT")
-        val bin = c.copyOutBinary(s"$sel TO STDOUT WITH (FORMAT BINARY)",
-          cleaned.schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq)
+        val bin = c.copyOut(s"$sel TO STDOUT WITH (FORMAT BINARY)",
+          graft.io.pg.PgLiteEngine.FmtBinary, cleaned.schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq)
         require(text == bin,
           "text and binary COPY TO STDOUT exports disagree")
         text
@@ -980,12 +980,13 @@ object RefQueries {
             Option(r.get(1)).map(_.toString),
             Option(r.get(2)).map(_.toString))
         }.toSeq
-        val tag = c.copyInCsv("COPY silver.customer_csv " +
+        val tag = c.copyIn("COPY silver.customer_csv " +
           "(c_custkey, c_name, c_mktsegment) FROM STDIN WITH (FORMAT CSV)",
-          rows.iterator)
+          rows.iterator, graft.io.pg.PgLiteEngine.FmtCsv)
         require(tag == s"COPY ${rows.length}", s"unexpected COPY tag: $tag")
         val sel = "COPY silver.customer_csv (c_custkey, c_name, c_mktsegment)"
-        val csv = c.copyOutCsv(s"$sel TO STDOUT WITH (FORMAT CSV)")
+        val csv = c.copyOut(s"$sel TO STDOUT WITH (FORMAT CSV)",
+          graft.io.pg.PgLiteEngine.FmtCsv)
         val text = c.copyOut(s"$sel TO STDOUT")
         require(csv == text, "CSV and text COPY TO STDOUT exports disagree")
         csv

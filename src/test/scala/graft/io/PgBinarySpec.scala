@@ -162,8 +162,8 @@ class PgBinarySpec extends SparkSpec {
         c.query(Sinks.createTableDdl(schema, "fmt", "via_bin"))
         PgWire.copyDistributed(df, "127.0.0.1", server.port,
           "fmt.via_text", numPartitions = 4)
-        PgWire.copyDistributedBinary(df, "127.0.0.1", server.port,
-          "fmt.via_bin", numPartitions = 4)
+        PgWire.copyDistributed(df, "127.0.0.1", server.port,
+          "fmt.via_bin", numPartitions = 4, format = PgLiteEngine.FmtBinary)
         val sel = s"SELECT ${schema.fieldNames.mkString(", ")} FROM fmt"
         val t = c.query(s"$sel.via_text").rows.sortBy(_.head.get.toLong)
         val b = c.query(s"$sel.via_bin").rows.sortBy(_.head.get.toLong)
@@ -187,12 +187,13 @@ class PgBinarySpec extends SparkSpec {
         }.getMessage should include("format mismatch")
         // binary framing into a text statement
         intercept[IllegalStateException] {
-          c.copyInBinary("COPY s.t (k) FROM STDIN",
-            Iterator(Seq(Some("1"))), Seq("BIGINT"))
+          c.copyIn("COPY s.t (k) FROM STDIN",
+            Iterator(Seq(Some("1"))), PgLiteEngine.FmtBinary, Seq("BIGINT"))
         }.getMessage should include("format mismatch")
         // the connection survived both aborts; a correct COPY lands
-        c.copyInBinary("COPY s.t (k) FROM STDIN WITH (FORMAT BINARY)",
-          Iterator(Seq(Some("5")), Seq(None)), Seq("BIGINT")) shouldBe "COPY 2"
+        c.copyIn("COPY s.t (k) FROM STDIN WITH (FORMAT BINARY)",
+          Iterator(Seq(Some("5")), Seq(None)), PgLiteEngine.FmtBinary,
+          Seq("BIGINT")) shouldBe "COPY 2"
         c.query("SELECT k FROM s.t ORDER BY k").rows shouldBe
           Seq(Seq(Some("5")), Seq(None))
       } finally c.close()
@@ -251,10 +252,11 @@ class PgBinarySpec extends SparkSpec {
       val c = new PgLiteClient("127.0.0.1", server.port)
       c.connect()
       try {
-        c.copyInBinary("COPY bfuzz (k, v, d, n, b, ts, dt) FROM STDIN BINARY",
-          rows.iterator, types) shouldBe "COPY 300"
-        val back = c.copyOutBinary(
-          "COPY bfuzz (k, v, d, n, b, ts, dt) TO STDOUT BINARY", types)
+        c.copyIn("COPY bfuzz (k, v, d, n, b, ts, dt) FROM STDIN BINARY",
+          rows.iterator, PgLiteEngine.FmtBinary, types) shouldBe "COPY 300"
+        val back = c.copyOut(
+          "COPY bfuzz (k, v, d, n, b, ts, dt) TO STDOUT BINARY",
+          PgLiteEngine.FmtBinary, types)
           .sortBy(_.head.get.toLong)
         back shouldBe rows
       } finally c.close()
@@ -294,16 +296,57 @@ class PgBinarySpec extends SparkSpec {
       val c = new PgLiteClient("127.0.0.1", server.port)
       c.connect()
       try {
-        c.copyInCsv("COPY cfuzz (k, v) FROM STDIN WITH (FORMAT CSV)",
-          rows.iterator) shouldBe "COPY 200"
+        c.copyIn("COPY cfuzz (k, v) FROM STDIN WITH (FORMAT CSV)",
+          rows.iterator, PgLiteEngine.FmtCsv) shouldBe "COPY 200"
         // CSV export ≡ what went in (NULL vs "" preserved)
-        val back = c.copyOutCsv("COPY cfuzz (k, v) TO STDOUT WITH (FORMAT CSV)")
+        val back = c.copyOut("COPY cfuzz (k, v) TO STDOUT WITH (FORMAT CSV)",
+          PgLiteEngine.FmtCsv)
           .sortBy(_.head.get.toLong)
         back shouldBe rows
         // and the TEXT export of the same table agrees cell-for-cell
         val viaText = c.copyOut("COPY cfuzz (k, v) TO STDOUT")
           .sortBy(_.head.get.toLong)
         viaText shouldBe rows
+      } finally c.close()
+    } finally server.stop()
+  }
+
+  behavior of "COPY format matrix"
+
+  it should "read back identically for every copy-in × copy-out format pair" in {
+    import PgLiteEngine.{FmtBinary, FmtCsv, FmtText}
+    val formats = Seq(FmtText, FmtCsv, FmtBinary)
+    val cols = "k, t, n, d, b, dt, ts, m, y"
+    val types = Seq("INTEGER", "TEXT", "BIGINT", "DOUBLE PRECISION", "BOOLEAN",
+      "DATE", "TIMESTAMP", "NUMERIC(12,2)", "BYTEA")
+    // every wire type; text cells hold each format's special characters
+    val texts = Seq(None, Some(""), Some("tab\there"), Some("line\nbreak"),
+      Some("a,b"), Some("q\"x"), Some("back\\slash"), Some("\\N"))
+    val rows: Seq[Seq[Option[String]]] = texts.zipWithIndex.map { case (t, k) =>
+      def o(v: String): Option[String] = if (k % 3 == 2) None else Some(v)
+      Seq(Some(k.toString), t, o((k * 1000000000000L - 5).toString),
+        o((k - 3.5).toString), o((k % 2 == 0).toString), o(s"20${10 + k}-0${1 + k}-15"),
+        o(s"1999-12-31 23:59:${10 + k}.123456"), o(s"${k * 100 - 250}.${k}5"),
+        o(f"\\x00ff$k%02x"))
+    }
+    val (server, engine) = PgLiteServer.start()
+    try {
+      val c = new PgLiteClient("127.0.0.1", server.port)
+      c.connect()
+      try {
+        formats.foreach { in =>
+          engine.execute(s"CREATE TABLE x_$in (k INTEGER, t TEXT, n BIGINT, " +
+            "d DOUBLE PRECISION, b BOOLEAN, dt DATE, ts TIMESTAMP, " +
+            "m NUMERIC(12,2), y BYTEA)")
+          c.copyIn(s"COPY x_$in ($cols) FROM STDIN${in.clause}",
+            rows, in, types) shouldBe s"COPY ${rows.length}"
+          formats.foreach { out =>
+            withClue(s"in $in, out $out: ") {
+              c.copyOut(s"COPY x_$in ($cols) TO STDOUT${out.clause}", out, types)
+                .sortBy(_.head.get.toInt) shouldBe rows
+            }
+          }
+        }
       } finally c.close()
     } finally server.stop()
   }
@@ -320,15 +363,16 @@ class PgBinarySpec extends SparkSpec {
       try {
         c.query(Sinks.createSchemaDdl("ex"))
         c.query(Sinks.createTableDdl(schema, "ex", "t"))
-        PgWire.copyDistributedBinary(df, "127.0.0.1", server.port,
-          "ex.t", numPartitions = 4)
+        PgWire.copyDistributed(df, "127.0.0.1", server.port,
+          "ex.t", numPartitions = 4, format = PgLiteEngine.FmtBinary)
         val cols = schema.fieldNames.mkString(", ")
         val viaSelect = c.query(s"SELECT $cols FROM ex.t").rows
           .sortBy(_.head.get.toLong)
         val viaText = c.copyOut(s"COPY ex.t ($cols) TO STDOUT")
           .sortBy(_.head.get.toLong)
-        val viaBin = c.copyOutBinary(
-          s"COPY ex.t ($cols) TO STDOUT WITH (FORMAT BINARY)", types)
+        val viaBin = c.copyOut(
+          s"COPY ex.t ($cols) TO STDOUT WITH (FORMAT BINARY)",
+          PgLiteEngine.FmtBinary, types)
           .sortBy(_.head.get.toLong)
         viaText should have size 97
         viaText shouldBe viaSelect // text export ≡ wire SELECT, nulls included
@@ -379,8 +423,9 @@ class PgBinarySpec extends SparkSpec {
       val c = new PgLiteClient("127.0.0.1", server.port)
       c.connect()
       try {
-        c.copyInBinary("COPY s.t (k) FROM STDIN BINARY",
-          Iterator(Seq(Some("1"))), Seq("BIGINT")) shouldBe "COPY 1"
+        c.copyIn("COPY s.t (k) FROM STDIN BINARY",
+          Iterator(Seq(Some("1"))), PgLiteEngine.FmtBinary,
+          Seq("BIGINT")) shouldBe "COPY 1"
         // a producer failure mid-binary-stream aborts via CopyFail
         val dying = new Iterator[Seq[Option[String]]] {
           private var sent = false
@@ -390,7 +435,8 @@ class PgBinarySpec extends SparkSpec {
             else throw new RuntimeException("producer died")
         }
         val boom = intercept[RuntimeException] {
-          c.copyInBinary("COPY s.t (k) FROM STDIN BINARY", dying, Seq("BIGINT"))
+          c.copyIn("COPY s.t (k) FROM STDIN BINARY", dying,
+            PgLiteEngine.FmtBinary, Seq("BIGINT"))
         }
         boom.getMessage should include("producer died")
         // nothing from the failed COPY landed; the connection survived

@@ -970,6 +970,28 @@ class PgLiteSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  it should "refuse a Bind with more parameter format codes than parameters" in {
+    val (server, _) = PgLiteServer.start()
+    val c = new PgLiteClient("127.0.0.1", server.port)
+    try {
+      c.connect()
+      c.query("CREATE TABLE bf (a INTEGER, b INTEGER)")
+      // 3 codes for 2 parameters is neither 0, 1 nor one per parameter:
+      // real PostgreSQL answers "bind message has 3 parameter formats
+      // but 2 parameters" (08P01) instead of binding
+      val two = Seq(Some("1".getBytes("UTF-8")), Some("2".getBytes("UTF-8")))
+      intercept[c.PgServerError](c.execExtended(
+        "INSERT INTO bf (a, b) VALUES ($1, $2)", Seq(0, 0), two,
+        Seq(0, 0, 0))).code shouldBe "08P01"
+      // nothing ran, and the connection still serves the same pipeline
+      c.query("SELECT count(*) FROM bf").rows.head.head.get shouldBe "0"
+      c.execExtended("INSERT INTO bf (a, b) VALUES ($1, $2)", Seq(0, 0), two,
+        Seq(0, 0))
+      c.query("SELECT a, b FROM bf").rows shouldBe Seq(Seq(Some("1"), Some("2")))
+      c.close()
+    } finally server.stop()
+  }
+
   it should "bind and serve BYTEA in binary format (raw bytes on the wire)" in {
     // r19, ADVICE r18: the catalog supports BYTEA, so the binary
     // param/result maps must too — PG's binary bytea format is the

@@ -251,4 +251,19 @@ class ZonesSpec extends SparkSpec {
     m.toSeq shouldBe r.toSeq
     m should not be empty
   }
+
+  it should "degrade to the re-scan when a part file's footer is truncated" in {
+    val path = freshDir("zones-footer-truncated")
+    spark.range(1, 101).select(col("id").as("k"))
+      .coalesce(1).write.parquet(s"$path/src")
+    val good = new java.io.File(s"$path/src").listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    val bytes = java.nio.file.Files.readAllBytes(good.toPath)
+    val data = new java.io.File(s"$path/data")
+    data.mkdirs()
+    // drop the trailing footer-length word and magic: the footer is unreadable
+    java.nio.file.Files.write(new java.io.File(data, "part-00000.parquet").toPath,
+      java.util.Arrays.copyOf(bytes, bytes.length - 6))
+    Zones.footerStats(spark, data.getPath, Seq("k")) shouldBe None
+  }
 }

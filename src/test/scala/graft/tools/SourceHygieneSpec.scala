@@ -75,4 +75,30 @@ class SourceHygieneSpec extends AnyFlatSpec with Matchers {
     withClue("parallel name maps under graft/queries:\n" +
       sites.mkString("\n") + "\n") { sites shouldBe empty }
   }
+
+  /** Each pglite wire rule has one definition. The COPY format object
+    * carries its own wire byte, batch encoder and payload decoder, so
+    * no other file under graft/io/pg branches on which format it
+    * holds; and the oid → DDL type inverse of `PgLiteEngine.oidOf` is
+    * written out once, beside it. */
+  it should "keep one COPY format definition and one oid→type table under graft/io/pg" in {
+    val root = "src/main/scala/graft/io/pg"
+    def sites(re: scala.util.matching.Regex, skip: String) = for {
+      p <- walk(root, ".scala")
+      if p.getFileName.toString != skip
+      (line, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+      if re.findFirstIn(t).isDefined
+    } yield s"$p:${i + 1}: $t"
+    val branches = sites(
+      """(\bcase\s+|[=!]=\s*)(PgLiteEngine\.)?Fmt(Text|Csv|Binary)\b""".r,
+      skip = "PgLiteEngine.scala")
+    withClue("per-format branches outside the CopyFormat definition:\n" +
+      branches.mkString("\n") + "\n") { branches shouldBe empty }
+    val inverses = sites("""\bcase\s+701\s*=>\s*"DOUBLE PRECISION"""".r, skip = "")
+    withClue("oid → type tables:\n" + inverses.mkString("\n") + "\n") {
+      inverses should have size 1
+    }
+  }
 }
