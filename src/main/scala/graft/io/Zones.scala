@@ -160,7 +160,11 @@ object Zones {
     import org.apache.spark.sql.types._
     dt match {
       case TimestampType => timestamp_micros(c)
-      case TimestampNTZType => timestamp_micros(c).cast(TimestampNTZType)
+      // NTZ micros are a wall clock: epoch + c µs, never through an
+      // instant (casting one to NTZ shifts it by the session offset)
+      case TimestampNTZType =>
+        lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)) +
+          c * expr("INTERVAL '0.000001' SECOND")
       case DateType => date_from_unix_date(c.cast("int"))
       case _ => c.cast(dt)
     }

@@ -19,7 +19,7 @@ import scala.collection.mutable
   * ([[PgLiteEngine.Table.rows]]), so the codec converts between that
   * text form and the binary field layout. The invariant both ends are
   * specced against: `decodeField(t, encodeField(t, text)) == text` for
-  * every canonical text this repo's writers emit ([[PgWire.wireText]]),
+  * every canonical text this repo's writers emit ([[PgWire.encode]]),
   * so a table loaded through binary COPY reads back byte-identical to
   * its text-COPY twin (`ref_pg_copy_binary`'s oracle).
   *
@@ -98,15 +98,9 @@ object PgBinaryCopy {
       val ldt = java.sql.Timestamp.valueOf(text.trim).toLocalDateTime
       be64(ChronoUnit.MICROS.between(PgEpochTs, ldt))
     case "NUMERIC" | "DECIMAL" => encodeNumeric(text.trim)
-    case "BYTEA" =>
-      // canonical text is PG's hex output format `\xDEADBEEF`; binary
-      // send format is simply the raw bytes
-      val t = text.trim
-      if (!t.startsWith("\\x") || (t.length % 2) != 0 ||
-          !t.drop(2).forall(c => Character.digit(c, 16) >= 0))
-        throw PgError("22P02", s"bad bytea hex literal: ${t.take(40)}")
-      t.drop(2).grouped(2)
-        .map(h => Integer.parseInt(h, 16).toByte).toArray
+    // canonical text is PG's hex output format `\xDEADBEEF`; binary
+    // send format is simply the raw bytes
+    case "BYTEA" => unhex(text.trim)
     case other =>
       throw PgError("0A000", s"no binary format for type $other")
   }
@@ -130,10 +124,25 @@ object PgBinaryCopy {
       java.sql.Timestamp.valueOf(
         PgEpochTs.plus(rd64(b, 0), ChronoUnit.MICROS)).toString
     case "NUMERIC" | "DECIMAL" => decodeNumeric(b)
-    case "BYTEA" =>
-      b.map(x => f"${x & 0xff}%02x").mkString("\\x", "", "")
+    case "BYTEA" => hex(b)
     case other =>
       throw PgError("0A000", s"no binary format for type $other")
+  }
+
+  /** Bytes → PG's canonical bytea text, the hex format `\x0aff`. */
+  def hex(b: Array[Byte]): String = {
+    val sb = new StringBuilder("\\x")
+    b.foreach(x => sb.append(Character.forDigit((x >> 4) & 0xf, 16))
+      .append(Character.forDigit(x & 0xf, 16)))
+    sb.toString
+  }
+
+  /** Inverse of [[hex]]; anything but `\x` + hex digit pairs is 22P02. */
+  def unhex(t: String): Array[Byte] = {
+    if (!t.startsWith("\\x") || (t.length % 2) != 0 ||
+        !t.drop(2).forall(c => Character.digit(c, 16) >= 0))
+      throw PgError("22P02", s"bad bytea hex literal: ${t.take(40)}")
+    t.drop(2).grouped(2).map(h => Integer.parseInt(h, 16).toByte).toArray
   }
 
   private def expect(b: Array[Byte], n: Int, what: String): Unit =

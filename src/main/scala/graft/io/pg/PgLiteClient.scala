@@ -21,8 +21,9 @@ import PgLiteEngine.CopyFormat
   * simple query 'Q' (buffered [[query]] or streaming [[queryStream]]),
   * the extended protocol P/B/D/E/S with text or binary parameters and
   * result columns ([[execParams]] and its variants), the fetch cursor
-  * Execute(n)/Flush ([[execFetch]]), COPY FROM STDIN and TO STDOUT in
-  * the text, CSV and binary formats ([[copyIn]], [[copyOut]]) with
+  * Execute(n)/Flush ([[execFetch]]), COPY FROM STDIN (pushed into
+  * [[copyInSink]], or pulled from an iterator by [[copyIn]]) and TO
+  * STDOUT ([[copyOut]]) in the text, CSV and binary formats with
   * d/c/f, CancelRequest, and 'X' terminate. Reads:
   * R/S/K/Z/T/D/C/E/I/N/G/H/d/c plus the extended 1/2/3/n/t/s.
   */
@@ -400,25 +401,95 @@ final class PgLiteClient(host: String, port: Int,
     collect(new RowStream("extended query", resultFormats, () => execute(), () => sync()))
   }
 
-  /** COPY … FROM STDIN round trip in `format` ([[PgLiteEngine.CopyFormat]]):
-    * send the COPY statement, expect CopyInResponse with the format's
-    * wire byte, stream the rows as CopyData frames of `batchRows` rows
-    * (never buffered whole — the per-partition writer posture
-    * [[PgWire.copyDistributed]] streams arbitrarily large partitions
-    * through constant memory), CopyDone, and return the
-    * CommandComplete tag ("COPY n"). `types` gives the DDL type per
+  /** COPY … FROM STDIN round trip in `format` ([[PgLiteEngine.CopyFormat]])
+    * over an iterator: [[copyInSink]] fed row by row, failed with
+    * CopyFail if the iterator (the row PRODUCER) throws. Returns the
+    * CommandComplete tag ("COPY n"). */
+  def copyIn(sql: String, rows: IterableOnce[Seq[Option[String]]],
+             format: CopyFormat = PgLiteEngine.FmtText,
+             types: Seq[String] = Nil, batchRows: Int = 1024): String = {
+    val sink = copyInSink(sql, format, types, batchRows)
+    sink.guard(rows.iterator.foreach(sink.add))
+    sink.finish()
+  }
+
+  /** Open a COPY … FROM STDIN in `format` that rows are PUSHED into —
+    * the one copy-in path: send the statement, expect CopyInResponse
+    * with the format's wire byte, send the format's header frame, then
+    * one CopyData frame per `batchRows` added rows (never more than one
+    * batch buffered, so arbitrarily large partitions stream through
+    * constant memory); [[CopySink.finish]] sends the trailer and
+    * CopyDone and returns the tag. `types` gives the DDL type per
     * copied column, which binary fields are encoded by. The statement
     * carries the format clause; CSV and text share wire byte 0, so
     * matching the clause is the CALLER's contract, as with a real
     * PostgreSQL. Every format lands value-identical tables from the
     * same canonical text rows (`ref_pg_copy_binary`,
     * `ref_pg_copy_csv`). */
-  def copyIn(sql: String, rows: IterableOnce[Seq[Option[String]]],
-             format: CopyFormat = PgLiteEngine.FmtText,
-             types: Seq[String] = Nil, batchRows: Int = 1024): String = {
+  def copyInSink(sql: String, format: CopyFormat = PgLiteEngine.FmtText,
+                 types: Seq[String] = Nil, batchRows: Int = 1024): CopySink = {
     startCopy(sql, format)
-    copyBody {
-      format.frames(rows.iterator, types, batchRows)(send('d', _))
+    val sink = new CopySink(format, types, batchRows)
+    sink.guard(format.header.foreach(send('d', _)))
+    sink
+  }
+
+  /** One open COPY FROM STDIN ([[copyInSink]]). */
+  final class CopySink private[PgLiteClient] (format: CopyFormat,
+                                              types: Seq[String], batchRows: Int) {
+    private val buf = mutable.ArrayBuffer[Seq[Option[String]]]()
+    private var open = true
+
+    def add(row: Seq[Option[String]]): Unit = {
+      buf += row
+      if (buf.length >= batchRows) flush()
+    }
+
+    private def flush(): Unit = if (buf.nonEmpty) guard {
+      send('d', format.encodeBatch(buf.toSeq, types))
+      buf.clear()
+    }
+
+    /** A failing producer, encode or send fails the COPY before the
+      * error surfaces. */
+    private[PgLiteClient] def guard(body: => Unit): Unit =
+      try body
+      catch { case scala.util.control.NonFatal(e) =>
+        fail(String.valueOf(e.getMessage)); throw e }
+
+    /** Trailer, CopyDone, and the server's "COPY n" tag. */
+    def finish(): String = {
+      flush()
+      guard(format.trailer.foreach(send('d', _)))
+      open = false
+      send('c', Array.emptyByteArray); out.flush() // CopyDone
+      var tag = ""
+      var err: PgServerError = null
+      var ready = false
+      while (!ready) {
+        val (tpe, payload) = readMessage()
+        tpe match {
+          case 'C' => tag = cString(payload)
+          case 'E' => err = parseError(payload)
+          case 'Z' => ready = true
+          case 'S' | 'N' => ()
+          case other => throw new IllegalStateException(s"copyIn: unexpected '$other'")
+        }
+      }
+      if (err != null) throw err
+      tag
+    }
+
+    /** Abandon the COPY: CopyFail with `reason`, then resync to
+      * ReadyForQuery, so a failing producer (e.g. a deserialization
+      * error mid-partition) never leaves the connection desynced
+      * mid-COPY. A broken SOCKET makes the abort itself throw —
+      * swallowed, the caller's own error still surfaces and its
+      * close() tears the socket down. No-op once finished. */
+    def fail(reason: String): Unit = if (open) {
+      open = false
+      try abortCopy(reason)
+      catch { case _: Throwable => () }
     }
   }
 
@@ -431,9 +502,9 @@ final class PgLiteClient(host: String, port: Int,
     * Single-socket and CLIENT-BUFFERED (the whole export
     * materializes here) — the protocol-fidelity posture, for
     * dimension-class tables and gate read-backs. The corpus-scale
-    * read path is [[PgWire.readDistributed]] / the `pglite` DSv2
-    * source: per-key-range connections over streaming row iterators
-    * ([[queryStream]]), per-task memory one row. */
+    * read path is the `pglite` DSv2 scan ([[PgWire.readDistributed]]
+    * with a key column): per-key-range connections over streaming row
+    * iterators ([[queryStream]]), per-task memory one row. */
   def copyOut(sql: String, format: CopyFormat = PgLiteEngine.FmtText,
               types: Seq[String] = Nil): Seq[Seq[Option[String]]] = {
     sendCString('Q', sql)
@@ -511,39 +582,6 @@ final class PgLiteClient(host: String, port: Int,
             s"copyIn: unexpected '$other' — statement is not COPY ... FROM STDIN")
       }
     }
-  }
-
-  /** Run the CopyData producer, then CopyDone and collect the tag.
-    * A failing row PRODUCER (e.g. a deserialization error mid-
-    * partition in PgWire.copyDistributed) must not leave the
-    * connection desynced mid-COPY: abort with CopyFail, resync to
-    * ReadyForQuery, and rethrow the producer's error. A broken SOCKET
-    * makes the abort itself throw — swallowed, the original error
-    * still surfaces and the caller's close() tears the socket down. */
-  private def copyBody(produce: => Unit): String = {
-    try produce
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        try abortCopy(String.valueOf(e.getMessage))
-        catch { case _: Throwable => () }
-        throw e
-    }
-    send('c', Array.emptyByteArray); out.flush() // CopyDone
-    var tag = ""
-    var err: PgServerError = null
-    var ready = false
-    while (!ready) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case 'C' => tag = cString(payload)
-        case 'E' => err = parseError(payload)
-        case 'Z' => ready = true
-        case 'S' | 'N' => ()
-        case other => throw new IllegalStateException(s"copyIn: unexpected '$other'")
-      }
-    }
-    if (err != null) throw err
-    tag
   }
 
   /** CopyFail with `reason`, then resynchronize to ReadyForQuery. */

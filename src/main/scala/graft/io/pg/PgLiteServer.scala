@@ -564,6 +564,7 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
   private def runCopy(st: String, in: DataInputStream,
                       out: DataOutputStream,
                       tx: PgLiteEngine.PgTx): PgLiteEngine.Result = {
+    engine.statementCount.incrementAndGet()
     tx.requireLive()
     val c = engine.copyStatement(st, tx)
     // CopyIn/CopyOutResponse: int8 format, int16 ncols, int16[ncols] format

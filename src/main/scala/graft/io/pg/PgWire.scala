@@ -1,18 +1,32 @@
 package graft.io.pg
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
-/** DISTRIBUTED wire-protocol COPY — the batched-write posture (§2 #9)
-  * over the REAL PostgreSQL protocol, scaled out: one wire-v3
-  * connection per input partition, each streaming its rows as
-  * text-format CopyData frames through constant memory. This is the
-  * shape a production Spark→Postgres writer takes (connection per
+/** The Spark side of the wire stack — the batched-write posture (§2 #9)
+  * and the partitioned scan (§2 #10) over the REAL PostgreSQL
+  * protocol, scaled out: one wire-v3 connection per Spark partition,
+  * each streaming its rows through ONE COPY in constant memory. This is
+  * the shape a production Spark→Postgres bridge takes (connection per
   * partition, batched frames, one COPY command per partition) — versus
   * the reference's single psycopg2 process doing one INSERT round-trip
   * per row (dags/dag_etl_minio_to_postgres.py:125-138, the ≥95 %-of-
-  * runtime cost BASELINE.md measures), and versus this repo's
-  * driver-side protocol-fidelity twins ([[graft.pipeline.PgGold]],
-  * `ref_pg_copy`).
+  * runtime cost BASELINE.md measures).
+  *
+  * One bridge, shared with the `pglite` DataSource V2
+  * ([[PgLiteDataSource]]):
+  *  - ONE VALUE CODEC: [[encode]] (catalyst value → wire text) and
+  *    [[decode]] (wire text → catalyst value), used by every writer,
+  *    the scan, and the driver-side [[graft.pipeline.PgGold]] edge;
+  *  - ONE READER: [[readDistributed]] is the `pglite` scan with
+  *    `partitionColumn` set — census, equi-depth key ranges, one
+  *    streaming SELECT per range (the planning helpers live here);
+  *  - ONE STAGED WRITER: [[copyDistributedExactlyOnce]] and the DSv2
+  *    batch and streaming appends all stage through
+  *    [[PgStageWriter]] and publish through [[publishStages]].
   *
   * Concurrency: the server is thread-per-connection and the engine
   * serializes per table with all-or-nothing COPY batches, so parallel
@@ -29,48 +43,65 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object PgWire {
 
-  /** Wire text for one non-null value — Row.get's runtime classes
-    * mapped to the exact text [[graft.pipeline.PgGold.fromWire]]
-    * parses back. Temporal types format EXPLICITLY: with
-    * `spark.sql.datetime.java8API.enabled=true` Row.get returns
-    * java.time.Instant/LocalDate whose ISO `toString`
-    * (`2024-01-01T00:00:00Z`) `Timestamp.valueOf`/`Date.valueOf`
-    * cannot parse — a silent config-dependent round-trip break
-    * (ADVICE r15); everything else round-trips through `toString`. */
-  def wireText(v: Any): String = v match {
-    case i: java.time.Instant => java.sql.Timestamp.from(i).toString
-    case d: java.time.LocalDate => java.sql.Date.valueOf(d).toString
-    case dt: java.time.LocalDateTime => java.sql.Timestamp.valueOf(dt).toString
-    case other => other.toString
-  }
-
-  /** Inverse of [[wireText]] for one non-null cell, typed by the
-    * frame's Spark field: the text → catalyst-external value mapping
-    * [[graft.pipeline.PgGold.fromWire]] (driver-side) and
-    * [[readDistributed]] (executor-side) share. */
-  def parseWire(v: String, dt: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case StringType => v
-      case IntegerType => v.toInt
-      case LongType => v.toLong
-      case ShortType => v.toShort
-      case DoubleType => v.toDouble
-      case FloatType => v.toFloat
-      case BooleanType => v.toBoolean
-      case _: DecimalType => new java.math.BigDecimal(v)
-      case TimestampType => java.sql.Timestamp.valueOf(v)
-      // NTZ rows carry LocalDateTime; the wire text is the same
-      // wall-clock form wireText emitted. LocalDateTime.parse, NOT
-      // Timestamp.valueOf: NTZ is a pure wall clock, and valueOf
-      // routes through the JVM default zone (a DST-gap wall time
-      // would silently shift an hour)
+  /** Wire text of cell `i` of a catalyst row under its Spark type
+    * (None = SQL NULL) — the one Spark → wire encoder. Every type
+    * [[graft.io.Sinks.pgType]] declares has a case; [[decode]] inverts
+    * each, and [[PgBinaryCopy]] re-encodes the same text per DDL type.
+    * Temporal types format explicitly as `java.sql.Timestamp` /
+    * `Date` text (NTZ from its LocalDateTime); BINARY as PG's `\x`
+    * hex text. */
+  def encode(row: InternalRow, i: Int, dt: DataType): Option[String] =
+    if (row.isNullAt(i)) None
+    else Some(dt match {
+      case StringType => row.getUTF8String(i).toString
+      case IntegerType => row.getInt(i).toString
+      case ShortType => row.getShort(i).toString
+      case ByteType => row.getByte(i).toString
+      case LongType => row.getLong(i).toString
+      case DoubleType => row.getDouble(i).toString
+      case FloatType => row.getFloat(i).toString
+      case BooleanType => row.getBoolean(i).toString
+      case d: DecimalType =>
+        row.getDecimal(i, d.precision, d.scale).toJavaBigDecimal.toString
+      case TimestampType => DateTimeUtils.toJavaTimestamp(row.getLong(i)).toString
       case TimestampNTZType =>
-        java.time.LocalDateTime.parse(v.replace(' ', 'T'))
-      case DateType => java.sql.Date.valueOf(v)
+        java.sql.Timestamp.valueOf(
+          DateTimeUtils.microsToLocalDateTime(row.getLong(i))).toString
+      case DateType => DateTimeUtils.toJavaDate(row.getInt(i)).toString
+      case BinaryType => PgBinaryCopy.hex(row.getBinary(i))
       case other =>
-        throw new IllegalArgumentException(s"no wire parse for $other")
-    }
+        throw new UnsupportedOperationException(s"pglite: no wire encoding for $other")
+    })
+
+  /** [[encode]] for every cell of `row`, typed by `types`. */
+  def encodeRow(row: InternalRow, types: Seq[DataType]): Seq[Option[String]] =
+    types.indices.map(i => encode(row, i, types(i)))
+
+  /** Inverse of [[encode]] for one non-null cell: wire text → the
+    * catalyst value of `dt`. NTZ parses with LocalDateTime.parse, NOT
+    * Timestamp.valueOf: NTZ is a pure wall clock, and valueOf routes
+    * through the JVM default zone (a DST-gap wall time would silently
+    * shift an hour). */
+  def decode(v: String, dt: DataType): Any = dt match {
+    case StringType => UTF8String.fromString(v)
+    case IntegerType => v.toInt
+    case ShortType => v.toShort
+    case ByteType => v.toByte
+    case LongType => v.toLong
+    case DoubleType => v.toDouble
+    case FloatType => v.toFloat
+    case BooleanType => v.toBoolean
+    case d: DecimalType =>
+      Decimal(new java.math.BigDecimal(v), d.precision, d.scale)
+    case TimestampType =>
+      DateTimeUtils.fromJavaTimestamp(java.sql.Timestamp.valueOf(v))
+    case TimestampNTZType =>
+      DateTimeUtils.localDateTimeToMicros(
+        java.time.LocalDateTime.parse(v.replace(' ', 'T')))
+    case DateType => DateTimeUtils.fromJavaDate(java.sql.Date.valueOf(v))
+    case BinaryType => PgBinaryCopy.unhex(v)
+    case other =>
+      throw new UnsupportedOperationException(s"pglite: no wire decoding for $other")
   }
 
   /** Connection/task count for a distributed wire WRITE (r18, VERDICT
@@ -109,7 +140,7 @@ object PgWire {
     * repartitions, one exchange buying the upstream stage its own
     * task count. */
   private[io] def reshapeForWrite(df: DataFrame, target: Int): DataFrame = {
-    val src = df.rdd.getNumPartitions
+    val src = df.queryExecution.toRdd.getNumPartitions
     if (src <= target) df
     else if (src <= target * 4) df.coalesce(target)
     else df.repartition(target)
@@ -121,131 +152,65 @@ object PgWire {
     * `numPartitions` — or, with `rowsHint` (the frame's row count,
     * which corpus-class callers hold anyway), by the adaptive target
     * of `rowsPerConnection` rows per connection above that floor.
-    * Column order is the frame's; values ship as [[wireText]] — the
-    * exact serialization [[graft.pipeline.PgGold.fromWire]] inverts —
-    * framed in `format`. For the published COPY BINARY format
-    * ([[PgBinaryCopy]]: int8/float8 bit patterns, microsecond
-    * timestamps, base-10000 numerics instead of text escaping — the
-    * faster serialization a production bulk loader prefers) the
-    * per-column DDL types derive from the frame's schema exactly as
-    * the stage-table DDL derives them ([[graft.io.Sinks.pgType]]);
-    * `ref_pg_copy_binary`'s oracle proves the formats land
-    * value-identical tables. */
+    * Column order is the frame's; catalyst rows ship as [[encode]]
+    * text through the client's one COPY sink, framed in `format`. For
+    * the published COPY BINARY format ([[PgBinaryCopy]]: int8/float8
+    * bit patterns, microsecond timestamps, base-10000 numerics instead
+    * of text escaping — the faster serialization a production bulk
+    * loader prefers) the per-column DDL types derive from the frame's
+    * schema exactly as the stage-table DDL derives them
+    * ([[graft.io.Sinks.pgType]]); `ref_pg_copy_binary`'s oracle proves
+    * the formats land value-identical tables. */
   def copyDistributed(df: DataFrame, host: String, port: Int,
                       table: String, numPartitions: Int = 8,
                       rowsHint: Option[Long] = None,
                       rowsPerConnection: Long = 100000L,
                       format: PgLiteEngine.CopyFormat = PgLiteEngine.FmtText): Unit = {
+    val conn = PgLiteConn(host, port)
     val copySql = s"COPY $table (${df.columns.mkString(", ")}) FROM STDIN${format.clause}"
-    val types = df.schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq
-    val target = writeConnections(df.rdd.getNumPartitions, numPartitions,
-      rowsHint, rowsPerConnection)
-    reshapeForWrite(df, target).foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = new PgLiteClient(host, port)
-        c.connect()
-        try copyPartition(c, copySql, it, format, types)
-        finally c.close()
-        ()
-      }
+    val dts = df.schema.fields.map(_.dataType).toSeq
+    val types = dts.map(graft.io.Sinks.pgType)
+    val target = writeConnections(df.queryExecution.toRdd.getNumPartitions,
+      numPartitions, rowsHint, rowsPerConnection)
+    reshapeForWrite(df, target).queryExecution.toRdd.foreachPartition { it =>
+      if (it.hasNext)
+        conn.using(_.copyIn(copySql, it.map(encodeRow(_, dts)), format, types))
     }
   }
 
-  /** One partition's COPY over `c`: each row's cells as [[wireText]]
-    * (None = NULL), streamed in `format`'s batches. Returns the
-    * server's tag ("COPY n"). */
-  private def copyPartition(c: PgLiteClient, copySql: String, it: Iterator[Row],
-                            format: PgLiteEngine.CopyFormat,
-                            types: Seq[String]): String =
-    c.copyIn(copySql,
-      it.map(r => types.indices.map(i => Option(r.get(i)).map(wireText))),
-      format, types)
-
-  /** DISTRIBUTED wire READ — the mirror of [[copyDistributed]] on the
-    * scan side (§2 #10's production posture: Spark's own JDBC source
-    * does exactly this key-range partitioning): the driver probes the
-    * integer key's min/max with two LIMIT-1 queries (O(rows·log 1) on
-    * the server's bounded heap), splits `[min, max]` into
-    * `numPartitions` half-open ranges, and each Spark task opens its
-    * own wire connection and scans `WHERE key >= lo AND key < hi` —
-    * through a STREAMING row iterator — per-task memory is ONE ROW
-    * (r17; previously the whole range framed in executor heap),
-    * nothing table-sized on the driver.
-    * `keyCol` must be an INTEGER/BIGINT NON-NULL column of `schema`
-    * (planning fails fast on NULL keys — a range scan would silently
-    * hide them). Range BOUNDARIES are EQUI-DEPTH since r18
-    * ([[equiDepthRanges]]): one extra histogram round trip per planned
-    * scan buys near-even per-range ROW counts on skewed or sparse
-    * keyspaces — where stock spark.read.jdbc slices the key span
-    * evenly and ships skewed tasks.
+  /** DISTRIBUTED wire READ — the `pglite` DataSource V2 scan
+    * ([[PgLiteDataSource]]) under `schema`, range-partitioned on
+    * `keyCol` (§2 #10's production posture: Spark's own JDBC source
+    * does exactly this key-range partitioning). At the first action the
+    * scan runs one census round trip (rows, non-null key rows, key
+    * bounds), splits the key span into EQUI-DEPTH half-open ranges
+    * ([[equiDepthRanges]]: one histogram round trip buys near-even
+    * per-range ROW counts on skewed or sparse keyspaces — where stock
+    * spark.read.jdbc slices the key span evenly), and each Spark task
+    * streams `SELECT … WHERE key >= lo AND key < hi` over its own
+    * connection — per-task memory is ONE ROW, nothing table-sized on
+    * the driver.
     *
-    * `numPartitions` is the FLOOR: the actual partition count derives
-    * from a one-round-trip server-side census targeting
-    * `rowsPerPartition` rows per task (r17 — a constant count meant
-    * 100× data was 100× per-task work), capped at 4096. Small tables
-    * keep their plan. */
-  def readDistributed(spark: org.apache.spark.sql.SparkSession,
+    * `keyCol` must be an INTEGER/BIGINT NON-NULL column of `schema`:
+    * planning fails on NULL keys (a range scan would silently hide
+    * them). `numPartitions` is the FLOOR: the actual partition count
+    * targets `rowsPerPartition` rows per task, capped at 4096. An empty
+    * table scans as one full-table partition. */
+  def readDistributed(spark: SparkSession,
                       host: String, port: Int, table: String,
-                      schema: org.apache.spark.sql.types.StructType,
+                      schema: StructType,
                       keyCol: String,
                       numPartitions: Int = 8,
                       rowsPerPartition: Long = 100000L): DataFrame = {
-    val cols = schema.fieldNames.toSeq
-    require(cols.contains(keyCol), s"keyCol $keyCol not in schema")
-    val colList = cols.mkString(", ")
-    // census + equi-depth histogram share one planning connection
-    val planned = {
-      val c = new PgLiteClient(host, port)
-      c.connect()
-      try {
-        val stats = probeScanStats(c, table, keyCol)
-        requireKeysNonNull(stats, table, keyCol)
-        stats.bounds.map { case (lo, hi) =>
-          equiDepthRanges(c, table, keyCol, where = None, lo, hi,
-            stats.keyRows,
-            adaptivePartitions(stats.keyRows, numPartitions, rowsPerPartition))
-        }
-      } finally c.close()
-    }
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[Row](), schema)
-    planned match {
-      case None => empty
-      case Some(ranges) =>
-        val fields = schema.fields
-        val rdd = spark.sparkContext
-          .parallelize(ranges, ranges.length)
-          .flatMap { case (a, b) =>
-            val c = new PgLiteClient(host, port)
-            c.connect()
-            // STREAMING read (r17, VERDICT r16 task 2): DataRow frames
-            // decode one message per pull — per-task memory is one
-            // row, not the range (the posture copyIn's batches have on
-            // the write side). The connection closes on exhaustion;
-            // the completion listener covers a task cut short (limit,
-            // failure) — close() is idempotent.
-            Option(org.apache.spark.TaskContext.get())
-              .foreach(_.addTaskCompletionListener[Unit](_ => c.close()))
-            val stream =
-              try c.queryStream(s"SELECT $colList FROM $table " +
-                s"WHERE $keyCol >= $a AND $keyCol < $b")
-              catch { case e: Throwable => c.close(); throw e }
-            new Iterator[Row] {
-              override def hasNext: Boolean = {
-                val h = stream.hasNext
-                if (!h) c.close()
-                h
-              }
-              override def next(): Row = {
-                val r = stream.next()
-                Row.fromSeq(r.zip(fields).map { case (v, f) =>
-                  v.map(parseWire(_, f.dataType)).orNull
-                })
-              }
-            }
-          }
-        spark.createDataFrame(rdd, schema)
-    }
+    require(schema.fieldNames.contains(keyCol), s"keyCol $keyCol not in schema")
+    // by class name: resolves on a classpath without the META-INF
+    // short-name registration too
+    spark.read.format(classOf[PgLiteDataSource].getName).schema(schema)
+      .option("host", host).option("port", port.toLong).option("table", table)
+      .option("partitionColumn", keyCol)
+      .option("numPartitions", numPartitions.toLong)
+      .option("rowsPerPartition", rowsPerPartition)
+      .load()
   }
 
   /** Staging-table name for one task attempt. Unique per (runId,
@@ -255,41 +220,26 @@ object PgWire {
     * stages), and the attempt number keeps two CONCURRENT attempts of
     * the same partition (speculation) from interleaving in one table. */
   private[graft] def stageName(table: String, runId: String,
-                               pid: Int, attempt: Int): String = {
-    val bare = table.substring(table.lastIndexOf('.') + 1)
-    s"${bare}__stage_r${runId}_p${pid}_a$attempt"
-  }
+                               pid: Int, attempt: Int): String =
+    stageName(table.substring(table.lastIndexOf('.') + 1), runId,
+      s"p${pid}_a$attempt")
+
+  /** `<bare>__stage_r<runId>_<attemptKey>` — the grammar [[sweepStages]]
+    * matches. */
+  private[pg] def stageName(bare: String, runId: String,
+                            attemptKey: String): String =
+    s"${bare}__stage_r${runId}_$attemptKey"
 
   /** Fresh job-unique run id for stage names ([0-9a-f], fits the
     * sweep grammar). */
   private[pg] def newRunId(): String =
     java.util.UUID.randomUUID().toString.replace("-", "").take(12)
 
-  /** Key bounds of `table.keyCol` via two bounded-heap probes: min via
-    * ASC LIMIT 1 (the engine sorts NULLs last, so a non-null head IS
-    * the min); max via DESC LIMIT 1 *range-filtered from the min* —
-    * DESC sorts NULLs first (PG), and a WHERE predicate is never
-    * satisfied by NULL, so the filter screens them out. Rows with a
-    * NULL key are invisible to a range scan by SQL semantics: keyCol
-    * is the PK in practice and documented non-null. None = no rows
-    * with a non-null key. Shared by [[readDistributed]] and the DSv2
-    * scan's partition planning, so a fix lands in both. */
-  private[pg] def probeBounds(c: PgLiteClient, table: String,
-                              keyCol: String): Option[(Long, Long)] =
-    c.query(s"SELECT $keyCol FROM $table ORDER BY $keyCol LIMIT 1")
-      .rows.headOption.flatMap(_.head).map(_.toLong).map { lo =>
-        val hi = c.query(s"SELECT $keyCol FROM $table " +
-            s"WHERE $keyCol >= $lo ORDER BY $keyCol DESC LIMIT 1")
-          .rows.head.head.get.toLong
-        (lo, hi)
-      }
-
   /** Planning census for a ranged wire scan, ONE server-side aggregate
     * round trip (the same statement shape the DSv2 aggregate pushdown
     * emits — one row crosses the wire): total rows, non-null key rows,
-    * and the key bounds. Replaces [[probeBounds]]' two probes where the
-    * row count is needed anyway (r17: partition count scales with the
-    * table instead of a constant 8). */
+    * and the key bounds (r17: partition count scales with the table
+    * instead of a constant 8). */
   final case class ScanStats(rows: Long, keyRows: Long,
                              bounds: Option[(Long, Long)])
   private[pg] def probeScanStats(c: PgLiteClient, table: String,
@@ -557,20 +507,36 @@ object PgWire {
     * THIS RUN's `<bare>__stage_r<runId>_…` tables (committed winners
     * and aborted-attempt leftovers — run-scoped since r17, so a
     * CONCURRENT writer's live stages survive; cross-run orphans are
-    * the start-of-job janitor's province), COMMIT — atomically. */
+    * the start-of-job janitor's province), COMMIT — atomically.
+    *
+    * A streaming epoch passes `epoch` = (marker table, epoch id): the
+    * epoch's marker INSERT opens the transaction (so marker and data
+    * commit atomically) and the sweep keeps stages of LATER epochs. A
+    * marker that already exists (23505, a replayed epoch) rolls the
+    * transaction back untouched and returns false; true = published. */
   private[io] def publishStages(c: PgLiteClient, table: String,
                                 colList: String, schemaName: String,
                                 bare: String, runId: String,
-                                stages: Seq[(String, Long)]): Unit = {
+                                stages: Seq[(String, Long)],
+                                epoch: Option[(String, Long)] = None): Boolean = {
     c.query("BEGIN")
-    stages.foreach { case (stage, n) =>
-      if (n > 0)
-        c.query(s"INSERT INTO $table ($colList) " +
-          s"SELECT $colList FROM $schemaName.$stage")
+    val replay = epoch.exists { case (markers, e) =>
+      try { c.query(s"INSERT INTO $markers (epoch) VALUES ($e)"); false }
+      catch { case err: c.PgServerError if err.code == "23505" =>
+        c.query("ROLLBACK"); true }
     }
-    sweepStages(c, schemaName, bare, runScope = Some(runId))
-    require(c.query("COMMIT").tags == Seq("COMMIT"),
-      s"publish transaction failed to commit for $table")
+    if (!replay) {
+      stages.foreach { case (stage, n) =>
+        if (n > 0)
+          c.query(s"INSERT INTO $table ($colList) " +
+            s"SELECT $colList FROM $schemaName.$stage")
+      }
+      sweepStages(c, schemaName, bare, runScope = Some(runId),
+        maxEpoch = epoch.map(_._2))
+      require(c.query("COMMIT").tags == Seq("COMMIT"),
+        s"publish transaction failed to commit for $table")
+    }
+    !replay
   }
 
   /** Drop stage tables named `<bare>__stage_…` under `schemaName`,
@@ -629,84 +595,53 @@ object PgWire {
     * staging-table + atomic-swap commit discipline the parquet sinks
     * use, over the live protocol.
     *
-    * Each task attempt COPYs its partition into its own
-    * `table__stage_p<pid>_a<attempt>` table (drop-if-exists + create +
-    * COPY, so a RETRY of a failed attempt is idempotent, and a
-    * SPECULATIVE duplicate writes a different table — no interleaving
-    * is possible). The tasks return (partition, stage, rowcount)
-    * through the job result, so Spark's own task-commit discipline
-    * hands the driver EXACTLY ONE winning attempt per partition even
-    * when speculation ran two to success. The driver then publishes
-    * inside ONE wire transaction — `BEGIN; INSERT INTO target SELECT …
-    * FROM stage_p<i>; …; DROP TABLE …; COMMIT` — so the target
-    * atomically gains each partition exactly once (a crash before
-    * COMMIT leaves the target untouched and only orphan stages, which
-    * the next run's drop-first discipline clears). Loser attempts'
-    * stages are dropped in the same transaction by attempt-number
-    * sweep.
+    * Each task attempt streams its partition through a
+    * [[PgStageWriter]] into its own `<bare>__stage_r<runId>_p<pid>_a<attempt>`
+    * table (drop-if-exists + create + ONE COPY, so a RETRY of a failed
+    * attempt is idempotent, and a SPECULATIVE duplicate writes a
+    * different table — no interleaving is possible). The tasks return
+    * (stage, server-confirmed count) through the job result, so
+    * Spark's own task-commit discipline hands the driver EXACTLY ONE
+    * winning attempt per partition even when speculation ran two to
+    * success. The driver then publishes inside ONE wire transaction
+    * ([[publishStages]]) — so the target atomically gains each
+    * partition exactly once (a crash before COMMIT leaves the target
+    * untouched and only orphan stages, which the next run's janitor
+    * clears), and the run-scoped sweep drops loser attempts' stages.
     *
     * `table` is schema-qualified (`silver.customer`); stage tables land
     * in the same schema. Connection count sizes exactly like
     * [[copyDistributed]] (`rowsHint` toward `rowsPerConnection`,
-    * r18); the stage-name grammar is untouched — more partitions just
-    * mean more `p<pid>` stages in the same one-transaction publish.
-    * `janitor = false` skips the start-of-job UNSCOPED orphan sweep
-    * (ADVICE r17: that sweep assumes no OTHER writer has live stages
-    * on this table when this one starts; a caller orchestrating
-    * deliberately overlapping writers opts out and owns cross-run
-    * orphan cleanup itself). Returns total rows published. */
+    * r18); more partitions just mean more `p<pid>` stages in the same
+    * one-transaction publish. `janitor = false` skips the start-of-job
+    * UNSCOPED orphan sweep (ADVICE r17: that sweep assumes no OTHER
+    * writer has live stages on this table when this one starts; a
+    * caller orchestrating deliberately overlapping writers opts out
+    * and owns cross-run orphan cleanup itself). Returns total rows
+    * published, as the server counted them. */
   def copyDistributedExactlyOnce(df: DataFrame, host: String, port: Int,
                                  table: String,
                                  numPartitions: Int = 8,
                                  rowsHint: Option[Long] = None,
                                  rowsPerConnection: Long = 100000L,
                                  janitor: Boolean = true): Long = {
-    val Array(schemaName, bare) = table.split("\\.", 2) match {
-      case a @ Array(_, _) => a
-      case _ => throw new IllegalArgumentException(
-        s"table must be schema-qualified: $table")
-    }
-    val colList = df.columns.mkString(", ")
-    val schema = df.schema
-    val types = schema.fields.map(f => graft.io.Sinks.pgType(f.dataType)).toSeq
-    val runId = newRunId()
-    if (janitor) { // janitor: a previous run hard-killed mid-write may
-      // have left stages no later attempt-numbered drop can ever match —
-      // the ONE unscoped sweep (single-writer-at-start assumption)
-      val c = new PgLiteClient(host, port)
-      c.connect()
-      try sweepStages(c, schemaName, bare) finally c.close()
-    }
-    val target = writeConnections(df.rdd.getNumPartitions, numPartitions,
-      rowsHint, rowsPerConnection)
-    // one winning (pid, stage, count) per partition: mapPartitions
-    // results ride Spark's task-commit protocol, which keeps exactly
-    // one attempt's output per partition under retries AND speculation
-    val winners = reshapeForWrite(df, target).rdd
+    val target = PgStagedTarget(PgLiteConn(host, port), table, df.schema)
+    if (janitor) target.janitor()
+    val parts = writeConnections(df.queryExecution.toRdd.getNumPartitions,
+      numPartitions, rowsHint, rowsPerConnection)
+    // one winning (stage, count) per partition: mapPartitions results
+    // ride Spark's task-commit protocol, which keeps exactly one
+    // attempt's output per partition under retries AND speculation
+    val winners = reshapeForWrite(df, parts).queryExecution.toRdd
       .mapPartitionsWithIndex { (pid, it) =>
         val attempt = Option(org.apache.spark.TaskContext.get())
           .map(_.attemptNumber()).getOrElse(0)
-        val stage = stageName(bare, runId, pid, attempt)
-        val c = new PgLiteClient(host, port)
-        c.connect()
-        val n = try {
-          c.query(s"DROP TABLE IF EXISTS $schemaName.$stage")
-          c.query(graft.io.Sinks.createTableDdl(schema, schemaName, stage))
-          copyPartition(c, s"COPY $schemaName.$stage ($colList) FROM STDIN",
-            it, PgLiteEngine.FmtText, types).stripPrefix("COPY ").trim.toLong
-        } finally c.close()
-        Iterator.single((pid, stage, n))
-      }.collect().sortBy(_._1) // partition-count-sized driver metadata
-    val c = new PgLiteClient(host, port)
-    c.connect()
-    // the run-scoped sweep inside publishStages catches this run's
-    // loser attempts at any attempt number without touching a
-    // concurrent writer's stages; a speculative loser that re-creates
-    // its stage AFTER this publish is cleaned by the next run's
-    // janitor above
-    try publishStages(c, table, colList, schemaName, bare, runId,
-      winners.map { case (_, stage, n) => (stage, n) })
-    finally c.close()
-    winners.iterator.map(_._3).sum
+        val stage = target.stage(s"p${pid}_a$attempt")
+        Iterator.single((stage, target.writer(stage).writeAll(it)))
+      }.collect().toSeq // partition-count-sized driver metadata
+    // a speculative loser that re-creates its stage AFTER this publish
+    // is cleaned by the next run's janitor
+    target.conn.using(target.publish(_, winners))
+    winners.iterator.map(_._2).sum
   }
 }

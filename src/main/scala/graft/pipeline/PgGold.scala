@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions.{col, lit, sum}
 import org.apache.spark.sql.types._
 
@@ -32,35 +33,45 @@ import graft.tools.Par
   * star (gold.property: one row per input row after key-dedup, dag
   * :430-447), so [[writeMainDistributed]] keeps only the k-row
   * RETURNING probe on the driver and bulk-loads the remainder WITH
-  * explicit ids through [[PgWire.copyDistributedExactlyOnce]],
-  * continuing the sequence via setval. FACTS are input-sized, so
+  * explicit ids through [[PgWire.copyDistributedExactlyOnce]] (one
+  * staged COPY per task, one publish transaction), continuing the
+  * sequence via setval. FACTS are input-sized, so
   * [[writeFactDistributed]] ships them through the same exactly-once
   * COPY. Both verify server-confirmed counts PLUS a fully distributed
-  * cell-for-cell read-back comparison over
-  * [[PgWire.readDistributed]]'s per-range wire scans — no
+  * cell-for-cell read-back comparison over [[PgWire.readDistributed]]
+  * — the `pglite` DSv2 scan's per-range wire SELECTs — so no
   * corpus-sized frame ever collects to the driver, and the whole
-  * round trip (not a sample) sits under the check.
+  * round trip (not a sample) sits under the check. Driver-side rows
+  * cross the wire through the same value codec ([[textRows]],
+  * [[fromWire]]).
   */
 object PgGold {
 
   /** Driver-side wire text for a frame's rows, in the frame's current
-    * order (callers pre-sort by the engine id). */
+    * order (callers pre-sort by the engine id): each collected row
+    * converts to its catalyst form at this edge and ships as
+    * [[PgWire.encode]] text, the bytes every distributed writer
+    * sends. */
   def textRows(df: DataFrame, cols: Seq[String]): Seq[Seq[Option[String]]] = {
     val idx = cols.map(df.columns.indexOf(_))
+    val types = df.schema.fields.map(_.dataType)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(df.schema)
     df.collect().iterator.map { r =>
-      idx.map(i => Option(r.get(i)).map(graft.io.pg.PgWire.wireText))
+      val row = toCatalyst(r).asInstanceOf[InternalRow]
+      idx.map(i => PgWire.encode(row, i, types(i)))
     }.toSeq
   }
 
   /** Rebuild a TYPED frame from wire text rows — the read-back half of
-    * the round trip. Inverse of `Row.get(_).toString` for the DDL type
-    * vocabulary ([[Sinks.pgType]]). */
+    * the round trip: [[PgWire.decode]] per cell, converted to external
+    * rows at this edge. */
   def fromWire(spark: SparkSession, rows: Seq[Seq[Option[String]]],
                schema: StructType): DataFrame = {
+    val toRow = CatalystTypeConverters.createToScalaConverter(schema)
     val data = rows.map { r =>
-      Row.fromSeq(r.zip(schema.fields).map { case (v, f) =>
-        v.map(PgWire.parseWire(_, f.dataType)).orNull
-      })
+      toRow(InternalRow.fromSeq(r.zip(schema.fields).map { case (v, f) =>
+        v.map(PgWire.decode(_, f.dataType)).orNull
+      })).asInstanceOf[Row]
     }
     spark.createDataFrame(
       new java.util.ArrayList[Row](scala.jdk.CollectionConverters

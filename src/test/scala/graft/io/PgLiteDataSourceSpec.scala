@@ -886,6 +886,109 @@ class PgLiteDataSourceSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  it should "stream one task's append through exactly one COPY" in {
+    val (server, engine) = PgLiteServer.start()
+    try {
+      engine.execute("CREATE SCHEMA cp")
+      engine.execute("CREATE TABLE cp.t (k BIGINT, v TEXT)")
+      val df = spark.range(0L, 3000L, 1L, 1)
+        .select(col("id").as("k"), col("id").cast("string").as("v"))
+      val before = engine.statementCount.get()
+      df.write.format("pglite")
+        .option("host", "127.0.0.1").option("port", server.port)
+        .option("table", "cp.t").mode("append").save()
+      // janitor sweep (1 SELECT, nothing to drop); the task: DROP +
+      // CREATE its stage and ONE COPY of all 3,000 rows; the publish:
+      // BEGIN, INSERT…SELECT, sweep SELECT, DROP stage, COMMIT. A
+      // writer sending one COPY per 1,024-row batch would count 11
+      (engine.statementCount.get() - before) shouldBe 9L
+      engine.execute("SELECT count(*) AS n FROM cp.t").rows.head.head shouldBe "3000"
+    } finally server.stop()
+  }
+
+  it should "round-trip every Sinks.pgType type through every writer and reader" in {
+    import java.time.LocalDateTime
+    // one column per Spark type Sinks.pgType maps, with a value that
+    // exercises its wire text
+    val cells: Seq[(DataType, Any)] = Seq(
+      StringType -> "tab\there \\N",
+      IntegerType -> 42,
+      ShortType -> 7.toShort,
+      ByteType -> (-3).toByte,
+      LongType -> 1234567890123L,
+      DecimalType(12, 2) -> new java.math.BigDecimal("1234.50"),
+      DoubleType -> 0.1,
+      FloatType -> 1.5f,
+      BooleanType -> true,
+      TimestampType -> Timestamp.valueOf("2026-02-01 12:30:05.25"),
+      TimestampNTZType -> LocalDateTime.of(2026, 2, 1, 12, 30, 5, 250000000),
+      DateType -> Date.valueOf("2026-02-01"),
+      BinaryType -> Array[Byte](0, 1, -1, 16))
+    val all = StructType(StructField("k", LongType) +:
+      cells.indices.map(i => StructField(s"c$i", cells(i)._1)))
+    // row 0 carries every value; row i + 1 is NULL in column i only
+    val data: Seq[Row] = (0 to cells.length).map { r =>
+      Row.fromSeq(r.toLong +: cells.indices.map(i =>
+        if (r == i + 1) null else cells(i)._2))
+    }
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(data, 2), all)
+    val (server, engine) = PgLiteServer.start()
+    val port = server.port
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: Array[Byte], y: Array[Byte]) => java.util.Arrays.equals(x, y)
+      case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y) == 0
+      case _ => a == b
+    }
+    def show(v: Any): String = v match {
+      case b: Array[Byte] => b.mkString("[", ",", "]")
+      case other => String.valueOf(other)
+    }
+    val writers: Seq[(String, String => Unit)] = Seq(
+      "copyDistributed text" -> (t =>
+        PgWire.copyDistributed(df, "127.0.0.1", port, t, 2)),
+      "copyDistributed binary" -> (t =>
+        PgWire.copyDistributed(df, "127.0.0.1", port, t, 2,
+          format = graft.io.pg.PgLiteEngine.FmtBinary)),
+      "copyDistributedExactlyOnce" -> (t =>
+        PgWire.copyDistributedExactlyOnce(df, "127.0.0.1", port, t, 2)),
+      "pglite writer" -> (t => df.write.format("pglite")
+        .option("host", "127.0.0.1").option("port", port)
+        .option("table", t).mode("append").save()))
+    // readers take (k, one column) so each failing cell reports alone
+    val readers: Seq[(String, (String, StructType) => org.apache.spark.sql.DataFrame)] = Seq(
+      "readDistributed" -> ((t, sch) =>
+        PgWire.readDistributed(spark, "127.0.0.1", port, t, sch, "k", 2)),
+      "pglite reader" -> ((t, sch) => spark.read.format("pglite")
+        .option("host", "127.0.0.1").option("port", port)
+        .option("table", t).schema(sch).load()))
+    try {
+      engine.execute("CREATE SCHEMA rt")
+      val failures = writers.zipWithIndex.flatMap { case ((wn, write), w) =>
+        val table = s"rt.t$w"
+        engine.execute(Sinks.createTableDdl(all, "rt", s"t$w"))
+        scala.util.Try(write(table)) match {
+          case scala.util.Failure(e) => Seq(s"$wn: write failed: ${e.getMessage}")
+          case scala.util.Success(_) => for {
+            (rn, read) <- readers
+            j <- 1 until all.length
+            dt = all(j).dataType
+            failure <- scala.util.Try(read(table, StructType(Seq(all(0), all(j))))
+                .collect().sortBy(_.getLong(0)).toSeq) match {
+              case scala.util.Failure(e) => Seq(s"$wn -> $rn: $dt: read failed: ${e.getMessage}")
+              case scala.util.Success(got) if got.length != data.length =>
+                Seq(s"$wn -> $rn: $dt: ${got.length} rows, want ${data.length}")
+              case scala.util.Success(got) =>
+                got.zip(data).collect { case (g, want) if !same(g.get(1), want.get(j)) =>
+                  s"$wn -> $rn: $dt: k=${want.getLong(0)} " +
+                    s"got ${show(g.get(1))}, want ${show(want.get(j))}" }
+            }
+          } yield failure
+        }
+      }
+      withClue(failures.mkString("\n", "\n", "\n")) { failures shouldBe empty }
+    } finally server.stop()
+  }
+
   it should "agree with Spark on 60 seeded random filter combinations (differential)" in {
     val (server, data) = fixture()
     try {

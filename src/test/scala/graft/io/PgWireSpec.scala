@@ -186,11 +186,11 @@ class PgWireSpec extends SparkSpec {
         "rd.adp", schema2, "k", numPartitions = 4)
         .rdd.getNumPartitions shouldBe 4
       // a NULL key row would be INVISIBLE to the range scan: planning
-      // fails fast instead of silently returning a partial table
+      // (at the first action) fails instead of returning a partial table
       engine.execute("INSERT INTO rd.adp (k) VALUES (NULL)")
-      val e = intercept[IllegalArgumentException](
-        PgWire.readDistributed(spark, "127.0.0.1", server.port,
-          "rd.adp", schema2, "k"))
+      val nullKeys = PgWire.readDistributed(spark, "127.0.0.1", server.port,
+        "rd.adp", schema2, "k")
+      val e = intercept[IllegalArgumentException](nullKeys.count())
       e.getMessage should include("NULL")
     } finally server.stop()
   }

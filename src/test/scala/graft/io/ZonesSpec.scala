@@ -218,6 +218,37 @@ class ZonesSpec extends SparkSpec {
     manifest should not be empty
   }
 
+  it should "build NTZ footer manifests identical to the re-scan in a non-UTC session" in {
+    val zone = "spark.sql.session.timeZone"
+    val prior = spark.conf.get(zone)
+    spark.conf.set(zone, "America/Los_Angeles")
+    try {
+      val path = freshDir("zones-footer-ntz")
+      // minutes across the 2026-03-08 DST gap, built zone-free
+      val ntz = spark.range(0, 3000)
+        .select(col("id").as("k"), expr("timestamp_ntz'2026-03-07 00:00:00' + " +
+          "make_dt_interval(0, 0, id, 0)").as("t"))
+      Zones.writeZoned(ntz, path, "t", 6)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.get(1), r.get(2), r.getLong(3))).sortBy(_._1).toSeq
+      val manifest = spark.read.parquet(s"$path/manifest")
+        .select("file", "zmin", "zmax", "rows")
+      val rescan = spark.read.parquet(s"$path/data")
+        .groupBy(input_file_name().as("file"))
+        .agg(min(col("t")).as("zmin"), max(col("t")).as("zmax"),
+          count(lit(1)).as("rows"))
+      rows(manifest) shouldBe rows(rescan)
+      rows(manifest) should not be empty
+      // the pruned file set of an NTZ predicate is the re-scan's
+      val lo = expr("timestamp_ntz'2026-03-08 01:30:00'")
+      val hi = expr("timestamp_ntz'2026-03-08 04:00:00'")
+      val want = rescan.filter(col("zmax") >= lo && col("zmin") <= hi)
+        .select("file").collect().map(_.getString(0)).toSet
+      Zones.prunedFiles(spark, path, lo, hi).toSet shouldBe want
+      want should not be empty
+    } finally spark.conf.set(zone, prior)
+  }
+
   it should "fall back to the re-scan for non-footer-exact zone columns (string)" in {
     val path = freshDir("zones-footer-fallback")
     val st = spark.range(1, 201)

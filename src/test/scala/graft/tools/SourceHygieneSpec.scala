@@ -101,4 +101,31 @@ class SourceHygieneSpec extends AnyFlatSpec with Matchers {
       inverses should have size 1
     }
   }
+
+  /** The Spark side of the pglite bridge opens every wire connection
+    * through `PgLiteConn.open` and decodes NTZ wall-clock text in one
+    * place (the wire → Spark value decoder), so the NTZ/DST rule has
+    * one copy. */
+  it should "open pglite connections in PgLiteConn.open only and parse NTZ text once" in {
+    val root = Paths.get("src/main/scala/graft/io/pg")
+    def sites(files: Seq[Path], needle: String) = for {
+      p <- files
+      lines = Files.readAllLines(p).asScala
+      (line, i) <- lines.zipWithIndex
+      t = line.trim
+      if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+      if t.contains(needle)
+    } yield (s"$p:${i + 1}: $t", lines.take(i).reverse.find(_.trim.nonEmpty))
+    val opens = sites(walk(root.toString, ".scala"), "new PgLiteClient(")
+    withClue("PgLiteClient constructed outside PgLiteConn.open:\n" +
+      opens.map(_._1).mkString("\n") + "\n") {
+      opens should have size 1
+      opens.head._2.exists(_.contains("def open(): PgLiteClient")) shouldBe true
+    }
+    val parses = sites(Seq("PgWire.scala", "PgLiteDataSource.scala")
+      .map(root.resolve), "LocalDateTime.parse(")
+    withClue("NTZ text decoders:\n" + parses.map(_._1).mkString("\n") + "\n") {
+      parses should have size 1
+    }
+  }
 }
