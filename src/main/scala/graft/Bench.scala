@@ -56,12 +56,12 @@ object Bench {
       // layout under test. 64 tiny rows, wiped after.
       locally {
         val wz = (0L until 64L).map(i => (i, i % 7)).toDF("a", "b")
-        graft.io.Zones.writeZonedMulti(wz, "target/tmp-warmup-zorder",
-          Seq("a", "b"), 2)
-        graft.io.Zones.readZoneRangeOn(spark, "target/tmp-warmup-zorder",
+        val zdir = graft.queries.Harness.scratch(spark, "warmup-zorder", sfDir)
+        graft.io.Zones.writeZonedMulti(wz, zdir, Seq("a", "b"), 2)
+        graft.io.Zones.readZoneRangeOn(spark, zdir,
           "a", org.apache.spark.sql.functions.lit(0L),
           org.apache.spark.sql.functions.lit(9L)).count()
-        graft.io.Fs.deleteRecursive(spark, "target/tmp-warmup-zorder")
+        graft.io.Fs.deleteRecursive(spark, zdir)
       }
       spark.catalog.clearCache()
       System.gc()

@@ -1,6 +1,6 @@
 package graft.io.pg
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{BufferedOutputStream, DataInputStream, DataOutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -57,7 +57,10 @@ final class PgLiteClient(host: String, port: Int,
       }
     })
   private[io] def bytesRead: Long = inBytes
-  private val out = new DataOutputStream(sock.getOutputStream)
+  // buffered: flushed where the client waits for the server (Query,
+  // Sync, Flush, CopyDone, CopyFail, Terminate, the startup packets)
+  private val out = new DataOutputStream(
+    new BufferedOutputStream(sock.getOutputStream, 1 << 16))
 
   /** Full connection handshake; `negotiateSsl` first sends an
     * SSLRequest and requires the documented single-byte 'N' refusal. */
@@ -631,13 +634,15 @@ final class PgLiteClient(host: String, port: Int,
   def txStatus: Char = lastTxStatus
 
   private def readMessage(): (Char, Array[Byte]) = {
-    val tpe = in.read()
-    if (tpe < 0) throw new java.io.EOFException("server closed connection")
-    val len = in.readInt()
-    val payload = new Array[Byte](len - 4)
+    // type byte and length in one read: the input is unbuffered
+    val header = new Array[Byte](5)
+    if (in.readNBytes(header, 0, 5) < 5)
+      throw new java.io.EOFException("server closed connection")
+    val tpe = header(0).toChar
+    val payload = new Array[Byte](int32(header, 1) - 4)
     in.readFully(payload)
     if (tpe == 'Z' && payload.length == 1) lastTxStatus = payload(0).toChar
-    (tpe.toChar, payload)
+    (tpe, payload)
   }
 
   private def parseError(payload: Array[Byte]): PgServerError = {

@@ -1,6 +1,7 @@
 package graft.io.pg
 
-import java.io.{DataInputStream, DataOutputStream, EOFException, IOException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream, EOFException, IOException}
 import java.net.{InetAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -92,8 +93,12 @@ final class PgLiteServer private (server: ServerSocket, engine: PgLiteEngine) {
   }
 
   private def handle(sock: Socket): Unit = {
-    val in = new DataInputStream(sock.getInputStream)
-    val out = new DataOutputStream(sock.getOutputStream)
+    // buffered both ways: a frame's fields are separate writes, so an
+    // unbuffered stream sends one loopback segment per field. Output
+    // is flushed exactly where the protocol waits for the client:
+    // ReadyForQuery, Flush, CopyInResponse, ErrorResponse, the SSL 'N'.
+    val in = new DataInputStream(new BufferedInputStream(sock.getInputStream, 1 << 16))
+    val out = new DataOutputStream(new BufferedOutputStream(sock.getOutputStream, 1 << 16))
     // per-connection transaction state; a connection dropped mid-
     // transaction discards its overlay implicitly (the base tables
     // were never touched) — Postgres' implicit-rollback-on-disconnect

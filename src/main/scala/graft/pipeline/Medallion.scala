@@ -115,7 +115,7 @@ object Medallion {
     * [[Dims.withDistributedId]] in when the main table is
     * fact-sized. */
   def gold(wide0: DataFrame, config: DataFrame, spec: GoldSpec): Map[String, DataFrame] =
-    gold(wide0, routing(config, spec), spec)
+    gold(wide0, routing(config, spec), spec)._2
 
   /** The gold column routing: the config's per-target column lists with
     * the spec's key columns injected (reference :393-401). One
@@ -130,8 +130,9 @@ object Medallion {
       factKey = Seq(mainKey))
   }
 
+  /** The cached keyed wide frame and the gold tables that project it. */
   private def gold(wide0: DataFrame, lists: Map[String, Seq[String]],
-                   spec: GoldSpec): Map[String, DataFrame] = {
+                   spec: GoldSpec): (DataFrame, Map[String, DataFrame]) = {
     // 1. key synthesis on the wide frame (reference :386-391)
     val dimKeyed = spec.dimKeyCols.foldLeft(wide0) { case (df, (dim, cols)) =>
       df.withColumn(s"${dim}_key", Keys.hashKey(cols.map(col)))
@@ -182,7 +183,7 @@ object Medallion {
           spec.surrogateIdCol, s"${spec.mainTable}_id"))
     }.toMap
 
-    dims ++ facts + (spec.mainTable -> Reorder.keyFirst(main, spec.surrogateIdCol))
+    wide -> (dims ++ facts + (spec.mainTable -> Reorder.keyFirst(main, spec.surrogateIdCol)))
   }
 
   /** CREATE TABLE DDLs for the gold outputs, reproducing the
@@ -234,7 +235,15 @@ object Medallion {
   def run(
       spark: SparkSession,
       dataPath: String, configPath: String,
-      bronzeDir: String, spec: GoldSpec): Map[String, DataFrame] = {
+      bronzeDir: String, spec: GoldSpec): Map[String, DataFrame] =
+    runCached(spark, dataPath, configPath, bronzeDir, spec)._2
+
+  /** [[run]], also returning the cached keyed wide frame every gold
+    * table projects, for a caller that unpersists it after its writes. */
+  private[pipeline] def runCached(
+      spark: SparkSession,
+      dataPath: String, configPath: String,
+      bronzeDir: String, spec: GoldSpec): (DataFrame, Map[String, DataFrame]) = {
     def bronzeRead(rawPath: String): DataFrame = {
       val (path, schema) = bronze(spark, rawPath, bronzeDir)
       Sources.read(spark, path, Some(schema))

@@ -166,13 +166,15 @@ object Orchestrator {
       val t0 = System.nanoTime()
       try {
         Fs.deleteRecursive(spark, scratch) // partial tree from a failed attempt
-        val gold = Medallion.run(
+        val (wide, gold) = Medallion.runCached(
           spark, dataPath, configPath, s"$scratch/bronze", spec)
         // Par returns only after every write has ended and rethrows the
-        // first failure, so no marker follows a failed or running write
-        Par.run(gold.size)(gold.toSeq.map { case (table, df) => () =>
+        // first failure, so no marker follows a failed or running write;
+        // the cached frame the tables project is this run's to release
+        try Par.run(gold.size)(gold.toSeq.map { case (table, df) => () =>
           df.write.mode("overwrite").parquet(s"$scratch/gold/$table")
         })
+        finally wide.unpersist()
         // marker INSIDE the scratch tree, written after every table: the
         // rename below publishes data + marker in one metadata operation
         fs(spark, workDir).create(new Path(scratch, Marker), true).close()

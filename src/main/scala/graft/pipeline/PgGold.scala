@@ -225,7 +225,7 @@ object PgGold {
       // (5) signed-count multiset equality over a full distributed
       // re-scan — the facts' one-pass check (see writeFactDistributed)
       val back = PgWire.readDistributed(df.sparkSession, host, port,
-        s"$schemaName.$table", df.schema, idCol)
+        s"$schemaName.$table", df.schema, idCol, numPartitions = 1)
       val signed = cached.select(allCols.map(col): _*)
         .withColumn("__sign", lit(1L))
         .unionAll(back.select(allCols.map(col): _*)
@@ -283,8 +283,10 @@ object PgGold {
           rowsHint = Some(expected))
         require(published == expected,
           s"$table: server confirmed $published rows, engine expected $expected")
+        // floor 1: the row census alone sizes the read-back, so a gold
+        // table under `rowsPerPartition` rows is one range scan
         val back = PgWire.readDistributed(df.sparkSession, host, port,
-          s"$schemaName.$table", df.schema, orderCol, numPartitions = 8)
+          s"$schemaName.$table", df.schema, orderCol, numPartitions = 1)
         // signed-count multiset equality in ONE pass: +1 per engine
         // row, -1 per wire row, grouped on every column — any group
         // with a nonzero sum is a row the round trip lost, duplicated,

@@ -380,23 +380,17 @@ object AdvancedQueries {
   }
 
   /** The zoned lineitem layout shared by q_zonemap_count and
-    * q_zonemap_scan — an epoch artifact per (application, sfDir),
-    * built once and reused (the README bench charging rule: the
+    * q_zonemap_scan — an epoch artifact of the lineitem table, built
+    * once and reused (the README bench charging rule: the
     * alphabetically first consumer, q_zonemap_count, carries the
     * build; q_zonemap_scan's number is the steady-state serve). */
-  private val zonesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sharedZonesPath(s: SparkSession, dir: String): String =
-    zonesCache.computeIfAbsent(
-      s.sparkContext.applicationId + ":" + dir, _ => {
-        val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-        val base = s"target/tmp-zones-$slug"
-        graft.io.Zones.writeZoned(
-          t(s, dir, "lineitem").select(col("l_shipdate"), col("l_returnflag"),
-            col("l_quantity"), col("l_extendedprice")),
-          base, "l_shipdate", 16)
-        base
-      })
+    Harness.memo(s, "zones", dir, Seq("lineitem.parquet"), "zones-v1") { m =>
+      graft.io.Zones.writeZoned(
+        t(s, dir, "lineitem").select(col("l_shipdate"), col("l_returnflag"),
+          col("l_quantity"), col("l_extendedprice")),
+        m, "l_shipdate", 16)
+    }
 
   /** METADATA-ONLY range count (round-13,
     * [[graft.io.Zones.countRange]]): count(*) over the Q2+Q3-96 ship
@@ -437,9 +431,7 @@ object AdvancedQueries {
     * routes through the union manifest and must equal the oracle's
     * plain filter — the batch seam is value-invisible. */
   def zonemapIncremental(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-zones-incr-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "zones-incr", dir)
     val li = t(s, dir, "lineitem").select(col("l_shipdate"),
       col("l_returnflag"), col("l_quantity"), col("l_extendedprice"),
       col("l_orderkey"))
@@ -467,8 +459,7 @@ object AdvancedQueries {
     * asserted in ZonesSpec on both dimensions). The gate proves value
     * parity vs the oracle's plain filter. */
   def zorderScan(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-zorder-$slug"
+    val base = Harness.scratch(s, "zorder", dir)
     graft.io.Zones.writeZonedMulti(
       t(s, dir, "lineitem").select(col("l_shipdate"), col("l_partkey"),
         col("l_returnflag"), col("l_quantity")),
@@ -533,9 +524,7 @@ object AdvancedQueries {
     * fold, and streamed fold all land on identical rows. */
   def scd2StreamParity(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-scd-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "scd-stream", dir)
     val o = t(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"),
       col("o_orderkey"), col("o_orderpriority"))
     val cut = lit("1998-01-01").cast("timestamp")
@@ -545,10 +534,8 @@ object AdvancedQueries {
     // disk-memoized across processes (StageMemo, r14 / VERDICT r13
     // task 5); each run works on a cheap file copy, because the stream
     // fold MUTATES the history tree in place
-    val stage = s"target/stage-scd-stream-$slug"
-    graft.io.StageMemo.cachedDir(s, stage,
-      graft.io.StageMemo.fingerprint(Seq(s"$dir/orders.parquet"),
-        "scd-stream-hist-v1")) {
+    val stage = Harness.memo(s, "scd-stream", dir, Seq("orders.parquet"),
+        "scd-stream-hist-v1") { m =>
       val hist = graft.etl.Scd.scd2FromEvents(
         o.filter(col("o_orderdate") < cut),
         col("o_custkey"), col("o_orderdate"),
@@ -556,11 +543,11 @@ object AdvancedQueries {
         .select(col("o_custkey"), col("version"), col("effective_from"),
           col("effective_to"), col("is_current"), col("o_orderpriority"))
       graft.streaming.ScdStreams.writeScdHistory(
-        hist, s"$stage/hist", "o_custkey", buckets = 8)
+        hist, s"$m/hist", "o_custkey", buckets = 8)
       o.filter(col("o_orderdate") >= cut && col("o_orderdate") < mid)
-        .coalesce(1).write.parquet(s"$stage/in1")
+        .coalesce(1).write.parquet(s"$m/in1")
       o.filter(col("o_orderdate") >= mid)
-        .coalesce(1).write.parquet(s"$stage/in2")
+        .coalesce(1).write.parquet(s"$m/in2")
     }
     graft.io.StageMemo.copyTree(s"$stage/hist", s"$base/hist")
     // two time-ordered files → two micro-batches. FileStreamSource
@@ -570,7 +557,6 @@ object AdvancedQueries {
     // flakily. Pin distinct mtimes explicitly so batch order is
     // deterministic.
     val inDir = java.nio.file.Paths.get(base, "in")
-    java.nio.file.Files.createDirectories(inDir)
     val t0 = System.currentTimeMillis() - 60000L
     def copyParts(sub: String, mtime: Long, pfx: String): Unit = {
       val parts = new java.io.File(s"$stage/$sub").listFiles()
@@ -583,14 +569,15 @@ object AdvancedQueries {
         assert(d.toFile.setLastModified(mtime), s"mtime: $d")
       }
     }
-    copyParts("in1", t0, "a")
-    copyParts("in2", t0 + 30000L, "b")
-    val stream = s.readStream.schema(o.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = graft.streaming.ScdStreams.scdIngest(
-      stream, s"$base/hist", s"$base/ckpt", "o_custkey", "o_orderdate",
-      Seq("o_orderpriority"), Seq("o_orderkey"), buckets = 8)
-    try q.processAllAvailable() finally q.stop()
+    Harness.streamParity(s, base, o.schema)(() => {
+      java.nio.file.Files.createDirectories(inDir)
+      copyParts("in1", t0, "a")
+      copyParts("in2", t0 + 30000L, "b")
+    }) { stream =>
+      graft.streaming.ScdStreams.scdIngest(
+        stream, s"$base/hist", s"$base/ckpt", "o_custkey", "o_orderdate",
+        Seq("o_orderpriority"), Seq("o_orderkey"), buckets = 8)
+    }
     // r14 (VERDICT r13 task 8, closing r12 task 3's second half): fold
     // the per-batch applied markers into one watermark BEFORE serving,
     // so this gate also proves the read lands byte-identical through a
@@ -611,9 +598,7 @@ object AdvancedQueries {
     * compact, and the derived view must equal DuckDB's one-shot
     * aggregate over all of orders. */
   def matviewIncremental(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-matview-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "matview", dir)
     val o = t(s, dir, "orders")
     (0 until 3).foreach { i =>
       graft.ops.MatView.writePartial(
@@ -678,7 +663,7 @@ object AdvancedQueries {
     * the warehouse dir does not). */
   private def scdBucketedTables(
       s: SparkSession, dir: String): (String, String, String) = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val slug = Harness.slug(dir).replace('.', '_')
     val ct = s"graft_bk_scd_cur_$slug"
     val ut = s"graft_bk_scd_upd_$slug"
     val at = s"graft_bk_scd_after_$slug"

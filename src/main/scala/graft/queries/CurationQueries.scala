@@ -135,9 +135,7 @@ object CurationQueries {
     * re-written per run (two codegen'd projections of the gate corpus;
     * hive `epoch=N` dirs so epoch-pruned reads skip old files). */
   def epochEvolutionQ(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = s"target/tmp-evolve-$slug"
-    graft.io.Fs.deleteRecursive(s, root)
+    val root = Harness.scratch(s, "evolve", dir)
     val d = docs(s, dir)
     d.filter(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("lang"))
@@ -299,8 +297,7 @@ object CurationQueries {
   def packShardsQ(s: SparkSession, dir: String): DataFrame = {
     val budget = 256L
     val buckets = 32
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = s"target/tmp-packbins-$slug"
+    val root = Harness.scratch(s, "packbins", dir)
     val d = docs(s, dir)
       .select(col("doc_id"), col("lang"), col("source"), col("text"))
       .withColumn("tok", size(Text.tokens(col("text"))).cast("long"))
@@ -340,9 +337,7 @@ object CurationQueries {
     * one parquet scan of the bits. */
   def bloomPersistedQ(s: SparkSession, dir: String): DataFrame = {
     val k = 5
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = s"target/tmp-bloom-$slug"
-    graft.io.Fs.deleteRecursive(s, root)
+    val root = Harness.scratch(s, "bloom", dir)
     val d = docs(s, dir).select(col("doc_id"))
     val n = d.count()
     var m = 1L << 17
@@ -444,17 +439,12 @@ object CurationQueries {
     * ShardingSpec/DocStreamsSpec. */
   def shardStreamQ(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-shard-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "shard-stream", dir)
     val hexChars = 1
     val d = docs(s, dir).select(col("doc_id"), col("n_chars"))
-    d.write.parquet(s"$base/in")
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = graft.streaming.DocStreams
-      .shardIngest(stream, "doc_id", hexChars, s"$base/layout")
-    try q.processAllAvailable() finally q.stop()
+    Harness.streamParity(s, base, d.schema)(() => d.write.parquet(s"$base/in")) {
+      graft.streaming.DocStreams.shardIngest(_, "doc_id", hexChars, s"$base/layout")
+    }
     Sharding.compactShards(s, "doc_id", s"$base/layout")
     Sharding.writeShards(d, "doc_id", hexChars, s"$base/oneshot")
     val streamed = s.read.parquet(s"$base/layout").drop("batch")

@@ -208,10 +208,10 @@ object RefQueries {
     * read the produced single object back with the source schema, and
     * emit it. The oracle is the source table itself, so a mangled
     * header, quoting bug, or dropped/duplicated row anywhere in the
-    * sink/reader pair flips the hash. Scratch object lives under
-    * target/, overwritten per run. */
+    * sink/reader pair flips the hash. Scratch object lives in
+    * [[Harness.scratch]], fresh per run. */
   def ioCsvRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = s"target/tmp-io-oracle-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val out = Harness.scratch(s, "io-csv", dir)
     val nation = t(s, dir, "nation")
     val path = graft.io.Sinks.csvSingleFile(nation, out, "Nation Export")
     s.read.option("header", "true").schema(nation.schema).csv(path)
@@ -228,7 +228,7 @@ object RefQueries {
     * by contract (SURVEY.md §1.1), so the driver-side collect IS the
     * size class of the format. */
   def ioXlsxScan(s: SparkSession, dir: String): DataFrame = {
-    val out = s"target/tmp-io-oracle-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val out = Harness.scratch(s, "io-xlsx", dir)
     val nation = t(s, dir, "nation").orderBy(col("n_nationkey"))
     val cols = nation.columns.toSeq
     val rows = cols +: nation.collect().toSeq.map(r =>
@@ -259,8 +259,7 @@ object RefQueries {
     hc.set("fs.s3lite.impl",
       classOf[graft.io.s3.S3LiteFileSystem].getName)
     hc.set("fs.s3lite.endpoint", srv.endpoint)
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_").replace("_", "-")
-    val root = s"s3lite://graft-$slug"
+    val root = s"s3lite://graft-${Harness.slug(dir).replace("_", "-")}"
     val c = t(s, dir, "customer")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
     c.write.mode("overwrite").option("header", "true")
@@ -747,14 +746,12 @@ object RefQueries {
     * publish, or a batch-boundary seam breaks the hash. */
   def pgStreamSink(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-pg-sink-$slug"
     // the CHECKPOINT must be fresh per run (a reused one replays as
     // all-committed and the sink would no-op) — but the parquet
     // fan-out input is a pure function of the source table, so it is
     // disk-memoized like the other stream-parity fixtures (VERDICT
     // r16 task 6: the gate measures the SINK, not fixture rebuilds)
-    graft.io.Fs.deleteRecursive(s, s"$base/ckpt")
+    val ckpt = s"${Harness.scratch(s, "pg-sink", dir)}/ckpt"
     val cleaned = graft.etl.Clean.clean(t(s, dir, "customer"))
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
     // 8 input files × maxFilesPerTrigger=3 → three real micro-batches
@@ -763,10 +760,9 @@ object RefQueries {
     // four did — each trigger is ~1.5 s of fixed micro-batch machinery,
     // so the fourth bought wall, not coverage; the published table and
     // its oracle hash are trigger-count-invariant)
-    graft.io.StageMemo.cachedDir(s, s"$base/in",
-      graft.io.StageMemo.fingerprint(
-        Seq(s"$dir/customer.parquet"), "pg-sink-in-v1")) {
-      cleaned.repartition(8).write.mode("overwrite").parquet(s"$base/in")
+    val in = Harness.memo(s, "pg-sink-in", dir, Seq("customer.parquet"),
+        "pg-sink-in-v1") { m =>
+      cleaned.repartition(8).write.mode("overwrite").parquet(m)
     }
     val (server, _) = graft.io.pg.PgLiteServer.start()
     try {
@@ -779,11 +775,11 @@ object RefQueries {
       } finally c.close()
       val q = s.readStream.schema(cleaned.schema)
         .option("maxFilesPerTrigger", "3")
-        .parquet(s"$base/in")
+        .parquet(in)
         .writeStream.format("pglite")
         .option("host", "127.0.0.1").option("port", server.port)
         .option("table", "silver.customer_st")
-        .option("checkpointLocation", s"$base/ckpt")
+        .option("checkpointLocation", ckpt)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -813,9 +809,7 @@ object RefQueries {
     * breaks the hash. */
   def pgStreamSource(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-pg-src-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "pg-src", dir)
     val (server, _) = graft.io.pg.PgLiteServer.start()
     try {
       val cleaned = graft.etl.Clean.clean(t(s, dir, "customer"))
@@ -870,9 +864,7 @@ object RefQueries {
     * filter on the parquet source. */
   def pgStreamSourceFiltered(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-pg-srcf-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "pg-srcf", dir)
     val (server, _) = graft.io.pg.PgLiteServer.start()
     try {
       val cleaned = graft.etl.Clean.clean(t(s, dir, "customer"))
@@ -1010,7 +1002,7 @@ object RefQueries {
     * text (escaping), schema-driven null restoration, and the
     * distributed multi-part write/read pair. */
   def ioJsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = s"target/tmp-io-jsonl-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val out = Harness.scratch(s, "io-jsonl", dir)
     val docs = t(s, dir, "documents")
     graft.io.Sinks.jsonlDir(docs, out)
     graft.io.Sources.jsonl(s, out, Some(docs.schema)).orderBy(col("doc_id"))
@@ -1020,7 +1012,7 @@ object RefQueries {
     * be value-identical to the parquet source (the q_io_jsonl pattern
     * for the other native columnar format). */
   def ioOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = s"target/tmp-io-orc-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val out = Harness.scratch(s, "io-orc", dir)
     val docs = t(s, dir, "documents")
     graft.io.Sinks.orcDir(docs, out)
     graft.io.Sources.orc(s, out, Some(docs.schema)).orderBy(col("doc_id"))
@@ -1033,7 +1025,7 @@ object RefQueries {
     * exactly the 7 bad lines. A leaked garbage row, a dropped clean
     * row, or a mis-routed line breaks the hash. */
   def ioJsonlQuarantine(s: SparkSession, dir: String): DataFrame = {
-    val out = s"target/tmp-io-quar-${dir.replaceAll("[^A-Za-z0-9.]", "_")}"
+    val out = Harness.scratch(s, "io-quar", dir)
     val docs = t(s, dir, "documents")
     graft.io.Sinks.jsonlDir(docs, out)
     val garbage = (1 to 7).map(i => s"{broken json line $i")

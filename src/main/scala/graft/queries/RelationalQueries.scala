@@ -167,7 +167,7 @@ object RelationalQueries {
     * the fact table pays its shuffle once at write time, then every
     * subsequent join on that key is exchange-free. */
   def joinBucketed(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9]", "_")
+    val slug = Harness.slug(dir).replace('.', '_')
     val (ot, ct) = (s"graft_bk_orders_$slug", s"graft_bk_customer_$slug")
     // build once per (session, sf): rebuilding per call would measure
     // the write, not the join (same memo contract as the ANN index)

@@ -191,7 +191,7 @@ object SimilarityQueries {
   private def memoKey(s: SparkSession, dir: String): String = {
     val appId = s.sparkContext.applicationId
     evictDeadApps(
-      Seq(truthCache, centroidCache, codebookCache, indexCache,
+      Seq(truthCache, centroidCache, codebookCache,
         pcaCensusCache, kcenterCache), appId)
     appId + ":" + dir
   }
@@ -206,12 +206,8 @@ object SimilarityQueries {
     * testdata regeneration rebuilds. */
   private def truthStage(s: SparkSession, dir: String, name: String)
                         (build: => DataFrame): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = s"target/stage-$name-$slug"
-    graft.io.StageMemo.cachedDir(s, root,
-      graft.io.StageMemo.fingerprint(Seq(s"$dir/embeddings.parquet"), s"truth-$name-v2")) {
-      build.write.parquet(s"$root/truth")
-    }
+    val root = Harness.memo(s, name, dir, Seq("embeddings.parquet"),
+        s"truth-$name-v2") { m => build.write.parquet(s"$m/truth") }
     s.read.parquet(s"$root/truth")
   }
 
@@ -330,7 +326,7 @@ object SimilarityQueries {
     * once per corpus epoch, search every query batch against it) run
     * end-to-end as a driver row: [[Similarity.writeAnnIndex]] trains
     * and persists centroids + hive-partitioned int8 lists + stored
-    * floats under target/ (wiped per run — the epoch contract), the
+    * floats under [[Harness.memo]] (rebuilt when the embeddings drift), the
     * SAMPLED query set probes it through [[Similarity.annIndexTopK]]
     * with every list probed (nprobe = k, so pruning is exercised as a
     * no-op and quality isolates the int8-shortlist + rescore path),
@@ -342,31 +338,16 @@ object SimilarityQueries {
     * are valid. Query ids are shifted by 10⁹ (index search requires
     * ids disjoint from the corpus); the query's own corpus twin
     * (cos = 1) is dropped after unshifting. */
-  /** Memoized epoch-index build per (application, sfDir) — the same
-    * contract as [[trainedCents]]: the build is deterministic (memoized
-    * centroids + id-deterministic assignment), so rebuilding it on
-    * every gate invocation in the same application (verify + bench +
-    * rehearsal + suite share JVMs) only re-pays the epoch cost the
-    * persisted-index design exists to amortize. The memo holds the
-    * built path; the first build of an application also clears any
-    * stale on-disk epoch from a previous application at that path. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def annIndexGate(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val base = indexCache.computeIfAbsent(memoKey(s, dir), _ => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val p = s"target/tmp-ann-index-$slug"
-      // disk-memoized across processes (StageMemo): the index is a pure
-      // function of the embeddings table — the epoch contract writeAnnIndex
-      // documents, now honored by the harness too
-      graft.io.StageMemo.cachedDir(s, p,
-        graft.io.StageMemo.fingerprint(Seq(s"$dir/embeddings.parquet"), "ann-index-k16-lloyd3-v1")) {
-        Similarity.writeAnnIndex(e, p, k = 16, lloydIters = 3,
-          preTrained = trainedCents(s, dir))
-      }
-    })
+    // disk-memoized across processes: the index is a pure function of
+    // the embeddings table — the epoch contract writeAnnIndex documents,
+    // honored by the harness too
+    val base = Harness.memo(s, "ann-index", dir, Seq("embeddings.parquet"),
+        "ann-index-k16-lloyd3-v1") { m =>
+      Similarity.writeAnnIndex(e, m, k = 16, lloydIters = 3,
+        preTrained = trainedCents(s, dir))
+    }
     val shift = 1000000000L
     val qs = e.filter(isQuerySample)
       .select((col("vec_id") + shift).as("vec_id"), col("embedding"))

@@ -314,9 +314,7 @@ object TextQueries {
     * duplicates them, or breaks the min-of-mins hash fold flips a
     * boolean the oracle expects true. */
   def dedupCompaction(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-compact-$slug/idx"
-    graft.io.Fs.deleteRecursive(s, s"target/tmp-compact-$slug")
+    val base = s"${Harness.scratch(s, "compact", dir)}/idx"
     val d = docs(s, dir)
     Dedup.writeDedupIndex(d.filter(col("doc_id") < 400), "text", "doc_id", base)
     // the two streamed batches write disjoint batch=<id> dirs after the
@@ -401,15 +399,13 @@ object TextQueries {
     * — and must land on exactly the q_text_lm_score oracle rows, so
     * the write→read→score round-trip preserves every quantized cost. */
   def lmPersisted(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-lm-index-$slug"
     val d = docs(s, dir)
     // model build disk-memoized across processes (StageMemo, r14): a
     // pure function of the documents table — the once-per-epoch train
     // contract; the indexed scoring still runs per invocation
-    graft.io.StageMemo.cachedDir(s, base,
-      graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "lm-model-v1")) {
-      graft.ops.LangModel.writeLmModel(d, col("text"), base)
+    val base = Harness.memo(s, "lm-index", dir, Seq("documents.parquet"),
+        "lm-model-v1") { m =>
+      graft.ops.LangModel.writeLmModel(d, col("text"), m)
     }
     graft.ops.LangModel.lmScoresIndexed(d, col("text"), col("doc_id"), base)
       .orderBy(col("doc_id"))
@@ -419,14 +415,12 @@ object TextQueries {
     * indexes, weights computed purely from the persisted costs — must
     * equal the q_dsir_weights oracle bit-for-bit. */
   def dsirPersisted(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-dsir-index-$slug"
     val d = docs(s, dir)
-    graft.io.StageMemo.cachedDir(s, base,
-      graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "dsir-models-v1")) {
-      graft.ops.LangModel.writeLmModel(d, col("text"), s"$base/raw")
+    val base = Harness.memo(s, "dsir-index", dir, Seq("documents.parquet"),
+        "dsir-models-v1") { m =>
+      graft.ops.LangModel.writeLmModel(d, col("text"), s"$m/raw")
       graft.ops.LangModel.writeLmModel(
-        d.filter(col("lang") === "en"), col("text"), s"$base/tgt")
+        d.filter(col("lang") === "en"), col("text"), s"$m/tgt")
     }
     Dsir.importanceWeightsIndexed(d, col("text"), col("doc_id"),
         col("lang") === "en", s"$base/raw", s"$base/tgt")
@@ -449,14 +443,12 @@ object TextQueries {
     * corpus against the appended index must land on exactly the
     * one-shot q_text_lm_score oracle rows. */
   def lmIncremental(s: SparkSession, dir: String): DataFrame = {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-lm-incr-$slug"
     val d = docs(s, dir)
-    graft.io.StageMemo.cachedDir(s, base,
-      graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "lm-incr-v1")) {
+    val base = Harness.memo(s, "lm-incr", dir, Seq("documents.parquet"),
+        "lm-incr-v1") { m =>
       val isFirst = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
-      graft.ops.LangModel.writeLmModel(d.filter(isFirst), col("text"), s"$base/model")
-      graft.ops.LangModel.appendLmModel(d.filter(!isFirst), col("text"), s"$base/model")
+      graft.ops.LangModel.writeLmModel(d.filter(isFirst), col("text"), s"$m/model")
+      graft.ops.LangModel.appendLmModel(d.filter(!isFirst), col("text"), s"$m/model")
     }
     graft.ops.LangModel.lmScoresIndexed(d, col("text"), col("doc_id"), s"$base/model")
       .orderBy(col("doc_id"))
@@ -471,20 +463,15 @@ object TextQueries {
     * scoring, and streamed scoring are one definition in three modes. */
   def lmStreamParity(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-lm-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "lm-stream", dir)
     val d = docs(s, dir)
     // model build and stream-input staging are independent (disjoint
     // dirs, the stream starts only after both) — overlap (guide §2.6)
-    graft.tools.Par.run(2)(Seq(
+    Harness.streamParity(s, base, d.schema)(
       () => graft.ops.LangModel.writeLmModel(d, col("text"), s"$base/model"),
-      () => d.coalesce(2).write.parquet(s"$base/in"))) // 2 files → 2 micro-batches
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = graft.streaming.DocStreams.lmScoreIngest(
-      stream, s"$base/model", s"$base/sink")
-    try q.processAllAvailable() finally q.stop()
+      () => d.coalesce(2).write.parquet(s"$base/in")) { stream => // 2 files → 2 micro-batches
+      graft.streaming.DocStreams.lmScoreIngest(stream, s"$base/model", s"$base/sink")
+    }
     s.read.parquet(s"$base/sink/scores")
       .select(col("doc_id"), col("n_bigrams"),
         col("sum_cost"), col("avg_cost"))
@@ -496,18 +483,13 @@ object TextQueries {
     * land on the batch scoring oracle verbatim. */
   def qualityStreamParity(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-qm-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "qm-stream", dir)
     val d = docs(s, dir)
-    graft.tools.Par.run(2)(Seq( // independent: model dir vs stream input
+    Harness.streamParity(s, base, d.schema)( // independent: model dir vs stream input
       () => graft.ops.QualityModel.writeModel(s, d, s"$base/model"),
-      () => d.coalesce(2).write.parquet(s"$base/in"))) // 2 files → 2 micro-batches
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = graft.streaming.DocStreams.qualityScoreIngest(
-      stream, s"$base/model", s"$base/sink")
-    try q.processAllAvailable() finally q.stop()
+      () => d.coalesce(2).write.parquet(s"$base/in")) { stream => // 2 files → 2 micro-batches
+      graft.streaming.DocStreams.qualityScoreIngest(stream, s"$base/model", s"$base/sink")
+    }
     s.read.parquet(s"$base/sink/scores")
       .select(col("doc_id"), col("score"), col("keep"),
         col("label"), col("agree"))
@@ -519,18 +501,13 @@ object TextQueries {
     * the one-shot encode oracle (counts are associative). */
   def bpeStreamParity(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-bpe-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "bpe-stream", dir)
     val d = docs(s, dir)
-    graft.tools.Par.run(2)(Seq( // independent: model dir vs stream input
+    Harness.streamParity(s, base, d.schema)( // independent: model dir vs stream input
       () => graft.ops.Bpe.writeBpeModel(s, d, s"$base/model"),
-      () => d.coalesce(2).write.parquet(s"$base/in"))) // 2 files → 2 micro-batches
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = graft.streaming.DocStreams.bpeEncodeIngest(
-      stream, s"$base/model", s"$base/sink")
-    try q.processAllAvailable() finally q.stop()
+      () => d.coalesce(2).write.parquet(s"$base/in")) { stream => // 2 files → 2 micro-batches
+      graft.streaming.DocStreams.bpeEncodeIngest(stream, s"$base/model", s"$base/sink")
+    }
     s.read.parquet(s"$base/sink/tokens")
       .groupBy(col("token")).agg(sum(col("cnt")).as("cnt"))
       .orderBy(col("cnt").desc, col("token").asc)
@@ -544,16 +521,12 @@ object TextQueries {
     * trace because disjoint batches make df/stats additive. */
   def searchStreamParity(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-search-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "search-stream", dir)
     val d = docs(s, dir)
-    d.coalesce(2).write.parquet(s"$base/in") // 2 files → 2 micro-batches
-    val stream = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    val q = graft.streaming.DocStreams.searchIndexIngest(
-      stream, s"$base/index")
-    try q.processAllAvailable() finally q.stop()
+    Harness.streamParity(s, base, d.schema)(
+      () => d.coalesce(2).write.parquet(s"$base/in")) { stream => // 2 files → 2 micro-batches
+      graft.streaming.DocStreams.searchIndexIngest(stream, s"$base/index")
+    }
     graft.ops.Retrieval.searchIndexed(s, s"$base/index", q = 3, k = 5)
   }
 
@@ -956,13 +929,11 @@ object TextQueries {
     * ([[graft.streaming.DocStreams.dedupIngest]] over a file-stream
     * source, which then extends the shared index), and the per-doc
     * keep/drop statuses must agree exactly. Output = one (doc_id, stream_match) row per streamed
-    * doc; oracle = all true. Scratch dirs under target/, wiped per
+    * doc; oracle = all true. Scratch is [[Harness.scratch]], wiped per
     * run. */
   def dedupStreamParity(s: SparkSession, dir: String): DataFrame =
       Tables.withGateShuffle(s) {
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val base = s"target/tmp-dedup-stream-$slug"
-    graft.io.Fs.deleteRecursive(s, base)
+    val base = Harness.scratch(s, "dedup-stream", dir)
     val d = docs(s, dir)
     val isCorpus = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
     val corpus = d.filter(isCorpus)
@@ -974,17 +945,17 @@ object TextQueries {
     // The stream-input write only READS `batch` — independent of the
     // decision snapshot, so the two legs overlap (guide §2.6); both
     // complete before the stream starts.
-    val legs = graft.tools.Par.run(2)(Seq[() => Any](
+    // All of the input lands in one micro-batch: its decisions are taken
+    // against the pre-stream index, as the batch snapshot's are.
+    val legs = Harness.streamParity(s, base, batch.schema, filesPerTrigger = None)(
       () => graft.streaming.DocStreams
         .batchDecisions(batch, s"$base/index", "text", "doc_id", 0.8)
         .select(col("doc_id"), col("status").as("batch_status"))
         .checkpointLinted(),
-      () => batch.write.parquet(s"$base/in")))
+      () => batch.write.parquet(s"$base/in")) { stream =>
+      graft.streaming.DocStreams.dedupIngest(stream, s"$base/index", s"$base/sink")
+    }
     val batchDec = legs.head.asInstanceOf[DataFrame]
-    val stream = s.readStream.schema(batch.schema).parquet(s"$base/in")
-    val q = graft.streaming.DocStreams
-      .dedupIngest(stream, s"$base/index", s"$base/sink")
-    try q.processAllAvailable() finally q.stop()
     val streamDec = s.read.parquet(s"$base/sink/decisions")
       .select(col("doc_id"), col("status").as("stream_status"))
     batchDec.join(streamDec, Seq("doc_id"), "full_outer")
@@ -1173,8 +1144,7 @@ object TextQueries {
   def decontamIncrementalQ(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     val h = substring(md5(col("doc_id").cast("string")), 1, 1)
-    val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val idx = s"target/tmp-decontam-index-$slug"
+    val idx = Harness.scratch(s, "decontam-index", dir)
     Dedup.writeEvalShingleIndex(d.filter(h === "f"), "text", "doc_id", idx)
     val cands = d.filter(h =!= "f")
     val half = substring(md5(col("doc_id").cast("string")), 2, 1) < "8"
@@ -1633,9 +1603,7 @@ object TextQueries {
     // gate: sketch / census-partial writes dominate; the serve plans
     // bench as q_corpus_overlap / q_corpus_drift
     Query("q_corpus_drift_incremental", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-drift-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
+      val base = Harness.scratch(s, "drift", dir)
       val cs = graft.ops.CorpusStats
       val d = docs(s, dir)
       val env = d.agg(min(col("n_chars")).as("mn"), max(col("n_chars")).as("mx")).head()
@@ -1667,9 +1635,7 @@ object TextQueries {
     // gate: sketch / census-partial writes dominate; the serve plans
     // bench as q_corpus_overlap / q_corpus_drift
     Query("q_corpus_overlap_persisted", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-sketch-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
+      val base = Harness.scratch(s, "sketch", dir)
       val cs = graft.ops.CorpusStats
       val d = docs(s, dir)
       val h2 = substring(md5(col("doc_id").cast("string")), 2, 1)
@@ -2078,11 +2044,9 @@ object TextQueries {
     // gate: inverted-index builds dominate; the serve path benches as
     // q_text_search
     Query("q_text_search_persisted", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-search-index-$slug"
-      graft.io.StageMemo.cachedDir(s, base,
-        graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "search-index-v1")) {
-        graft.ops.Retrieval.writeSearchIndex(docs(s, dir), "text", "doc_id", base)
+      val base = Harness.memo(s, "search-index", dir, Seq("documents.parquet"),
+          "search-index-v1") { m =>
+        graft.ops.Retrieval.writeSearchIndex(docs(s, dir), "text", "doc_id", m)
       }
       graft.ops.Retrieval.searchIndexed(s, base, q = 3, k = 5)
     },
@@ -2090,14 +2054,12 @@ object TextQueries {
     // gate: inverted-index builds dominate; the serve path benches as
     // q_text_search
     Query("q_text_search_incremental", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-search-incr-$slug"
-      graft.io.StageMemo.cachedDir(s, base,
-        graft.io.StageMemo.fingerprint(Seq(s"$dir/documents.parquet"), "search-incr-v1")) {
+      val base = Harness.memo(s, "search-incr", dir, Seq("documents.parquet"),
+          "search-incr-v1") { m =>
         val d = docs(s, dir)
         val isFirst = substring(md5(col("doc_id").cast("string")), 1, 1) < "8"
-        graft.ops.Retrieval.writeSearchIndex(d.filter(isFirst), "text", "doc_id", base, batch = 0)
-        graft.ops.Retrieval.appendSearchIndex(d.filter(!isFirst), "text", "doc_id", base, batch = 1)
+        graft.ops.Retrieval.writeSearchIndex(d.filter(isFirst), "text", "doc_id", m, batch = 0)
+        graft.ops.Retrieval.appendSearchIndex(d.filter(!isFirst), "text", "doc_id", m, batch = 1)
       }
       graft.ops.Retrieval.searchIndexed(s, base, q = 3, k = 5)
     },
@@ -2293,18 +2255,14 @@ object TextQueries {
     // the persisted twins reuse the in-memory oracles VERBATIM — the
     // artifact round-trip must be value-invisible
     Query("q_text_quality_persisted", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-qm-model-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
+      val base = s"${Harness.scratch(s, "qm-model", dir)}/model"
       val d = docs(s, dir)
       graft.ops.QualityModel.writeModel(s, d, base)
       graft.ops.QualityModel.scoredFrameIndexed(d, base)
     },
       graft.ops.QualityModel.scoredOracleSql("documents")),
     Query("q_text_bpe_persisted", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-bpe-model-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
+      val base = s"${Harness.scratch(s, "bpe-model", dir)}/model"
       val d = docs(s, dir)
       graft.ops.Bpe.writeBpeModel(s, d, base)
       graft.ops.Bpe.tokenFrequenciesIndexed(d, base)
@@ -2316,10 +2274,7 @@ object TextQueries {
     // artifact — must equal the one-shot oracle rows verbatim
     // the incremental twins must land on the one-shot oracles exactly
     Query("q_text_quality_incremental", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-qm-incr-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      graft.io.Fs.deleteRecursive(s, base + ".staging")
+      val base = s"${Harness.scratch(s, "qm-incr", dir)}/model"
       val d = docs(s, dir)
       graft.ops.QualityModel.writeModel(s, d.filter(col("doc_id") % 2 === 0), base)
       graft.ops.QualityModel.appendModel(d.filter(col("doc_id") % 2 =!= 0), base)
@@ -2327,10 +2282,7 @@ object TextQueries {
     },
       graft.ops.QualityModel.scoredOracleSql("documents")),
     Query("q_text_bpe_incremental", (s, dir) => {
-      val slug = dir.replaceAll("[^A-Za-z0-9.]", "_")
-      val base = s"target/tmp-bpe-incr-$slug"
-      graft.io.Fs.deleteRecursive(s, base)
-      graft.io.Fs.deleteRecursive(s, base + ".staging")
+      val base = s"${Harness.scratch(s, "bpe-incr", dir)}/model"
       val d = docs(s, dir)
       graft.ops.Bpe.writeBpeModel(s, d.filter(col("doc_id") % 2 === 0), base)
       graft.ops.Bpe.appendBpeModel(d.filter(col("doc_id") % 2 =!= 0), base)

@@ -139,6 +139,17 @@ class OrchestratorSpec extends SparkSpec {
     }
   }
 
+  it should "leave nothing cached in the session after the run" in {
+    val dir = freshDir("orchestrator_cache")
+    val (csv, xlsx) = writeFixture(dir)
+    spark.catalog.clearCache()
+    val r = Orchestrator.runFor(spark, csv, xlsx, s"$dir/work",
+      Medallion.referenceSpec, LocalDate.parse("2025-09-29"),
+      Orchestrator.RetryPolicy(retries = 0, delayMs = 0), sleep = _ => ())
+    r.skipped shouldBe false
+    spark.sharedState.cacheManager.isEmpty shouldBe true
+  }
+
   it should "record every attempt in the task-instance ledger" in {
     val dir = freshDir("orchestrator_ledger")
     val (csv, xlsx) = writeFixture(dir)

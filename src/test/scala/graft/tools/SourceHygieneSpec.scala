@@ -128,4 +128,46 @@ class SourceHygieneSpec extends AnyFlatSpec with Matchers {
       parses should have size 1
     }
   }
+
+  /** The gate queries' scaffolding lives in `graft.queries.Harness`:
+    * the sf-directory slug, every `target/` path (run-scoped scratch and
+    * the memo root) and the stream drain. Returns each code line of
+    * `graft/queries` and Bench outside Harness that contains `needle`,
+    * with the name of the object member it sits in. */
+  private val Member = """  (?:private\S* )?def (\w+).*""".r
+  private def outsideHarness(needle: String): Seq[(String, Option[String])] = for {
+    p <- walk("src/main/scala/graft/queries", ".scala") :+
+      Paths.get("src/main/scala/graft/Bench.scala")
+    if p.getFileName.toString != "Harness.scala"
+    lines = Files.readAllLines(p).asScala
+    (line, i) <- lines.zipWithIndex
+    t = line.trim
+    if !(t.startsWith("*") || t.startsWith("//") || t.startsWith("/*"))
+    if t.contains(needle)
+    enclosing = lines.take(i).reverse.collectFirst { case Member(name) => name }
+  } yield (s"$p:${i + 1}: $t", enclosing)
+
+  it should "slug sf directories only in Harness.slug" in {
+    val sites = outsideHarness("\"[^A-Za-z0-9").map(_._1)
+    withClue("sf slugs outside Harness:\n" + sites.mkString("\n") + "\n") {
+      sites shouldBe empty
+    }
+  }
+
+  it should "build target/ paths in graft/queries and Bench only in Harness" in {
+    val sites = outsideHarness("\"target/").map(_._1)
+    withClue("target/ paths outside Harness:\n" + sites.mkString("\n") + "\n") {
+      sites shouldBe empty
+    }
+  }
+
+  /** `lateDataParity` is the one other drain: it stages the late file
+    * between its two passes, which is what that gate tests. */
+  it should "drain streams only in Harness.streamParity and lateDataParity" in {
+    val sites = outsideHarness("processAllAvailable")
+      .filterNot(_._2.contains("lateDataParity")).map(_._1)
+    withClue("stream drains outside Harness:\n" + sites.mkString("\n") + "\n") {
+      sites shouldBe empty
+    }
+  }
 }
